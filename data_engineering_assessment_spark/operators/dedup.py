@@ -91,8 +91,8 @@ def ngram_jaccard_pairs(
 
     NEGATIVE A/B (r16, do not retry without a sparser corpus): a
     lossless PPJoin-style prefix filter (xxhash64 global order, per-doc
-    prefix ``n − ⌈t·n⌉ + 1``, exact ``array_intersect`` verification —
-    tools/ab_prefix.py) was implemented, proven bit-identical at
+    prefix ``n − ⌈t·n⌉ + 1``, exact ``array_intersect`` verification)
+    was implemented, proven bit-identical at
     t ∈ {0.3, 0.5, 0.7}, and MEASURED SLOWER 2.3–2.6× at sf0.1 (old
     best-of-4 2.27–2.43 s vs new 5.35–6.21 s; same pattern for the
     containment tier at t_micro=800k: 2.25 vs 5.74 s).  Why: this
@@ -271,15 +271,14 @@ def minhash_banded(
     candidate — recall is unaffected, precision is protected by the
     estimate threshold.
 
-    STORAGE-SHAPE TRADE (adjudicated round 14, VERDICT r13 #3,
-    measured by tools/ab_bandindex.py): persisting ``(bkey, doc,
-    sig)`` repeats the 16-long signature once per band — ~3.0x the
-    index bytes of a split ``(bkey, doc)`` probe index + ``(doc,
-    sig)`` side table (sf100: 2.14 GB vs 0.71 GB) — but the bought
-    signature LOCALITY makes the recurring per-increment probe ~20%
-    faster (sf100 best-of-3: 9.4 s vs 11.5 s; sf10: 2.7 s vs 3.1 s)
-    because candidates leave the band join carrying both signatures,
-    no second join.  The inline shape is kept HERE because the
+    STORAGE-SHAPE TRADE (adjudicated round 14, VERDICT r13 #3):
+    persisting ``(bkey, doc, sig)`` repeats the 16-long signature once
+    per band — ~3.0x the index bytes of a split ``(bkey, doc)`` probe
+    index + ``(doc, sig)`` side table (sf100: 2.14 GB vs 0.71 GB) — but
+    the bought signature LOCALITY makes the recurring per-increment
+    probe ~20% faster (sf100 best-of-3: 9.4 s vs 11.5 s; sf10: 2.7 s vs
+    3.1 s) because candidates leave the band join carrying both
+    signatures, no second join.  The inline shape is kept HERE because the
     payload is small (16 longs) and probe wall is the cost paid every
     increment; the embedding tier makes the OPPOSITE call
     (plans/pipeline.py:dedup_embed_incremental splits) because its

@@ -14,122 +14,4 @@ from . import (  # noqa: F401
     training,
     warehouse,
 )
-from .registry import oracles, queries, set_priority  # noqa: F401
-
-# Grading-window rotation (round 16).  The driver grades a ~50-key
-# prefix of the registry per round; verdicts persist.  This window is
-# COMPUTED by `python tools/rotation.py`; the hand-authored part is
-# the summary-invisible tier the tool's PLANS.md row diff cannot see.
-# In order:
-#   1. the 4 r16 plan-changed keys the tool detects (PLANS.md row
-#      diff): agg_percentile, contamination_matrix, graph_pagerank,
-#      text_novelty_by_doc,
-#   2. r16 summary-invisible changes (hand-listed): agg_group +
-#      join_inner (integer fixed-point rewrites — same summary rows;
-#      join_inner displaced the last freshness fill,
-#      interval_coverage_union, to hold the 50-slot budget),
-#      graph_cc_alternating / graph_connected_components (loop-body
-#      rewrites live outside the final plan), graph_kcore +
-#      graph_pagerank_converged (rows-only, but VERDICT r15 #2 asks
-#      for driver-side evidence on every plan-changed key, so the
-#      round-9 rows-only exclusion is overridden for these),
-#      sink_dynamic_partition_overwrite (pre-write repartition), and
-#      the 8 rankstats keys whose range-partition count is now
-#      bytes-derived (partition count is summary-invisible;
-#      agg_decile_profile, agg_histogram_equidepth,
-#      customer_pareto_coverage, customer_rfm_segments,
-#      length_curriculum, orders_abc_class, pareto_revenue_share,
-#      text_ttr_buckets),
-#   3. the r15 plan-changed keys VERDICT r15 #2 flagged as never
-#      rotated (the round-11 "plan change => window" policy):
-#      graph_triangle_count, graph_degree_assortativity,
-#      text_boilerplate_cov, embed_ann_ivfpq (rows-only, named by the
-#      verdict), and the 9 state-shard-resized streaming keys,
-#   4. freshness re-grades, OLDEST VINTAGE FIRST per rotation.py
-#      (r8 alphabetically) to the 50-slot edge.
-# Exactly 50 names for ~50 slots.
-#
-# The round-15 window rationale (kept for history):
-#   1. the new round-15 key (never graded): the bounded-output
-#      dedup_embed_incremental_summary (VERDICT r14 what's-wrong #2 —
-#      per-delta-doc keep-best verdicts so degenerate duplication
-#      degrades to O(docs) output; rows-only, containment pytest),
-#   2. the 11 keys whose PLANS.md row changed (plan change => window,
-#      the round-11 policy): vocab_growth_curve plus the ten keys
-#      rewritten on the round-15 range-partitioned global-rank
-#      operator (operators/rankstats.py) or TakeOrderedAndProject —
-#      the VERDICT r14 #5 unpartitioned-window audit,
-#   3. hand-listed summary-invisible changes: key_skew_profile (its
-#      top-20 rewrite left the summary row identical) and the four
-#      ORACLE-BACKED layout-tag-bumped keys (every layout.py edit —
-#      this round: SCRATCH_ROOT derivation + the newest-mtime temp
-#      reaper gate — bumps every versioned_scratch_tag by design);
-#      the two rows-only layout-bumped keys (dedup_minhash_incremental,
-#      dedup_embed_incremental) are deliberately NOT re-windowed: a
-#      no_oracle verdict adds nothing over their recall/containment/
-#      immutability pytests, and the round-9 policy keeps verdicted
-#      rows-only keys out of the window,
-#   4. freshness re-grades, OLDEST VINTAGE FIRST per rotation.py:
-#      ALL 32 remaining r7-vintage keys (two of the r7 tier —
-#      length_curriculum, text_ttr_buckets — moved up into the
-#      plan-changed tier), then r8 alphabetically to the 50-slot
-#      edge.
-# Exactly 50 names for ~50 slots; after this round the oldest
-# evidence vintage advances to r8 (48 r8-vintage keys defer to r16).
-WINDOW_PRIORITY = [
-    # --- r16 plan-changed, tool-detected (PLANS.md row diff) ---
-    "agg_percentile",
-    "contamination_matrix",
-    "graph_pagerank",
-    "text_novelty_by_doc",
-    # --- r16 summary-invisible changes (hand-listed) ---
-    "agg_group",
-    "join_inner",
-    "graph_cc_alternating",
-    "graph_connected_components",
-    "graph_kcore",
-    "graph_pagerank_converged",
-    "sink_dynamic_partition_overwrite",
-    "agg_decile_profile",
-    "agg_histogram_equidepth",
-    "customer_pareto_coverage",
-    "customer_rfm_segments",
-    "length_curriculum",
-    "orders_abc_class",
-    "pareto_revenue_share",
-    "text_ttr_buckets",
-    # --- r15 plan-changed, never rotated (VERDICT r15 #2) ---
-    "graph_triangle_count",
-    "graph_degree_assortativity",
-    "text_boilerplate_cov",
-    "embed_ann_ivfpq",
-    "stream_left_outer_join",
-    "stream_session_attribution",
-    "stream_tumbling_counts",
-    "stream_join_attribution",
-    "stream_stateful_totals",
-    "stream_dedup_ids",
-    "stream_sessionize",
-    "stream_sliding_counts",
-    "stream_late_watermark",
-    # --- freshness re-grades, oldest vintage first (rotation.py, r8) ---
-    "cumulative_distinct_users",
-    "dedup_levenshtein_block",
-    "dedup_rate_by_source",
-    "discount_quantity_slope",
-    "dup_cluster_size_hist",
-    "embed_pca_project",
-    "embed_silhouette",
-    "embed_slice_drift",
-    "event_ab_test_lift",
-    "event_first_touch_attribution",
-    "event_hour_seasonality",
-    "events_control_chart",
-    "events_dau_wau_stickiness",
-    "events_fano_factor",
-    "events_user_mode_type",
-    "fk_violation_audit",
-    "gate_agreement_kappa",
-    "interarrival_gap_p90",
-]
-set_priority(WINDOW_PRIORITY)
+from .registry import oracles, queries  # noqa: F401

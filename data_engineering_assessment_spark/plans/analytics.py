@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import ensure_deterministic_session
+from ..sources.layout import scratch_path
 from ..sources.tables import load_table
 from .registry import query
 
@@ -336,7 +337,7 @@ def scan_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = versioned_scratch_tag(sf_dir, scan_stats_prune)
-    path = f"/root/repo/.scratch/stats_prune_{tag}"
+    path = scratch_path("stats_prune", tag)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         clean_superseded(path)
         write_range_chunked(
@@ -414,12 +415,6 @@ def incremental_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return j(da, b0).unionByName(j(a0, db)).unionByName(j(da, db))
-
-
-def _scratch_tag_local(sf_dir: str) -> str:
-    import hashlib
-
-    return hashlib.md5(sf_dir.encode()).hexdigest()[:8]
 
 
 @query("embed_ann_pq")  # code-compressed ANN — rows-only; recall vs brute in pytest
@@ -603,7 +598,7 @@ def scan_table_version(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"/root/repo/.scratch/tablelog_{tag}"
+    path = scratch_path("tablelog", tag)
     if os.path.exists(path):
         shutil.rmtree(path)
     tablelog.create_table(docs.filter(F.col("doc_id") % 3 == 0), path)
@@ -654,7 +649,7 @@ def scan_tablelog_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     tag = versioned_scratch_tag(sf_dir, scan_tablelog_datasource, tablelog)
-    path = f"/root/repo/.scratch/tablelog_ds_{tag}"
+    path = scratch_path("tablelog_ds", tag)
     if not tablelog.versions(path):
         if os.path.exists(path):
             import shutil
@@ -743,7 +738,7 @@ def scan_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     tag = versioned_scratch_tag(sf_dir, scan_jsonl_quarantine)
-    path = f"/root/repo/.scratch/jsonl_quarantine_{tag}"
+    path = scratch_path("jsonl_quarantine", tag)
     if not os.path.exists(os.path.join(path, "_corrupted_marker")):
         clean_superseded(path)
         docs.select("doc_id", "lang", "text").write.mode("overwrite").json(path)
@@ -936,9 +931,9 @@ def stream_tablelog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    src = f"/root/repo/.scratch/tlsink_src_{tag}"
-    table = f"/root/repo/.scratch/tlsink_tbl_{tag}"
-    ckpt = f"/root/repo/.scratch/tlsink_ckpt_{tag}"
+    src = scratch_path("tlsink_src", tag)
+    table = scratch_path("tlsink_tbl", tag)
+    ckpt = scratch_path("tlsink_ckpt", tag)
     for p in (table, ckpt):
         shutil.rmtree(p, ignore_errors=True)
     docs.repartition(8).write.mode("overwrite").parquet(src)
@@ -1826,7 +1821,7 @@ def tablelog_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"/root/repo/.scratch/tablelog_cf_{tag}"
+    path = scratch_path("tablelog_cf", tag)
     if os.path.exists(path):
         shutil.rmtree(path)
     v0_df = docs.filter(F.col("doc_id") % 3 == 0)
@@ -2124,7 +2119,7 @@ def scan_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = versioned_scratch_tag(sf_dir, scan_bloom_index)
-    path = f"/root/repo/.scratch/bloom_index_{tag}"
+    path = scratch_path("bloom_index", tag)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         clean_superseded(path)
         write_range_chunked(
@@ -2178,7 +2173,7 @@ def stream_tablelog_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     tag = versioned_scratch_tag(sf_dir, stream_tablelog_source, tablelog)
-    path = f"/root/repo/.scratch/tablelog_src_{tag}"
+    path = scratch_path("tablelog_src", tag)
     if len(tablelog.versions(path)) != 3:
         if os.path.exists(path):
             shutil.rmtree(path)
@@ -2248,7 +2243,7 @@ def tablelog_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("long").alias("cents"),
     )
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"/root/repo/.scratch/tablelog_wap_{tag}"
+    path = scratch_path("tablelog_wap", tag)
     if os.path.exists(path):
         shutil.rmtree(path)
 
@@ -2313,7 +2308,7 @@ def schema_widen_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import load_table as _lt
 
     tag = versioned_scratch_tag(sf_dir, schema_widen_scan)
-    base = f"/root/repo/.scratch/widen_{tag}"
+    base = scratch_path("widen", tag)
     orders = _lt(spark, sf_dir, "orders").select(
         "o_orderkey",
         (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("long").alias("cents"),
@@ -2372,7 +2367,7 @@ def tablelog_delete_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "source", "n_chars"
     )
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"/root/repo/.scratch/tablelog_del_{tag}"
+    path = scratch_path("tablelog_del", tag)
     if os.path.exists(path):
         shutil.rmtree(path)
     tablelog.create_table(docs.filter(F.col("doc_id") % 2 == 0).repartition(4), path)
@@ -2414,7 +2409,7 @@ def tablelog_update_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "source", "n_chars"
     )
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"/root/repo/.scratch/tablelog_upd_{tag}"
+    path = scratch_path("tablelog_upd", tag)
     if os.path.exists(path):
         shutil.rmtree(path)
     tablelog.create_table(docs.repartition(6), path)
@@ -2456,7 +2451,7 @@ def tablelog_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "source", "n_chars"
     )
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"/root/repo/.scratch/tablelog_opt_{tag}"
+    path = scratch_path("tablelog_opt", tag)
     if os.path.exists(path):
         shutil.rmtree(path)
     tablelog.create_table(docs.repartition(32), path)
@@ -2572,7 +2567,7 @@ def tablelog_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("long").alias("cents"),
     )
     tag = versioned_scratch_tag(sf_dir, tablelog_stats_prune, tablelog)
-    path = f"/root/repo/.scratch/tablelog_stats_{tag}"
+    path = scratch_path("tablelog_stats", tag)
     if not tablelog.versions(path):
         if os.path.exists(path):
             import shutil
@@ -2744,15 +2739,6 @@ def event_interarrival_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# A/B toggle for the khop frontier-lineage experiment (VERDICT r10 #5).
-# tools/ab_khop.py flips this; the graded default records the winner:
-# per-hop eager checkpointing beat the nested lazy lineage at every
-# measured notch with identical outputs (best-of-3, 2026-08-16:
-# sf0.1 4.24→3.75 s, sf1 7.36→7.08 s, sf10 90.7→69.2 s — the win
-# grows with data because frontier k's subtree re-evaluates every
-# earlier hop, ~O(hops²) joins vs O(hops) once materialized).
-KHOP_CHECKPOINT_FRONTIERS = True
-
 # Bucket count for the materialized trade-graph edge layout.  32
 # matches local[32]'s shuffle parallelism; on a real cluster this is
 # sized like any bucket spec (≈ the cluster's target task count for
@@ -2841,25 +2827,24 @@ def _trade_edges(spark: SparkSession, sf_dir: str):
     return e, meta["n_nodes"]
 
 
-def _khop_frontiers(e, seeds, hops: int, checkpoint_frontiers: bool | None = None):
-    """Bounded-frontier BFS loop shared by [[graph_khop_reach]] and the
-    A/B harness (tools/ab_khop.py).
+def _khop_frontiers(e, seeds, hops: int):
+    """Bounded-frontier BFS loop of [[graph_khop_reach]].
 
     Without checkpointing, frontier k's logical subtree nests every
     earlier frontier (each hop joins the previous frontier AND
     anti-joins the visited union), so the single output action
-    re-evaluates hop-j work once per later hop — fine at 3 hops on
-    small SFs, but it is the growing-lineage shape VERDICT r10 #5
-    asks to measure at sf1/sf10.  With ``checkpoint_frontiers`` each
-    per-hop frontier is eagerly localCheckpointed; the frame is
-    post-shuffle at that point (distinct + left_anti), so the blocks
-    are the reliable 32-partition kind (see the NOTE on ``e`` below —
+    re-evaluates hop-j work once per later hop — ~O(hops²) joins vs
+    O(hops) once materialized.  Eager per-hop checkpointing beat the
+    nested lazy lineage at every measured notch with identical
+    outputs (best-of-3, 2026-08-16: sf0.1 4.24→3.75 s, sf1 7.36→7.08 s,
+    sf10 90.7→69.2 s), so each per-hop frontier except the last is
+    eagerly localCheckpointed; the frame is post-shuffle at that point
+    (distinct + left_anti), so the blocks are the reliable
+    32-partition kind (see the NOTE on ``e`` below —
     un-shuffled narrow checkpoints lose evictable-unrecomputable
     blocks at the sf10 notch).  ``visited`` stays a plain union of
     the (now materialized) frontiers, which the next anti-join
     shuffles anyway."""
-    if checkpoint_frontiers is None:
-        checkpoint_frontiers = KHOP_CHECKPOINT_FRONTIERS
     frontiers = [seeds]
     visited = seeds
     for hop in range(hops):
@@ -2874,7 +2859,7 @@ def _khop_frontiers(e, seeds, hops: int, checkpoint_frontiers: bool | None = Non
         # its own job buys nothing — skip the checkpoint there (r15,
         # guide §1.2: one fewer job per run, identical re-evaluation
         # count)
-        if checkpoint_frontiers and hop < hops - 1:
+        if hop < hops - 1:
             nxt = nxt.localCheckpoint(eager=True)
         frontiers.append(nxt)
         visited = visited.union(nxt)
@@ -2939,7 +2924,7 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     every earlier hop once per later hop, and materializing each
     (post-shuffle) frontier won the A/B at all three notches (sf0.1
     4.24→3.75 s, sf1 7.36→7.08 s, sf10 90.7→69.2 s, identical
-    outputs; tools/ab_khop.py)."""
+    outputs)."""
     ensure_deterministic_session(spark)
     e, _ = _trade_edges(spark, sf_dir)
     e = e.select("u", "v")

@@ -20,7 +20,6 @@ Catalyst.
 from __future__ import annotations
 
 import glob
-import hashlib
 import os
 import shutil
 
@@ -28,12 +27,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import ensure_deterministic_session
+from ..sources.layout import corpus_tag, events_tag, scratch_path
 from ..sources.tables import load_table
 from .registry import query
-
-
-def _scratch_tag(sf_dir: str) -> str:
-    return hashlib.md5(sf_dir.encode()).hexdigest()[:8]
 
 
 RESERVOIR_K = 200
@@ -355,12 +351,10 @@ def stream_late_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage ONCE per corpus content (r15): the 3-file replay derives
     # deterministically from the static events table, so rebuilding it
     # per run paid 3 filtered writes + moves per rep.  The tag is the
-    # CONTENT-fingerprinted one (insights._scratch_tag: events.parquet
+    # CONTENT-fingerprinted one (layout.events_tag: events.parquet
     # size+mtime), so in-place corpus regeneration re-stages; the
     # marker file is written last as the completion marker.
-    from .insights import _scratch_tag as _events_tag
-
-    base = f"/root/repo/.scratch/stream_late_{_events_tag(sf_dir)}"
+    base = scratch_path("stream_late", events_tag(sf_dir))
     in_dir = f"{base}/in"
     if not os.path.exists(f"{base}/_STAGED"):
         # reap stale-tag siblings before staging (VERDICT r15 #3 —
@@ -402,7 +396,7 @@ def stream_late_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast("long").alias("n"),
         )
     )
-    name = f"stream_late_{_scratch_tag(sf_dir)}"
+    name = f"stream_late_{corpus_tag(sf_dir)}"
     # bytes-derived state shards (r15, shared rule): 3 micro-batches ×
     # 64 shards of state-store commits was pure provisioning overhead
     from ..streaming.windows import scoped_shuffle_partitions, staged_stream_partitions
@@ -452,7 +446,7 @@ def scan_corrupt_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.layout import clean_superseded, versioned_scratch_tag
 
-    base = f"/root/repo/.scratch/corrupt_scan_{versioned_scratch_tag(sf_dir, scan_corrupt_tolerant)}"
+    base = scratch_path("corrupt_scan", versioned_scratch_tag(sf_dir, scan_corrupt_tolerant))
     in_dir = f"{base}/in"
     marker = f"{base}/_STAGED"
     if not os.path.exists(marker):

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import ensure_deterministic_session
+from ..sources.layout import events_tag, scratch_path
 from ..sources.tables import load_table
 from .registry import query
 
@@ -1163,32 +1164,6 @@ def embed_slice_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("slice_a")
 
 
-def _scratch_tag(sf_dir: str) -> str:
-    """Stable tag for a staged copy of an sf_dir table: the path plus
-    a fingerprint of events.parquet (total size + newest mtime at
-    NANOSECOND resolution — ADVICE r15: second-granularity mtime let
-    an in-place regeneration within the same second that preserved
-    total size replay stale staged data; st_mtime_ns is the same rule
-    tables._table_fingerprint already uses), so regenerating the
-    fixture in place invalidates the staged copy instead of silently
-    replaying stale data."""
-    import hashlib
-    import os
-
-    src = os.path.join(sf_dir, "events.parquet")
-    size = mtime_ns = 0
-    if os.path.isdir(src):
-        for root, _dirs, files in os.walk(src):
-            for f in files:
-                st = os.stat(os.path.join(root, f))
-                size += st.st_size
-                mtime_ns = max(mtime_ns, st.st_mtime_ns)
-    elif os.path.exists(src):
-        st = os.stat(src)
-        size, mtime_ns = st.st_size, st.st_mtime_ns
-    return hashlib.md5(f"{sf_dir}|{size}|{mtime_ns}".encode()).hexdigest()[:8]
-
-
 @query("embed_ann_ivfpq")  # coarse-prune + code-scan ANN — rows-only
 def embed_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ approximate nearest neighbors (operators/pq.py:
@@ -1239,7 +1214,7 @@ def stream_session_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.windows import read_event_stream
 
-    path = f"/root/repo/.scratch/stream_attr_{_scratch_tag(sf_dir)}"
+    path = scratch_path("stream_attr", events_tag(sf_dir))
     # the staged copy of a static corpus table is content-stable —
     # rewrite only when absent/incomplete (the merge_upsert device,
     # VERDICT r06 #6), keeping the timed path the STREAMING work
@@ -1250,7 +1225,7 @@ def stream_session_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events").coalesce(1).write.mode(
             "overwrite"
         ).parquet(path)
-    name = f"stream_attr_{_scratch_tag(sf_dir)}"
+    name = f"stream_attr_{events_tag(sf_dir)}"
     per_session = (
         read_event_stream(spark, path)
         .withWatermark("ts", "2 hours")

@@ -1080,8 +1080,8 @@ def dedup_embed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     other three tiers keep.  Candidates come only from chunk-key
     equality (pigeonhole LSH, no cross join); each base signature and
     vector is stored ONCE, not once per chunk — the probe fan-out
-    carries only (ckey, doc) rows (the split storage shape measured
-    in tools/ab_bandindex.py; see minhash_banded's docstring for why
+    carries only (ckey, doc) rows (the split storage shape; see
+    minhash_banded's docstring for the measurements and for why
     the MinHash tier makes the opposite call).  The plane count is
     auto-sized from the BASE corpus at index creation
     (operators/similarity.py:emb_inc_plane_count — a fixed width

@@ -51,32 +51,3 @@ def queries() -> dict[str, QueryFn]:
 def oracles() -> dict[str, str]:
     return dict(_ORACLES)
 
-
-def set_priority(keys: list[str]) -> None:
-    """Reorder the registry so ``keys`` come first (in the given
-    order), then all remaining keys in their registration order.
-
-    The external grader samples a bounded prefix of the registry each
-    round, so insertion order decides which keys receive a correctness
-    verdict.  Keys that have never been graded, or whose output
-    contract changed since their last verdict, are rotated to the
-    front each round; keys with a standing green verdict keep it and
-    can safely wait at the back.  Unknown names are an error — the
-    priority list must track renames.
-
-    Within the tail, keys registered WITHOUT an oracle sink behind
-    every oracle-backed key: a rows-only key enters the window once
-    (explicitly, via ``keys``) to land its ``no_oracle`` verdict and
-    must never drift back in when the priority list is shorter than
-    the grader's window — re-grading it cannot improve its verdict,
-    so the slot is pure waste (round 9 lost two slots this way)."""
-    unknown = [k for k in keys if k not in _QUERIES]
-    if unknown:
-        raise KeyError(f"unknown priority keys: {unknown}")
-    ordered = list(dict.fromkeys(keys))
-    rest = [k for k in _QUERIES if k not in set(ordered)]
-    tail = [k for k in rest if k in _ORACLES] + [k for k in rest if k not in _ORACLES]
-    for name, store in (("q", _QUERIES), ("o", _ORACLES)):
-        resorted = {k: store[k] for k in ordered + tail if k in store}
-        store.clear()
-        store.update(resorted)

@@ -16,8 +16,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import ensure_deterministic_session
+from ..sources.layout import events_tag, scratch_path
 from ..sources.tables import load_table
-from .insights import _cents, _epoch_s, _scratch_tag
+from .insights import _cents, _epoch_s
 from .registry import query
 
 # DuckDB-side truncating division (Spark's `div` truncates toward
@@ -472,8 +473,8 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Tag = fixture fingerprint (size+mtime) + staging-code digest, so
     # a change to the staging logic itself (e.g. the sentinel scheme)
     # can never silently replay a stale staged parquet.
-    tag = f"{_scratch_tag(sf_dir)}{versioned_scratch_tag('', stream_left_outer_join)}"
-    path = f"/root/repo/.scratch/stream_loj_{tag}"
+    tag = f"{events_tag(sf_dir)}{versioned_scratch_tag('', stream_left_outer_join)}"
+    path = scratch_path("stream_loj", tag)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         ev = load_table(spark, sf_dir, "events")
 

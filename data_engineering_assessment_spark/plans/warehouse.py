@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import ensure_deterministic_session
+from ..sources.layout import scratch_path
 from ..sources.tables import load_table
 from .registry import query
 
@@ -1248,7 +1249,7 @@ def _binfiles_fixture(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.layout import clean_superseded, versioned_scratch_tag
 
     tag = versioned_scratch_tag(sf_dir, _binfiles_fixture)
-    path = f"/root/repo/.scratch/binfiles_{tag}"
+    path = scratch_path("binfiles", tag)
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
         clean_superseded(path)

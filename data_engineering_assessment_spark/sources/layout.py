@@ -19,15 +19,60 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Scratch layouts live under the repo root (three levels above this
-# module), NOT a hardcoded absolute path (round-14 review finding: a
-# literal "/root/repo" made the orphan reaper a silent no-op anywhere
-# else).  Everything below — builder, reaper, superseded-clean — must
-# derive paths from this one constant.
+# Scratch layouts live under the checkout root (three levels above
+# this module), NOT a hardcoded absolute path: a literal checkout path
+# made the orphan reaper a silent no-op anywhere else and made runs
+# from any other checkout write into that one.  Every scratch path —
+# plan scratch dirs (scratch_path), builder, reaper, superseded-clean —
+# derives from this one module global, read at call time so callers
+# may repoint it.
 SCRATCH_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
     ".scratch",
 )
+
+
+def scratch_path(family: str, tag: str) -> str:
+    """``<SCRATCH_ROOT>/<family>_<tag>``: the one place a plan names
+    its scratch directory.  ``SCRATCH_ROOT`` is read at call time, so
+    repointing it (a benchmark's cold work dir, a test's tmp dir)
+    moves every plan's scratch state with it."""
+    return os.path.join(SCRATCH_ROOT, f"{family}_{tag}")
+
+
+def corpus_tag(sf_dir: str) -> str:
+    """Stable per-corpus scratch tag: an md5 digest of the corpus path.
+    Python hash() is salted per process, so using it here would create
+    a fresh never-cleaned directory every run; the digest reuses (and
+    overwrites) the same path."""
+    import hashlib
+
+    return hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+
+
+def events_tag(sf_dir: str) -> str:
+    """Tag for a staged copy of the corpus events table: the path plus
+    a fingerprint of events.parquet (total size + newest mtime at
+    NANOSECOND resolution — second-granularity mtime let an in-place
+    regeneration within the same second that preserved total size
+    replay stale staged data; st_mtime_ns is the same rule
+    tables._table_fingerprint already uses), so regenerating the
+    corpus in place invalidates the staged copy instead of silently
+    replaying stale data."""
+    import hashlib
+
+    src = os.path.join(sf_dir, "events.parquet")
+    size = mtime_ns = 0
+    if os.path.isdir(src):
+        for root, _dirs, files in os.walk(src):
+            for f in files:
+                st = os.stat(os.path.join(root, f))
+                size += st.st_size
+                mtime_ns = max(mtime_ns, st.st_mtime_ns)
+    elif os.path.exists(src):
+        st = os.stat(src)
+        size, mtime_ns = st.st_size, st.st_mtime_ns
+    return hashlib.md5(f"{sf_dir}|{size}|{mtime_ns}".encode()).hexdigest()[:8]
 
 
 def versioned_scratch_tag(sf_dir: str, *fns, extra: tuple = ()) -> str:

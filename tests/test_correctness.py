@@ -148,9 +148,8 @@ def test_oracle_output_types_are_portable(duck, key):
     while local fetchall() yields Python ints for both — so the local
     comparator is structurally blind to this divergence and only a
     static type lint can catch it.  The flagged-HUGEINT set matched
-    the r05 red set exactly (4/4, no false positives — see
-    tools/oracle_type_audit.py).  Fix pattern: CAST(SUM(..) AS
-    BIGINT) at the oracle's output layer."""
+    the r05 red set exactly (4/4, no false positives).  Fix pattern:
+    CAST(SUM(..) AS BIGINT) at the oracle's output layer."""
     if key in ORACLE_TYPE_LINT_EXEMPT:
         pytest.skip("deliberate HUGEINT control probe")
     desc = duck.execute(f"DESCRIBE ({ORACLES[key]})").fetchall()

@@ -60,11 +60,14 @@ def test_corrupt_fixture_is_genuinely_unreadable(spark):
     """Guards the scan_corrupt_tolerant key against a vacuous pass: if
     staging ever stopped truncating the shard, a strict read would
     succeed and this test would fail."""
-    from data_engineering_assessment_spark.sources.layout import versioned_scratch_tag
+    from data_engineering_assessment_spark.sources.layout import (
+        scratch_path,
+        versioned_scratch_tag,
+    )
 
     curation.scan_corrupt_tolerant(spark, SF_DIR).collect()  # stages + corrupts
     tag = versioned_scratch_tag(SF_DIR, curation.scan_corrupt_tolerant)
-    in_dir = f"/root/repo/.scratch/corrupt_scan_{tag}/in"
+    in_dir = f"{scratch_path('corrupt_scan', tag)}/in"
     assert len(glob.glob(f"{in_dir}/shard*.parquet")) == 4
     with pytest.raises(Exception):
         spark.read.option("ignoreCorruptFiles", "false").parquet(

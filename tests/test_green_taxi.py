@@ -177,7 +177,7 @@ def test_taxi_derived_cache_rebuilds_across_stop_restart():
     script = textwrap.dedent(
         """
         import sys
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, sys.argv[1])  # the checkout under test
         from data_engineering_assessment_spark.functions import taxi as taxi_mod
         from data_engineering_assessment_spark.session import get_spark
 
@@ -214,7 +214,7 @@ def test_taxi_derived_cache_rebuilds_across_stop_restart():
         """
     )
     out = subprocess.run(
-        [sys.executable, "-c", script],
+        [sys.executable, "-c", script, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))],
         capture_output=True,
         text=True,
         timeout=300,

@@ -9,6 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from data_engineering_assessment_spark.sources import layout
 from data_engineering_assessment_spark.sources.layout import (
     bucketed_join,
     write_bucketed,
@@ -299,7 +300,7 @@ def test_bloom_index_skips_files_and_loses_nothing(spark):
     from data_engineering_assessment_spark.sources.tables import load_table
     from tests.conftest import SF_DIR
 
-    path = "/root/repo/.scratch/bloom_test_unit"
+    path = f"{layout.SCRATCH_ROOT}/bloom_test_unit"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         write_range_chunked(
             load_table(spark, SF_DIR, "orders"), path, key="o_orderkey", n_files=16
@@ -393,7 +394,7 @@ def test_scratch_bucketed_table_recovery_and_reaper(spark, tmp_path):
     import glob
 
     [meta_p] = [
-        mp for mp in glob.glob("/root/repo/.scratch/t_sbt_*/_scratch_meta.json")
+        mp for mp in glob.glob(f"{layout.SCRATCH_ROOT}/t_sbt_*/_scratch_meta.json")
         if json.load(open(mp)).get("src") == str(tmp_path)
     ]
     path = os.path.dirname(meta_p)
@@ -406,7 +407,7 @@ def test_scratch_bucketed_table_recovery_and_reaper(spark, tmp_path):
     assert calls["n"] == 2 and m3["n_rows"] == 100 and t3.count() == 100
 
     # (b) reaper: plant a sibling family whose src is gone
-    dead = "/root/repo/.scratch/t_sbt_deadbe_0123abcd"
+    dead = f"{layout.SCRATCH_ROOT}/t_sbt_deadbe_0123abcd"
     os.makedirs(dead, exist_ok=True)
     with open(os.path.join(dead, "_scratch_meta.json"), "w") as fh:
         json.dump({"src": str(tmp_path / "gone-corpus")}, fh)
@@ -454,7 +455,7 @@ def test_scratch_bucketed_table_spec_in_tag(spark, tmp_path):
         key="k", n_buckets=8, schema_sql="k BIGINT, v BIGINT",
     )
     assert calls["n"] == 2 and t8.count() == 64
-    for mp in glob.glob("/root/repo/.scratch/t_spec_*/_scratch_meta.json"):
+    for mp in glob.glob(f"{layout.SCRATCH_ROOT}/t_spec_*/_scratch_meta.json"):
         if json.load(open(mp)).get("src") == str(tmp_path):
             d = os.path.dirname(mp)
             spark.sql(f"DROP TABLE IF EXISTS {os.path.basename(d)}")
@@ -514,7 +515,7 @@ def test_scratch_bucketed_table_track_src(spark, tmp_path):
     assert calls["fixed"] == 1 and t.count() == 10  # fixed-model: untouched
 
     for fam in ("t_trk", "t_fix"):
-        for mp in glob.glob(f"/root/repo/.scratch/{fam}_*/_scratch_meta.json"):
+        for mp in glob.glob(f"{layout.SCRATCH_ROOT}/{fam}_*/_scratch_meta.json"):
             if json.load(open(mp)).get("src") == str(corpus):
                 d = os.path.dirname(mp)
                 spark.sql(f"DROP TABLE IF EXISTS {os.path.basename(d)}")
@@ -545,8 +546,8 @@ def test_scratch_bucketed_table_atomic_no_temp_leftovers(spark, tmp_path):
         spark, "t_atom", str(tmp_path), build,
         key="k", n_buckets=2, schema_sql="k BIGINT",
     )
-    assert glob.glob("/root/repo/.scratch/t_atom_*.b*") == []
-    for mp in glob.glob("/root/repo/.scratch/t_atom_*/_scratch_meta.json"):
+    assert glob.glob(f"{layout.SCRATCH_ROOT}/t_atom_*.b*") == []
+    for mp in glob.glob(f"{layout.SCRATCH_ROOT}/t_atom_*/_scratch_meta.json"):
         if json.load(open(mp)).get("src") == str(tmp_path):
             d = os.path.dirname(mp)
             assert os.path.exists(mp)  # meta present at publish point
@@ -606,7 +607,7 @@ def test_scratch_rename_failure_surfaces(spark, tmp_path, monkeypatch):
     real_rename = os.rename
 
     def deny_rename(src, dst):
-        if "/root/repo/.scratch/t_rfail_" in str(dst):
+        if f"{layout.SCRATCH_ROOT}/t_rfail_" in str(dst):
             raise OSError(errno.EACCES, "permission denied", str(dst))
         return real_rename(src, dst)
 
@@ -622,7 +623,7 @@ def test_scratch_rename_failure_surfaces(spark, tmp_path, monkeypatch):
     import glob
     import shutil
 
-    for p in glob.glob("/root/repo/.scratch/t_rfail_*"):
+    for p in glob.glob(f"{layout.SCRATCH_ROOT}/t_rfail_*"):
         shutil.rmtree(p, ignore_errors=True)
 
 
@@ -655,7 +656,7 @@ def test_scratch_toctou_recheck_preserves_concurrent_winner(
     )
     assert calls["n"] == 1 and t.count() == 32
     [meta_p] = [
-        mp for mp in glob.glob("/root/repo/.scratch/t_race_*/_scratch_meta.json")
+        mp for mp in glob.glob(f"{layout.SCRATCH_ROOT}/t_race_*/_scratch_meta.json")
         if json.load(open(mp)).get("src") == str(tmp_path)
     ]
     path = os.path.dirname(meta_p)
@@ -686,9 +687,9 @@ def test_scratch_toctou_recheck_preserves_concurrent_winner(
 
 
 def test_scratch_root_derived_not_hardcoded(spark, tmp_path, monkeypatch):
-    """Round-14 review finding: the orphan-temp reaper hardcoded
-    ``/root/repo/.scratch`` while the builder derived its paths, so
-    anywhere but this container the reaper was a silent no-op.  Both
+    """Round-14 review finding: the orphan-temp reaper hardcoded the
+    checkout's absolute ``.scratch`` path while the builder derived its
+    paths, so in any other checkout the reaper was a silent no-op.  Both
     must follow one module constant: with SCRATCH_ROOT pointed at a
     tmp dir, the layout lands there, an abandoned stale temp tree is
     reaped there, and (round-14 ADVICE) the age gate reads the NEWEST
@@ -705,6 +706,7 @@ def test_scratch_root_derived_not_hardcoded(spark, tmp_path, monkeypatch):
 
     root = tmp_path / "scratch-root"
     root.mkdir()
+    checkout_scratch = layout.SCRATCH_ROOT
     monkeypatch.setattr(layout, "SCRATCH_ROOT", str(root))
     corpus = str(tmp_path / "corpus")
     os.makedirs(corpus)
@@ -738,9 +740,60 @@ def test_scratch_root_derived_not_hardcoded(spark, tmp_path, monkeypatch):
         if json.load(open(mp)).get("src") == corpus
     ]
     assert len(published) == 1
-    assert glob.glob("/root/repo/.scratch/t_root_*") == []
+    assert glob.glob(os.path.join(checkout_scratch, "t_root_*")) == []
     # reaper verdicts: stale tree gone, actively-written tree kept
     assert not stale.exists()
     assert live.exists() and fresh.exists()
 
     spark.sql(f"DROP TABLE IF EXISTS {os.path.basename(published[0])}")
+
+
+# Keys whose scratch paths were once absolute literals naming a single
+# checkout, mapped to the scratch family each writes.
+PLAN_SCRATCH_FAMILIES = {
+    "scan_stats_prune": "stats_prune",
+    "join_dpp_prune": "orders_dpp",
+    "merge_upsert": "merge_upsert",
+    "stream_left_outer_join": "stream_loj",
+}
+
+
+@pytest.mark.parametrize("key", sorted(PLAN_SCRATCH_FAMILIES))
+def test_plan_scratch_follows_scratch_root(spark, tmp_path, monkeypatch, key):
+    """Plans name their scratch dirs through ``layout.scratch_path``,
+    which reads SCRATCH_ROOT when called: with it pointed at a tmp dir
+    the key still matches its oracle, writes its scratch family there,
+    and creates nothing under the checkout's own ``.scratch``."""
+    import __spark_entry__ as entry_mod
+    from tests.oracle_utils import compare, duck_connection
+
+    checkout_scratch = layout.SCRATCH_ROOT
+
+    def entries() -> set[str]:
+        return set(os.listdir(checkout_scratch)) if os.path.isdir(checkout_scratch) else set()
+
+    before = entries()
+    monkeypatch.setattr(layout, "SCRATCH_ROOT", str(tmp_path))
+    con = duck_connection(SF_DIR)
+    try:
+        compare(entry_mod.queries()[key](spark, SF_DIR), con, entry_mod.oracle_sql()[key])
+    finally:
+        con.close()
+    family = PLAN_SCRATCH_FAMILIES[key]
+    assert [p for p in os.listdir(tmp_path) if p.startswith(f"{family}_")], os.listdir(tmp_path)
+    assert not entries() - before
+
+
+def test_no_checkout_path_literal_in_package():
+    """No package file names an absolute checkout path; scratch state
+    is placed by ``layout`` alone, so the engine runs from anywhere."""
+    import pathlib
+
+    literal = "/".join(("", "root", "repo")).encode()
+    pkg = pathlib.Path(layout.__file__).resolve().parent.parent
+    offenders = [
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*")
+        if p.is_file() and "__pycache__" not in p.parts and literal in p.read_bytes()
+    ]
+    assert not offenders, offenders

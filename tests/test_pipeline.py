@@ -27,6 +27,7 @@ from data_engineering_assessment_spark.operators.similarity import (
     cosine_near_dup_pairs,
 )
 from data_engineering_assessment_spark.plans import queries as _queries
+from data_engineering_assessment_spark.sources import layout
 from tests.conftest import SF_DIR
 
 QUERIES = _queries()
@@ -1526,7 +1527,7 @@ def test_graph_keys_share_one_edge_layout(spark, tmp_path):
     def families():
         return {
             os.path.dirname(mp)
-            for mp in glob.glob("/root/repo/.scratch/edges_w_*/_scratch_meta.json")
+            for mp in glob.glob(f"{layout.SCRATCH_ROOT}/edges_w_*/_scratch_meta.json")
             if json.load(open(mp)).get("src") == str(tmp_path)
         }
 
@@ -1593,7 +1594,7 @@ def test_trade_edges_layout_bucketed_and_reused(spark, tmp_path):
     name = f"edges_w_{corp}_{tag}"
     files_before = {
         f: os.path.getmtime(f)
-        for f in glob.glob(f"/root/repo/.scratch/{name}/*.parquet")
+        for f in glob.glob(f"{layout.SCRATCH_ROOT}/{name}/*.parquet")
     }
     assert files_before
     spark.sql(f"DROP TABLE IF EXISTS {name}")
@@ -1601,7 +1602,7 @@ def test_trade_edges_layout_bucketed_and_reused(spark, tmp_path):
     assert sorted(tuple(r) for r in e2.collect()) == rows1 and n2 == n1
     files_after = {
         f: os.path.getmtime(f)
-        for f in glob.glob(f"/root/repo/.scratch/{name}/*.parquet")
+        for f in glob.glob(f"{layout.SCRATCH_ROOT}/{name}/*.parquet")
     }
     assert files_after == files_before  # reused, not rebuilt
 
@@ -1827,7 +1828,7 @@ def test_minhash_incremental_planted_and_index_reuse(spark, tmp_path):
     import os
     import shutil
 
-    for mp in glob.glob("/root/repo/.scratch/mhidx_*/_scratch_meta.json"):
+    for mp in glob.glob(f"{layout.SCRATCH_ROOT}/mhidx_*/_scratch_meta.json"):
         import json
 
         if json.load(open(mp)).get("src") == str(tmp_path):
@@ -1933,7 +1934,7 @@ def test_minhash_index_layout_bucketed_probe_exchange_free(spark, tmp_path):
     import os
     import shutil
 
-    for mp in glob.glob("/root/repo/.scratch/mhidx_*/_scratch_meta.json"):
+    for mp in glob.glob(f"{layout.SCRATCH_ROOT}/mhidx_*/_scratch_meta.json"):
         if json.load(open(mp)).get("src") == str(tmp_path):
             d = os.path.dirname(mp)
             spark.sql(f"DROP TABLE IF EXISTS {os.path.basename(d)}")
@@ -1970,7 +1971,7 @@ def _drop_embed_inc_scratch(spark, tmp_path):
     import shutil
 
     for fam in ("ehidx", "ehvec"):
-        for mp in glob.glob(f"/root/repo/.scratch/{fam}_*/_scratch_meta.json"):
+        for mp in glob.glob(f"{layout.SCRATCH_ROOT}/{fam}_*/_scratch_meta.json"):
             if json.load(open(mp)).get("src") == str(tmp_path):
                 d = os.path.dirname(mp)
                 spark.sql(f"DROP TABLE IF EXISTS {os.path.basename(d)}")
@@ -2185,7 +2186,7 @@ def test_embed_incremental_probe_rebuilds_from_persisted_side(
     assert (1, 4) in first
 
     # crash-after-side state: probe index gone, side table persisted
-    for mp in glob.glob("/root/repo/.scratch/ehidx_*/_scratch_meta.json"):
+    for mp in glob.glob(f"{layout.SCRATCH_ROOT}/ehidx_*/_scratch_meta.json"):
         if json.load(open(mp)).get("src") == str(tmp_path):
             d = os.path.dirname(mp)
             spark.sql(f"DROP TABLE IF EXISTS {os.path.basename(d)}")

@@ -9,8 +9,8 @@ Each test pins an operator-internal change from optimization round 2:
 
 (The PPJoin-style prefix filter was implemented, proven bit-identical,
 measured 2.3–2.6× SLOWER at this corpus shape, and reverted — the
-negative A/B lives in ngram_jaccard_pairs' docstring and
-tools/ab_prefix.py; no pin needed for code that did not ship.)
+negative A/B lives in ngram_jaccard_pairs' docstring; no pin needed
+for code that did not ship.)
 
 End-to-end result equality for every touched QUERY key is separately
 pinned by the oracle replay (tools/replay.py); these tests cover the

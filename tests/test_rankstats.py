@@ -89,8 +89,9 @@ def test_no_unpartitioned_window_in_plan(spark):
     single-partition Window (the per-partition window is partitioned
     by ``__pid``) and no single-partition Exchange feeding one."""
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
     from gen_plans import count_unpartitioned_windows
 
     df = spark.range(1, 500).select(

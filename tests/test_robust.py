@@ -221,11 +221,11 @@ def test_dynamic_overwrite_leaves_other_partitions_untouched(spark):
     import glob
     import os
 
-    from data_engineering_assessment_spark.plans.relational import _scratch_tag
+    from data_engineering_assessment_spark.sources.layout import corpus_tag, scratch_path
     from tests.conftest import SF_DIR as sf
 
     QUERIES["sink_dynamic_partition_overwrite"](spark, sf).collect()
-    path = f"/root/repo/.scratch/dyn_overwrite_{_scratch_tag(sf)}"
+    path = scratch_path("dyn_overwrite", corpus_tag(sf))
 
     def snapshot():
         out = {}
@@ -319,10 +319,10 @@ def test_gzip_roundtrip_is_compressed_and_multifile(spark):
     the input's parallel part count (no coalesce-to-one)."""
     import glob
 
-    from data_engineering_assessment_spark.plans.relational import _scratch_tag
+    from data_engineering_assessment_spark.sources.layout import corpus_tag, scratch_path
 
     QUERIES["scan_csv_gzip_roundtrip"](spark, SF_DIR).collect()
-    path = f"/root/repo/.scratch/roundtrip_csvgz_{_scratch_tag(SF_DIR)}"
+    path = scratch_path("roundtrip_csvgz", corpus_tag(SF_DIR))
     parts = glob.glob(f"{path}/part-*.csv.gz")
     assert parts  # codec actually applied
 
@@ -381,10 +381,10 @@ def test_bucket_prune_selects_subset_of_buckets(spark):
 
     from pyspark.sql import functions as F
 
-    from data_engineering_assessment_spark.plans.relational import _scratch_tag
+    from data_engineering_assessment_spark.sources.layout import corpus_tag
 
     QUERIES["scan_bucket_prune"](spark, SF_DIR).collect()  # (re)write table
-    table = f"or_bp_{_scratch_tag(SF_DIR)}"
+    table = f"or_bp_{corpus_tag(SF_DIR)}"
     key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     prev = spark.conf.get(key)
     try:
@@ -444,14 +444,15 @@ def test_stream_loj_staging_path_is_code_versioned(spark):
     import os
 
     from data_engineering_assessment_spark.plans import robust
-    from data_engineering_assessment_spark.plans.insights import _scratch_tag
     from data_engineering_assessment_spark.sources.layout import (
+        events_tag,
+        scratch_path,
         versioned_scratch_tag,
     )
 
     QUERIES["stream_left_outer_join"](spark, SF_DIR).count()
-    tag = f"{_scratch_tag(SF_DIR)}{versioned_scratch_tag('', robust.stream_left_outer_join)}"
-    assert os.path.exists(f"/root/repo/.scratch/stream_loj_{tag}/_SUCCESS"), (
+    tag = f"{events_tag(SF_DIR)}{versioned_scratch_tag('', robust.stream_left_outer_join)}"
+    assert os.path.exists(os.path.join(scratch_path("stream_loj", tag), "_SUCCESS")), (
         "staged stream input is not keyed by the staging code digest"
     )
 

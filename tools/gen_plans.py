@@ -9,10 +9,12 @@ doc can't drift from the code.  Run: python tools/gen_plans.py
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from data_engineering_assessment_spark.plans import queries
 from data_engineering_assessment_spark.session import get_spark
@@ -103,7 +105,7 @@ def main() -> None:
             f"{('yes ×' + str(s['win1p'])) if s['win1p'] else '—'} |"
         )
     body = "\n".join(rows)
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write(
             "# PLANS — physical-plan audit (generated by tools/gen_plans.py)\n\n"
             "One row per query key, summarized from the *executed* Spark plan\n"

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Generate a 10x-scaled corpus under /root/repo/.scratch/sf1 from the
+"""Generate a 10x-scaled corpus under the scratch root (``.scratch/sf1``) from the
 read-only /root/testdata/sf0.1 fixtures, for the one-notch-up scaling
 audit (VERDICT r8 #7).
 
@@ -44,14 +44,14 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # Defaults build the sf0.1 -> sf1 notch; --src/--out/--stride-scale/
 # --doc-tag stack the same construction one notch higher (sf1 -> sf10:
 # strides x10 so shifted ids never collide with sf1's own shifted
 # range, and a distinct doc-substitution tag so the second layer of
 # word substitutions cannot alias the first).
-OUT = "/root/repo/.scratch/sf1"
 SRC = "/root/testdata/sf0.1"
 COPIES = 10
 
@@ -71,8 +71,10 @@ STRIDES = {
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--src", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default="/root/repo/.scratch/sf1")
+    from data_engineering_assessment_spark.sources.layout import SCRATCH_ROOT
+
+    ap.add_argument("--src", default=SRC)
+    ap.add_argument("--out", default=os.path.join(SCRATCH_ROOT, "sf1"))
     ap.add_argument("--stride-scale", type=int, default=1)
     ap.add_argument("--doc-tag", default="w{c}x")
     args = ap.parse_args()

@@ -5,8 +5,9 @@ BASELINE.md notes the reference publishes no numbers, so previous
 rounds used this repo's own `green_taxi_pipeline` as a same-box
 stand-in anchor.  This tool closes that gap: it imports the reference
 scripts VERBATIM from /root/reference (read-only; nothing is copied
-into this repo) and times the exact same end-to-end work bench.py's
-anchor performs, on the same tiled 200k-row anchor CSV:
+into this repo) and times the same end-to-end work as this repo's
+``green_taxi_pipeline`` on a tiled anchor CSV (the committed 3-row
+fixture repeated to 200k and 2M data rows):
 
   stage 1 = reference 01.py: driver-side regex clean (smart_open →
             BytesIO) + PyArrow typed CSV parse + parquet write.
@@ -30,6 +31,7 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import os
 import shutil
 import sys
 import time
@@ -37,7 +39,7 @@ import types
 from pathlib import Path
 from tempfile import TemporaryDirectory
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def load_reference_module(name: str, path: str):
@@ -47,12 +49,10 @@ def load_reference_module(name: str, path: str):
     return mod
 
 
-# Content pins for the reference scripts (ADVICE r06: module-level
-# code from the untrusted /root/reference checkout executes on every
-# bench run via bench._time_reference).  The scripts were reviewed at
-# these hashes; if the checkout ever changes, refuse to exec and let
-# the bench record "ref baseline skipped" instead of running
-# unreviewed code.
+# Content pins for the reference scripts (module-level code from the
+# untrusted /root/reference checkout executes on import).  The scripts
+# were reviewed at these hashes; if the checkout ever changes, refuse
+# to exec instead of running unreviewed code.
 REFERENCE_SHA256 = {
     "/root/reference/01.py": (
         "74adc90641f23cbef773b79b89072a22b6d9be496b950dfe81c7366361566b16"
@@ -165,24 +165,43 @@ def measure_reference(spark, ref01, ref02, csv_path, stage1_out, final_out,
     return best1, best2
 
 
+def anchor_csv(scratch: Path, n_rows: int) -> str:
+    """Materialize (once) a synthetic green-taxi CSV: the committed
+    3-row fixture tiled to ``n_rows`` data rows."""
+    from data_engineering_assessment_spark.plans.parity import FIXTURE_CSV
+
+    path = scratch / f"green_taxi_anchor_{n_rows}.csv"
+    if path.exists():
+        return str(path)
+    with open(FIXTURE_CSV) as f:
+        header, *rows = [ln.rstrip("\n") for ln in f if ln.strip()]
+    block = "".join(r + "\n" for r in rows)
+    tmp = path.with_suffix(".tmp")
+    with open(tmp, "w") as out:
+        out.write(header + "\n")
+        out.write(block * (n_rows // len(rows)))
+    os.replace(tmp, path)
+    return str(path)
+
+
 def main() -> None:
     ref01, ref02 = load_reference()
 
-    from bench import _anchor_csv
     from data_engineering_assessment_spark.session import get_spark
     from data_engineering_assessment_spark.sources.green_taxi import (
         green_taxi_pipeline,
     )
+    from data_engineering_assessment_spark.sources.layout import scratch_path
 
     spark = get_spark(app_name="ref-baseline")
     spark.sparkContext.setLogLevel("ERROR")
-    scratch = Path("/root/repo/.scratch/ref_baseline")
+    scratch = Path(scratch_path("ref", "baseline"))
     scratch.mkdir(parents=True, exist_ok=True)
 
     sizes = [int(s) for s in (sys.argv[1:] or ["200000", "2000000"])]
     results = []
     for n_rows in sizes:
-        csv_path = _anchor_csv(n_rows)
+        csv_path = anchor_csv(scratch, n_rows)
         stage1_out = scratch / f"01_{n_rows}.parquet"
         final_out = scratch / f"02_{n_rows}.parquet"
 

@@ -8,24 +8,23 @@ order-insensitive canonical-value rule as ``tests/oracle_utils.compare``.
 
 Usage:
   python tools/replay.py                      # all keys at sf0.01
-  python tools/replay.py --first 50           # only the grading-window prefix
   python tools/replay.py --sf /root/testdata/sf0.1 --keys agg_group join_inner
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--first", type=int, default=0, help="only the first N keys")
     ap.add_argument("--keys", nargs="*", default=None)
     ap.add_argument("--skip-smoke", action="store_true")
     ap.add_argument(
@@ -83,8 +82,6 @@ def main() -> int:
     queries = E.queries()
     oracles = E.oracle_sql()
     keys = args.keys or list(queries)
-    if args.first:
-        keys = keys[: args.first]
     if args.shuffle is not None:
         import random
 

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Empirical scaling audit: time every HEADLINE query at two scale
+"""Empirical scaling audit: time every registered query at two scale
 factors and flag anything whose wall time grows faster than the data.
 
 The plan-shape audits (PLANS.md, tests/test_plans.py) prove the
@@ -13,16 +13,18 @@ whose ratio exceeds the flag threshold get listed first — those are
 the ones to re-examine before trusting them at 1000×.
 
 Writes SCALING.md and prints the flagged list.  Run:
-    python tools/scale_audit.py [--runs N] [--flag RATIO]
+    python tools/scale_audit.py [--runs N] [--flag RATIO] [--keys K ...]
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_SMALL = "/root/testdata/sf0.01"
 SF_BIG = "/root/testdata/sf0.1"
@@ -43,19 +45,17 @@ def main() -> None:
     ap.add_argument("--flag", type=float, default=4.0)
     ap.add_argument("--small", default=SF_SMALL, help="smaller sf dir")
     ap.add_argument("--big", default=SF_BIG, help="10x sf dir")
-    ap.add_argument("--core", action="store_true",
-                    help="audit the frozen CORE set only (for the "
-                    "sf0.1 -> sf1 notch, where full HEADLINE is slow)")
-    ap.add_argument("--out", default="/root/repo/SCALING.md")
+    ap.add_argument("--keys", nargs="*", default=None,
+                    help="audit only these keys (default: every registered key)")
+    ap.add_argument("--out", default=os.path.join(REPO, "SCALING.md"))
     args = ap.parse_args()
 
-    import bench
     from data_engineering_assessment_spark import plans
     from data_engineering_assessment_spark.session import get_spark
 
     spark = get_spark()
     queries = plans.queries()
-    # same warmups as bench: scan infra + Python worker pool
+    # warm the scan infra and the Python worker pool before timing
     queries["scan_parquet"](spark, SF_SMALL).write.format("noop").mode(
         "overwrite"
     ).save()
@@ -63,7 +63,7 @@ def main() -> None:
         lambda it: it, schema="id long"
     ).write.format("noop").mode("overwrite").save()
 
-    keys = list(bench.CORE) if args.core else list(bench.HEADLINE)
+    keys = args.keys or list(queries)
     rows = []
     for i, key in enumerate(keys):
         t_small = time_key(queries, spark, key, args.small, args.runs)
