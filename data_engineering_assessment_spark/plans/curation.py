@@ -26,7 +26,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import ensure_deterministic_session
+from ..session import ensure_deterministic_session, scoped_conf
 from ..sources.layout import corpus_tag, events_tag, scratch_path
 from ..sources.tables import load_table
 from .registry import query
@@ -399,9 +399,11 @@ def stream_late_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"stream_late_{corpus_tag(sf_dir)}"
     # bytes-derived state shards (r15, shared rule): 3 micro-batches ×
     # 64 shards of state-store commits was pure provisioning overhead
-    from ..streaming.windows import scoped_shuffle_partitions, staged_stream_partitions
+    from ..streaming.windows import staged_stream_partitions
 
-    with scoped_shuffle_partitions(spark, staged_stream_partitions(in_dir)):
+    with scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(in_dir)}
+    ):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import ensure_deterministic_session
+from ..session import ensure_deterministic_session, scoped_conf
 from ..sources.layout import events_tag, scratch_path
 from ..sources.tables import load_table
 from .registry import query
@@ -1248,9 +1248,11 @@ def stream_session_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # streaming/windows.py — 64 shards on a few-MB replay is pure
     # state-store provisioning overhead; the rule grows the count
     # back for real volumes)
-    from ..streaming.windows import scoped_shuffle_partitions, staged_stream_partitions
+    from ..streaming.windows import staged_stream_partitions
 
-    with scoped_shuffle_partitions(spark, staged_stream_partitions(path)):
+    with scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(path)}
+    ):
         q = (
             per_session.writeStream.format("memory")
             .queryName(name)

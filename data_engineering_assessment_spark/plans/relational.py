@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import ensure_deterministic_session
+from ..session import ensure_deterministic_session, scoped_conf
 from ..sources.layout import corpus_tag, events_tag, scratch_path
 from ..sources.tables import load_table
 from .registry import query
@@ -2673,12 +2673,9 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     upd = base.filter(F.col("part_month") == F.lit("1999-03-01").cast("date")).withColumn(
         "o_totalprice", F.col("o_totalprice") * 2
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        upd.write.partitionBy("part_month").mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    upd.write.partitionBy("part_month").mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(path)
     return (
         spark.read.parquet(path)
         .groupBy("part_month")
@@ -3082,7 +3079,6 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_deterministic_session(spark)
     from ..streaming.windows import (
         read_event_stream,
-        scoped_shuffle_partitions,
         staged_stream_partitions,
         tumbling_counts,
     )
@@ -3091,7 +3087,9 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"stream_tumbling_{corpus_tag(sf_dir)}"
     agg = tumbling_counts(read_event_stream(spark, path))
-    with scoped_shuffle_partitions(spark, staged_stream_partitions(path)):
+    with scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(path)}
+    ):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -3146,14 +3144,15 @@ def stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import (
         purchase_click_join,
         read_event_stream,
-        scoped_shuffle_partitions,
         staged_stream_partitions,
     )
 
     path = _staged_events_replay(spark, sf_dir, "stream_ssj")
 
     name = f"stream_ssj_{corpus_tag(sf_dir)}"
-    with scoped_shuffle_partitions(spark, staged_stream_partitions(path)):
+    with scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(path)}
+    ):
         q = (
             purchase_click_join(read_event_stream(spark, path))
             .writeStream.format("memory")
@@ -3198,14 +3197,15 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import (
         read_event_stream,
         running_user_totals,
-        scoped_shuffle_partitions,
         staged_stream_partitions,
     )
 
     path = _staged_events_replay(spark, sf_dir, "stream_events")
 
     name = f"stream_state_{corpus_tag(sf_dir)}"
-    with scoped_shuffle_partitions(spark, staged_stream_partitions(path)):
+    with scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(path)}
+    ):
         q = (
             running_user_totals(read_event_stream(spark, path))
             .writeStream.format("memory")
@@ -3243,14 +3243,14 @@ def stream_dedup_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream; the single-file staging keeps the graded run one
     micro-batch so watermark timing cannot re-admit a duplicate."""
     ensure_deterministic_session(spark)
-    from ..streaming.windows import read_event_stream, stream_dedup
-
-    from ..streaming.windows import scoped_shuffle_partitions, staged_stream_partitions
+    from ..streaming.windows import read_event_stream, staged_stream_partitions, stream_dedup
 
     path = _staged_events_replay(spark, sf_dir, "stream_dup", doubled=True)
 
     name = f"stream_dedup_{corpus_tag(sf_dir)}"
-    with scoped_shuffle_partitions(spark, staged_stream_partitions(path)):
+    with scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(path)}
+    ):
         q = (
             stream_dedup(read_event_stream(spark, path))
             .writeStream.format("memory")
@@ -3306,7 +3306,6 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_deterministic_session(spark)
     from ..streaming.windows import (
         read_event_stream,
-        scoped_shuffle_partitions,
         session_counts,
         staged_stream_partitions,
     )
@@ -3314,7 +3313,9 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _staged_events_replay(spark, sf_dir, "stream_ssj")
 
     name = f"stream_sess_{corpus_tag(sf_dir)}"
-    with scoped_shuffle_partitions(spark, staged_stream_partitions(path)):
+    with scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(path)}
+    ):
         q = (
             session_counts(read_event_stream(spark, path))
             .writeStream.format("memory")
@@ -4233,7 +4234,6 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_deterministic_session(spark)
     from ..streaming.windows import (
         read_event_stream,
-        scoped_shuffle_partitions,
         sliding_counts,
         staged_stream_partitions,
     )
@@ -4241,7 +4241,9 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _staged_events_replay(spark, sf_dir, "stream_events")
 
     name = f"stream_slide_{corpus_tag(sf_dir)}"
-    with scoped_shuffle_partitions(spark, staged_stream_partitions(path)):
+    with scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(path)}
+    ):
         q = (
             sliding_counts(read_event_stream(spark, path))
             .writeStream.format("memory")

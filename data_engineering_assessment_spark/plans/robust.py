@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import ensure_deterministic_session
+from ..session import ensure_deterministic_session, scoped_conf
 from ..sources.layout import events_tag, scratch_path
 from ..sources.tables import load_table
 from .insights import _cents, _epoch_s
@@ -502,9 +502,11 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured 5.5 s → 2.2 s at sf0.1 going 32 → 8); the same
     # bytes-derived rule grows the count back for real volumes — the
     # streaming twin of the green-taxi maxPartitionBytes scoping.
-    from ..streaming.windows import scoped_shuffle_partitions, staged_stream_partitions
+    from ..streaming.windows import staged_stream_partitions
 
-    with scoped_shuffle_partitions(spark, staged_stream_partitions(path)):
+    with scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(path)}
+    ):
         q = (
             view_purchase_left_join(read_event_stream(spark, path))
             .writeStream.format("memory")

@@ -10,6 +10,8 @@ paths).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -91,3 +93,35 @@ def ensure_deterministic_session(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.optimizer.excludedRules", _EXCLUDED_OPT_RULES)
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: Mapping[str, object]) -> Iterator[None]:
+    """Set runtime confs for the body of a ``with`` block, then restore
+    each to its previous value (or unset it if it was unset).
+
+    Used for confs a streaming query reads once at ``.start()``
+    (``spark.sql.shuffle.partitions`` = state shards,
+    ``spark.sql.streaming.noDataMicroBatches.enabled``): the query
+    clones the session conf when it starts, so the scope only needs
+    to wrap the start call.
+
+    SERIAL-EXECUTION ASSUMPTION: the conf is session-global, so a
+    BATCH query planned concurrently inside the ``with`` block from
+    another driver thread would pick up the scoped values.  Every
+    in-repo call site runs queries serially (replay/pytest/perfbench
+    execute one op at a time), and the window is a few hundred ms
+    around ``.start()``.  If the engine ever gains a concurrent
+    driver, move the scope to per-query options where Spark has them
+    or to a dedicated session clone for streaming starts."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, str(v))
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

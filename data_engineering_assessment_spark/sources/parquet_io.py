@@ -40,8 +40,10 @@ def _merge_parts(parts: list[str], path: str) -> None:
     ) as writer:
         for part in parts:
             writer.write_table(pq.read_table(part))
-    if os.path.exists(path) and os.path.isfile(path):
-        os.remove(path)
+    # os.replace swaps a file target atomically but cannot replace a
+    # directory (an earlier parallel write to the same path)
+    if os.path.isdir(path):
+        shutil.rmtree(path)
     os.replace(tmp, path)
 
 

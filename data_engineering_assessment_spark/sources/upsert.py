@@ -3,7 +3,7 @@
 Plain parquet has no transaction log, so MERGE is rewrite-based:
 delete-matching (left anti join on the key) + insert (union).  The
 scale lever is *scoping the rewrite*: with a partitioned layout and
-``spark.sql.sources.partitionOverwriteMode=dynamic``, only the
+the per-write ``partitionOverwriteMode=dynamic`` option, only the
 partitions that actually contain updated keys are read, merged and
 replaced — untouched partition directories are never rewritten
 (asserted via file mtimes in tests/test_layout.py).  At 100 TB an
@@ -55,11 +55,8 @@ def upsert_parquet(
         .localCheckpoint(eager=True)
     )
     if partition_by:
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy(partition_by).parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        merged.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(partition_by).parquet(path)
     else:
         merged.write.mode("overwrite").parquet(path)

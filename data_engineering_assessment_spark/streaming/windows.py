@@ -45,38 +45,6 @@ def staged_stream_partitions(path: str) -> int:
     return int(max(8, min(200, staged // (8 << 20) + 8)))
 
 
-class scoped_shuffle_partitions:
-    """Context manager: set ``spark.sql.shuffle.partitions`` for the
-    duration of one streaming run, restore on exit.  The conf is read
-    at stream START, so it must wrap ``.start()``; batch keys keep the
-    session default (AQE coalesces those at runtime — streaming state
-    shards are the one place the static count is load-bearing).
-
-    SERIAL-EXECUTION ASSUMPTION (VERDICT r15 what's-wrong #4): the
-    conf is session-global, so a BATCH query planned concurrently
-    inside the ``with`` block from another driver thread would pick up
-    the scoped count.  Every in-repo call site runs queries serially
-    (bench/replay/pytest execute one key at a time), and the window is
-    a few hundred ms around ``.start()``.  If the engine ever gains a
-    concurrent driver, move the scope to a per-stream conf (Spark does
-    not yet expose shuffle partitions as a per-query ``.option()``) or
-    a dedicated session clone for streaming starts."""
-
-    def __init__(self, spark, parts: int):
-        self._spark = spark
-        self._parts = parts
-        self._key = "spark.sql.shuffle.partitions"
-
-    def __enter__(self):
-        self._prev = self._spark.conf.get(self._key)
-        self._spark.conf.set(self._key, str(self._parts))
-        return self
-
-    def __exit__(self, *exc):
-        self._spark.conf.set(self._key, self._prev)
-        return False
-
-
 EVENT_STREAM_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -356,16 +324,16 @@ def user_profile_tws(events: DataFrame) -> DataFrame:
     reduction a grader would run after draining.
 
     ENVIRONMENT GATE (like the multimodal codec stubs): executing a
-    transformWithStateInPandas query requires `google.protobuf` (the
-    state-server wire protocol of Spark's TWS driver worker) and the
-    RocksDB state store provider; this container ships neither
-    protobuf nor pip access, so the operator PLANS here but cannot
-    RUN (`ImportError: cannot import name 'descriptor' from
+    transformWithStateInPandas query requires the RocksDB state store
+    provider and `google.protobuf` (the state-server wire protocol of
+    Spark's TWS driver worker).  The provider ships with Spark 4.1.2
+    (``pyspark/jars/rocksdbjni-9.8.4.jar``); only protobuf is an extra
+    Python dependency.  Without it the operator PLANS but cannot RUN
+    (`ImportError: cannot import name 'descriptor' from
     'google.protobuf'` from transform_with_state_driver_worker).  The
-    pytest builds the streaming plan and asserts the gate; on a
-    normal cluster (protobuf present +
-    spark.sql.streaming.stateStore.providerClass =
-    RocksDBStateStoreProvider) it runs as written.
+    pytest builds the streaming plan, and runs it when protobuf is
+    importable (with spark.sql.streaming.stateStore.providerClass =
+    RocksDBStateStoreProvider).
     """
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,

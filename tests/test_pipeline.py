@@ -2237,3 +2237,27 @@ def test_embed_incremental_summary_contains_pairs(spark):
         best_cos = max(c for _, c in partners)
         best_partner = min(p for p, c in partners if c == best_cos)
         assert (s.best_match, s.best_cosine_micro) == (best_partner, best_cos)
+
+
+def test_single_file_write_replaces_parallel_output_dir(spark, tmp_path):
+    """``write_parquet(single_file=True)`` over a path an earlier
+    parallel write left as a directory replaces that directory with
+    the merged file (it used to raise IsADirectoryError), and the
+    reverse overwrite still works."""
+    import os
+
+    from data_engineering_assessment_spark.sources.parquet_io import write_parquet
+
+    path = str(tmp_path / "out.parquet")
+    first = spark.range(0, 50).repartition(3)
+    write_parquet(first, path, single_file=False)
+    assert os.path.isdir(path)
+
+    second = spark.range(100, 130).repartition(2)
+    write_parquet(second, path, single_file=True)
+    assert os.path.isfile(path)
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(100, 130))
+
+    write_parquet(first, path, single_file=False)
+    assert os.path.isdir(path)
+    assert spark.read.parquet(path).count() == 50

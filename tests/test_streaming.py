@@ -331,10 +331,11 @@ def test_transform_with_state_plan_builds(spark, event_dir):
 
 
 def test_transform_with_state_executes_when_env_allows(spark, event_dir):
-    """Execution half: needs google.protobuf (the TWS driver-worker
-    wire protocol) + RocksDB state store — absent in this container
-    (documented gate in user_profile_tws's docstring).  On a normal
-    cluster this runs and must equal the batch aggregate."""
+    """Execution half: needs the RocksDB state store provider, which
+    ships with Spark 4.1.2, and google.protobuf (the TWS driver-worker
+    wire protocol), which is an extra Python dependency; skipped when
+    protobuf is not importable (documented gate in user_profile_tws's
+    docstring).  Where it runs it must equal the batch aggregate."""
     from data_engineering_assessment_spark.streaming.windows import (
         user_profile_tws,
     )
@@ -463,3 +464,193 @@ def test_stream_left_outer_join_multibatch_matches_batch(spark):
 
     key = lambda r: (r.view_id, r.purchase_id)  # noqa: E731
     assert sorted(map(key, got)) == sorted(map(key, exp))
+
+
+# -- no-data micro-batches in the foreachBatch sinks ------------------------
+
+_HOUR = 3600
+_T0 = 1_704_067_200  # 2024-01-01T00:00:00Z
+_NO_DATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
+_MULTI_OP_CONF = "spark.sql.streaming.statefulOperator.allowMultiple"
+
+
+def _land_events(land_dir, k, rows):
+    """Land one event file (hidden name first, so the file source
+    never sees a partial file).  ``rows`` = (event_id, ts_s, type)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pa.table(
+        {
+            "event_id": pa.array([r[0] for r in rows], pa.int64()),
+            "ts": pa.array([r[1] * 1_000_000 for r in rows], pa.timestamp("us", tz="UTC")),
+            "user_id": pa.array([r[0] % 7 for r in rows], pa.int64()),
+            "event_type": [r[2] for r in rows],
+            "value": [float(r[0] % 5) + 0.25 for r in rows],
+            "props": ["{}"] * len(rows),
+        }
+    )
+    tmp = os.path.join(land_dir, f".b{k:03d}.tmp")
+    pq.write_table(tbl, tmp)
+    os.rename(tmp, os.path.join(land_dir, f"b{k:03d}.parquet"))
+
+
+def _hour_of_events(k, n=12):
+    """n events in hour k at minute 3 + 5i: never hour-aligned, so no
+    watermark or window end lands exactly on an event."""
+    types = ("click", "view", "purchase")
+    return [(k * 1000 + i, _T0 + k * _HOUR + (3 + 5 * i) * 60, types[i % 3]) for i in range(n)]
+
+
+def test_append_aggregation_sink_keeps_no_data_batch(spark, tmp_path):
+    """An append-mode windowed aggregation emits a window only when
+    the watermark passes its end, so its no-data micro-batch EMITS
+    rows: after every AvailableNow run the table holds exactly the
+    windows that run's watermark closed — not one run later."""
+    from data_engineering_assessment_spark.sources import tablelog
+    from data_engineering_assessment_spark.streaming.sinks import start_tablelog_sink
+
+    land = tmp_path / "land"
+    land.mkdir()
+    table, ckpt = str(tmp_path / "tbl"), str(tmp_path / "ckpt")
+    delay_s = 10 * 60
+    landed = []
+    for k in range(4):
+        rows = _hour_of_events(k)
+        _land_events(str(land), k, rows)
+        landed += rows
+        stream = tumbling_counts(
+            read_event_stream(spark, str(land)), "1 hour", watermark="10 minutes"
+        )
+        start_tablelog_sink(stream, table, ckpt).awaitTermination(120)
+
+        watermark = max(ts for _, ts, _ in landed) - delay_s
+        want = {}
+        for _, ts, etype in landed:
+            w = ts - ts % _HOUR
+            if w + _HOUR <= watermark:
+                want[(w, etype)] = want.get((w, etype), 0) + 1
+        got = {
+            (r.window_start, r.event_type): r.n
+            for r in tablelog.read_version(spark, table).collect()
+        }
+        assert got == want, f"run {k}"
+    assert len(want) == 3 * 3  # windows 0..2 closed, three event types each
+
+
+@pytest.fixture(scope="module")
+def evict_only_runs(spark):
+    """Five landed hourly batches, each followed by one AvailableNow
+    run of ``tumbling_counts`` → ``start_upsert_sink`` (update mode)
+    and ``stream_dedup`` → ``start_tablelog_sink`` (append mode).
+    From batch 1 on, each batch re-sends two rows of the previous
+    batch and one of its own, and carries two rows four hours late.
+    Each is behind its batch's own watermark.  The aggregation's late
+    test is on the window end, and by that test none is behind the
+    previous batch's watermark, so they are all dropped only if late
+    rows are filtered by the watermark the skipped no-data batch would
+    have used."""
+    import os
+
+    from data_engineering_assessment_spark.streaming.sinks import (
+        start_tablelog_sink,
+        start_upsert_sink,
+    )
+    from data_engineering_assessment_spark.streaming.windows import stream_dedup
+
+    base = tempfile.mkdtemp(prefix="dea_evict_only_")
+    land = os.path.join(base, "land")
+    os.makedirs(land)
+    out = {
+        "target": os.path.join(base, "window_counts"),
+        "table": os.path.join(base, "events_dedup"),
+        "on_time": [],
+        "upsert": [],
+        "dedup": [],
+        "conf": [],
+    }
+    prev = []
+    for k in range(5):
+        rows = _hour_of_events(k)
+        late = []
+        if k:
+            rows += prev[:2] + rows[:1]
+            late = [(k * 1000 + 900 + j, _T0 + (k - 4) * _HOUR + 7 * 60, "view") for j in range(2)]
+        _land_events(land, k, rows + late)
+        out["on_time"].append(rows)
+        prev = _hour_of_events(k)
+
+        q = start_upsert_sink(
+            tumbling_counts(read_event_stream(spark, land)),
+            out["target"], ["window_start", "event_type"],
+            checkpoint=os.path.join(base, "ckpt_counts"),
+        )
+        out["conf"].append((spark.conf.get(_NO_DATA_CONF), spark.conf.get(_MULTI_OP_CONF)))
+        q.awaitTermination(120)
+        out["upsert"].append(q.recentProgress)
+        q = start_tablelog_sink(
+            stream_dedup(read_event_stream(spark, land)),
+            out["table"], checkpoint=os.path.join(base, "ckpt_dedup"),
+        )
+        out["conf"].append((spark.conf.get(_NO_DATA_CONF), spark.conf.get(_MULTI_OP_CONF)))
+        q.awaitTermination(120)
+        out["dedup"].append(q.recentProgress)
+    return out
+
+
+def test_evict_only_sinks_run_one_batch_per_landed_batch(spark, evict_only_runs):
+    """Update-mode aggregation and watermarked dedup: a no-data batch
+    could only evict state, so the sinks never schedule one — every
+    micro-batch carries input — and the final state still equals the
+    batch aggregation over on-time rows and the unique on-time ids
+    (every late row dropped, as with the no-data batch).  The session
+    confs the sinks scope are unchanged after each start."""
+    from data_engineering_assessment_spark.sources import tablelog
+
+    runs = evict_only_runs
+    assert runs["conf"] == [("true", "true")] * 10
+    for progress in runs["upsert"] + runs["dedup"]:
+        assert progress and all(p["numInputRows"] > 0 for p in progress)
+    dropped = sum(
+        p["stateOperators"][0]["numRowsDroppedByWatermark"] for r in runs["dedup"] for p in r
+    )
+    assert dropped == 2 * 4  # every late row
+
+    on_time = [row for rows in runs["on_time"] for row in rows]
+    want = {}
+    for eid, ts, etype in on_time:
+        acc = want.setdefault((ts - ts % _HOUR, etype), [0, 0])
+        acc[0] += 1
+        acc[1] += round((float(eid % 5) + 0.25) * 100)
+    got = {
+        (r.window_start, r.event_type): [r.n, int(r.sum_value * 100)]
+        for r in spark.read.parquet(runs["target"]).collect()
+    }
+    assert got == want
+
+    ids = [r.event_id for r in tablelog.read_version(spark, runs["table"]).collect()]
+    assert sorted(ids) == sorted({eid for eid, _, _ in on_time})
+
+
+def test_skipped_no_data_batch_defers_eviction_by_one_trigger(evict_only_runs):
+    """With the no-data batch skipped, eviction runs in the next data
+    batch under the watermark already in force at its start.  So after
+    every batch the aggregation state holds exactly the on-time
+    (window, type) keys whose window ends after that watermark: no
+    window that ended before it survives the batch."""
+    from datetime import datetime
+
+    runs = evict_only_runs
+    for k, (progress,) in enumerate(runs["upsert"]):
+        wm = datetime.fromisoformat(progress["eventTime"]["watermark"].replace("Z", "+00:00"))
+        wm_s = int(wm.timestamp())
+        keys = {(ts - ts % _HOUR, t) for rows in runs["on_time"][: k + 1] for _, ts, t in rows}
+        live = {key for key in keys if key[0] + _HOUR > wm_s}
+        so = progress["stateOperators"][0]
+        # the upsert evaluates its batch twice (anti join + union) once
+        # the target exists; the progress sums state metrics over both
+        executions = so["numStateStoreInstances"] // so["numShufflePartitions"]
+        assert so["numRowsTotal"] == executions * len(live), f"batch {k}"
+    assert live < keys  # the last batch did evict closed windows
