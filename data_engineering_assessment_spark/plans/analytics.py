@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import ensure_deterministic_session
-from ..sources.layout import scratch_path
+from ..sources.layout import corpus_tag, materialize, scratch_path
 from ..sources.tables import load_table
 from .registry import query
 
@@ -326,23 +326,20 @@ def scan_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an index lookup instead of a full listing+scan.  Files are
     range-disjoint so selectivity s opens ~s of the files."""
     ensure_deterministic_session(spark)
-    import os
-
     from ..sources.layout import (
         build_minmax_index,
-        clean_superseded,
         pruned_read,
         versioned_scratch_tag,
         write_range_chunked,
     )
 
     tag = versioned_scratch_tag(sf_dir, scan_stats_prune)
-    path = scratch_path("stats_prune", tag)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        clean_superseded(path)
-        write_range_chunked(
-            load_table(spark, sf_dir, "orders"), path, key="o_orderkey", n_files=16
-        )
+    path = materialize(
+        scratch_path("stats_prune", tag),
+        lambda tmp: write_range_chunked(
+            load_table(spark, sf_dir, "orders"), tmp, key="o_orderkey", n_files=16
+        ),
+    )
     index = build_minmax_index(path, "o_orderkey")
     # scale-aware bounds from the index itself (exact int stats, so
     # identical to the oracle's table-derived min/max at any SF):
@@ -590,14 +587,13 @@ def scan_table_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning cost is O(files in the version) and in-flight or
     crashed writers can't be observed."""
     ensure_deterministic_session(spark)
-    import hashlib
     import os
     import shutil
 
     from ..sources import tablelog
 
     docs = load_table(spark, sf_dir, "documents")
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = corpus_tag(sf_dir)
     path = scratch_path("tablelog", tag)
     if os.path.exists(path):
         shutil.rmtree(path)
@@ -641,23 +637,18 @@ def scan_tablelog_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fast path — this key grades the FORMAT integration, not a
     replacement scan."""
     ensure_deterministic_session(spark)
-    import os
-
     from ..sources import tablelog
-    from ..sources.layout import clean_superseded, versioned_scratch_tag
+    from ..sources.layout import versioned_scratch_tag
     from ..sources.tablelog_datasource import register
 
     docs = load_table(spark, sf_dir, "documents")
     tag = versioned_scratch_tag(sf_dir, scan_tablelog_datasource, tablelog)
-    path = scratch_path("tablelog_ds", tag)
-    if not tablelog.versions(path):
-        if os.path.exists(path):
-            import shutil
 
-            shutil.rmtree(path)
-        clean_superseded(path)
-        tablelog.create_table(docs.filter(F.col("doc_id") % 3 == 0), path)
-        tablelog.append(docs.filter(F.col("doc_id") % 3 == 1), path)
+    def write(tmp: str) -> None:
+        tablelog.create_table(docs.filter(F.col("doc_id") % 3 == 0), tmp)
+        tablelog.append(docs.filter(F.col("doc_id") % 3 == 1), tmp)
+
+    path = materialize(scratch_path("tablelog_ds", tag), write)
     register(spark)
     v0 = spark.read.format("tablelog").option("version", 0).load(path)
     return v0.select(
@@ -734,18 +725,17 @@ def scan_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    from ..sources.layout import clean_superseded, versioned_scratch_tag
+    from ..sources.layout import versioned_scratch_tag
 
     docs = load_table(spark, sf_dir, "documents")
     tag = versioned_scratch_tag(sf_dir, scan_jsonl_quarantine)
-    path = scratch_path("jsonl_quarantine", tag)
-    if not os.path.exists(os.path.join(path, "_corrupted_marker")):
-        clean_superseded(path)
-        docs.select("doc_id", "lang", "text").write.mode("overwrite").json(path)
+
+    def write(tmp: str) -> None:
+        docs.select("doc_id", "lang", "text").write.json(tmp)
         # inject garbage lines: clearly-broken JSON every ~40 records
-        for name in sorted(os.listdir(path)):
+        for name in sorted(os.listdir(tmp)):
             if name.endswith(".json"):
-                full = os.path.join(path, name)
+                full = os.path.join(tmp, name)
                 with open(full) as f:
                     lines = f.readlines()
                 out = []
@@ -758,10 +748,11 @@ def scan_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # the local FS wrote a .crc sidecar at write time; the
                 # in-place edit invalidates it — drop it or the read
                 # fails on ChecksumException before parsing
-                crc = os.path.join(path, f".{name}.crc")
+                crc = os.path.join(tmp, f".{name}.crc")
                 if os.path.exists(crc):
                     os.unlink(crc)
-        open(os.path.join(path, "_corrupted_marker"), "w").close()
+
+    path = materialize(scratch_path("jsonl_quarantine", tag), write)
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -923,14 +914,13 @@ def stream_tablelog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once to storage; downstream readers get snapshot
     isolation for free."""
     ensure_deterministic_session(spark)
-    import hashlib
     import shutil
 
     from ..sources import tablelog
     from ..streaming.sinks import start_tablelog_sink
 
     docs = load_table(spark, sf_dir, "documents")
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = corpus_tag(sf_dir)
     src = scratch_path("tlsink_src", tag)
     table = scratch_path("tlsink_tbl", tag)
     ckpt = scratch_path("tlsink_ckpt", tag)
@@ -1813,14 +1803,13 @@ def tablelog_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape as [[snapshot_diff]], upgraded from counts to the row-level
     feed and fed by the table format itself."""
     ensure_deterministic_session(spark)
-    import hashlib
     import os
     import shutil
 
     from ..sources import tablelog
 
     docs = load_table(spark, sf_dir, "documents")
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = corpus_tag(sf_dir)
     path = scratch_path("tablelog_cf", tag)
     if os.path.exists(path):
         shutil.rmtree(path)
@@ -2107,24 +2096,21 @@ def scan_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     footprint, not the layout order — exactly the lookups (user id,
     order id, doc id) a 100 TB fact table serves."""
     ensure_deterministic_session(spark)
-    import os
-
     from ..sources.layout import (
         bloom_probe_files,
         build_bloom_index,
-        clean_superseded,
         pruned_read,
         versioned_scratch_tag,
         write_range_chunked,
     )
 
     tag = versioned_scratch_tag(sf_dir, scan_bloom_index)
-    path = scratch_path("bloom_index", tag)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        clean_superseded(path)
-        write_range_chunked(
-            load_table(spark, sf_dir, "orders"), path, key="o_orderkey", n_files=16
-        )
+    path = materialize(
+        scratch_path("bloom_index", tag),
+        lambda tmp: write_range_chunked(
+            load_table(spark, sf_dir, "orders"), tmp, key="o_orderkey", n_files=16
+        ),
+    )
     index = build_bloom_index(spark, path, "o_custkey")
     picked = bloom_probe_files(index, spark, BLOOM_PROBE_KEYS, "o_custkey")
     df = pruned_read(spark, picked).filter(F.col("o_custkey").isin(BLOOM_PROBE_KEYS))
@@ -2164,23 +2150,19 @@ def stream_tablelog_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     immutable manifests, so recovery cannot duplicate or drop a
     file."""
     ensure_deterministic_session(spark)
-    import os
-    import shutil
-
     from ..sources import tablelog
-    from ..sources.layout import clean_superseded, versioned_scratch_tag
+    from ..sources.layout import versioned_scratch_tag
     from ..sources.tablelog_datasource import register
 
     docs = load_table(spark, sf_dir, "documents")
     tag = versioned_scratch_tag(sf_dir, stream_tablelog_source, tablelog)
-    path = scratch_path("tablelog_src", tag)
-    if len(tablelog.versions(path)) != 3:
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        clean_superseded(path)
-        tablelog.create_table(docs.filter(F.col("doc_id") % 3 == 0), path)
-        tablelog.append(docs.filter(F.col("doc_id") % 3 == 1), path)
-        tablelog.append(docs.filter(F.col("doc_id") % 3 == 2), path)
+
+    def write(tmp: str) -> None:
+        tablelog.create_table(docs.filter(F.col("doc_id") % 3 == 0), tmp)
+        tablelog.append(docs.filter(F.col("doc_id") % 3 == 1), tmp)
+        tablelog.append(docs.filter(F.col("doc_id") % 3 == 2), tmp)
+
+    path = materialize(scratch_path("tablelog_src", tag), write)
     register(spark)
 
     name = f"tls_src_{tag}"
@@ -2232,7 +2214,6 @@ def tablelog_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     concurrent writer moves the head and the publish fails cleanly
     for a re-stage, never interleaves."""
     ensure_deterministic_session(spark)
-    import hashlib
     import os
     import shutil
 
@@ -2242,7 +2223,7 @@ def tablelog_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("long").alias("cents"),
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = corpus_tag(sf_dir)
     path = scratch_path("tablelog_wap", tag)
     if os.path.exists(path):
         shutil.rmtree(path)
@@ -2304,31 +2285,23 @@ def schema_widen_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_deterministic_session(spark)
     import os
 
-    from ..sources.layout import clean_superseded, versioned_scratch_tag
+    from ..sources.layout import versioned_scratch_tag
     from ..sources.tables import load_table as _lt
 
     tag = versioned_scratch_tag(sf_dir, schema_widen_scan)
-    base = scratch_path("widen", tag)
     orders = _lt(spark, sf_dir, "orders").select(
         "o_orderkey",
         (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("long").alias("cents"),
     )
-    if not os.path.exists(os.path.join(base, "old", "_SUCCESS")):
-        clean_superseded(base)
-        (
-            orders.filter(F.col("o_orderkey") % 2 == 0)
-            .select(
-                F.col("o_orderkey").cast("int").alias("o_orderkey"),
-                F.col("cents").cast("int").alias("cents"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(base, "old"))
-        )
-        (
-            orders.filter(F.col("o_orderkey") % 2 == 1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(base, "new"))
-        )
+
+    def write(tmp: str) -> None:
+        orders.filter(F.col("o_orderkey") % 2 == 0).select(
+            F.col("o_orderkey").cast("int").alias("o_orderkey"),
+            F.col("cents").cast("int").alias("cents"),
+        ).write.parquet(os.path.join(tmp, "old"))
+        orders.filter(F.col("o_orderkey") % 2 == 1).write.parquet(os.path.join(tmp, "new"))
+
+    base = materialize(scratch_path("widen", tag), write)
     return spark.read.schema("o_orderkey long, cents long").parquet(
         os.path.join(base, "old"), os.path.join(base, "new")
     )
@@ -2357,7 +2330,6 @@ def tablelog_delete_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrites survivors of just those files, one O(1) manifest link —
     cost tracks the changed data, not the table size."""
     ensure_deterministic_session(spark)
-    import hashlib
     import os
     import shutil
 
@@ -2366,7 +2338,7 @@ def tablelog_delete_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = corpus_tag(sf_dir)
     path = scratch_path("tablelog_del", tag)
     if os.path.exists(path):
         shutil.rmtree(path)
@@ -2399,7 +2371,6 @@ def tablelog_update_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     amplification is bounded by predicate locality, which is why
     curated layouts cluster on the columns DML predicates use."""
     ensure_deterministic_session(spark)
-    import hashlib
     import os
     import shutil
 
@@ -2408,7 +2379,7 @@ def tablelog_update_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = corpus_tag(sf_dir)
     path = scratch_path("tablelog_upd", tag)
     if os.path.exists(path):
         shutil.rmtree(path)
@@ -2441,7 +2412,6 @@ def tablelog_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance job that keeps streaming-ingested tables (many tiny
     per-batch files) scannable at full throughput."""
     ensure_deterministic_session(spark)
-    import hashlib
     import os
     import shutil
 
@@ -2450,7 +2420,7 @@ def tablelog_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = corpus_tag(sf_dir)
     path = scratch_path("tablelog_opt", tag)
     if os.path.exists(path):
         shutil.rmtree(path)
@@ -2557,29 +2527,23 @@ def tablelog_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     and files-without-stats degrade to false positives, never
     loss."""
     ensure_deterministic_session(spark)
-    import os
-
     from ..sources import tablelog
-    from ..sources.layout import clean_superseded, versioned_scratch_tag
+    from ..sources.layout import versioned_scratch_tag
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("long").alias("cents"),
     )
     tag = versioned_scratch_tag(sf_dir, tablelog_stats_prune, tablelog)
-    path = scratch_path("tablelog_stats", tag)
-    if not tablelog.versions(path):
-        if os.path.exists(path):
-            import shutil
-
-            shutil.rmtree(path)
-        clean_superseded(path)
-        tablelog.create_table_with_stats(
+    path = materialize(
+        scratch_path("tablelog_stats", tag),
+        lambda tmp: tablelog.create_table_with_stats(
             orders.repartitionByRange(16, F.col("o_orderkey"))
             .sortWithinPartitions("o_orderkey"),
-            path,
+            tmp,
             stats_cols=["o_orderkey"],
-        )
+        ),
+    )
     stats = tablelog._read_manifest(path, 0)["stats"]
     g_mn = min(s["o_orderkey"][0] for s in stats.values())
     g_mx = max(s["o_orderkey"][1] for s in stats.values())

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import ensure_deterministic_session, scoped_conf
-from ..sources.layout import corpus_tag, events_tag, scratch_path
+from ..sources.layout import corpus_tag, events_tag, materialize, scratch_path
 from ..sources.tables import load_table
 from .registry import query
 
@@ -352,32 +352,22 @@ def stream_late_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministically from the static events table, so rebuilding it
     # per run paid 3 filtered writes + moves per rep.  The tag is the
     # CONTENT-fingerprinted one (layout.events_tag: events.parquet
-    # size+mtime), so in-place corpus regeneration re-stages; the
-    # marker file is written last as the completion marker.
-    base = scratch_path("stream_late", events_tag(sf_dir))
-    in_dir = f"{base}/in"
-    if not os.path.exists(f"{base}/_STAGED"):
-        # reap stale-tag siblings before staging (VERDICT r15 #3 —
-        # regenerated corpora otherwise strand old fingerprint dirs)
-        from ..sources.layout import clean_superseded
-
-        clean_superseded(base)
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(in_dir)
+    # size+mtime), so in-place corpus regeneration re-stages.
+    def stage_batches(tmp: str) -> None:
+        os.makedirs(f"{tmp}/in")
         batches = (
             events.filter((t >= t_split) & (t < final_hour)),  # bulk
             events.filter(t >= final_hour),  # tail: pushes the watermark
             events.filter(t < t_split),  # late by weeks: must be dropped
         )
         for i, part in enumerate(batches):
-            stage = f"{base}/stage{i}"
-            part.coalesce(1).write.mode("overwrite").parquet(stage)
-            src = glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{in_dir}/batch{i}.parquet"
-            shutil.move(src, dst)
+            stage = f"{tmp}/stage{i}"
+            part.coalesce(1).write.parquet(stage)
+            dst = f"{tmp}/in/batch{i}.parquet"
+            shutil.move(glob.glob(f"{stage}/part-*.parquet")[0], dst)
             os.utime(dst, (1_000_000_000 + i * 3600, 1_000_000_000 + i * 3600))
-        with open(f"{base}/_STAGED", "w") as fh:
-            fh.write("ok")
+
+    in_dir = materialize(scratch_path("stream_late", events_tag(sf_dir)), stage_batches) + "/in"
 
     from ..streaming.windows import EVENT_STREAM_SCHEMA
 
@@ -446,30 +436,23 @@ def scan_corrupt_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_deterministic_session(spark)
     docs = load_table(spark, sf_dir, "documents")
 
-    from ..sources.layout import clean_superseded, versioned_scratch_tag
+    from ..sources.layout import versioned_scratch_tag
 
-    base = scratch_path("corrupt_scan", versioned_scratch_tag(sf_dir, scan_corrupt_tolerant))
-    in_dir = f"{base}/in"
-    marker = f"{base}/_STAGED"
-    if not os.path.exists(marker):
-        shutil.rmtree(base, ignore_errors=True)
-        clean_superseded(base)
-        os.makedirs(in_dir)
+    def stage_shards(tmp: str) -> None:
+        os.makedirs(f"{tmp}/in")
         for i in range(4):
-            stage = f"{base}/stage{i}"
-            docs.filter(F.col("doc_id") % 4 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            src = glob.glob(f"{stage}/part-*.parquet")[0]
-            shutil.move(src, f"{in_dir}/shard{i}.parquet")
+            stage = f"{tmp}/stage{i}"
+            docs.filter(F.col("doc_id") % 4 == i).coalesce(1).write.parquet(stage)
+            shutil.move(glob.glob(f"{stage}/part-*.parquet")[0], f"{tmp}/in/shard{i}.parquet")
             shutil.rmtree(stage)
         # truncate shard 3 mid-body: footer gone, file unreadable
-        victim = f"{in_dir}/shard3.parquet"
+        victim = f"{tmp}/in/shard3.parquet"
         size = os.path.getsize(victim)
         with open(victim, "r+b") as f:
             f.truncate(size // 2)
-        with open(marker, "w") as f:
-            f.write("staged+corrupted\n")
+
+    tag = versioned_scratch_tag(sf_dir, scan_corrupt_tolerant)
+    in_dir = materialize(scratch_path("corrupt_scan", tag), stage_shards) + "/in"
 
     surviving = (
         spark.read.option("ignoreCorruptFiles", "true")

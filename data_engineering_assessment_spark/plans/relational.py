@@ -10,7 +10,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import ensure_deterministic_session, scoped_conf
-from ..sources.layout import corpus_tag, events_tag, scratch_path
+from ..sources.layout import corpus_tag, events_tag, materialize, scratch_path
 from ..sources.tables import load_table
 from .registry import query
 
@@ -29,24 +29,17 @@ def _staged_events_replay(spark: SparkSession, sf_dir: str, family: str,
     the merge_upsert/stream_attr keys already avoided).  The tag
     fingerprints events.parquet (size+mtime_ns, layout.events_tag),
     so in-place corpus regeneration re-stages instead of replaying
-    stale data; ``_SUCCESS`` is the completion marker.  ``doubled``
-    stages events ∪ events (the dedup key's duplicated input).
-    Staging also reaps same-family dirs carrying a stale tag
-    (layout.clean_superseded — VERDICT r15 what's-wrong #3: without
-    the reap, every corpus regeneration strands the old fingerprint
-    dir and ``.scratch`` grows without bound)."""
-    import os
+    stale data (``layout.materialize`` builds it once and reaps
+    stale-tag siblings).  ``doubled`` stages events ∪ events (the
+    dedup key's duplicated input)."""
 
-    from ..sources.layout import clean_superseded
-
-    path = scratch_path(family, events_tag(sf_dir))
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        clean_superseded(path)
+    def write(tmp: str) -> None:
         e = load_table(spark, sf_dir, "events")
         if doubled:
             e = e.unionAll(e)
-        e.coalesce(1).write.mode("overwrite").parquet(path)
-    return path
+        e.coalesce(1).write.parquet(tmp)
+
+    return materialize(scratch_path(family, events_tag(sf_dir)), write)
 
 
 def _epoch_s(c: str | Column) -> Column:
@@ -2310,24 +2303,22 @@ def scan_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-series at 100 TB; the month key keeps cardinality low (no
     small-files explosion)."""
     ensure_deterministic_session(spark)
-    import os
-
-    from ..sources.layout import clean_superseded, versioned_scratch_tag, write_partitioned
+    from ..sources.layout import versioned_scratch_tag, write_partitioned
 
     tag = versioned_scratch_tag(sf_dir, scan_partitioned)
-    path = scratch_path("orders_bymonth", tag)
     # Materialized layout keyed by corpus digest + this function's
     # source — written once, reused across runs (the graded operation
     # is the pruned scan); any code change forces a rebuild.
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        clean_superseded(path)
-        write_partitioned(
+    path = materialize(
+        scratch_path("orders_bymonth", tag),
+        lambda tmp: write_partitioned(
             load_table(spark, sf_dir, "orders").withColumn(
                 "part_month", F.trunc(F.col("o_orderdate").cast("date"), "month")
             ),
-            path,
+            tmp,
             partition_by="part_month",
-        )
+        ),
+    )
     return (
         spark.read.parquet(path)
         .filter(F.col("part_month") == F.lit("1999-03-01").cast("date"))
@@ -2737,23 +2728,23 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_layout.py).  Here the dataset is unpartitioned because
     the digest, not the layout, is under test.
 
-    The seed write runs only when the scratch dataset is absent or
-    incomplete (no _SUCCESS marker): the update rows derive from the
-    immutable source table, and upsert replaces by key, so re-merging
-    the same updates onto an already-merged table is a fixed point —
-    identical result, one fewer full parquet write in steady-state
-    (bench) runs, which previously made this key's timing I/O-noise
-    dominated (VERDICT r06)."""
+    The seed is upsert's own create, run only when the scratch
+    dataset is absent (upsert publishes it whole or not at all): the
+    update rows derive from the immutable source table, and upsert
+    replaces by key, so re-merging the same updates onto an
+    already-merged table is a fixed point — identical result, one
+    fewer full parquet write in steady-state (bench) runs, which
+    previously made this key's timing I/O-noise dominated (VERDICT
+    r06)."""
     ensure_deterministic_session(spark)
     import os
 
-    from ..sources.parquet_io import write_parquet
     from ..sources.upsert import upsert_parquet
 
     orders = load_table(spark, sf_dir, "orders")
     path = scratch_path("merge_upsert", corpus_tag(sf_dir))
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_parquet(orders, path)
+    if not os.path.lexists(path):
+        upsert_parquet(spark, orders, path, "o_orderkey")
     updates = (
         orders.filter(F.md5(F.col("o_orderkey").cast("string").cast("binary")).substr(1, 1) == "0")
         .withColumn("o_orderstatus", F.lit("U"))
@@ -3578,6 +3569,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_deterministic_session(spark)
     import shutil
 
+    from ..sources.layout import discard
     from ..streaming.sinks import start_upsert_sink
     from ..streaming.windows import read_event_stream
 
@@ -3585,8 +3577,8 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = scratch_path("upsink_src", tag)
     target = scratch_path("upsink_tgt", tag)
     ckpt = scratch_path("upsink_ckpt", tag)
-    for p in (target, ckpt):
-        shutil.rmtree(p, ignore_errors=True)
+    discard(target)
+    shutil.rmtree(ckpt, ignore_errors=True)
 
     e = load_table(spark, sf_dir, "events")
     e.unionAll(e).coalesce(1).write.mode("overwrite").parquet(src)
@@ -3891,26 +3883,23 @@ def event_dwell_time(spark: SparkSession, sf_dir: str) -> DataFrame:
 def layout_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-files compaction, graded end-to-end: the events table is
     staged as 64 tiny files, compacted through
-    sources/layout.py:compact_parquet (versioned sibling dir + atomic
+    sources/layout.py:compact_parquet (published by
+    ``layout.publish_version``: a versioned sibling dir + atomic
     symlink flip — readers never see a partial mix), and the
     compacted dataset must hash-match the original table.  Fresh
-    scratch every run, so the grade always covers the first-compaction
-    rename path too.
+    scratch every run (``layout.discard`` removes the link and every
+    version), so the grade always covers the first publication over a
+    plain directory too.
 
     Scale: compaction cost is one read + one narrow coalesce write of
     the dataset; at 100 TB it runs per partition/increment on a
     schedule, amortizing the name-node and task-startup overhead the
     small files would otherwise impose on every downstream query."""
     ensure_deterministic_session(spark)
-    import glob as _glob
-    import os
-    import shutil
-
-    from ..sources.layout import compact_parquet, dataset_path
+    from ..sources.layout import compact_parquet, dataset_path, discard
 
     base = scratch_path("compact", corpus_tag(sf_dir))
-    for p in _glob.glob(base + "*"):
-        shutil.rmtree(p, ignore_errors=True) if os.path.isdir(p) and not os.path.islink(p) else os.remove(p)
+    discard(base)
     load_table(spark, sf_dir, "events").repartition(64).write.parquet(base)
     compact_parquet(spark, base, target_mb=64)
     return spark.read.parquet(dataset_path(base)).select(
@@ -4287,27 +4276,25 @@ def join_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: at 100 TB the unpruned scan IS the cost; DPP turns an
     80-month read into a 3-month read with zero query rewrite."""
     ensure_deterministic_session(spark)
-    import os
-
-    from ..sources.layout import clean_superseded, versioned_scratch_tag, write_partitioned
+    from ..sources.layout import versioned_scratch_tag, write_partitioned
 
     tag = versioned_scratch_tag(sf_dir, join_dpp_prune)
-    path = scratch_path("orders_dpp", tag)
     # The partitioned fact is a materialized layout keyed by corpus
     # digest AND this function's source (write once, reuse across
     # runs — the graded operation is the pruned READ; rebuilding the
     # layout per query would bill a one-time ETL cost to every
     # execution — but any code change forces a rebuild so a stale
     # layout can never be served).
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        clean_superseded(path)
-        write_partitioned(
+    path = materialize(
+        scratch_path("orders_dpp", tag),
+        lambda tmp: write_partitioned(
             load_table(spark, sf_dir, "orders").withColumn(
                 "part_month", F.trunc(F.col("o_orderdate").cast("date"), "month")
             ),
-            path,
+            tmp,
             partition_by="part_month",
-        )
+        ),
+    )
     fact = spark.read.parquet(path)
     dim = (
         load_table(spark, sf_dir, "lineitem")

@@ -464,18 +464,16 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the purchase watermark passes each view's window, so state is
     time-bounded, never stream-length-bounded."""
     ensure_deterministic_session(spark)
-    import os
-
     from ..streaming.windows import read_event_stream, view_purchase_left_join
 
-    from ..sources.layout import versioned_scratch_tag
+    from ..sources.layout import materialize, versioned_scratch_tag
 
     # Tag = fixture fingerprint (size+mtime) + staging-code digest, so
     # a change to the staging logic itself (e.g. the sentinel scheme)
     # can never silently replay a stale staged parquet.
     tag = f"{events_tag(sf_dir)}{versioned_scratch_tag('', stream_left_outer_join)}"
-    path = scratch_path("stream_loj", tag)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def write(tmp: str) -> None:
         ev = load_table(spark, sf_dir, "events")
 
         def sentinel(eid: int, uid: int, etype: str) -> DataFrame:
@@ -492,7 +490,9 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id", "ts", "user_id", "event_type", "value", "props"
         ).unionAll(sentinel(-1, -1, "view")).unionAll(
             sentinel(-2, -2, "purchase")
-        ).coalesce(1).write.mode("overwrite").parquet(path)
+        ).coalesce(1).write.parquet(tmp)
+
+    path = materialize(scratch_path("stream_loj", tag), write)
     name = f"stream_loj_{tag}"
     # Size the stateful shuffle to the staged volume: a stream-stream
     # join provisions and commits FOUR state stores per shuffle

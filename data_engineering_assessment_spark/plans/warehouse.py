@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import ensure_deterministic_session
-from ..sources.layout import scratch_path
+from ..sources.layout import corpus_tag, scratch_path
 from ..sources.tables import load_table
 from .registry import query
 
@@ -1246,14 +1246,10 @@ def _binfiles_fixture(spark: SparkSession, sf_dir: str) -> str:
     between them."""
     import os
 
-    from ..sources.layout import clean_superseded, versioned_scratch_tag
+    from ..sources.layout import materialize, versioned_scratch_tag
 
-    tag = versioned_scratch_tag(sf_dir, _binfiles_fixture)
-    path = scratch_path("binfiles", tag)
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        clean_superseded(path)
-        os.makedirs(path, exist_ok=True)
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
         rows = (
             load_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") < 100)
@@ -1261,10 +1257,10 @@ def _binfiles_fixture(spark: SparkSession, sf_dir: str) -> str:
             .collect()  # bounded: 100 fixture files
         )
         for r in rows:
-            with open(os.path.join(path, f"{r.doc_id:06d}.bin"), "wb") as f:
+            with open(os.path.join(tmp, f"{r.doc_id:06d}.bin"), "wb") as f:
                 f.write(r.text.encode("utf-8"))
-        open(marker, "w").close()
-    return path
+
+    return materialize(scratch_path("binfiles", versioned_scratch_tag(sf_dir, _binfiles_fixture)), write)
 
 
 @query(
@@ -1318,11 +1314,9 @@ def stream_file_intake(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once file accounting; maxFilesPerTrigger bounds each
     micro-batch."""
     ensure_deterministic_session(spark)
-    import hashlib
-
     # reuse (or create) the bounded fixture set
     path = _binfiles_fixture(spark, sf_dir)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = corpus_tag(sf_dir)
     # file-source streams need the schema declared up front (no
     # inference on unbounded input); binaryFile's schema is fixed
     bin_schema = (

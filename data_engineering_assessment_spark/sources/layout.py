@@ -1,4 +1,18 @@
-"""Storage-layout helpers: bucketing and partitioned layouts.
+"""Storage layouts, and the one rule for publishing a directory.
+
+Publication: a scratch layout, or a dataset that is rewritten whole,
+is built in a private sibling and made visible with ONE atomic
+rename, so a reader (or a later run) sees the previous complete
+directory or the next one — never a partial write, and never nothing
+because a write failed after its target was cleared.  Two entry
+points apply the rule:
+
+- :func:`materialize` builds a directory ONCE (a scratch layout keyed
+  by corpus and code version): ``write`` fills ``<path>.b<token>``,
+  ``_scratch_meta.json`` is written last, and ``os.rename`` publishes.
+- :func:`publish_version` REPLACES live data (compaction, upsert):
+  ``write`` fills ``<path>.v<N>``, then the ``path`` symlink is
+  swapped onto it and older versions are deleted.
 
 The two levers that remove work *before* a query runs:
 
@@ -109,25 +123,93 @@ def versioned_scratch_tag(sf_dir: str, *fns, extra: tuple = ()) -> str:
 
 
 def clean_superseded(path: str) -> None:
-    """Remove sibling scratch layouts superseded by ``path``.
+    """Remove what a build of ``path`` supersedes.
 
-    ``path`` ends in ``_<tag>`` (8 hex chars); every sibling sharing
-    the prefix up to the tag but carrying a different (stale) tag is
-    deleted, so version bumps don't accrete dead layouts in
-    ``.scratch``.  Siblings are matched by the exact ``<prefix>_<8
-    hex>`` shape — NOT a bare ``prefix*`` glob — so a scratch family
-    whose name merely extends another's prefix (``binfiles_ckpt_*``
-    vs ``binfiles_<tag>``) can never be collected by the shorter
-    family's clean."""
-    import glob
+    ``path`` ends in ``_<tag>`` (hex: 8 chars, or 16 for a tag made of
+    two digests).  Deleted:
+
+    - every sibling sharing the prefix up to the tag but carrying a
+      different tag of the same length, so version bumps don't accrete
+      dead layouts in ``.scratch``;
+    - orphaned build temps (``<family>_<hex>….b<token>``) of the same
+      family, whatever their corpus or tag, once the NEWEST mtime
+      anywhere in the temp tree is over an hour old.  A crashed build
+      leaves its temp behind forever otherwise; the dir's own mtime
+      only moves when a top-level entry is created, so a long build
+      phase (one large part file) must not get a live temp reaped.
+
+    The family is the name minus its trailing ``_<hex>`` segments.
+    Siblings are matched by exact shape — NOT a bare ``prefix*``
+    glob — so a family whose name merely extends another's
+    (``binfiles_ckpt_*`` vs ``binfiles_<tag>``) is never collected by
+    the shorter family's clean."""
     import re
-    import shutil
+    import time
 
-    prefix = path.rsplit("_", 1)[0] + "_"
-    tag_re = re.compile(re.escape(prefix) + r"[0-9a-f]{8}$")
-    for p in glob.glob(prefix + "*"):
-        if p != path and tag_re.fullmatch(p):
-            shutil.rmtree(p, ignore_errors=True)
+    parent, name = os.path.split(path)
+    prefix, tag = name.rsplit("_", 1)
+    stale = re.compile(re.escape(prefix) + "_[0-9a-f]{%d}" % len(tag))
+    family = re.sub(r"(_[0-9a-f]{6,})+$", "", name)
+    temp = re.compile(re.escape(family) + r"(_[0-9a-f]{6,})+\.b[0-9a-f]+")
+    for entry in os.listdir(parent) if os.path.isdir(parent) else []:
+        d = os.path.join(parent, entry)
+        if entry != name and stale.fullmatch(entry):
+            shutil.rmtree(d, ignore_errors=True)
+        elif temp.fullmatch(entry):
+            try:
+                newest = max(
+                    [os.path.getmtime(d)]
+                    + [os.path.getmtime(os.path.join(r, f)) for r, _, fs in os.walk(d) for f in fs]
+                )
+            except OSError:  # a concurrent build published or removed it
+                continue
+            if time.time() - newest > 3600:
+                shutil.rmtree(d, ignore_errors=True)
+
+
+_META = "_scratch_meta.json"
+
+
+def materialize(path: str, write) -> str:
+    """Build the directory ``path`` once; return ``path``.
+
+    ``_scratch_meta.json`` inside ``path`` is the completion marker:
+    when present, nothing runs.  Otherwise superseded siblings and
+    orphaned temps are reaped (:func:`clean_superseded`),
+    ``write(tmp)`` fills a sibling temp dir unique per CALL
+    (``<path>.b<token>``; two threads in one pid must not share one)
+    and may return a dict, which becomes the meta, written last; one
+    ``os.rename`` then publishes.  No reader can observe a
+    half-written ``path``.
+
+    Races: the meta check is repeated after the reap and immediately
+    before clearing a marker-less ``path`` (left by a pre-rule build
+    or damaged by hand), so a layout a concurrent builder published in
+    between is adopted, never deleted under a reader.  A builder that
+    loses the rename race deletes its temp and adopts the winner's
+    layout; any OTHER rename failure (permissions, a concurrent
+    rmtree) raises here."""
+    import json
+    import uuid
+
+    meta = os.path.join(path, _META)
+    if os.path.exists(meta):
+        return path
+    clean_superseded(path)
+    if os.path.exists(meta):
+        return path
+    shutil.rmtree(path, ignore_errors=True)
+    tmp = f"{path}.b{uuid.uuid4().hex[:8]}"
+    info = write(tmp)
+    with open(os.path.join(tmp, _META), "w") as fh:
+        json.dump(info if isinstance(info, dict) else {}, fh)
+    try:
+        os.rename(tmp, path)
+    except OSError:
+        if not os.path.exists(meta):
+            raise
+        shutil.rmtree(tmp, ignore_errors=True)
+    return path
 
 
 def corpus_fingerprint(sf_dir: str) -> list[list]:
@@ -220,26 +302,17 @@ def scratch_bucketed_table(
     whose CONTRACT is that later base mutation does NOT rebuild —
     that immutability is pinned by planted pytests.
 
-    Crash/concurrency safety (round-13 ADVICE, hardened round 14):
-    the build lands in a sibling temp dir unique per CALL (meta
-    written last, inside it) and is moved into place with one atomic
-    ``os.rename``; a concurrent builder that loses the race deletes
-    its own temp dir and reads the winner's layout — any OTHER rename
-    failure re-raises.  The meta check is repeated immediately before
-    the interrupted-build rmtree so a concurrently published layout
-    is never deleted.  No reader can ever observe a half-written
-    ``path``."""
+    Crash/concurrency safety is :func:`materialize`'s: the build
+    lands in a per-call temp sibling, meta last, and is published
+    with one atomic rename."""
     import glob
-    import hashlib
     import json
-    import uuid
 
     tag = versioned_scratch_tag(sf_dir, *fns, extra=(key, str(n_buckets), schema_sql))
-    corp = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    name = f"{family}_{corp}_{tag}"
+    name = f"{family}_{corpus_tag(sf_dir)[:6]}_{tag}"
     path = os.path.join(SCRATCH_ROOT, name)
-    meta_path = os.path.join(path, "_scratch_meta.json")
-    for mp in glob.glob(os.path.join(SCRATCH_ROOT, f"{family}_*/_scratch_meta.json")):
+    meta_path = os.path.join(path, _META)
+    for mp in glob.glob(os.path.join(SCRATCH_ROOT, f"{family}_*/{_META}")):
         d = os.path.dirname(mp)
         if d == path:
             continue
@@ -250,31 +323,6 @@ def scratch_bucketed_table(
             continue
         if src and not os.path.exists(src):
             shutil.rmtree(d, ignore_errors=True)
-    # reap ORPHANED per-call temp dirs (round-14 review finding: a
-    # crashed/failed build leaves its unique ``.b<token>`` dir behind
-    # forever — clean_superseded's tag regex never matches it).  Age-
-    # gated on the NEWEST mtime anywhere in the temp tree (round-14
-    # ADVICE: the dir's own mtime only moves when a top-level entry
-    # is created, so one build phase exceeding the window — e.g. one
-    # large part file at sf100 — would get its LIVE temp reaped by a
-    # concurrent call; any file Spark is actively writing keeps the
-    # tree younger than the window): a tree whose newest write is
-    # over an hour old is long past any real build.
-    import time
-
-    for d in glob.glob(os.path.join(SCRATCH_ROOT, f"{family}_*.b*")):
-        try:
-            newest = os.path.getmtime(d)
-            for root, _dirs, files in os.walk(d):
-                for f in files:
-                    try:
-                        newest = max(newest, os.path.getmtime(os.path.join(root, f)))
-                    except OSError:
-                        continue
-            if time.time() - newest > 3600:
-                shutil.rmtree(d, ignore_errors=True)
-        except OSError:
-            continue
     if track_src and os.path.exists(meta_path):
         try:
             with open(meta_path) as fh:
@@ -282,26 +330,12 @@ def scratch_bucketed_table(
         except (OSError, ValueError):
             recorded = None
         if recorded != corpus_fingerprint(sf_dir):
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
             shutil.rmtree(path, ignore_errors=True)
-    # re-check meta immediately before clearing (round-14 ADVICE
-    # TOCTOU): a concurrent builder may publish a complete layout
-    # between the outer existence check and the rmtree — deleting it
-    # would yank files from under a reader session already registered
-    # on this LOCATION.  The outer check stays as the cheap fast path.
-    if not os.path.exists(meta_path):
-        clean_superseded(path)
-    if not os.path.exists(meta_path):
-        # no meta => any files at ``path`` are an interrupted build
-        # (meta is the completion marker): clear them so the atomic
-        # rename below can land
-        shutil.rmtree(path, ignore_errors=True)
+
+    def write(tmp: str) -> dict:
+        # the catalog entry may still point at a superseded build
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        # unique per CALL, not per process (round-14 ADVICE): two
-        # threads in one pid must not share an in-flight temp dir
-        token = uuid.uuid4().hex[:8]
-        tmp_name = f"{name}_b{token}"
-        tmp_path = f"{path}.b{token}"
+        tmp_name = os.path.basename(tmp).replace(".", "_")
         (
             build()
             .repartition(n_buckets, key)
@@ -309,7 +343,7 @@ def scratch_bucketed_table(
             .format("parquet")
             .bucketBy(n_buckets, key)
             .sortBy(key)
-            .option("path", tmp_path)
+            .option("path", tmp)
             .saveAsTable(tmp_name)
         )
         meta = {"src": sf_dir}
@@ -317,22 +351,11 @@ def scratch_bucketed_table(
             meta["src_fingerprint"] = corpus_fingerprint(sf_dir)
         if stats is not None:
             meta.update(stats(spark.table(tmp_name)))
-        with open(os.path.join(tmp_path, "_scratch_meta.json"), "w") as fh:
-            json.dump(meta, fh)
         # external table: dropping the catalog entry keeps the files
         spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-        try:
-            os.rename(tmp_path, path)
-        except OSError:
-            # only swallow the lost-the-race case (round-14 ADVICE):
-            # a concurrent builder finished first, so its complete
-            # layout (meta present before rename) is the one to use.
-            # Any other rename failure (permissions, a concurrent
-            # track_src rmtree) must surface HERE, not as an
-            # unrelated FileNotFoundError at the meta read below.
-            if not os.path.exists(meta_path):
-                raise
-            shutil.rmtree(tmp_path, ignore_errors=True)
+        return meta
+
+    materialize(path, write)
     if not spark.catalog.tableExists(name):
         spark.sql(
             f"CREATE TABLE {name} ({schema_sql}) USING parquet "
@@ -399,26 +422,67 @@ def _versions(path: str) -> list[tuple[int, str]]:
 
 
 def dataset_path(path: str) -> str:
-    """Resolve a compacted dataset path, repairing an interrupted
+    """Resolve a published dataset path, repairing an interrupted
     version swap.
 
-    After :func:`compact_parquet`, ``path`` is a symlink to the
-    current ``{path}.v{N}`` version dir.  The only moment ``path`` can
-    be absent is mid-swap — and the swap starts only after the new
-    version dir is fully written — so repair is always safe: re-point
-    the symlink at the highest version present."""
+    After :func:`publish_version`, ``path`` is a symlink to the
+    current ``{path}.v{N}`` version dir.  ``path`` can be absent
+    mid-swap — the first publication over a plain directory retires
+    it before linking — and that swap starts only after the new
+    version is fully written and ``{path}.lnk`` points at it, so
+    repair moves that link into place.  Without the link nothing was
+    ever published (a first write that failed), and ``path`` does not
+    exist."""
     if os.path.lexists(path):
         return path
-    versions = _versions(path)
-    if not versions:
-        raise FileNotFoundError(path)
-    _, latest = versions[-1]
     tmplink = path.rstrip("/") + ".lnk"
-    if os.path.lexists(tmplink):
-        os.remove(tmplink)
-    os.symlink(os.path.abspath(latest), tmplink)
+    if not os.path.lexists(tmplink):
+        raise FileNotFoundError(path)
     os.replace(tmplink, path)
     return path
+
+
+def publish_version(path: str, write) -> str:
+    """Replace the data at ``path`` with what ``write(new_dir)``
+    writes; return ``path``.
+
+    ``write`` fills a fresh versioned sibling ``{path}.v{N}``; then
+    ``path`` becomes a symlink to it via an atomic rename, so readers
+    resolve the old version or the new one, never a partial mix, and
+    a write that fails leaves the old version in place.  The one
+    non-atomic moment (retiring a plain directory on its first
+    publication) is covered by :func:`dataset_path`.  Old versions,
+    including any a failed write left behind, are deleted only after
+    the flip."""
+    path = path.rstrip("/")
+    versions = _versions(path)
+    new_dir = f"{path}.v{versions[-1][0] + 1 if versions else 1}"
+    write(new_dir)
+    tmplink = path + ".lnk"
+    if os.path.lexists(tmplink):
+        os.remove(tmplink)
+    os.symlink(os.path.abspath(new_dir), tmplink)
+    if os.path.isdir(path) and not os.path.islink(path):
+        # first publication over a plain directory: retire it, then
+        # link; a crash in between is what dataset_path repairs
+        os.rename(path, f"{path}.v0")
+    os.replace(tmplink, path)  # atomic symlink swap
+    current = os.path.realpath(path)
+    for _, old in _versions(path):
+        if os.path.realpath(old) != current:
+            shutil.rmtree(old)
+    return path
+
+
+def discard(path: str) -> None:
+    """Delete ``path`` — a plain directory or a published symlink —
+    with every version and link :func:`publish_version` made for it."""
+    path = path.rstrip("/")
+    for p in [path, path + ".lnk"] + [d for _, d in _versions(path)]:
+        if os.path.islink(p) or os.path.isfile(p):
+            os.remove(p)
+        else:
+            shutil.rmtree(p, ignore_errors=True)
 
 
 def compact_parquet(
@@ -433,43 +497,16 @@ def compact_parquet(
     (every file is a task + a name-node entry + a footer read); daily
     upsert/streaming output should be compacted on a schedule.  The
     file count comes from the dataset's actual byte size and the
-    rewrite is one read + one narrow coalesce write.
-
-    Crash safety: the compacted copy is written to a fresh versioned
-    sibling dir (``{path}.vN``), and ``path`` becomes a symlink to it
-    via an atomic rename — readers resolve either the old version or
-    the new one, never a partial mix.  The one non-atomic moment
-    (retiring a plain directory on first compaction) is covered by
-    :func:`dataset_path`, which re-links ``path`` to the newest fully
-    written version; old versions are deleted only after the flip."""
+    rewrite is one read + one narrow coalesce write, published with
+    :func:`publish_version` (crash-safe: readers see the old or the
+    compacted version)."""
     import glob as _glob
 
     dataset_path(path)  # repair any previously interrupted swap
     files = _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
     total = sum(os.path.getsize(f) for f in files)
     n_out = max(1, round(total / (target_mb * 1024 * 1024)))
-
-    versions = _versions(path)
-    next_n = versions[-1][0] + 1 if versions else 1
-    new_dir = f"{path.rstrip('/')}.v{next_n}"
-    spark.read.parquet(path).coalesce(n_out).write.mode("overwrite").parquet(new_dir)
-
-    tmplink = path.rstrip("/") + ".lnk"
-    if os.path.lexists(tmplink):
-        os.remove(tmplink)
-    os.symlink(os.path.abspath(new_dir), tmplink)
-    if os.path.islink(path):
-        os.replace(tmplink, path)  # atomic symlink swap
-    else:
-        # first compaction: retire the plain dir, then link.  A crash
-        # between the two renames leaves no ``path``, but ``new_dir``
-        # is complete — dataset_path() re-links to it.
-        os.rename(path, f"{path.rstrip('/')}.v0")
-        os.replace(tmplink, path)
-    current = os.path.realpath(path)
-    for _, old in _versions(path):
-        if os.path.realpath(old) != current:
-            shutil.rmtree(old)
+    publish_version(path, spark.read.parquet(path).coalesce(n_out).write.parquet)
     return n_out
 
 

@@ -354,11 +354,10 @@ def optimize_small_files(
     """OPTIMIZE (bin-packing compaction) as a table COMMIT: files
     smaller than ``min_bytes`` are coalesced into fewer right-sized
     files in a new version; files already large enough byte-share
-    into the new manifest.  Unlike directory-level compaction
-    (``sources/layout.py:compact_parquet``) this is transactional —
-    readers see the old or the new version, never a half-compacted
-    listing — and time travel keeps the pre-compaction layout until
-    vacuum.  Content is bit-for-bit unchanged (the graded key's
+    into the new manifest.  Readers see the old or the new version,
+    never a half-compacted listing (as with directory-level
+    ``sources/layout.py:compact_parquet``), and unlike that flip, time
+    travel keeps the pre-compaction layout until vacuum.  Content is bit-for-bit unchanged (the graded key's
     oracle is the table itself).
 
     Scale: the small-file list comes from the manifest + file sizes

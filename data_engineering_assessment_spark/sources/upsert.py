@@ -1,14 +1,21 @@
 """Keyed upsert (MERGE) into parquet, without a table format.
 
 Plain parquet has no transaction log, so MERGE is rewrite-based:
-delete-matching (left anti join on the key) + insert (union).  The
-scale lever is *scoping the rewrite*: with a partitioned layout and
-the per-write ``partitionOverwriteMode=dynamic`` option, only the
+delete-matching (left anti join on the key) + insert (union).
+
+Unpartitioned, the merged table is written as a new versioned sibling
+of the target and published by one atomic symlink flip
+(``layout.publish_version``): the job reads the current version and
+writes the next, so a write that fails — a crash, a failed batch the
+stream replays — leaves the previous table readable.  At 100 TB an
+unpartitioned upsert rewrites the world.
+
+The scale lever is *scoping the rewrite*: with a partitioned layout
+and the per-write ``partitionOverwriteMode=dynamic`` option, only the
 partitions that actually contain updated keys are read, merged and
 replaced — untouched partition directories are never rewritten
-(asserted via file mtimes in tests/test_layout.py).  At 100 TB an
-unpartitioned upsert rewrites the world; a date-partitioned upsert
-rewrites a few directories.
+(asserted via file mtimes in tests/test_layout.py).  A
+date-partitioned upsert rewrites a few directories.
 """
 
 from __future__ import annotations
@@ -17,6 +24,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .layout import dataset_path, publish_version
 
 
 def upsert_parquet(
@@ -29,34 +38,42 @@ def upsert_parquet(
     """Merge ``updates`` into the parquet dataset at ``path`` by key:
     existing rows with a matching key are replaced, others kept.
 
+    Without ``partition_by`` the create and every merge go through
+    ``publish_version``: ``path`` becomes a symlink to the newest
+    complete version, and a failed write leaves it where it was.
+
     ``partition_by`` enables the partition-scoped path: only
-    partitions present in ``updates`` participate.  The merged slice
-    is localCheckpoint-ed before the write because the job both reads
-    and overwrites ``path`` — materializing first breaks the cycle
-    (and keeps the rewrite a bounded two-shuffle job: anti join +
-    write)."""
+    partitions present in ``updates`` participate, and dynamic
+    partition overwrite replaces them in place, one partition at a
+    time — that path is not crash-atomic.  Its merged slice is
+    localCheckpoint-ed before the write because the job both reads
+    and overwrites ``path``; materializing first breaks the cycle."""
     keys = [key] if isinstance(key, str) else key
-    if not os.path.exists(path):
-        w = updates.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        w.parquet(path)
+    if not partition_by:
+        try:
+            dataset_path(path)
+        except FileNotFoundError:
+            publish_version(path, updates.write.parquet)
+            return
+        merged = (
+            spark.read.parquet(path)
+            .join(updates.select(*keys), keys, "left_anti")
+            .unionByName(updates)
+        )
+        publish_version(path, merged.write.parquet)
         return
 
-    target = spark.read.parquet(path)
-    if partition_by:
-        parts = [
-            r[0] for r in updates.select(partition_by).distinct().collect()
-        ]
-        target = target.filter(F.col(partition_by).isin(parts))
+    if not os.path.exists(path):
+        updates.write.mode("overwrite").partitionBy(partition_by).parquet(path)
+        return
+    parts = [r[0] for r in updates.select(partition_by).distinct().collect()]
     merged = (
-        target.join(updates.select(*keys), keys, "left_anti")
+        spark.read.parquet(path)
+        .filter(F.col(partition_by).isin(parts))
+        .join(updates.select(*keys), keys, "left_anti")
         .unionByName(updates)
         .localCheckpoint(eager=True)
     )
-    if partition_by:
-        merged.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(partition_by).parquet(path)
-    else:
-        merged.write.mode("overwrite").parquet(path)
+    merged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(partition_by).parquet(path)

@@ -6,6 +6,9 @@ keyed parquet target instead of blind-appending.  With the batch
 first deduped on the key, replayed micro-batches (checkpoint
 recovery) converge to the same target state — the standard
 idempotent-sink recipe for exactly-once-to-storage on plain parquet.
+A batch whose write fails leaves the target as the previous batch
+published it (the unpartitioned upsert publishes a versioned sibling
+with one symlink flip), so the replay merges onto the full table.
 
 Scale: each micro-batch's merge cost is bounded by the batch size
 plus the touched partitions (partition-scoped rewrite), never the

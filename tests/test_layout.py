@@ -16,7 +16,7 @@ from data_engineering_assessment_spark.sources.layout import (
     write_partitioned,
 )
 from data_engineering_assessment_spark.sources.tables import load_table
-from tests.conftest import SF_DIR
+from tests.conftest import FAILING_COMMITTER, SF_DIR
 
 
 def test_bucketed_join_has_no_exchange(spark):
@@ -259,6 +259,53 @@ def test_compact_parquet_survives_mid_swap_crash(spark, tmp_path):
     assert spark.read.parquet(path).count() == 5_000
 
 
+def _failing_upsert(spark, updates, path):
+    from data_engineering_assessment_spark.sources.upsert import upsert_parquet
+
+    spark.conf.set(*FAILING_COMMITTER)
+    try:
+        with pytest.raises(Exception):
+            upsert_parquet(spark, updates, path, "id")
+    finally:
+        spark.conf.unset(FAILING_COMMITTER[0])
+
+
+def test_failed_upsert_keeps_target(spark, tmp_path):
+    """An upsert whose write fails leaves the target readable with
+    every row it had: the merge is written beside the target and only
+    a complete write is published."""
+    from data_engineering_assessment_spark.sources.upsert import upsert_parquet
+
+    path = str(tmp_path / "t")
+    upsert_parquet(spark, spark.range(100), path, "id")
+    _failing_upsert(spark, spark.range(90, 110), path)
+    got = spark.read.parquet(path)
+    assert got.count() == 100
+    assert got.agg(F.sum("id")).collect()[0][0] == sum(range(100))
+
+
+def test_partial_first_version_is_never_published(spark, tmp_path):
+    """A first publication whose write fails half-way leaves a partial
+    ``.v1`` and no link to it: the dataset does not exist, and the next
+    upsert creates it from its own rows and deletes the partial one."""
+    from data_engineering_assessment_spark.sources.upsert import upsert_parquet
+
+    path = str(tmp_path / "t")
+
+    def half_write(new_dir):
+        spark.range(5).write.parquet(new_dir)
+        raise OSError("injected crash after a partial write")
+
+    with pytest.raises(OSError, match="injected"):
+        layout.publish_version(path, half_write)
+    assert not os.path.lexists(path)
+    with pytest.raises(FileNotFoundError):
+        layout.dataset_path(path)
+    upsert_parquet(spark, spark.range(10, 20), path, "id")
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(10, 20))
+    assert [d for _, d in layout._versions(path)] == [f"{path}.v2"]
+
+
 def test_minmax_index_actually_skips_files(spark, tmp_path):
     from pyspark.sql import functions as F
 
@@ -353,6 +400,36 @@ def test_versioned_scratch_tag_tracks_code_and_corpus(tmp_path):
     assert live.exists()
     assert not stale.exists()
     assert other.exists()  # different layout family is untouched
+
+
+@pytest.mark.parametrize(
+    "live, stale",
+    [
+        ("orders_dpp_0123abcd", "orders_dpp_deadbeef"),
+        ("stream_loj_0123abcd4567ef01", "stream_loj_deadbeefdeadbeef"),
+        ("edges_w_abc123_0123abcd", "edges_w_abc123_deadbeef"),
+    ],
+)
+def test_materialize_reaps_superseded_siblings(tmp_path, live, stale):
+    """Every tag shape in use (8 hex, two 8-hex digests, corpus6 +
+    tag8) has its stale sibling removed when the live one
+    materializes; a family that only extends the name, and another
+    corpus's layout of the same family, are kept."""
+    kept = [f"{live.rsplit('_', 1)[0]}_ckpt_deadbeef", "edges_w_fedcba_deadbeef"]
+    for name in [stale] + kept:
+        (tmp_path / name).mkdir()
+        (tmp_path / name / "part-0.parquet").write_bytes(b"x")
+
+    def write(tmp):
+        os.makedirs(tmp)
+        return {"built": True}
+
+    path = str(tmp_path / live)
+    assert layout.materialize(path, write) == path
+    assert not (tmp_path / stale).exists()
+    assert all((tmp_path / name).exists() for name in kept)
+    assert sorted(os.listdir(path)) == ["_scratch_meta.json"]
+    assert layout.materialize(path, lambda tmp: pytest.fail("rebuilt")) == path
 
 
 def test_scratch_bucketed_table_recovery_and_reaper(spark, tmp_path):
@@ -782,6 +859,37 @@ def test_plan_scratch_follows_scratch_root(spark, tmp_path, monkeypatch, key):
     family = PLAN_SCRATCH_FAMILIES[key]
     assert [p for p in os.listdir(tmp_path) if p.startswith(f"{family}_")], os.listdir(tmp_path)
     assert not entries() - before
+
+
+def test_schema_widen_scan_rebuilds_after_half_staged_failure(spark, tmp_path, monkeypatch):
+    """``schema_widen_scan`` stages two halves.  A run whose second
+    write fails publishes nothing, so the next run stages both halves
+    again and matches its oracle."""
+    import __spark_entry__ as entry_mod
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from tests.oracle_utils import compare, duck_connection
+
+    monkeypatch.setattr(layout, "SCRATCH_ROOT", str(tmp_path))
+    real_parquet = DataFrameWriter.parquet
+    failed = []
+
+    def parquet_failing_once(self, path, *args, **kwargs):
+        if str(path).endswith("/new") and not failed:
+            failed.append(path)
+            raise OSError("injected write failure")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet_failing_once)
+    key = "schema_widen_scan"
+    with pytest.raises(OSError, match="injected"):
+        entry_mod.queries()[key](spark, SF_DIR)
+    assert failed
+    con = duck_connection(SF_DIR)
+    try:
+        compare(entry_mod.queries()[key](spark, SF_DIR), con, entry_mod.oracle_sql()[key])
+    finally:
+        con.close()
 
 
 def test_no_checkout_path_literal_in_package():

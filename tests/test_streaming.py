@@ -22,7 +22,7 @@ from data_engineering_assessment_spark.streaming.windows import (
     session_counts,
     tumbling_counts,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import FAILING_COMMITTER, SF_DIR
 
 WATERMARK_S = 2 * 3600
 
@@ -189,6 +189,43 @@ def test_foreachbatch_upsert_sink_is_idempotent(spark, tmp_path):
     got = spark.read.parquet(target)
     assert got.count() == n_distinct
     assert got.select("event_id").distinct().count() == n_distinct
+
+
+def test_upsert_sink_failed_batch_replays_onto_intact_target(spark, tmp_path):
+    """A micro-batch whose upsert write fails leaves the target as the
+    previous batch published it, so the replay from the checkpoint
+    merges onto the full table: keys the failed batch did not touch
+    survive."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import StreamingQueryException
+
+    from data_engineering_assessment_spark.streaming.sinks import start_upsert_sink
+
+    land = tmp_path / "land"
+    land.mkdir()
+    target, ckpt = str(tmp_path / "target"), str(tmp_path / "ckpt")
+
+    def land_keys(n, keys):
+        pq.write_table(pa.table({"k": pa.array(keys, pa.int64())}), str(land / f".{n}.tmp"))
+        (land / f".{n}.tmp").rename(land / f"{n}.parquet")
+
+    def run():
+        counts = spark.readStream.schema("k long").parquet(str(land)).groupBy("k").count()
+        start_upsert_sink(counts, target, "k", checkpoint=ckpt).awaitTermination(120)
+
+    land_keys(0, [1, 2, 3])
+    run()
+    land_keys(1, [3, 4])
+    spark.conf.set(*FAILING_COMMITTER)
+    try:
+        with pytest.raises(StreamingQueryException):
+            run()
+    finally:
+        spark.conf.unset(FAILING_COMMITTER[0])
+    run()
+    got = {r.k: r["count"] for r in spark.read.parquet(target).collect()}
+    assert got == {1: 1, 2: 1, 3: 2, 4: 1}
 
 
 def test_stream_stream_join_matches_batch(spark):
