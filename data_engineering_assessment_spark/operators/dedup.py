@@ -271,7 +271,7 @@ def minhash_banded(
     candidate — recall is unaffected, precision is protected by the
     estimate threshold.
 
-    STORAGE-SHAPE TRADE (adjudicated round 14, VERDICT r13 #3):
+    STORAGE-SHAPE TRADE (adjudicated round 14):
     persisting ``(bkey, doc, sig)`` repeats the 16-long signature once
     per band — ~3.0x the index bytes of a split ``(bkey, doc)`` probe
     index + ``(doc, sig)`` side table (sf100: 2.14 GB vs 0.71 GB) — but

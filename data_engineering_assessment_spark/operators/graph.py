@@ -157,7 +157,7 @@ def connected_components_alternating(
     materializes it in the same job, the same fold the round loop
     already used.
 
-    Round-16 per-round exchange cuts (guide §2.4, VERDICT r15 #1),
+    Round-16 per-round exchange cuts (guide §2.4),
     both result-neutral by construction:
 
     - the old small-star re-orientation (``greatest/least`` +

@@ -284,7 +284,7 @@ def ivfpq_ann_topk(
     # a literal copy here could desync from a changed default and the
     # hash-mod pre-filter would fire in one path but not the other);
     # the fallback threads n_total through so neither trainer re-runs
-    # the count this composition already paid (VERDICT r15 #5).
+    # the count this composition already paid.
     km_cap, pq_cap = KM_TRAIN_CAP, PQ_TRAIN_CAP
     v = spread(corpus).select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     n_total = v.count()

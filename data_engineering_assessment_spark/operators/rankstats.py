@@ -73,7 +73,7 @@ def global_order_stats(
     the range exchange underneath the offsets map.
 
     ``npartitions=None`` derives the range-partition count from the
-    optimizer's input-size estimate (r16, VERDICT r15 #10 — the
+    optimizer's input-size estimate (r16 — the
     bytes-derived rule the streaming state shards already use): one
     partition per ~64 MB of estimated input, floored at the cluster's
     default parallelism and capped at 20 000.  Rank/running-sum

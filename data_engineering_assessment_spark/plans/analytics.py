@@ -18,7 +18,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import ensure_deterministic_session
 from ..sources.layout import corpus_tag, materialize, scratch_path
 from ..sources.tables import load_table
 from .registry import query
@@ -74,7 +73,6 @@ def agg_regr_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     on identical operands.  Scale: one map-side-combined shuffle to
     (type, day) — the daily matrix is tiny regardless of raw volume —
     then a window + re-agg over it; the raw 100 TB scan never sorts."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events")
     day_s = F.expr(
         "CAST(CAST(ts AS TIMESTAMP) AS LONG) - CAST(CAST(ts AS TIMESTAMP) AS LONG) % 86400"
@@ -149,7 +147,6 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups that is the textbook case for the two-pass variant (clamp
     at approx_percentile, then one agg); this exact tier documents the
     semantics the approximate tier must converge to."""
-    ensure_deterministic_session(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
         "o_orderkey",
@@ -207,7 +204,6 @@ def feature_hash_bow(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: explode + one map-side-combined shuffle on (doc, bucket);
     output is bounded by docs × 256 regardless of vocabulary size,
     which is the whole point of feature hashing at corpus scale."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("token")
@@ -261,7 +257,6 @@ def text_novelty_by_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     every shingle was seen earlier take n_novel = 0 via the left
     join).  Skewed ultra-common shingles still cost one combiner pass,
     not a fan-out."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     ws = d.select("doc_id", F.split(F.col("text"), " ").alias("ws")).filter(
         F.size("ws") >= 3
@@ -325,7 +320,6 @@ def scan_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver list; at real scale a parquet table itself); planning cost
     is an index lookup instead of a full listing+scan.  Files are
     range-disjoint so selectivity s opens ~s of the files."""
-    ensure_deterministic_session(spark)
     from ..sources.layout import (
         build_minmax_index,
         pruned_read,
@@ -394,7 +388,6 @@ def incremental_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     touch the delta rows plus matching base rows only; at 100 TB the
     base sides arrive hash-partitioned on the join key (bucketed
     layout), so each term is a co-located join."""
-    ensure_deterministic_session(spark)
     a = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -423,7 +416,6 @@ def embed_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     here); no SQL oracle — codebook training is not SQL-expressible —
     so the driver records rows-only and pytest asserts recall and
     exact-rescore properties against brute force."""
-    ensure_deterministic_session(spark)
     from ..operators.pq import pq_ann_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -457,7 +449,6 @@ def join_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominant cost of a selective big-fact ⋈ small-dim join when the
     dim side is filtered hard.  The bucket set is bounded (≤4096
     short strings) no matter how large the dim table is."""
-    ensure_deterministic_session(spark)
     dim = load_table(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 9000)
 
     def bucket(c: Column) -> Column:
@@ -518,7 +509,6 @@ def event_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     so fan-out is bounded and no non-equi pair stream exists.  Same
     decomposition as join_interval_overlap; the last-touch twin
     (event_attribution) avoids the join entirely with a running MAX."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -586,7 +576,6 @@ def scan_table_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     list, no log replay) and never lists data directories, so
     planning cost is O(files in the version) and in-flight or
     crashed writers can't be observed."""
-    ensure_deterministic_session(spark)
     import os
     import shutil
 
@@ -636,7 +625,6 @@ def scan_tablelog_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     source pays the Arrow bridge, so the native file-list read stays
     the fast path — this key grades the FORMAT integration, not a
     replacement scan."""
-    ensure_deterministic_session(spark)
     from ..sources import tablelog
     from ..sources.layout import versioned_scratch_tag
     from ..sources.tablelog_datasource import register
@@ -684,7 +672,6 @@ def agg_gini_impurity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two cascading map-side-combined aggregations ((source,
     lang) then source) — counts and squares merge by addition, so the
     metric maintains incrementally like every other moment key."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     c = d.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("cnt"))
     s = c.groupBy("source").agg(
@@ -720,7 +707,6 @@ def scan_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: quarantining is a projection-time branch — no second scan,
     no driver round-trip; the bad-row stream is a filter on the same
     pass and can sink to its own table for replay."""
-    ensure_deterministic_session(spark)
     import os
 
     from pyspark.sql import types as T
@@ -824,7 +810,6 @@ def agg_moments_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined shuffle; the moments merge by
     addition, so the same statistics drive incremental maintenance
     (⊕ delta) and sliding re-aggregation unchanged."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", F.col("l_quantity").cast("long").alias("q")
     )
@@ -879,7 +864,6 @@ def event_distinct_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: exact distinct inside overlapping windows is the expensive
     honest tier (shuffle on (window, user)); the mergeable-sketch tier
     for dashboards is `agg_hll_partitioned`'s HLL union over panes."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
@@ -913,7 +897,6 @@ def stream_tablelog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     with O(batch) commit cost — blind appends with no key column, yet
     exactly-once to storage; downstream readers get snapshot
     isolation for free."""
-    ensure_deterministic_session(spark)
     import shutil
 
     from ..sources import tablelog
@@ -1006,7 +989,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver traffic this key currently avoids).  A production variant
     without an exactness oracle would stop on
     ``max(|r_k - r_{k-1}|) < eps`` computed in the same round's agg."""
-    ensure_deterministic_session(spark)
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     base = (
@@ -1090,8 +1072,8 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-stable at the 1% level" and fires data-dependently (~13
     rounds here) rather than at the cap.
 
-    The residual is FOLDED into the round-update checkpoint (r10 A/B,
-    VERDICT r9 #5): the prev-rank join and |new − prev| land in the
+    The residual is FOLDED into the round-update checkpoint (r10 A/B):
+    the prev-rank join and |new − prev| land in the
     same materialization as the rank update, so the per-round driver
     round-trip is a bare max() over already-checkpointed rows instead
     of a separate join pass — measured best-of-5 4.92 → 4.28 s at
@@ -1103,7 +1085,6 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed, |E|-proportional join+groupBy per round); the
     residual's full-outer join is on the same node partitioning the
     round already produces."""
-    ensure_deterministic_session(spark)
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     base = (
@@ -1247,7 +1228,6 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user) shuffle + sort — no self-join against the observation set,
     no per-gap subquery.  Interior gaps always have both neighbors by
     construction (grid spans min..max observed buckets)."""
-    ensure_deterministic_session(spark)
     e = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") < 20)
@@ -1347,7 +1327,6 @@ def event_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides.  Cross-multiplied integers stay < 2^63 while baskets fit
     BIGINT·types² — true to ~1e9 baskets, beyond which the quotient
     moves to DOUBLE with a documented tolerance."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events")
     day_s = F.expr(
         "CAST(CAST(ts AS TIMESTAMP) AS LONG) - CAST(CAST(ts AS TIMESTAMP) AS LONG) % 86400"
@@ -1448,7 +1427,6 @@ def agg_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning (one exchange, reused), and the per-type median
     table (≤|types| rows) broadcasts back onto the value stream —
     the raw table is never self-joined."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
         "event_id",
@@ -1549,7 +1527,6 @@ def ts_ewma_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map-side-combined shuffle of the raw stream), and the
     16-day band self-join is bounded fan-out ≤16 on an equi type key
     — at 100 TB the raw volume only ever crosses the wire once."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events")
     day_s = F.expr(
         "CAST(CAST(ts AS TIMESTAMP) AS LONG) - CAST(CAST(ts AS TIMESTAMP) AS LONG) % 86400"
@@ -1639,7 +1616,6 @@ def funnel_step_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle as `event_funnel` (no join per stage); the latency set
     collapses to ≤|users| rows before the per-step rank pass, so the
     median never sorts raw traffic."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     w = Window.partitionBy("user_id")
     ann = e.withColumn(
@@ -1733,7 +1709,6 @@ def event_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ users × span-days rows regardless of raw volume — then a
     window + two re-aggs that all reuse the user_id partitioning;
     no self-join, no calendar explode."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events")
     day_i = F.expr(
         "(CAST(CAST(ts AS TIMESTAMP) AS LONG) - CAST(CAST(ts AS TIMESTAMP) AS LONG) % 86400) div 86400"
@@ -1802,7 +1777,6 @@ def tablelog_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted, so the feed is O(churn) not O(table).  Same reconcile
     shape as [[snapshot_diff]], upgraded from counts to the row-level
     feed and fed by the table format itself."""
-    ensure_deterministic_session(spark)
     import os
     import shutil
 
@@ -1890,7 +1864,6 @@ def stat_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     scope — beyond that, partition the audit by corpus shard (the
     statistic is additive over disjoint scopes) or widen to
     DECIMAL(38,0)."""
-    ensure_deterministic_session(spark)
     from ..sources.tables import load_table as _lt
 
     o = (
@@ -1945,7 +1918,6 @@ def agg_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: projection + one hash-shuffle over 9 groups; the share
     denominator is a broadcast scalar subquery."""
-    ensure_deterministic_session(spark)
     from ..sources.tables import load_table as _lt
 
     c = (
@@ -1990,7 +1962,6 @@ def event_user_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one hash-shuffle to fold per-user max/count; the frontier
     is a broadcast scalar.  No windows, no sort."""
-    ensure_deterministic_session(spark)
     from ..sources.tables import load_table as _lt
 
     e = _lt(spark, sf_dir, "events").select(
@@ -2039,7 +2010,6 @@ def orders_backlog_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: filter + one hash-shuffle over a handful of buckets; the
     frontier date is a broadcast scalar."""
-    ensure_deterministic_session(spark)
     from ..sources.tables import load_table as _lt
 
     orders = _lt(spark, sf_dir, "orders")
@@ -2095,7 +2065,6 @@ def scan_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit tests at plan time.  Selectivity tracks the key's file
     footprint, not the layout order — exactly the lookups (user id,
     order id, doc id) a 100 TB fact table serves."""
-    ensure_deterministic_session(spark)
     from ..sources.layout import (
         bloom_probe_files,
         build_bloom_index,
@@ -2149,7 +2118,6 @@ def stream_tablelog_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor-parallel Arrow scans; checkpoint replays re-resolve
     immutable manifests, so recovery cannot duplicate or drop a
     file."""
-    ensure_deterministic_session(spark)
     from ..sources import tablelog
     from ..sources.layout import versioned_scratch_tag
     from ..sources.tablelog_datasource import register
@@ -2213,7 +2181,6 @@ def tablelog_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     one O(1) driver manifest link.  Version math is optimistic — a
     concurrent writer moves the head and the publish fails cleanly
     for a re-stage, never interleaves."""
-    ensure_deterministic_session(spark)
     import os
     import shutil
 
@@ -2282,7 +2249,6 @@ def schema_widen_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: zero data movement — old files are never rewritten; the
     cast happens inside the columnar reader at full scan speed, and
     pushdown/pruning still apply."""
-    ensure_deterministic_session(spark)
     import os
 
     from ..sources.layout import versioned_scratch_tag
@@ -2329,7 +2295,6 @@ def tablelog_delete_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one predicate scan tags hit files (no shuffle), one job
     rewrites survivors of just those files, one O(1) manifest link —
     cost tracks the changed data, not the table size."""
-    ensure_deterministic_session(spark)
     import os
     import shutil
 
@@ -2370,7 +2335,6 @@ def tablelog_update_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: cost tracks the changed files, not the table — the write
     amplification is bounded by predicate locality, which is why
     curated layouts cluster on the columns DML predicates use."""
-    ensure_deterministic_session(spark)
     import os
     import shutil
 
@@ -2411,7 +2375,6 @@ def tablelog_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite reads only the small files.  This is the nightly
     maintenance job that keeps streaming-ingested tables (many tiny
     per-batch files) scannable at full throughput."""
-    ensure_deterministic_session(spark)
     import os
     import shutil
 
@@ -2481,7 +2444,6 @@ def constraint_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Complements [[constraint_check]] (the same idea hand-written as
     one query); this key grades the reusable compiler."""
-    ensure_deterministic_session(spark)
     from ..operators.expectations import expect, run_expectations
 
     orders = load_table(spark, sf_dir, "orders")
@@ -2526,7 +2488,6 @@ def tablelog_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     latency — this is why lakehouse formats put stats in metadata,
     and files-without-stats degrade to false positives, never
     loss."""
-    ensure_deterministic_session(spark)
     from ..sources import tablelog
     from ..sources.layout import versioned_scratch_tag
 
@@ -2575,7 +2536,6 @@ def event_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combined aggregation into at most 168 cells;
     the distinct-user count per cell is the only shuffle."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(
@@ -2620,7 +2580,6 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, no history self-join — the same trick as
     event_retention); the triangle is a second map-side-combined
     aggregation over at most cohorts x offsets cells."""
-    ensure_deterministic_session(spark)
     from pyspark.sql import Window
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -2677,7 +2636,6 @@ def event_interarrival_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one window over the (user_id, ts, event_id) total order
     (one shuffle), then a map-side-combined rollup into ~40 buckets."""
-    ensure_deterministic_session(spark)
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "events").select(
@@ -2710,7 +2668,7 @@ def event_interarrival_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 EDGE_BUCKETS = 32
 
 # Broadcast-reach bound for the Bellman–Ford relax join's node-sized
-# cost table (round 12, VERDICT r11 #3 / ADVICE).  The per-round cost
+# cost table (round 12).  The per-round cost
 # frame is two longs per node (~16 B + row overhead), so 100M nodes is
 # ~2–3 GB built — inside Spark's hard broadcast limits (512M rows /
 # 8 GB) with margin for the driver heap, and far past any graded
@@ -2736,7 +2694,7 @@ def _trade_edges(spark: SparkSession, sf_dir: str):
     stored in a sidecar meta file; every node appears as ``u`` because
     the frame is symmetrized).
 
-    Why a persisted layout (round 12, VERDICT r11 #1): both graph
+    Why a persisted layout (round 12): both graph
     loops previously re-derived orders⋈lineitem AND re-shuffled /
     localCheckpointed the |E| frame on every run — at the sf100 notch
     that per-run |E| checkpoint was the single-box disk ceiling
@@ -2883,13 +2841,12 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     by bucket spec, and per-run cost drops from an orders⋈lineitem
     derivation + |E| localCheckpoint (the sf100 single-box disk
     ceiling, SCALING_SF100.md) to a pruned columnar scan per hop.
-    Per-hop frontiers are eagerly checkpointed (round 11, VERDICT
-    #5): see _khop_frontiers — the nested lazy lineage re-evaluates
+    Per-hop frontiers are eagerly checkpointed (round 11): see
+    _khop_frontiers — the nested lazy lineage re-evaluates
     every earlier hop once per later hop, and materializing each
     (post-shuffle) frontier won the A/B at all three notches (sf0.1
     4.24→3.75 s, sf1 7.36→7.08 s, sf10 90.7→69.2 s, identical
     outputs)."""
-    ensure_deterministic_session(spark)
     e, _ = _trade_edges(spark, sf_dir)
     e = e.select("u", "v")
     seeds = (
@@ -2979,7 +2936,6 @@ def graph_shortest_cost_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     round's join exchange- and sort-free on the |E| side under
     EITHER relax strategy below.  Output is TakeOrderedAndProject
     (top-20), bounded at any corpus size."""
-    ensure_deterministic_session(spark)
     e, n_nodes = _trade_edges(spark, sf_dir)
     d = (
         e.filter((F.col("u") % 2 == 0) & (F.col("u") < 10))

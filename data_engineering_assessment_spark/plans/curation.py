@@ -26,7 +26,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import ensure_deterministic_session, scoped_conf
+from ..session import scoped_conf
 from ..sources.layout import corpus_tag, events_tag, materialize, scratch_path
 from ..sources.tables import load_table
 from .registry import query
@@ -60,7 +60,6 @@ def sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     — each partition keeps a local top-K heap and the driver merges
     P·K rows; no global sort, no shuffle of the corpus.  At 100 TB
     this moves ~P·K tiny rows to the driver, nothing else."""
-    ensure_deterministic_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(
@@ -102,7 +101,6 @@ def split_group_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate applied at write time partitions a 100 TB corpus
     without moving data between splits ever after — stable as the
     corpus grows because membership depends only on the source name."""
-    ensure_deterministic_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     tagged = docs.select(
         "source",
@@ -156,7 +154,6 @@ def agg_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_percentile sketch (``agg_approx_percentile``) remains the
     cheap alternative; this key is the exact reference the sketch is
     validated against."""
-    ensure_deterministic_session(spark)
     from ..operators.rankstats import global_order_stats, ntile_from_rank
 
     orders = load_table(spark, sf_dir, "orders")
@@ -208,7 +205,6 @@ def ts_spine_zero_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows) so Spark broadcasts it; the daily aggregate is one
     hash-shuffle over #days groups.  The explode happens on a
     single-row aggregate, not per event row."""
-    ensure_deterministic_session(spark)
     events = load_table(spark, sf_dir, "events")
     e = events.select(F.col("ts").cast("timestamp").cast("long").alias("t"))
     day = (F.col("t") - F.col("t") % 86400).alias("day_s")
@@ -258,7 +254,6 @@ def dedup_cluster_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pathological mega-duplicate, which the n_dropped output surfaces).
     Quality-ranked keep-best generalizes by swapping the ORDER BY for
     a model score column."""
-    ensure_deterministic_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     fp = docs.select(
         "doc_id", "n_chars", F.md5(F.col("text").cast("binary")).alias("fingerprint")
@@ -338,7 +333,6 @@ def stream_late_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     end, per-batch work is one hash-shuffle into the state store.
     The only driver-side data movement is a 2-scalar min/max
     aggregate used to stage the replay."""
-    ensure_deterministic_session(spark)
     events = load_table(spark, sf_dir, "events")
     t = F.col("ts").cast("timestamp").cast("long")
     row = events.agg(F.min(t).alias("mn"), F.max(t).alias("mx")).collect()[0]
@@ -433,7 +427,6 @@ def scan_corrupt_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: staging is a one-time per-corpus ETL (reused across runs);
     the graded operation is scan + one hash-shuffle aggregate."""
-    ensure_deterministic_session(spark)
     docs = load_table(spark, sf_dir, "documents")
 
     from ..sources.layout import versioned_scratch_tag
@@ -496,7 +489,6 @@ def split_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-group hash agg plus a 5-row window.  Writing fold as a
     partition column materializes all 5 train/eval splits of a
     100 TB corpus without ever moving a row between folds."""
-    ensure_deterministic_session(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -554,7 +546,6 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: like [[sample_reservoir]], orderBy().limit(K) executes as
     TakeOrderedAndProject — per-partition heaps, driver merges P·K
     rows, no corpus shuffle."""
-    ensure_deterministic_session(spark)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
     h = F.md5(F.col("doc_id").cast("string").cast("binary"))
     hv = (

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import ensure_deterministic_session, scoped_conf
+from ..session import scoped_conf
 from ..sources.layout import events_tag, materialize, scratch_path
 from ..sources.tables import load_table
 from .registry import query
@@ -160,7 +160,6 @@ def event_first_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
     partitioned by user_id with one (t, event_id) ordering — per-user
     frames, map-side-combinable final rollup, no global sort
     anywhere.  Entry tie-break is total via event_id."""
-    ensure_deterministic_session(spark)
     per = _sessionized(spark, sf_dir)
     return (
         per.groupBy("entry_type")
@@ -196,7 +195,6 @@ def session_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical shape to the attribution key — per-user window
     frames then a tiny entry-type rollup."""
-    ensure_deterministic_session(spark)
     per = _sessionized(spark, sf_dir)
     return (
         per.groupBy("entry_type")
@@ -243,7 +241,6 @@ def event_hour_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one 24-bucket hash aggregate (map-side combined); the
     share window runs over the 24-row hour domain — calendar-sized,
     never row-sized."""
-    ensure_deterministic_session(spark)
     e = (
         load_table(spark, sf_dir, "events")
         .select(_epoch_s("ts").alias("t"), _cents("value").alias("cents"))
@@ -298,7 +295,6 @@ def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest, map-side combined), one digest-keyed equi-join back, one
     source-sized rollup.  No text ever compares pairwise; the join is
     on the 128-bit digest, not the document body."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", F.md5(F.col("text")).alias("h")
     )
@@ -349,7 +345,6 @@ def dup_cluster_size_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two cascaded hash aggregates, both map-side combined; the
     second groups on cluster size — a domain of at most a few hundred
     distinct values regardless of corpus size."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents").select(F.md5("text").alias("h"))
     c = d.groupBy("h").agg(F.count(F.lit(1)).alias("sz"))
     return (
@@ -403,7 +398,6 @@ def join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — the estimate costs O(distinct keys), the join it
     predicts costs O(join_rows).  That asymmetry is the whole point
     of the statistic."""
-    ensure_deterministic_session(spark)
     co = (
         load_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderkey").alias("k"))
@@ -477,7 +471,6 @@ def join_key_skew_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar-crossJoin pattern), and a global top-10 — Spark plans
     TakeOrderedAndProject, a per-partition heap + driver merge of 10
     rows, never a full sort."""
-    ensure_deterministic_session(spark)
     co = (
         load_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderkey").alias("k"))
@@ -554,7 +547,6 @@ def customer_pareto_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     many of its customers the greedy needs:
     min(cnt, ceil((threshold − cum_before) / r)).  Nothing sorts raw
     orders; the threshold is exact-integer ceil(0.8·total)."""
-    ensure_deterministic_session(spark)
     from ..operators.rankstats import global_order_stats
 
     rev = (
@@ -642,7 +634,6 @@ def discount_quantity_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums, no shuffle beyond the single-row combine.  Overflow bound:
     |num|·1000 stays in BIGINT through sf0.1 (≈2e18); at larger
     scales rescale x to centi-discount — documented, not silent."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "lineitem").select(
         F.floor(F.col("l_discount") * 1000 + F.lit(0.5)).cast("long").alias("x"),
         F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("y"),
@@ -711,7 +702,6 @@ def ship_lag_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one equi-join on the order key (both sides pruned to key +
     two columns at scan, pushdown-visible in the plan) and a
     band×flag rollup — a dozen output groups, map-side combined."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_returnflag",
@@ -775,7 +765,6 @@ def orders_monthly_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one month-keyed hash aggregate (map-side combined; month
     count is calendar-bounded), then a LAG over the month domain — an
     unpartitioned window over ~tens of rows, never over orders."""
-    ensure_deterministic_session(spark)
     m = (
         load_table(spark, sf_dir, "orders")
         .groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month"))
@@ -850,7 +839,6 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤7 here) then dedups — never an all-pairs over suppliers; the
     label frame is node-sized; the two count scalars join back as
     broadcast single rows (sanctioned BNLJ)."""
-    ensure_deterministic_session(spark)
     # Edge build via per-order supplier sets (r15, guide §2.3/§2.4;
     # the market_basket explode pattern, A/B'd −25% with identical
     # output): groupBy(order)+collect_set is ONE map-side-combined
@@ -988,7 +976,6 @@ def graph_cc_alternating(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shape; each round is two |E|-sized min-aggregate+join passes
     with per-round localCheckpoint lineage truncation and ONE scalar
     fingerprint action."""
-    ensure_deterministic_session(spark)
     from ..operators.graph import connected_components_alternating
 
     # Per-order collect_set edge build, ONE-SIDED (r16, guide §2.3 —
@@ -1110,7 +1097,6 @@ def embed_slice_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join of the centroid frame to itself on (slice+1, dim) —
     the frame is slice-count × 64 rows, domain-sized when slices are
     calendar buckets (here vec_id//16 stands in for ingest time)."""
-    ensure_deterministic_session(spark)
     q = load_table(spark, sf_dir, "embeddings").select(
         F.expr("vec_id div 16").alias("slice"),
         F.posexplode("embedding").alias("dim0", "e"),
@@ -1175,7 +1161,6 @@ def embed_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     [[embed_ann_pq]].  No SQL oracle — quantizer training is not
     SQL-expressible — so the driver records rows-only; pytest asserts
     recall against brute force and the exact-rescore property."""
-    ensure_deterministic_session(spark)
     from ..operators.pq import ivfpq_ann_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1209,11 +1194,10 @@ def stream_session_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: session state shards by user across the state store;
     the watermark evicts closed sessions; the final rollup is a tiny
     entry-type aggregate over the emitted sessions."""
-    ensure_deterministic_session(spark)
     from ..streaming.windows import read_event_stream
 
     # the staged copy of a static corpus table is content-stable —
-    # write it once (the merge_upsert device, VERDICT r06 #6), keeping
+    # write it once (the merge_upsert device), keeping
     # the timed path the STREAMING work
     path = materialize(
         scratch_path("stream_attr", events_tag(sf_dir)),
@@ -1295,7 +1279,6 @@ def events_user_mode_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     most |users|·|types| rows, then a per-user window picks the mode
     — frames are type-count sized (~5 rows); the final rollup is
     type-domain sized.  No raw-event window anywhere."""
-    ensure_deterministic_session(spark)
     per = (
         load_table(spark, sf_dir, "events")
         .groupBy("user_id", "event_type")
@@ -1352,7 +1335,6 @@ def orders_priority_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one priority-keyed aggregate with two conditional sums;
     the share window runs over the 5-row priority domain."""
-    ensure_deterministic_session(spark)
     half = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("pri"),
         F.when(F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"), 0)
@@ -1429,7 +1411,6 @@ def interarrival_gap_p90(spark: SparkSession, sf_dir: str) -> DataFrame:
     GAP VALUE and prefix-sums over distinct day counts — a domain of
     at most a few thousand values regardless of order count.  The
     full gap list is never sorted globally."""
-    ensure_deterministic_session(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", _epoch_s("o_orderdate").alias("t")
     )
@@ -1495,7 +1476,6 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: distinct (day, user) is one shuffle; the ×7 explode is
     constant fan-out; both rollups are day-domain sized.  The
     stickiness ratio is exact milli with DAU ≤ WAU ≤ 7·DAU bounds."""
-    ensure_deterministic_session(spark)
     du = (
         load_table(spark, sf_dir, "events")
         .select(_epoch_s("ts").alias("t"), "user_id")
@@ -1545,7 +1525,6 @@ def returns_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: fact ⋈ broadcast part dim (key + brand only, pruned at
     scan), then a brand-domain rollup with one conditional sum."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_returnflag")
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -1617,7 +1596,6 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans/metrics.py rank-statistic device) — nothing sorts raw
     events; the two scalar statistics broadcast back as single-row
     joins (sanctioned BNLJ)."""
-    ensure_deterministic_session(spark)
     daily = (
         load_table(spark, sf_dir, "events")
         .select(_epoch_s("ts").alias("t"))
@@ -1687,7 +1665,6 @@ def session_duration_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the sessionizer's per-user windows, then one
     (user, sid) rollup and a ~35-bucket histogram."""
-    ensure_deterministic_session(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", _epoch_s("ts").alias("t")
     )
@@ -1755,7 +1732,6 @@ def customer_churn_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: last-order epoch is one map-side groupBy(MAX); the
     frontier is its single-row re-aggregate broadcast back
     (sanctioned scalar BNLJ); the segment join is dim-keyed."""
-    ensure_deterministic_session(spark)
     last = (
         load_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
@@ -1823,7 +1799,6 @@ def session_conversion_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     uses) rather than re-joining sessions to events — one window
     stage, one rollup, no self-join.  The oracle's join formulation
     is the semantic spec; the engine's fold is the scale shape."""
-    ensure_deterministic_session(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", _epoch_s("ts").alias("t")
     )
@@ -1897,7 +1872,6 @@ def revenue_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the snowflake chain joins broadcast dims onto orders
     (nation/region are tiny), one (region, nation) rollup, then both
     share windows run over the ~25-row nation domain."""
-    ensure_deterministic_session(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", _cents("o_totalprice").alias("cents")
     )
@@ -1972,7 +1946,6 @@ def ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the partition key — no global sort), then exact integer
     cent-second sums; the division is a single integer floor at the
     end."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
         _epoch_s("ts").alias("t"),
@@ -2052,7 +2025,6 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile pass over distinct delays — the plans/metrics.py
     rank-statistic device; raw per-user rows are never sorted
     globally."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", _epoch_s("ts").alias("t")
     )
@@ -2136,7 +2108,6 @@ def session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose state is at most three types; the final top-10 is
     orderBy+limit (TakeOrderedAndProject — never a global sort), and
     only those 10 rows pass through the rank window."""
-    ensure_deterministic_session(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", _epoch_s("ts").alias("t")
     )

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from ..functions.text import word_count, words
 from ..operators.similarity import dot, norm_sq
-from ..session import ensure_deterministic_session
 from ..sources.tables import load_table, spread
 from .registry import query
 
@@ -87,7 +86,6 @@ def quality_score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     score domain (~1e3 word-count values), not the corpus size.  No
     global sort of documents ever happens; a naive rank() over 1e11
     rows would single-task, this never does."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents").select(
         word_count("text").cast("long").alias("s"),
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("pos"),
@@ -146,7 +144,6 @@ def calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     row broadcasts (BroadcastNestedLoopJoin on a 1-row build side —
     the sanctioned scalar-broadcast shape); pass 2 bins at scan speed
     and hash-aggregates on 10 keys, map-side combined."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents").select(
         "n_chars", F.when(F.col("lang") == "en", 1).otherwise(0).alias("pos")
     )
@@ -204,7 +201,6 @@ def gate_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: a single full-scan aggregate — four conditional sums, no
     shuffle beyond the final single-partition combine."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents").select(
         F.when(word_count("text") >= 55, 1).otherwise(0).alias("a"),
         F.when(F.col("n_chars") >= 300, 1).otherwise(0).alias("b"),
@@ -292,7 +288,6 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     after that runs on the (type × day) frame, whose size is the
     calendar, not the data.  Ties on |cusum| break to the earliest
     day."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "event_type", _epoch_s("ts").alias("ts_s")
     ).select("event_type", F.expr("ts_s div 86400").alias("day_idx"))
@@ -371,7 +366,6 @@ def ts_lagged_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one hash shuffle over raw events onto the daily frame;
     the lead window and the per-lag aggregate run on calendar-sized
     data.  The three lags share a single window pass."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         _epoch_s("ts").alias("ts_s"), "event_type"
     ).select(F.expr("ts_s div 86400").alias("day_idx"), "event_type")
@@ -462,7 +456,6 @@ def session_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     per year), independent of event volume, so the single ordered pass
     is calendar-sized.  The peak-minute argmax rides the same
     aggregate via a max-of-struct, no second pass over events."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id", _epoch_s("ts").alias("ts_s")
     )
@@ -546,7 +539,6 @@ def dedup_levenshtein_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode — those fall through to the shingle tiers).  The length
     pre-filter prunes before the O(len²) distance evaluates; both
     engines run their native levenshtein."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "n_chars", F.substring("text", 1, 24).alias("pfx")
     )
@@ -632,7 +624,6 @@ def token_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantees the collapse).  Overflow bound: A ≤ 2·n·B needs
     n·Σf < 2^62 — at ~1e12 tokens move the two sums to DECIMAL(38,0);
     the graded SFs sit far inside BIGINT."""
-    ensure_deterministic_session(spark)
     d = spread(load_table(spark, sf_dir, "documents")).select(
         F.explode(words("text")).alias("t")
     )
@@ -714,7 +705,6 @@ def embed_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed in index order on both engines ([[dedup_embed_cosine]]
     fold-order precedent), so the floor() quantization agrees
     bit-for-bit."""
-    ensure_deterministic_session(spark)
     e = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding", norm_sq("embedding").alias("nsq")
     )
@@ -789,7 +779,6 @@ def cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     CALENDAR frame — the [[quality_score_auc]] value-bucketed trick
     applied to time.  Cost is two bounded shuffles regardless of how
     many years the series spans."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id", _epoch_s("ts").alias("ts_s")
     ).select("user_id", F.expr("ts_s div 86400").alias("day_idx"))
@@ -842,7 +831,6 @@ def split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one hash shuffle on the content fingerprint with map-side
     combine; both verdict columns fold in the same aggregate.  No
     join — the train/eval sides never materialize separately."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents").select(
         F.md5(F.col("text").cast("binary")).alias("fp"),
         F.when(
@@ -923,7 +911,6 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     anything bigger than |E_und|.  Overflow note: m·Σx² needs
     |E|·deg_max² < 2^63 — beyond ~1e9 edges promote the moment sums
     to DECIMAL(38,0)."""
-    ensure_deterministic_session(spark)
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     # MATERIALIZE the pair set (r15, guide §1.2/§5): it feeds both
@@ -1017,7 +1004,6 @@ def event_ab_test_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined max), one single-row aggregate.  The same shape holds
     for billions of users; nothing is per-event after the first
     combine."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id", F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("p")
     )
@@ -1114,7 +1100,6 @@ def fk_violation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-level outer join, and this — time identically at test SFs;
     this one is kept because its shuffle volume is the smallest at
     scale).  The 7 single-row results union into one frame."""
-    ensure_deterministic_session(spark)
 
     def edge(child, ckey, parent, pkey, label):
         c = (
@@ -1194,7 +1179,6 @@ def supplier_hhi_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles the (nation, supplier) frame — dim-sized, not fact-sized.
     Overflow: Σq² ≤ n_suppliers · (total_rev/1e3)² — at 100 TB
     (Σrev ~ 1e13 cents → q ~ 1e8) promote q to DECIMAL(38,0) sums."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_suppkey", "l_extendedprice")
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -1262,7 +1246,6 @@ def events_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison per day.  Overflow: (e_d·N)² needs e_d·N < 3e9·3e9 —
     beyond ~1e9 daily errors promote the two products to
     DECIMAL(38,0)."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         _epoch_s("ts").alias("ts_s"), "event_type"
     ).select(F.expr("ts_s div 86400").alias("day_idx"), "event_type")
@@ -1316,7 +1299,6 @@ def events_fano_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one hash shuffle onto the (type × day) frame with map-side
     combine, then a per-type single-row aggregate — calendar-sized
     work after the first combine."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "event_type", _epoch_s("ts").alias("ts_s")
     ).select("event_type", F.expr("ts_s div 86400").alias("day_idx"))
@@ -1377,7 +1359,6 @@ def skyline_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     n² ever runs.  Frontier membership per row:
     price == min(price | size' >= size) AND (no larger size OR
     min(price | size' > size) > price)."""
-    ensure_deterministic_session(spark)
     p = load_table(spark, sf_dir, "part").select(
         "p_partkey",
         F.col("p_size").cast("long").alias("size"),
@@ -1452,7 +1433,6 @@ def interval_coverage_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     intersection the naive formulation would do) and no global sort;
     (ts, event_id) ordering makes tie rows deterministic in both
     engines."""
-    ensure_deterministic_session(spark)
     iv = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -1530,7 +1510,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     6.5 s → 3.9 s vs the materialized-wedge + closing-join form).
     Everything is distinct/groupBy/equi-join: edge-sized shuffles, no
     driver collect, no iteration."""
-    ensure_deterministic_session(spark)
     # Edge build via per-order sorted part sets (r15, guide §2.3/§2.4;
     # the market_basket explode pattern): groupBy(order)+collect_set
     # is ONE map-side-combined shuffle and the ordered-pair explode is
@@ -1670,7 +1649,6 @@ def table_checksum_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape; at 100 TB the checksum costs exactly one read pass and a
     6-row shuffle.  48-bit fingerprints keep XOR inside BIGINT;
     sum_sig < 1e6 · n_rows stays in range to ~9e12 rows."""
-    ensure_deterministic_session(spark)
     canon = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         "l_linestatus",
@@ -1741,7 +1719,6 @@ def money_proration_lrm(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst plans a single hash exchange + per-order sort; no global
     sort, no iteration, overflow bounded by per-ORDER magnitudes
     (pool·p < 1e13) which do not grow with corpus size."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_linenumber",
@@ -1814,7 +1791,6 @@ def sequence_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass; results are identical to the flat formulation because a
     gap either lies inside one bucket or spans consecutive non-empty
     bucket summaries."""
-    ensure_deterministic_session(spark)
     k = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "O")
@@ -1890,7 +1866,6 @@ def window_reset_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     same shape as [[sessionize_lag]] and [[interval_coverage_union]];
     the deterministic (ts, event_id) tiebreak makes ordinals
     engine-exact."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", _epoch_s("ts").alias("s")
     )

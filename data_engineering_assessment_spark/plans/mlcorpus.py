@@ -36,7 +36,6 @@ from ..functions.text import (
     words,
 )
 from ..operators.similarity import dot, norm_sq
-from ..session import ensure_deterministic_session
 from ..sources.tables import load_table, spread
 from .registry import query
 
@@ -105,7 +104,6 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     the aggregate.  Vectors never leave the JVM; the fold-order dot
     product matches the oracle bit-for-bit (the [[dedup_embed_cosine]]
     precedent).  Full k-means would iterate this exact plan."""
-    ensure_deterministic_session(spark)
     e = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding", norm_sq("embedding").alias("nsq")
     )
@@ -158,7 +156,6 @@ def dedup_prefix_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE hash-groupBy shuffle on a 32-byte key (map-side
     combined), then a single-row re-agg — the cheapest possible dedup
     shape; the 32-char substring prunes to scan width."""
-    ensure_deterministic_session(spark)
     g = (
         load_table(spark, sf_dir, "documents")
         .groupBy(F.substring("text", 1, 32).alias("pfx"))
@@ -230,7 +227,6 @@ def dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     |A|/2 ≤ |B| ≤ 2|A|), which provably cannot change the result but
     prunes the pair stream before the aggregate.  The four counts are
     single-row aggregates combined with broadcast scalar joins."""
-    ensure_deterministic_session(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # MATERIALIZE the funnel stages (r15, guide §1.2/§5): `ex` feeds
     # both the prefix stage and its own count, `pf` feeds the shingle
@@ -345,7 +341,6 @@ def quality_weighted_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pure per-row expressions at scan speed — no shuffle, no
     Python; the real-model swap-in point is a batched pandas_udf
     scoring the same columns."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     nw = word_count("text")
     f = d.select(
@@ -401,7 +396,6 @@ def tokenize_pack_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     more executors); the tokenizer is a native regexp at scan speed.
     The prefix-sum pack id is the [[seq_pack_chunks]] per-shard
     offset scheme — no driver state, no global sort."""
-    ensure_deterministic_session(spark)
     t = (
         load_table(spark, sf_dir, "documents")
         .filter(word_count("text") >= 20)
@@ -470,7 +464,6 @@ def contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the join's two sides already shared one exchange via
     ReuseExchange).  A/B best-of-4 at sf0.1: 2.18 → 1.88 s (second
     session 3.08 → 2.47), identical matrix."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     ws = d.select("source", words("text").alias("ws")).filter(F.size("ws") >= 3)
     sh = (
@@ -540,7 +533,6 @@ def token_drift_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
     time column the slice key becomes the window start
     ([[token_heavy_hitters]] does the sketch-based single-set
     version)."""
-    ensure_deterministic_session(spark)
     tok = load_table(spark, sf_dir, "documents").select(
         F.expr("doc_id div 100").alias("slice"),
         F.explode(words("text")).alias("tok"),
@@ -603,7 +595,6 @@ def length_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel and NTILE(4) becomes exact integer arithmetic on
     (rank, N) — the oracle stays exactly portable.  The final
     cumulative window runs over 4 rows."""
-    ensure_deterministic_session(spark)
     from ..operators.rankstats import global_order_stats, ntile_from_rank
 
     t = load_table(spark, sf_dir, "documents").select(
@@ -659,7 +650,6 @@ def zstd_dict_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-bucket rank; the selection predicate is a running-sum
     filter — no driver collection of any text.  The actual dictionary
     build consumes the selected ids via a normal join."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "n_chars", F.expr("n_chars div 200").alias("bucket")
     )
@@ -717,7 +707,6 @@ def text_char_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: explode to (doc, char) then two map-side-combined
     aggregations — counts are exact integers, the final ratio is one
     integer division; nothing floating-point anywhere."""
-    ensure_deterministic_session(spark)
     ch = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.regexp_extract_all("text", F.lit("."), 0)).alias("ch")
     )
@@ -776,7 +765,6 @@ def bigram_lift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a global sort of the ≥10-count survivors only.  The integer
     product c_x·c_y needs DECIMAL partials past ~3·10⁹-token
     corpora."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents").select(words("text").alias("ws"))
     d = d.select("ws")  # materialize split once (shingles_of perf note)
     idx = F.sequence(F.lit(1), F.size("ws") - 1)
@@ -849,7 +837,6 @@ def text_ttr_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over documents; the per-decile distinct is one
     count-distinct shuffle keyed by (decile, token) — partial-agg
     friendly, never a global sort of tokens."""
-    ensure_deterministic_session(spark)
     from ..operators.rankstats import global_order_stats, ntile_from_rank
 
     d = load_table(spark, sf_dir, "documents").select(
@@ -912,7 +899,6 @@ def mix_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one groupBy over the token counts (map-side combined), a
     |sources|-row aggregate, and a broadcast single-row total — the
     scalar-broadcast pattern."""
-    ensure_deterministic_session(spark)
     s = (
         load_table(spark, sf_dir, "documents")
         .groupBy("source")
@@ -967,7 +953,6 @@ def corpus_quota_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum in the same partitioning — one shuffle total), then a
     map-side-combined aggregate.  No global sort; the quota predicate
     is a per-row filter on the running sum."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     nw = word_count("text")
     f = d.select(
@@ -1034,7 +1019,6 @@ def source_token_tv_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregating those partials (never a second corpus scan), an
     equi-join back on token, and a broadcast single-row N.  Integer
     headroom: c_st·N_tot needs DECIMAL partials past ~3·10⁹ tokens."""
-    ensure_deterministic_session(spark)
     tok = load_table(spark, sf_dir, "documents").select(
         "source", F.explode(words("text")).alias("tok")
     )
@@ -1095,7 +1079,6 @@ def lang_balance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort, no collect.  The same plan balances on token mass by
     swapping the rank predicate for a running-sum quota
     ([[corpus_quota_fill]])."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     lc = d.groupBy("lang").agg(F.count("*").alias("n_docs_l"))
     tgt = lc.agg(F.min("n_docs_l").cast("long").alias("target"))
@@ -1154,7 +1137,6 @@ def window_nth_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one window, one shuffle on o_custkey; the explicit
     unbounded ROWS frame is what makes last_value/nth_value
     well-defined (the default frame stops at CURRENT ROW)."""
-    ensure_deterministic_session(spark)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") <= 100)
     w = (
         Window.partitionBy("o_custkey")
@@ -1209,7 +1191,6 @@ def event_burst_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered pass per user with a two-pointer window — O(events), no
     self-join against a time grid.  The peak argmin resolves inside
     the same partitioning (second window, no extra exchange)."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -1273,7 +1254,6 @@ def orders_reorder_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on o_custkey shared by the lag window and the
     aggregate — Catalyst reuses the partitioning, so the whole key is
     a single exchange."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.expr("CAST(CAST(o_orderdate AS TIMESTAMP) AS LONG) div 86400").alias("day"),

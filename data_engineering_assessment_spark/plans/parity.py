@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.taxi import duration_seconds, in_bbox, one_hot_dow, one_hot_hour
-from ..session import ensure_deterministic_session
 from ..sources.green_taxi import clean_lines, read_green_taxi_csv, validate_header
 from ..sources.tables import load_table
 from .registry import query
@@ -55,7 +54,6 @@ def scan_csv_header_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Header whitelist validation (01.py:184-186): fail-fast before
     any distributed work; emits a single OK row when the header is
     byte-for-byte correct."""
-    ensure_deterministic_session(spark)
     validate_header(spark, FIXTURE_CSV)
     return spark.range(1).select(F.lit(1).cast("long").alias("header_ok"))
 
@@ -69,7 +67,6 @@ def scan_csv_header_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_csv_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed cleaner (01.py:187-205): blank-line skip + trailing-
     field truncation as a text-scan + regex pipeline."""
-    ensure_deterministic_session(spark)
     return clean_lines(spark, FIXTURE_CSV, fail_fast=True)
 
 
@@ -126,7 +123,6 @@ def scan_csv_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed parse against the explicit 20-column schema (01.py:208-233):
     '' → null, Y/N → bool, exact timestamp format, decimal casts.
     Output stringified for engine-portable golden compare."""
-    ensure_deterministic_session(spark)
     return _typed_as_strings(read_green_taxi_csv(spark, FIXTURE_CSV))
 
 
@@ -148,7 +144,6 @@ def one_hot_hour_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """24 hour one-hot flags (02.py:38-46 semantics, UTC hours) over
     events.ts — generated native CASE expressions, constant-folded by
     Catalyst, zero shuffles."""
-    ensure_deterministic_session(spark)
     return load_table(spark, sf_dir, "events").select(
         "event_id", *one_hot_hour("ts", prefix="hour_is_")
     )
@@ -170,7 +165,6 @@ _DOW_FLAGS_SQL = ",\n           ".join(
 def one_hot_dow_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """7 day-of-week flags with the reference's *observed* (buggy)
     semantics preserved for golden parity (SURVEY.md §2.2 note)."""
-    ensure_deterministic_session(spark)
     return load_table(spark, sf_dir, "events").select(
         "event_id", *one_hot_dow("ts", prefix="dow_is_", corrected=False)
     )
@@ -188,7 +182,6 @@ _DOW_CORRECTED_SQL = ",\n           ".join(
 )
 def one_hot_dow_corrected(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corrected variant: 0=Sunday..6=Saturday, complete partition."""
-    ensure_deterministic_session(spark)
     return load_table(spark, sf_dir, "events").select(
         "event_id", *one_hot_dow("ts", prefix="dow_is_", corrected=True)
     )
@@ -207,7 +200,6 @@ def duration_seconds_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Epoch-subtraction duration (02.py:73-76) — order-to-ship latency
     per lineitem.  Negative durations, if present, are kept (the
     reference keeps its 9 negative rows, 02.py:70-72)."""
-    ensure_deterministic_session(spark)
     l = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     return l.join(o, l.l_orderkey == o.o_orderkey).select(
@@ -230,7 +222,6 @@ def duration_seconds_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 def flag_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compound inclusive-BETWEEN box flag (02.py:78-95 shape): two 2-D
     boxes OR-ed, double literals against the scanned columns."""
-    ensure_deterministic_session(spark)
     box = in_bbox("l_quantity", "l_discount", (10.0, 20.0), (0.02, 0.05)) | in_bbox(
         "l_extendedprice", "l_tax", (20000.0, 30000.0), (0.01, 0.04)
     )
@@ -257,7 +248,6 @@ def flag_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:
 def project_extend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star-projection + derived-column extension (02.py:22-30 shape):
     SELECT * plus generated derived columns, one narrow projection."""
-    ensure_deterministic_session(spark)
     dow_spark = F.dayofweek("ts")  # 1=Sunday..7=Saturday
     return load_table(spark, sf_dir, "events").select(
         "event_id",

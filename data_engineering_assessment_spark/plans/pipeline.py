@@ -45,7 +45,6 @@ from ..operators.similarity import (
     cosine_topk,
     lsh_ann_topk,
 )
-from ..session import ensure_deterministic_session
 from ..sources.tables import load_table
 from .registry import query
 
@@ -70,7 +69,6 @@ from .registry import query
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-scoring statistics per document — pure scan-speed
     expressions (word/uniq/stopword counts, average word length)."""
-    ensure_deterministic_session(spark)
     nw = word_count("text")
     return load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -96,7 +94,6 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace + BPE-ish regex token counting."""
-    ensure_deterministic_session(spark)
     return load_table(spark, sf_dir, "documents").select(
         "doc_id",
         word_count("text").alias("n_ws_tokens"),
@@ -117,7 +114,6 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic n-gram/marker language ID (expression-only)."""
-    ensure_deterministic_session(spark)
     return load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", lang_guess("text").alias("lang_guess")
     )
@@ -135,7 +131,6 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content fingerprints: exact (md5 of text) and order-insensitive
     word-bag md5 — engine-portable by md5's definition."""
-    ensure_deterministic_session(spark)
     return load_table(spark, sf_dir, "documents").select(
         "doc_id",
         fingerprint_exact("text").alias("fp_exact"),
@@ -160,7 +155,6 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by hash-groupBy on the bag fingerprint: one
     map-side-combined shuffle; canonical row = min doc_id."""
-    ensure_deterministic_session(spark)
     return dedup_exact_bag(load_table(spark, sf_dir, "documents"))
 
 
@@ -194,7 +188,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram-Jaccard near-dup pairs via the inverted shingle
     index (no cross join); the oracle brute-forces the same answer."""
-    ensure_deterministic_session(spark)
     return ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"), threshold=0.5)
 
 
@@ -203,7 +196,6 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16) + LSH(4 bands) candidate near-dup pairs with
     estimated Jaccard — deterministic (xxhash64 family) but not
     SQL-portable, so no DuckDB oracle."""
-    ensure_deterministic_session(spark)
     return minhash_candidate_pairs(
         load_table(spark, sf_dir, "documents"), min_est_jaccard=0.5
     )
@@ -218,7 +210,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identical to the historical 16-bit contract; at larger
     corpora the width grows and the Hamming budget becomes a stricter
     agreement fraction (documented trade-off in simhash_pairs)."""
-    ensure_deterministic_session(spark)
     return simhash_pairs(load_table(spark, sf_dir, "documents"), max_hamming=3)
 
 
@@ -246,7 +237,6 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join baseline; the LSH tier below is the scale path.  Scores
     emit as integer micro-units (BIGINT) so the driver's value hash is
     engine-portable — DOUBLE/DECIMAL canonicalize differently."""
-    ensure_deterministic_session(spark)
     return cosine_near_dup_pairs(load_table(spark, sf_dir, "embeddings"), threshold=0.4)
 
 
@@ -255,7 +245,6 @@ def dedup_embed_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup via hyperplane signatures + pigeonhole chunk
     join, exact cosine rescoring (cos ≥ 0.4) — no cross join; output
     is a recall-governed subset of dedup_embed_cosine."""
-    ensure_deterministic_session(spark)
     return cosine_near_dup_lsh(load_table(spark, sf_dir, "embeddings"), threshold=0.4)
 
 
@@ -292,7 +281,6 @@ def dedup_embed_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embed_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-3 cosine neighbors for query vectors vec_id < 10 —
     broadcast query batch, native dot products, rank window."""
-    ensure_deterministic_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=3)
 
@@ -301,7 +289,6 @@ def embed_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embed_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-3 via multi-table random-hyperplane LSH
     (deterministic seeded planes) — the scale path for ANN."""
-    ensure_deterministic_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return lsh_ann_topk(emb, emb.filter(F.col("vec_id") < 10), k=3)
 
@@ -328,7 +315,6 @@ def embed_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed metadata over binary payload columns — the payload column
     itself is never materialized (column pruning does the work)."""
-    ensure_deterministic_session(spark)
     return asset_meta(synth_assets(load_table(spark, sf_dir, "documents")))
 
 
@@ -354,7 +340,6 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     length, so the oracle can restate it in SQL over the source text
     (ASCII corpus: strlen == octet_length) — a hard value check on the
     whole mapInPandas plumbing, not just a row count."""
-    ensure_deterministic_session(spark)
     assets = synth_assets(load_table(spark, sf_dir, "documents"))
     return decode_assets(assets, decode_fn=fake_decode)
 
@@ -372,7 +357,6 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Thumbnail pipeline: media_type filter → mapInPandas resize (the
     deterministic fake tiler) → md5 digest of the thumb bytes so the
     oracle can compare values byte-exactly (corpus text is ASCII)."""
-    ensure_deterministic_session(spark)
     assets = synth_assets(load_table(spark, sf_dir, "documents"))
     resized = resize_assets(assets, width=8, height=8, resize_fn=fake_resize)
     return resized.select(
@@ -413,7 +397,6 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     with VARCHAR substring arithmetic and hash-match the frame
     digests — the same promotion ``multimodal_decode`` got in
     round 3."""
-    ensure_deterministic_session(spark)
     assets = synth_assets(load_table(spark, sf_dir, "documents"))
     frames = sample_frames(assets, every_n=4)
     return frames.select("asset_id", "frame_idx", F.md5("frame").alias("frame_md5"))
@@ -460,7 +443,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     = min id per cluster.  The oracle brute-forces the same answer
     with a recursive transitive closure — feasible only at test scale,
     which is exactly why the engine side is iterative."""
-    ensure_deterministic_session(spark)
     from ..operators.graph import dedup_cluster_assignments
 
     pairs = ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"), threshold=0.5)
@@ -472,7 +454,6 @@ def embed_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: deterministic k-means coarse quantizer, nprobe-limited
     cell search, exact rescoring (operators/ivf.py).  Exhaustive-probe
     equivalence to the brute-force key asserted in pytest."""
-    ensure_deterministic_session(spark)
     from ..operators.ivf import ivf_ann_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -494,7 +475,6 @@ def sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     any partitioning — which is what makes training-data subsets
     reproducible and joinable across runs.  The predicate is a narrow
     filter: no shuffle, evaluated at scan speed."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     h = F.md5(F.col("doc_id").cast("string").cast("binary")).substr(1, 2)
     return d.filter(h <= "28").select("doc_id", "lang", "n_chars")
@@ -513,7 +493,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash predicate (~6% of 'en', ~50% of everything else) — the
     rebalancing move for skewed training corpora, still shuffle-free
     and bit-reproducible."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     h = F.md5(F.col("doc_id").cast("string").cast("binary")).substr(1, 2)
     cap = F.when(F.col("lang") == "en", F.lit("0f")).otherwise(F.lit("7f"))
@@ -542,7 +521,6 @@ def text_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min length, lexical diversity, stopword-ratio band) — pure
     scan-speed predicates, the first stage of any pretraining corpus
     pipeline."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     nw = word_count("text").cast("double")
     uniq_ratio = uniq_word_count("text").cast("double") / nw
@@ -574,7 +552,6 @@ def token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot tokens are exactly what partial aggregation flattens) → a
     single-partition top-20 of the already-tiny distinct-token table.
     The (n DESC, tok) tie-break makes ranking deterministic."""
-    ensure_deterministic_session(spark)
     from pyspark.sql import Window
 
     from ..functions.text import words
@@ -634,7 +611,6 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     the redactions.
 
     Scale: narrow projection of JVM regex ops — no shuffle, no UDF."""
-    ensure_deterministic_session(spark)
     from ..functions.text import scrub_pii
 
     scrubbed, n_red = scrub_pii("text")
@@ -675,7 +651,6 @@ def decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus side streams through explode + join + partial-agg without
     ever self-joining.  At 100 TB the benchmark set is still MB-scale,
     so the broadcast holds."""
-    ensure_deterministic_session(spark)
     from ..functions.text import shingles
     from ..sources.tables import spread
 
@@ -733,7 +708,6 @@ def embed_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: posexplode fans out rows x dims, then one
     map-side-combined shuffle on 64 keys; no vector ever leaves the
     JVM."""
-    ensure_deterministic_session(spark)
     from ..sources.tables import spread
 
     e = spread(load_table(spark, sf_dir, "embeddings"))
@@ -775,7 +749,6 @@ def dedup_fuzzy_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     a finer key — brand+type, or a char-ngram LSH bucket — exactly
     like every other candidate-generation tier here).  Levenshtein
     runs JVM-side; no Python."""
-    ensure_deterministic_session(spark)
     p = load_table(spark, sf_dir, "part")
     a = p.select(
         F.col("p_brand").alias("brand"),
@@ -834,7 +807,6 @@ def doc_length_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     quartile table is |sources| rows, broadcast back for the outlier
     count — the corpus streams through twice at scan speed (or once,
     if the engine caches the ranked projection)."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents").select("source", "n_chars", "doc_id")
     w = Window.partitionBy("source").orderBy("n_chars", "doc_id")
     r = d.select(
@@ -904,7 +876,6 @@ def quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree on.  Scale: posexplode fans rows×dims, then ONE shuffle on
     the 64-key dim partitioning; each dimension sorts independently
     (embarrassingly parallel), and no Python touches the data."""
-    ensure_deterministic_session(spark)
     from ..sources.tables import spread
 
     e = spread(load_table(spark, sf_dir, "embeddings"))
@@ -960,7 +931,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     key and then groups within itself — both shuffles are keyed on
     fp, so AQE plans them back-to-back on one exchange; cost is
     O(delta + |store|), not O(corpus²) and not O(corpus) rescans."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     h1 = F.md5(F.col("doc_id").cast("string").cast("binary")).substr(1, 1)
     fp = F.md5("text")
@@ -975,7 +945,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("dedup_minhash_incremental")  # sketch-based — rows-only
 def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental NEAR-dup detection (round 13, VERDICT r12 #4) —
+    """Incremental NEAR-dup detection (round 13) —
     the tier that completes the incremental-ingest ladder: exact-doc
     ([[dedup_incremental]]) and exact-substring
     ([[dedup_substring_incremental]]) both probe a persisted base
@@ -999,7 +969,6 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics (xxhash64 family) are not SQL-portable, so the key is
     rows-only; recall vs the exact n-gram-Jaccard twin plus planted
     base-mutation immutability are pinned in tests/test_pipeline.py."""
-    ensure_deterministic_session(spark)
     from ..operators import dedup as dedup_ops
     from ..operators.dedup import _materialized, minhash_banded, minhash_est_jaccard
     from ..sources.layout import scratch_bucketed_table
@@ -1052,8 +1021,8 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("dedup_embed_incremental")  # sketch candidate generation — rows-only
 def dedup_embed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental EMBEDDING near-dup detection (round 14, VERDICT
-    r13 #3) — the final tier of the incremental-ingest ladder:
+    """Incremental EMBEDDING near-dup detection (round 14) — the
+    final tier of the incremental-ingest ladder:
     exact-doc ([[dedup_incremental]]), exact-substring
     ([[dedup_substring_incremental]]) and MinHash
     ([[dedup_minhash_incremental]]) all probe a persisted base index;
@@ -1063,8 +1032,8 @@ def dedup_embed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITHOUT re-hashing the base: the base's hyperplane-LSH buckets
     ([[dedup_embed_lsh]] builds these from scratch each run) are
     persisted ONCE per corpus+code version, split into TWO bucketed
-    tables (the storage shape VERDICT r13 #3 asked to adjudicate for
-    the MinHash tier): a narrow ``(ckey, doc)`` probe index bucketed
+    tables (the storage shape weighed against a single table for
+    the MinHash tier in operators/dedup.py): a narrow ``(ckey, doc)`` probe index bucketed
     by chunk key — no per-chunk signature/vector duplication — plus a
     ``(doc, sig, vec)`` side table bucketed by doc for candidate
     rescoring.  Per increment: delta chunk keys equi-join the probe
@@ -1093,7 +1062,6 @@ def dedup_embed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only; LSH-subset-of-exact containment, planted cross-shard
     recall, and planted base-mutation immutability are pinned in
     tests/test_pipeline.py."""
-    ensure_deterministic_session(spark)
     from ..operators.similarity import _micro
 
     cross, intra = _emb_inc_scored(spark, sf_dir)
@@ -1256,8 +1224,8 @@ def _emb_inc_scored(spark: SparkSession, sf_dir: str):
 
 @query("dedup_embed_incremental_summary")  # sketch candidate generation — rows-only
 def dedup_embed_incremental_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-output mode of the embedding incremental tier (round-15,
-    VERDICT r14 what's-wrong #2): instead of enumerating every
+    """Bounded-output mode of the embedding incremental tier (round 15):
+    instead of enumerating every
     near-duplicate PAIR — whose true cardinality is O(dup²) on a
     degenerately duplicated corpus (the sf100 synthetic gives every
     vector ~15 exact twins, and the full enumeration spilled the
@@ -1280,7 +1248,6 @@ def dedup_embed_incremental_summary(spark: SparkSession, sf_dir: str) -> DataFra
     key is rows-only; containment against the pair-emitting key
     (every summary row backed by its pairs, counts and best matches
     identical) is pinned in tests/test_pipeline.py."""
-    ensure_deterministic_session(spark)
     from ..operators.similarity import _micro
 
     cross, intra = _emb_inc_scored(spark, sf_dir)
@@ -1344,7 +1311,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the handful of sources containing it, so pair generation is
     Σ|sources-per-fp|², bounded by the source count squared, never
     corpus²."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     f = d.select("source", fingerprint_bag("text").alias("fp")).distinct()
     a = f.select("fp", F.col("source").alias("source_a"))
@@ -1407,7 +1373,6 @@ def corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow (doc_id, source, n_chars, fp) projection; the per-group
     sort is dup-cluster-sized, i.e. tiny.  A/B at sf0.1: 0.74 s →
     0.59 s best-of-3.  Split + report add one small agg."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     nw = word_count("text").cast("double")
     kept = d.filter(
@@ -1467,7 +1432,6 @@ def dup_text_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning) and the per-doc re-agg shuffles on doc_id.  No
     pairwise comparison anywhere — the chunk-hash groupBy carries
     all the cross-document information."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     t = d.select("doc_id", toks.alias("toks"), F.size(toks).alias("n")).filter(
@@ -1548,7 +1512,6 @@ def multimodal_quality_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: both sides prune/filter at scan speed; the join is EQUI
     on the shared id, co-partitioned in one shuffle; the norm fold is
     a per-row higher-order function, never exploded."""
-    ensure_deterministic_session(spark)
     from ..functions.text import stopword_count
 
     d = load_table(spark, sf_dir, "documents")
@@ -1596,7 +1559,6 @@ def embed_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/pca.py; an array<double> column breaks the driver's
     pandas-based canonicalizer (unhashable list), which is why the
     r07 verdict errored."""
-    ensure_deterministic_session(spark)
     from ..operators.pca import pca_fit, pca_project
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1649,7 +1611,6 @@ def embed_centroid_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     never leave the JVM, nothing is collected.  The ssq headroom at
     1e6 quantization is ~9e6 rows per (label, dim) before signed-64
     overflow; widen to DECIMAL partials past that."""
-    ensure_deterministic_session(spark)
     from ..sources.tables import spread
 
     e = spread(load_table(spark, sf_dir, "embeddings"))
@@ -1718,7 +1679,6 @@ def embed_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     then candidates shuffle once on q_id for ranking and voting —
     identical cost profile to the proven topk key; the vote re-agg
     rides the same q_id partitioning."""
-    ensure_deterministic_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     labels = emb.select("vec_id", F.col("label").cast("int").alias("label"))
     topk = cosine_topk(emb, emb.filter(F.col("vec_id") % 10 == 0), k=5)
@@ -1785,7 +1745,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     syndicated bodies).  Same inverted shingle index as the Jaccard
     tier, directed join, exact integer cross-multiplied threshold;
     the oracle brute-forces the identical answer."""
-    ensure_deterministic_session(spark)
     from ..operators.dedup import containment_pairs
 
     return containment_pairs(load_table(spark, sf_dir, "documents"))
@@ -1814,7 +1773,6 @@ def token_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     recounts candidates exactly, so the output is deterministic and
     oracle-checkable despite the sketch in the middle.  See
     operators/sketches.py for the guarantee arithmetic."""
-    ensure_deterministic_session(spark)
     from ..functions.text import words
     from ..operators.sketches import heavy_hitters
     from ..sources.tables import spread
@@ -1874,7 +1832,6 @@ def text_boilerplate_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     (df >= {DF} at crawl scale is rare) so the coverage join is a
     broadcast.  No pairwise doc comparison anywhere — cost is linear
     in corpus grams."""
-    ensure_deterministic_session(spark)
     from ..functions.text import words
     from ..sources.tables import spread
 
@@ -1957,7 +1914,6 @@ def multimodal_arrow_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-partition streaming over Arrow batches, no shuffle, no
     pandas materialization; output is (id, len, digest) — the payload
     never leaves the executor."""
-    ensure_deterministic_session(spark)
     import hashlib
 
     import pyarrow as pa
@@ -2042,7 +1998,6 @@ def embed_matryoshka_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan), corpus streamed once; the windows run per query over k·n
     candidate rows.  The truncated tier's real deployment would
     re-index at 16 dims — this audit is the go/no-go evidence."""
-    ensure_deterministic_session(spark)
     from ..operators.similarity import dot, norm_sq, spread
 
     emb = spread(load_table(spark, sf_dir, "embeddings"))
@@ -2123,7 +2078,6 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the inverted-index pair stream feeds every bucket; no re-scan per
     threshold.  Jaccard is a single IEEE division of identical exact
     integers, so decile assignment is bit-identical cross-engine."""
-    ensure_deterministic_session(spark)
     from ..operators.dedup import ngram_jaccard_pairs
 
     pairs = ngram_jaccard_pairs(
@@ -2182,7 +2136,6 @@ def embed_outlier_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids), a second pass folds each vector against the
     broadcast mean — no shuffle of vectors, TakeOrderedAndProject
     for the top-k."""
-    ensure_deterministic_session(spark)
     from ..sources.tables import spread
 
     emb = spread(load_table(spark, sf_dir, "embeddings"))
@@ -2265,7 +2218,6 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     global_shuffle's 256-row offsets and the PCA eigendecomposition.
     The tiny bucket table is materialized once so the token explode
     is not re-run for the histogram pass."""
-    ensure_deterministic_session(spark)
     from pyspark.sql import Window
 
     from ..functions.text import words
@@ -2370,7 +2322,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: see operators/dedup.py:substring_window_index — generator
     expansion, one digest shuffle, equi semi-join; the per-doc interval
-    union is explode + distinct + count (round 13, VERDICT r12 #3) —
+    union is explode + distinct + count (round 13) —
     constant per-row state in every aggregation buffer, so a
     pathological giant document can't balloon a single agg buffer the
     way the previous collect_list-of-position-arrays shape could.
@@ -2378,7 +2330,6 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream exchanges differ, so it is persisted (round-14 ADVICE):
     without it the digest-shuffle semi-join subtree executed twice per
     run."""
-    ensure_deterministic_session(spark)
     from ..operators.dedup import _materialized, substring_window_index
 
     base, dupw = substring_window_index(load_table(spark, sf_dir, "documents"), k=8)
@@ -2440,7 +2391,6 @@ def dedup_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     document's own surviving tokens (array_sort over a collect_list
     whose state is bounded by doc length, same bound as any per-doc
     aggregation — no corpus-wide order anywhere)."""
-    ensure_deterministic_session(spark)
     from ..operators.dedup import substring_window_index
 
     base, dupw = substring_window_index(load_table(spark, sf_dir, "documents"), k=8)
@@ -2509,7 +2459,7 @@ def dedup_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_substring_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental substring-level dedup (round 12, VERDICT r11 #6):
+    """Incremental substring-level dedup (round 12):
     the Lee-et-al exact-substring tier of [[dedup_substring_spans]]
     run the way a production corpus actually ingests — a new shard
     (the same hash-partitioned ~25% delta as [[dedup_incremental]])
@@ -2534,7 +2484,6 @@ def dedup_substring_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     granularity.  Incrementality is pinned by a planted pytest that
     mutates the base AFTER index build and asserts the scoring is
     unchanged (tests/test_pipeline.py)."""
-    ensure_deterministic_session(spark)
     from ..operators import dedup as dedup_ops
     from ..operators.dedup import _materialized, substring_windows
     from ..sources.layout import scratch_bucketed_table
@@ -2567,8 +2516,8 @@ def dedup_substring_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: dupw feeds both the ndw and dt aggregations (round-14
     # ADVICE — without it the index-probe semi-join subtree ran twice)
     dupw = _materialized(w.join(dup_h, "h", "semi").select("doc_id", "s"))
-    # coverage via explode + distinct + count (round 13, VERDICT r12
-    # #3): no per-document position array in any aggregation buffer
+    # coverage via explode + distinct + count (round 13): no
+    # per-document position array in any aggregation buffer
     agg = dupw.groupBy("doc_id").agg(F.count(F.lit(1)).alias("ndw"))
     cv = (
         dupw.select(
@@ -2623,7 +2572,6 @@ def dedup_longest_dup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc — per-partition state is a row_number counter over that
     document's own covered positions, so no corpus-wide ordering
     exists anywhere; the run/span aggregations shuffle on doc_id."""
-    ensure_deterministic_session(spark)
     from ..operators.dedup import substring_window_index
 
     base, dupw = substring_window_index(load_table(spark, sf_dir, "documents"), k=8)
@@ -2676,7 +2624,6 @@ def dedup_window_freq_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     (digest → count, bucket → sum) — the second groupBy has at most
     ~40 groups, so the result is a constant-size profile whatever the
     corpus size."""
-    ensure_deterministic_session(spark)
     from ..operators.dedup import substring_windows
 
     _base, w = substring_windows(load_table(spark, sf_dir, "documents"), k=8)

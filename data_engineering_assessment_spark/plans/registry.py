@@ -6,6 +6,11 @@ the same parquet tables; the driver hash-compares both results
 (row-count + schema + order-insensitive value hash).  Determinism
 rules every registered query follows:
 
+- every build runs under pinned result-affecting session confs:
+  :func:`query` wraps each builder so it calls
+  ``session.ensure_deterministic_session(spark)`` first, on every
+  call (no per-session memo: a caller may change a conf between
+  builds), and builders do not call it themselves;
 - money/quantity aggregates go through DECIMAL casts → exact
   arithmetic, identical in any engine and any execution order;
 - averages are exact-decimal sums cast to double then divided by a
@@ -19,9 +24,12 @@ rules every registered query follows:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import ensure_deterministic_session
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -31,15 +39,27 @@ _ORACLES: dict[str, str] = {}
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a query builder; ``oracle`` is DuckDB-runnable SQL or
-    None for genuinely non-SQL-expressible ops (rows-only check)."""
+    None for genuinely non-SQL-expressible ops (rows-only check).
+
+    The registered and returned function is a ``functools.wraps``
+    wrapper that pins the session before it builds, so a direct
+    module-level call is pinned too.  ``wraps`` keeps ``__wrapped__``,
+    through which ``inspect.getsource`` reaches the builder's own
+    source (``layout.versioned_scratch_tag`` digests it)."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _QUERIES:
             raise ValueError(f"duplicate query key {name!r}")
-        _QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
+            ensure_deterministic_session(spark)
+            return fn(spark, sf_dir)
+
+        _QUERIES[name] = pinned
         if oracle is not None:
             _ORACLES[name] = oracle
-        return fn
+        return pinned
 
     return deco
 
@@ -50,4 +70,3 @@ def queries() -> dict[str, QueryFn]:
 
 def oracles() -> dict[str, str]:
     return dict(_ORACLES)
-

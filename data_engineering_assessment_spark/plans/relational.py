@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import ensure_deterministic_session, scoped_conf
+from ..session import scoped_conf
 from ..sources.layout import corpus_tag, events_tag, materialize, scratch_path
 from ..sources.tables import load_table
 from .registry import query
@@ -79,7 +79,6 @@ def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py.  At 100 TB this is the difference between
     reading 3 columns of a few row groups and reading everything.
     """
-    ensure_deterministic_session(spark)
     return (
         load_table(spark, sf_dir, "lineitem")
         .filter((F.col("l_shipdate") >= F.lit("1999-01-01").cast("timestamp")) & (F.col("l_discount") > 0.05))
@@ -98,7 +97,6 @@ def scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit-schema read → digest projection.  Values must survive the
     trip byte-exactly (JSON string escaping is lossless); the oracle
     reads the original parquet, so any loss shows up as a hash miss."""
-    ensure_deterministic_session(spark)
     from ..sources.formats import read_jsonl, write_jsonl
 
     docs = load_table(spark, sf_dir, "documents")
@@ -112,7 +110,6 @@ def scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source/sink round-trip (columnar alternative to parquet,
     footer-described schema, pushdown-capable)."""
-    ensure_deterministic_session(spark)
     from ..sources.formats import read_orc, write_orc
 
     docs = load_table(spark, sf_dir, "documents")
@@ -130,7 +127,6 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     complementing the reference's unquoted green-taxi CSV contract;
     the oracle reads the original parquet, so any loss is a hash
     miss.  Splittable text — scans parallelize like JSONL."""
-    ensure_deterministic_session(spark)
     from ..sources.formats import read_csv, write_csv
 
     docs = load_table(spark, sf_dir, "documents")
@@ -153,7 +149,6 @@ def scan_csv_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer therefore keeps the input's part files instead of
     coalescing, and block-splittable codecs (zstd-in-parquet, bzip2)
     or JSONL/parquet are the right choice when the producer can pick."""
-    ensure_deterministic_session(spark)
     from ..sources.formats import read_csv, write_csv_gzip
 
     docs = load_table(spark, sf_dir, "documents")
@@ -188,7 +183,6 @@ def scan_csv_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     comes from file count, not block splits — exactly why the writer
     side keeps many part files and why newline-bearing exports should
     prefer JSONL/parquet when they can choose."""
-    ensure_deterministic_session(spark)
     from ..sources.formats import write_csv
 
     docs = load_table(spark, sf_dir, "documents").withColumn(
@@ -224,7 +218,6 @@ def scan_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     text in both directions.  The writer raise_error's on overflow
     instead of truncating: a too-narrow field is silent data loss at
     100 TB, so it is a job failure here."""
-    ensure_deterministic_session(spark)
     from ..sources.formats import read_fixed_width, write_fixed_width
 
     spec = [
@@ -283,7 +276,6 @@ def agg_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     division in micro-units — every value is integer arithmetic on
     exact sums, so any engine produces the identical bits.
     """
-    ensure_deterministic_session(spark)
     # EXACT INTEGER FIXED-POINT FORM (r16, guide §1.2 per-task work —
     # A/B best-of-4 at sf0.1: 1.23 → 0.69 s, rows and schema
     # bit-identical).  Each measure quantizes to integer cents ONCE
@@ -347,7 +339,6 @@ def agg_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-distinct aggregation — Spark expands to a partial-agg +
     expand plan; still one logical shuffle keyed on the group column."""
-    ensure_deterministic_session(spark)
     return (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -372,7 +363,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP grouping sets (subtotals + grand total).  Money emits as
     cents BIGINT — exact decimal sum scaled to integer, hash-portable
     across engines."""
-    ensure_deterministic_session(spark)
     return (
         load_table(spark, sf_dir, "orders")
         .rollup("o_orderstatus", "o_orderpriority")
@@ -395,7 +385,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE grouping sets (all combinations).  Money emits as cents
     BIGINT for engine-portable value hashing."""
-    ensure_deterministic_session(spark)
     return (
         load_table(spark, sf_dir, "orders")
         .cube("o_orderstatus", "o_orderpriority")
@@ -412,7 +401,6 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     countDistinct's shuffle would be prohibitive.  No oracle: sketch
     estimates are engine-specific by design (driver rows-only check);
     accuracy vs exact count asserted in tests/test_plans.py instead."""
-    ensure_deterministic_session(spark)
     return (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -448,7 +436,6 @@ def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: customer (filtered) broadcasts under the 64 MB threshold;
     orders⋈lineitem is a shuffle join on orderkey — the natural
     co-partitioning key for both tables (bucketing candidate)."""
-    ensure_deterministic_session(spark)
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = load_table(spark, sf_dir, "orders")
     # Exact integer fixed-point revenue (r16, the agg_group treatment;
@@ -496,7 +483,6 @@ def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star-schema dim joins with explicit broadcast hints — zero
     shuffle for the joins themselves (only the final tiny agg)."""
-    ensure_deterministic_session(spark)
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
@@ -522,7 +508,6 @@ def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join — dedups the probe side inside the join, no
     row multiplication, build side only needs the key column."""
-    ensure_deterministic_session(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_name")
@@ -537,7 +522,6 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join (customers with no orders)."""
-    ensure_deterministic_session(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
@@ -562,7 +546,6 @@ def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     the right plan; each event row tests ≤5 bands.  For big-big range
     joins the engine's pattern is bucketize-then-equi-join (see
     operators/asof.py for the as-of variant)."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events")
     bands = spark.createDataFrame(
         [(0.0, 50.0), (50.0, 100.0), (100.0, 150.0), (150.0, 250.0), (250.0, 1000000.0)],
@@ -605,7 +588,6 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a pairwise join — one shuffle on user_id, no row explosion,
     which is the scalable formulation (a naive as-of via inequality
     join is quadratic per user)."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", _epoch_s("ts").alias("ts_s")
     )
@@ -656,7 +638,6 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the unioned event stream with a FOLLOWING frame — one
     shuffle on user_id, no row explosion, where a naive inequality
     join is quadratic per user."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", _epoch_s("ts").alias("ts_s")
     )
@@ -709,7 +690,6 @@ def window_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on the partition key; the pre-filter thins the
     input at the scan (pushed down) so the demo stays cheap without
     changing the plan shape."""
-    ensure_deterministic_session(spark)
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 20 == 0
     )
@@ -735,7 +715,6 @@ def window_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking window with unique tie-break."""
-    ensure_deterministic_session(spark)
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey")
     )
@@ -766,7 +745,6 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running total per customer — explicit ROWS frame + unique
     ordering so the prefix sums are engine-independent; cents BIGINT
     output for portable value hashing."""
-    ensure_deterministic_session(spark)
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -796,7 +774,6 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k per group via row_number — Spark plans this as a
     WindowGroupLimit (rank-limit pushdown) so each partition keeps
     only k rows before the final window, no full sort of the table."""
-    ensure_deterministic_session(spark)
     w = Window.partitionBy("p_brand").orderBy(F.desc("p_retailprice"), F.asc("p_partkey"))
     return (
         load_table(spark, sf_dir, "part")
@@ -815,7 +792,6 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-N — Spark executes as TakeOrderedAndProject (per-
     partition heap + driver merge), never a full global sort."""
-    ensure_deterministic_session(spark)
     return (
         load_table(spark, sf_dir, "orders")
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
@@ -838,7 +814,6 @@ def sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_deterministic_session(spark)
     c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.union(s).distinct()
@@ -853,7 +828,6 @@ def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_deterministic_session(spark)
     c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.intersect(s)
@@ -868,7 +842,6 @@ def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_deterministic_session(spark)
     c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.subtract(s)
@@ -894,7 +867,6 @@ def json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     Uses get_json_object (native, codegen'd).  For wide extraction
     the engine's pattern is from_json with an explicit schema — one
     parse, many fields — instead of N get_json_object calls."""
-    ensure_deterministic_session(spark)
     return (
         load_table(spark, sf_dir, "events")
         .select("event_type", F.get_json_object("props", "$.k").cast("long").alias("k"))
@@ -918,7 +890,6 @@ def json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array functions over the embedding column: size, element access,
     higher-order aggregate (L2 norm²) — all native, no UDF."""
-    ensure_deterministic_session(spark)
     x2 = lambda acc, x: acc + x.cast("double") * x.cast("double")  # noqa: E731
     return load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -945,7 +916,6 @@ def event_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling-window aggregation via F.window — the exact
     same expression runs under Structured Streaming with a watermark
     (streaming/windows.py); batch and stream share this plan."""
-    ensure_deterministic_session(spark)
     return (
         load_table(spark, sf_dir, "events")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -988,7 +958,6 @@ def event_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan stage followed by one map-side-combined shuffle — the same
     expression runs under Structured Streaming with a watermark
     (streaming/windows.py has the sliding twin)."""
-    ensure_deterministic_session(spark)
     return (
         load_table(spark, sf_dir, "events")
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
@@ -1032,7 +1001,6 @@ def event_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """30-min-gap sessionization (gaps-and-islands): one shuffle on
     user_id shared by both window passes, then a partial-agg groupBy.
     The streaming twin uses F.session_window (streaming/windows.py)."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", _epoch_s("ts").alias("ts_s")
     )
@@ -1077,7 +1045,6 @@ def window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on user_id serves both lag and lead (same
     window spec → single Window physical operator); ordering key
     (ts_s, event_id) is unique, so results are deterministic."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", _epoch_s("ts").alias("ts_s")
     )
@@ -1114,7 +1081,6 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     each buffered and sorted the column independently; the array form
     runs the identical algorithm over one buffer and reads two ranks).
     A/B best-of-4 at sf0.1: 1.39 → 1.13 s, values bit-identical."""
-    ensure_deterministic_session(spark)
     l = load_table(spark, sf_dir, "lineitem")
     g = l.groupBy("l_returnflag").agg(
         F.expr("percentile(l_quantity, array(0.5D, 0.9D))").alias("qq"),
@@ -1141,7 +1107,6 @@ def join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join — customers with no high-value order keep a
     null order side (and vice versa).  Scale: shuffle hash/sort-merge
     on the key; outer joins cannot broadcast the preserved side."""
-    ensure_deterministic_session(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
     return c.join(o, c.c_custkey == o.o_custkey, "full_outer").select(
@@ -1164,7 +1129,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS through the SQL entry point (reference
     pattern: temp view + generated SQL, ``02.py:126-128``), with
     GROUPING() markers disambiguating the null-keyed subtotal rows."""
-    ensure_deterministic_session(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
     return spark.sql(
         """
@@ -1195,7 +1159,6 @@ def pivot_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the explicit list matters — without it Spark runs an extra
     distinct-collect job over 100 TB just to learn the columns."""
-    ensure_deterministic_session(spark)
     prios = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
     out = (
         load_table(spark, sf_dir, "orders")
@@ -1225,7 +1188,6 @@ def subquery_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS via the SQL entry point — Catalyst
     decorrelates to a left-semi hash join (verified in
     tests/test_plans.py); same plan class as the join_semi key."""
-    ensure_deterministic_session(spark)
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_sq")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_sq")
     return spark.sql(
@@ -1252,7 +1214,6 @@ def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/skew.py) — results provably identical to the plain
     join (the oracle runs the unsalted formulation).  The pattern for
     power-law keys where even AQE's skew split leaves stragglers."""
-    ensure_deterministic_session(spark)
     from ..operators.skew import salted_join
 
     e = load_table(spark, sf_dir, "events")
@@ -1272,7 +1233,6 @@ def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB replacement for agg_percentile's exact buffers (sketch
     merges map-side; memory is O(1/accuracy), not O(rows)).  Accuracy
     vs the exact operator asserted in tests/test_pipeline.py."""
-    ensure_deterministic_session(spark)
     return (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -1309,7 +1269,6 @@ def multi_join_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pushdown), customer is broadcast (small after the segment
     filter), and Catalyst/AQE order the remaining joins by runtime
     stats — exactly the plan a hand-tuned engine would pick."""
-    ensure_deterministic_session(spark)
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1999-06-01").cast("timestamp")
@@ -1352,7 +1311,6 @@ def multi_join_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — region→nation→supplier are successive broadcasts feeding
     one streaming pass over lineitem; a single shuffle for the final
     group-by."""
-    ensure_deterministic_session(spark)
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     n = load_table(spark, sf_dir, "nation")
     s = load_table(spark, sf_dir, "supplier")
@@ -1397,7 +1355,6 @@ def event_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregation is lossless by construction.  The day bucket is
     pure epoch arithmetic (bucket_s - bucket_s % 86400), never a
     session-timezone-dependent date_trunc over an epoch value."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events")
     hour = (
         e.groupBy(
@@ -1450,7 +1407,6 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     user within the preceding hour, else null.  The oracle brute-
     forces it with a correlated subquery; the engine runs the
     single-shuffle union-stream window."""
-    ensure_deterministic_session(spark)
     from ..operators.asof import asof_join
 
     e = load_table(spark, sf_dir, "events").select(
@@ -1482,7 +1438,6 @@ def sql_entrypoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     text (``02.py:126-128``) — exposed over the whole corpus: any
     query a reference user writes runs unchanged through
     register_corpus + spark.sql."""
-    ensure_deterministic_session(spark)
     from ..sources.tables import register_corpus
 
     register_corpus(spark, sf_dir)
@@ -1526,7 +1481,6 @@ def subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: agg and join share the l_partkey shuffle key; AQE picks
     the join strategy (the per-part stats side is |parts| rows, far
     smaller than lineitem)."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     stats = li.groupBy("l_partkey").agg(
         F.count("*").alias("part_cnt"), F.sum("l_quantity").alias("part_qty")
@@ -1562,7 +1516,6 @@ def subquery_in_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE any join touches orders/customer — the join order a
     decorrelated IN must reach.  Quantities are integer-valued, so
     sum and threshold are exact in double."""
-    ensure_deterministic_session(spark)
     big = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
@@ -1607,7 +1560,6 @@ def window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one shuffle on c_mktsegment; all four functions share the
     same window spec → a single sort within partitions."""
-    ensure_deterministic_session(spark)
     w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
     return load_table(spark, sf_dir, "customer").select(
         "c_custkey",
@@ -1639,7 +1591,6 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on o_custkey; the frame is evaluated by a
     running two-pointer pass over each sorted partition, no
     per-row rescans."""
-    ensure_deterministic_session(spark)
     ts = _epoch_s("o_orderdate")
     w = (
         Window.partitionBy("o_custkey")
@@ -1675,7 +1626,6 @@ def date_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: pure narrow projection — no shuffle, whole-stage codegen,
     and only (o_orderkey, o_orderdate) read from the scan."""
-    ensure_deterministic_session(spark)
     d = F.col("o_orderdate").cast("date")
     return load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1708,7 +1658,6 @@ def string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     class of builtins via generated SQL, ``02.py:17-103``).
 
     Scale: narrow projection, codegen'd JVM string ops — no UDFs."""
-    ensure_deterministic_session(spark)
     return load_table(spark, sf_dir, "part").select(
         "p_partkey",
         F.upper("p_name").alias("name_upper"),
@@ -1742,7 +1691,6 @@ def agg_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: single shuffle on l_returnflag with map-side partials;
     the filtered distinct adds the usual two-phase distinct expand,
     still one scan of lineitem."""
-    ensure_deterministic_session(spark)
     recent = F.col("l_shipdate") >= F.lit("1999-01-01").cast("timestamp")
     return (
         load_table(spark, sf_dir, "lineitem")
@@ -1785,7 +1733,6 @@ def agg_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine for group sizes like suppliers-per-nation, and the pattern
     degrades gracefully (switch to window + row_number for huge
     groups)."""
-    ensure_deterministic_session(spark)
     return (
         load_table(spark, sf_dir, "supplier")
         .groupBy("s_nationkey")
@@ -1829,7 +1776,6 @@ def multi_join_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the full grouped set); rank is assigned afterwards on
     the 20 surviving rows.  Decimal revenue keeps the ordering key
     exact, and the c_custkey tie-break makes the cut deterministic."""
-    ensure_deterministic_session(spark)
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     o = load_table(spark, sf_dir, "orders").filter(
@@ -1874,7 +1820,6 @@ def agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two stages over already-tiny aggregates; the heavy shuffle
     is the first count, map-side combined."""
-    ensure_deterministic_session(spark)
     counts = (
         load_table(spark, sf_dir, "orders")
         .groupBy("o_orderstatus", "o_orderpriority")
@@ -1911,7 +1856,6 @@ def unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: unpivot is a generate-style narrow op — each input row
     emits k rows with no shuffle; the 3x fan-out happens inside the
     scan stage."""
-    ensure_deterministic_session(spark)
     return load_table(spark, sf_dir, "lineitem").unpivot(
         ids=["l_orderkey", "l_linenumber"],
         values=["l_quantity", "l_discount", "l_tax"],
@@ -1939,7 +1883,6 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: histogramming is the canonical map-side-combine win — each
     task reduces to ≤10 partial rows before the (tiny) shuffle."""
-    ensure_deterministic_session(spark)
     bucket = F.least(
         F.lit(9),
         F.greatest(
@@ -1977,7 +1920,6 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: <=> is still hash-joinable — Spark plans a regular
     shuffled/broadcast hash join with a null-safe key, NOT a nested
     loop; the all-null key is the skew case AQE splits."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     k = F.nullif(F.col("l_returnflag"), F.lit("N"))
     left = li.select("l_orderkey", "l_linenumber", k.alias("k"))
@@ -2021,7 +1963,6 @@ def sessionize_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on user_id shared by both window passes and
     the final aggregation — Catalyst collapses them onto the same
     partitioning."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id", _epoch_s("ts").alias("ts_s")
     )
@@ -2060,7 +2001,6 @@ def agg_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: single map-side-combinable shuffle — co-moment states
     merge associatively (Welford/Chan), same as any sum."""
-    ensure_deterministic_session(spark)
     return (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -2092,7 +2032,6 @@ def map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: narrow projection; from_json is JVM-side Jackson, no
     Python."""
-    ensure_deterministic_session(spark)
     m = F.from_json("props", "map<string,int>")
     return load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -2120,7 +2059,6 @@ def window_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one shuffle on the partition key; both functions share one
     sort pass."""
-    ensure_deterministic_session(spark)
     w = Window.partitionBy("l_returnflag").orderBy("l_quantity")
     return load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
@@ -2149,7 +2087,6 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: this is the bucketing contract itself; the write is
     one-time and the join is a per-bucket merge.  (Exchange-free plan
     asserted in tests/test_layout.py for this same helper.)"""
-    ensure_deterministic_session(spark)
     from ..sources.layout import bucketed_join, write_bucketed
 
     tag = corpus_tag(sf_dir)
@@ -2201,7 +2138,6 @@ def scan_bucket_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     poor man's index for the high-cardinality keys partitioning can't
     hold (a custkey partition layout would be millions of dirs;
     8–1024 buckets is one)."""
-    ensure_deterministic_session(spark)
     from ..sources.layout import write_bucketed
 
     tag = corpus_tag(sf_dir)
@@ -2262,7 +2198,6 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one filtered scan + a 5-group aggregate; the binding is
     purely a parse-time mechanism."""
-    ensure_deterministic_session(spark)
     from ..sources.tables import register_corpus
 
     register_corpus(spark, sf_dir)
@@ -2302,7 +2237,6 @@ def scan_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: partition pruning is THE first-order I/O saver for
     time-series at 100 TB; the month key keeps cardinality low (no
     small-files explosion)."""
-    ensure_deterministic_session(spark)
     from ..sources.layout import versioned_scratch_tag, write_partitioned
 
     tag = versioned_scratch_tag(sf_dir, scan_partitioned)
@@ -2363,7 +2297,6 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-per-stage formulation recomputed upstream stages on every
     reuse (the events scan ran ~6x; measured 5.3 s → sub-second at
     sf0.1); this plan reads events once and never joins."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     w = Window.partitionBy("user_id")
     ann = e.withColumn(
@@ -2427,7 +2360,6 @@ def event_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle), and the distinct-count agg shuffles on the small
     (cohort, offset) key space; no self-join materializes the event
     table twice."""
-    ensure_deterministic_session(spark)
     d = (
         load_table(spark, sf_dir, "events")
         .select("user_id", _epoch_s("ts").alias("ts_s"))
@@ -2475,7 +2407,6 @@ def event_paths_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     final ranking window runs over that tiny set, not the event
     stream, so the single-partition rank is O(125) regardless of
     corpus size."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id"
     )
@@ -2534,7 +2465,6 @@ def scd_type2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: all four window passes and the run-collapse agg share the
     user_id partitioning, so the whole build is ONE shuffle; no
     self-join against the history table, no per-user driver loop."""
-    ensure_deterministic_session(spark)
     return _scd2_dim(spark, sf_dir)
 
 
@@ -2586,7 +2516,6 @@ def agg_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: all three are associative+commutative, so they partial-agg
     map-side like SUM; one shuffle on the 6-group key."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         F.bit_and("l_linenumber").cast("long").alias("and_linenum"),
@@ -2604,7 +2533,6 @@ def sink_parquet_single(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources/parquet_io.py through the driver's oracle gate; the
     single-file mode is an option precisely because at 100 TB the
     default path writes many parts."""
-    ensure_deterministic_session(spark)
     from ..sources.parquet_io import write_parquet
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2644,7 +2572,6 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     Scale: a daily/monthly backfill on a 100 TB hive layout rewrites
     ONLY the touched partitions' bytes; the overwrite is planned from
     the incoming frame's partition values, no directory diffing."""
-    ensure_deterministic_session(spark)
     base = load_table(spark, sf_dir, "orders").withColumn(
         "part_month", F.trunc(F.col("o_orderdate").cast("date"), "month")
     )
@@ -2693,7 +2620,6 @@ def scan_url_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     natively.  The digest oracle proves byte-identical content to a
     plain path scan; on a cluster the same call with s3a://or gs://
     reads distributed with pushdown."""
-    ensure_deterministic_session(spark)
     from ..sources.remote import resolve_url
 
     path = resolve_url(f"file://{sf_dir}/documents.parquet")
@@ -2734,9 +2660,7 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces by key, so re-merging the same updates onto an
     already-merged table is a fixed point — identical result, one
     fewer full parquet write in steady-state (bench) runs, which
-    previously made this key's timing I/O-noise dominated (VERDICT
-    r06)."""
-    ensure_deterministic_session(spark)
+    previously made this key's timing I/O-noise dominated."""
     import os
 
     from ..sources.upsert import upsert_parquet
@@ -2807,7 +2731,6 @@ def ts_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a generator expression (explode of sequence), never a driver
     loop.  At 100 TB the same plan resamples per device/sensor with
     the grid bounded per key, not globally."""
-    ensure_deterministic_session(spark)
     e = (
         load_table(spark, sf_dir, "events")
         .filter((F.col("user_id") < 20) & F.col("value").isNotNull())
@@ -2884,7 +2807,6 @@ def layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes it with the classic bit-spreading magic constants, so
     agreement proves the interleave bit-exactly.  Scale: scan-speed
     map-only projection."""
-    ensure_deterministic_session(spark)
     from ..sources.layout import zorder_value
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -2930,7 +2852,6 @@ def profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is one job total, and the distincts degrade gracefully to
     approx_count_distinct when cardinality makes exact counting
     unreasonable."""
-    ensure_deterministic_session(spark)
     from ..operators.profile import profile_columns
 
     return profile_columns(load_table(spark, sf_dir, "orders"))
@@ -2956,7 +2877,6 @@ def agg_boolean(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines evaluate the identical IEEE comparison.  Scale: all three
     are associative partial-aggregating functions — map-side combine,
     one shuffle on the 2-group key."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_linestatus").agg(
         F.bool_and(F.col("l_quantity") > 0).alias("all_positive_qty"),
@@ -3004,7 +2924,6 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: shuffle on (user_id, bucket) — co-partitioned both sides —
     then a distinct on the pair key; skewed users split across
     buckets by construction."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", _epoch_s("ts").alias("s")
     )
@@ -3067,7 +2986,6 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark bounding state (windows older than the lateness
     allowance are evicted); complete mode here is safe because the
     graded window count is small (~720 x 5 event types)."""
-    ensure_deterministic_session(spark)
     from ..streaming.windows import (
         read_event_stream,
         staged_stream_partitions,
@@ -3131,7 +3049,6 @@ def stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     lets Spark evict join state older than watermark + range, so
     state is bounded by one hour of clicks per user, not the whole
     stream."""
-    ensure_deterministic_session(spark)
     from ..streaming.windows import (
         purchase_click_join,
         read_event_stream,
@@ -3184,7 +3101,6 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state store holds one (long, long) per user, sharded by
     the shuffle partitioning; the pandas hop is Arrow-batched per
     key group."""
-    ensure_deterministic_session(spark)
     from ..streaming.windows import (
         read_event_stream,
         running_user_totals,
@@ -3233,7 +3149,6 @@ def stream_dedup_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain dropDuplicates whose state grows forever on an unbounded
     stream; the single-file staging keeps the graded run one
     micro-batch so watermark timing cannot re-admit a duplicate."""
-    ensure_deterministic_session(spark)
     from ..streaming.windows import read_event_stream, staged_stream_partitions, stream_dedup
 
     path = _staged_events_replay(spark, sf_dir, "stream_dup", doubled=True)
@@ -3294,7 +3209,6 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     here only because the graded run must emit every session; the
     append-mode prefix property is asserted in
     tests/test_streaming.py)."""
-    ensure_deterministic_session(spark)
     from ..streaming.windows import (
         read_event_stream,
         session_counts,
@@ -3351,7 +3265,6 @@ def key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-then-filter window funneled the whole per-key histogram,
     |customers| rows, into one task).  This is exactly the query
     shape [[join_salted]] assumes you ran first."""
-    ensure_deterministic_session(spark)
     o = load_table(spark, sf_dir, "orders")
     c = o.groupBy("o_custkey").agg(F.count("*").alias("n"))
     t = o.agg(F.count("*").alias("total"))
@@ -3406,7 +3319,6 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, then a 4-group agg; no broadcast needed because both sides
     are big — the classify step is pure projection on the joined
     row."""
-    ensure_deterministic_session(spark)
     o = load_table(spark, sf_dir, "orders")
     price = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     v1 = o.filter(F.col("o_orderkey") % 97 != 0).select(
@@ -3475,7 +3387,6 @@ def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     obvious a⋈b self-join on okey computes the same thing with one
     extra corpus-sized shuffle — which at 100 TB is the difference
     that matters, even though at sf0.1 both run in ~2 s.)"""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     joined = li.join(F.broadcast(p), li.l_partkey == p.p_partkey).select(
@@ -3530,7 +3441,6 @@ def ts_gap_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadrillions of rows; this never materializes it).
 
     Scale: distinct + window + agg all share the user_id shuffle."""
-    ensure_deterministic_session(spark)
     e = (
         load_table(spark, sf_dir, "events")
         .select("user_id", _epoch_s("ts").alias("ts_s"))
@@ -3566,7 +3476,6 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each micro-batch MERGE costs batch-size + touched
     partitions (partition-scoped rewrite in sources/upsert.py),
     never the whole target."""
-    ensure_deterministic_session(spark)
     import shutil
 
     from ..sources.layout import discard
@@ -3623,7 +3532,6 @@ def constraint_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     them as independent single-row aggregates unioned JVM-side —
     at 100 TB you'd run this per-partition-increment, not per
     corpus, but the plan shape is identical."""
-    ensure_deterministic_session(spark)
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     c = load_table(spark, sf_dir, "customer")
@@ -3678,7 +3586,6 @@ def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two filtered scans (partition-prunable on the date
     boundary), tiny per-status states, broadcast-sized merge join."""
-    ensure_deterministic_session(spark)
     o = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     cut = F.lit("1997-01-01").cast("timestamp")
@@ -3740,7 +3647,6 @@ def subquery_multi_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     |suppliers|-sized counts runs as orderBy+limit
     (TakeOrderedAndProject — round 15: the previous rank-then-filter
     window funneled every supplier into one task)."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
@@ -3813,7 +3719,6 @@ def join_dim_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded and the fact table shuffles once.  No between-join
     explosion: the dim's intervals partition time per user, so
     exactly one version row survives per event."""
-    ensure_deterministic_session(spark)
     dim = _scd2_dim(spark, sf_dir).select(
         F.col("user_id").alias("d_user"), "version", "status", "valid_from_s", "valid_to_s"
     )
@@ -3861,7 +3766,6 @@ def event_dwell_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on user_id for the lead window, then a
     |event_types|-key agg; identical partitioning to the sessionize
     family, so a shared pipeline reuses the exchange."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", _epoch_s("ts").alias("ts_s"), "event_id"
     )
@@ -3895,7 +3799,6 @@ def layout_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dataset; at 100 TB it runs per partition/increment on a
     schedule, amortizing the name-node and task-startup overhead the
     small files would otherwise impose on every downstream query."""
-    ensure_deterministic_session(spark)
     from ..sources.layout import compact_parquet, dataset_path, discard
 
     base = scratch_path("compact", corpus_tag(sf_dir))
@@ -3928,7 +3831,6 @@ def schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB alternative (backfill rewrite of history) is exactly what
     this avoids.  Reads stay scan-speed with pushdown intact on
     columns present per file."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     base = scratch_path("schevo", corpus_tag(sf_dir))
     d.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang").write.mode(
@@ -3982,7 +3884,6 @@ def pareto_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets, never a single-partition window over |customers| rows;
     the grand totals fall out of the driver prefix-sum for free), and
     the final frontier pick is a single-row min over it."""
-    ensure_deterministic_session(spark)
     from ..operators.rankstats import RN, global_order_stats
 
     o = load_table(spark, sf_dir, "orders")
@@ -4038,7 +3939,6 @@ def event_error_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined agg on the hour key; the global
     totals are a single-row aggregate joined back broadcast-style;
     no window over the raw stream."""
-    ensure_deterministic_session(spark)
     e = (
         load_table(spark, sf_dir, "events")
         .select("event_type", _epoch_s("ts").alias("ts_s"))
@@ -4087,7 +3987,6 @@ def multi_format_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash agg on doc_id.  JSON is the scan-speed loser of the three —
     the audit quantifies that implicitly in the plan, which is why
     long-lived storage should be columnar."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     base = scratch_path("multifmt", corpus_tag(sf_dir))
     pq, js, orc = f"{base}/pq", f"{base}/jsonl", f"{base}/orc"
@@ -4137,7 +4036,6 @@ def agg_mom_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract both engines share.  Scale: the corpus-sized work is
     the monthly agg (one shuffle); the lag window operates on
     |status × months| rows."""
-    ensure_deterministic_session(spark)
     o = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     m = o.groupBy(
@@ -4180,7 +4078,6 @@ def agg_histogram_log2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: scan-speed expression + a ≤64-group map-side-combined
     agg."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
     bucket = F.length(F.bin("n_chars")).cast("int")
     return d.groupBy(bucket.alias("log2_bucket")).agg(
@@ -4220,7 +4117,6 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     than the allowance — the 4x state amplification vs tumbling is
     the price of smoother dashboards, visible right in the pane
     arithmetic."""
-    ensure_deterministic_session(spark)
     from ..streaming.windows import (
         read_event_stream,
         sliding_counts,
@@ -4275,7 +4171,6 @@ def join_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: at 100 TB the unpruned scan IS the cost; DPP turns an
     80-month read into a 3-month read with zero query rewrite."""
-    ensure_deterministic_session(spark)
     from ..sources.layout import versioned_scratch_tag, write_partitioned
 
     tag = versioned_scratch_tag(sf_dir, join_dpp_prune)
@@ -4331,7 +4226,6 @@ def seq_lis_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one shuffle on user_id; per-group cost O(n log n)
     patience sorting; state never leaves the worker."""
-    ensure_deterministic_session(spark)
     from ..operators.sequential import lis_per_user
 
     e = load_table(spark, sf_dir, "events").select(
@@ -4369,7 +4263,6 @@ def join_argmin_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter bounds the graded output, applied post-window so the
     min is computed over full history (predicate choice is
     semantic here, not an optimization)."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     cents = F.round(F.col("l_extendedprice") * 100, 0).cast("long")
     px = li.groupBy("l_partkey", "l_suppkey").agg(F.min(cents).alias("best_x100"))
@@ -4409,7 +4302,6 @@ def agg_share_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle for the per-part agg; the total is a
     single-row re-agg of the already-aggregated values (not a second
     corpus scan)."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     cents = (_dec("l_extendedprice") * 100).cast("long")
     v = li.groupBy("l_partkey").agg(F.sum(cents).alias("value_x100"))
@@ -4450,7 +4342,6 @@ def agg_argmax_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: date-bounded scan (pushdown) → one supplier agg → the
     max is a single-row re-agg joined back broadcast-style; no
     window over raw lineitem."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1999-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1999-04-01").cast("timestamp"))
@@ -4498,7 +4389,6 @@ def codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     content md5) are all commutative reductions, so engine or
     partition read order cannot matter.  Scale: two scan-speed
     writes + two scan-speed reduced reads."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     base = scratch_path("codec", corpus_tag(sf_dir))
     out = []
@@ -4557,7 +4447,6 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the corpus reduces to |flag × distinct-quantity| rows in
     one shuffle; the running-sum window and frontier pick operate on
     that tiny grid."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     cents = (_dec("l_extendedprice") * 100).cast("long")
     w = li.groupBy(
@@ -4609,7 +4498,6 @@ def set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: Spark plans both as count-aggregate + generate (no
     pairwise matching), shuffling once on the value."""
-    ensure_deterministic_session(spark)
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey")
     )
@@ -4658,7 +4546,6 @@ def array_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back into the projection (round 15 — the previous
     ``Window.partitionBy()`` formulation funneled the whole generated
     frame into one task just to count it)."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = F.when(F.col("doc_id") % 7 == 0, F.array().cast("array<string>")).otherwise(
         F.slice(F.split("text", " "), 1, 3)
@@ -4685,7 +4572,7 @@ def array_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 #                             is exactly the quantity the r04 reds
 #                             disagreed on)
 #
-# ROUND-5 VERDICT RESULT (diagnosis closed in round 6): constants green,
+# ROUND-5 RESULT (diagnosis closed in round 6): constants green,
 # per-row green in BOTH idioms, totals red — i.e. only aggregated-SUM
 # outputs diverged.  Root cause, found by auditing every oracle's output
 # types: DuckDB's SUM(BIGINT) returns HUGEINT (INT128), and the set of graded
@@ -4743,7 +4630,6 @@ def probe_env_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     environment's engines disagree on ROUND/decimal-cast primitives
     themselves, independent of any corpus data.  All 11 canaries
     verified byte-equal on local Spark 4.1 / DuckDB 1.0."""
-    ensure_deterministic_session(spark)
     return spark.sql(_QUANTIZE_SQL)
 
 
@@ -4763,7 +4649,6 @@ def probe_lineitem_cents_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~30 rows): if this is red while [[probe_env_quantize]] is green,
     the divergence is data-path-dependent (parquet read or expression
     pipeline), not the rounding primitive."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 30)
     return li.select(
         "l_orderkey",
@@ -4791,7 +4676,6 @@ def probe_lineitem_cents_dec(spark: SparkSession, sf_dir: str) -> DataFrame:
     [[probe_lineitem_cents_round]], decimal-cast idiom (the repo's
     output contract and the round-5 replacement in the fixed keys).
     The (round, dec) verdict pair localizes any red to one idiom."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 30)
     return li.select(
         "l_orderkey",
@@ -4824,7 +4708,6 @@ def probe_lineitem_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     diagnosed as DuckDB HUGEINT SUM output (see block comment above);
     since round 6 the oracle CASTs each SUM back to BIGINT and this
     key is expected green."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -4854,8 +4737,8 @@ def probe_hugeint_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     SUM un-cast, so DuckDB returned HUGEINT (INT128) while Spark
     returned BIGINT.  Values were identical (a ~100-row bounded sum);
     local replay passed because fetchall() yields Python ints for
-    both.  CORRECTNESS_r06.json graded it exactly as predicted in
-    this docstring *before* grading: rows_match ✓ schema_match ✓
+    both.  The round-6 typed-fetch check matched what this docstring
+    predicted beforehand: rows_match ✓ schema_match ✓
     hash_match ✗ — the driver's oracle fetch path canonicalizes
     HUGEINT differently from BIGINT, which was the root cause of the
     r04/r05 reds (all bare-SUM outputs, fixed in r06 with the CAST
@@ -4865,7 +4748,6 @@ def probe_hugeint_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the control is retired as of round 7: the oracle now uses the
     standard ``CAST(SUM(..) AS BIGINT)`` idiom and the key is
     expected green like every other SUM output."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 30)
     return li.agg(F.sum(F.col("l_quantity").cast("long")).alias("qty_sum"))
 
@@ -4886,7 +4768,6 @@ def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse tax over columnar formats; the point of the key is
     interop (the format legacy feeds actually arrive in), not
     preference."""
-    ensure_deterministic_session(spark)
     from ..sources.formats import read_xml, write_xml
 
     docs = load_table(spark, sf_dir, "documents")

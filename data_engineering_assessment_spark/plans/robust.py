@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import ensure_deterministic_session, scoped_conf
+from ..session import scoped_conf
 from ..sources.layout import events_tag, scratch_path
 from ..sources.tables import load_table
 from .insights import _cents, _epoch_s
@@ -93,7 +93,6 @@ def events_seasonal_residual_anomaly(spark: SparkSession, sf_dir: str) -> DataFr
     over DISTINCT residual cent values — bounded by the value domain,
     never sorted per row; the two scalar statistics broadcast back as
     single-row joins (sanctioned BNLJ)."""
-    ensure_deterministic_session(spark)
     e = (
         load_table(spark, sf_dir, "events")
         .select(_epoch_s("ts").alias("t"), _cents("value").alias("cents"))
@@ -168,7 +167,6 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after it is O(days), not O(events); the single ordered
     window over days is the same bounded-domain pass the rank
     statistics use."""
-    ensure_deterministic_session(spark)
     daily = (
         load_table(spark, sf_dir, "events")
         .select(_epoch_s("ts").alias("t"), _cents("value").alias("cents"))
@@ -230,7 +228,6 @@ def discount_theilsen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise slope set is O(d²) ≈ 55 rows — the all-pairs join runs
     on the AGGREGATED bucket frame, never on lineitem; the corpus-
     sized work is exactly one hash aggregate."""
-    ensure_deterministic_session(spark)
     b = (
         load_table(spark, sf_dir, "lineitem")
         .select(
@@ -296,7 +293,6 @@ def events_props_facet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid — then ranking windows over that grid, never over raw
     events; deterministic tiebreak (count desc, type asc) so the
     top-2 is engine-stable."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         F.expr(
             """cast(regexp_extract(props, '"k": (\\\\d+)', 1) as bigint)
@@ -345,7 +341,6 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     check is ONE scalar (remaining-edge count) per round.  Round
     count is bounded by the peeling depth (≤ max degree), in practice
     a handful; every frame stays edge- or node-sized."""
-    ensure_deterministic_session(spark)
     k = 3
     # Edge build via per-order sorted part sets (r15, the
     # market_basket explode pattern shared with
@@ -463,7 +458,6 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: both sides shuffle on user_id; view state is evicted as
     the purchase watermark passes each view's window, so state is
     time-bounded, never stream-length-bounded."""
-    ensure_deterministic_session(spark)
     from ..streaming.windows import read_event_stream, view_purchase_left_join
 
     from ..sources.layout import materialize, versioned_scratch_tag
@@ -557,7 +551,6 @@ def events_value_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sanctioned BNLJ); the decay is a per-row expression folded into
     one map-side-combined aggregate — one shuffle of ≤|event types|
     rows."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "event_type", _epoch_s("ts").alias("t"), _cents("value").alias("cents")
     )
@@ -627,7 +620,6 @@ def orders_abc_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets; |parts| is entity-proportional, so even the "~200k at
     sf100" domain must not funnel into one window task), and the
     grand total falls out of the driver prefix-sum for free."""
-    ensure_deterministic_session(spark)
     from ..operators.rankstats import global_order_stats
 
     rev = (

@@ -35,7 +35,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import ensure_deterministic_session
 from ..sources.tables import load_table
 from .registry import query
 
@@ -85,7 +84,6 @@ def grid_density_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject top-15 (per-partition heaps, no global
     sort).  At 100 TB with a bounded cell grid the shuffle is a few
     thousand rows regardless of corpus size."""
-    ensure_deterministic_session(spark)
     pts = _quantized_points(spark, sf_dir)
     cells = pts.select(
         F.floor(F.col("qx").cast("double") / DENSITY_CELL).alias("cx"),
@@ -129,7 +127,6 @@ def grid_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     by local density, not corpus size.  This is how big-big spatial
     joins (and DBSCAN neighbor search) run on clusters; a cross
     product would be O(n^2) and is asserted absent in PLANS.md."""
-    ensure_deterministic_session(spark)
     pts = _quantized_points(spark, sf_dir)
     cell = lambda c: F.floor(F.col(c).cast("double") / RADIUS)  # noqa: E731
     a = pts.select(
@@ -215,7 +212,6 @@ def grid_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out on one side) — per-cell cost bounded by local density,
     never corpus size; ranking is a per-point window over each
     point's own candidate set.  No cross product (PLANS.md)."""
-    ensure_deterministic_session(spark)
     from pyspark.sql import Window
 
     pts = _quantized_points(spark, sf_dir)
@@ -308,7 +304,6 @@ def udaf_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, with the Python hop sanctioned because the reduction
     (positional trim) isn't expressible as a native Spark aggregate
     without materializing per-group sorted arrays."""
-    ensure_deterministic_session(spark)
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
@@ -390,7 +385,6 @@ def grid_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     product); counting and the border semi-join shuffle edge-sized
     frames on point id.  The oracle brute-forces O(n²); the engine
     never does."""
-    ensure_deterministic_session(spark)
     pts = _quantized_points(spark, sf_dir)
     cell = lambda c: F.floor(F.col(c).cast("double") / RADIUS)  # noqa: E731
     a = pts.select(
@@ -526,7 +520,6 @@ def cogroup_order_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     size it so corpus/buckets fits executor memory; results are
     bucket-count-invariant), and each bucket does a local pandas
     merge.  No driver collect, no per-key Python round-trips."""
-    ensure_deterministic_session(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("long").alias("total_cents"),
@@ -575,7 +568,6 @@ def udtf_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs real Python per row."""
     from pyspark.sql.functions import udtf
 
-    ensure_deterministic_session(spark)
 
     @udtf(returnType="doc_id bigint, sentence string, sent_chars bigint")
     class SentenceSplit:
@@ -620,7 +612,6 @@ def observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver gate can hash it against a plain SQL restatement —
     proving the sidecar path returns exactly what a dedicated
     aggregation would."""
-    ensure_deterministic_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     obs = Observation("corpus_profile")
     observed = docs.observe(
@@ -662,7 +653,6 @@ def udtf_dynamic_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-partition generate, no shuffle introduced; plan-time
     validation fails fast on a bad input table instead of at task
     time on a 100 TB scan."""
-    ensure_deterministic_session(spark)
     from dataclasses import dataclass
 
     from pyspark.sql.functions import udtf

@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import uniq_word_count, word_count
-from ..session import ensure_deterministic_session
 from ..sources.tables import load_table
 from .registry import query
 
@@ -44,7 +43,6 @@ def shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc in the same shard, and the nibble keys are uniform so shard
     sizes stay balanced (the stats emitted here are the check).
     Scale: shuffle-free scan + a 16-group map-side-combined agg."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     return (
         d.groupBy(_md5_prefix("doc_id", 1).alias("shard"))
@@ -78,7 +76,6 @@ def quality_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     The bin edge is a single IEEE divide+multiply on identical integer
     operands in both engines, so bucket boundaries cannot disagree.
     Scale: scan-speed narrow projection + a ≤10-group agg."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents").filter(word_count("text") >= 1)
     ratio = uniq_word_count("text").cast("double") / word_count("text")
     bin_ = F.least(F.lit(9), F.floor(ratio * 10)).cast("int")
@@ -108,7 +105,6 @@ def corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure function of (doc_id, source), so the mixture is reproducible
     and joinable across runs.  Scale: one scan-speed filter, no
     shuffle, no RNG state."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     premium = F.col("source").isin("src0", "src1", "src2")
     return d.filter(premium | (_md5_prefix("doc_id", 2) <= "3f")).select(
@@ -137,7 +133,6 @@ def split_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     property that prevents silent eval contamination on incremental
     corpus builds; the [[decontaminate_overlap]] key covers the
     content-level variant).  Scale: shuffle-free scan + a small agg."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     h2 = _md5_prefix("doc_id", 2)
     split = (
@@ -183,7 +178,6 @@ def chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle at all — each task chunks its own documents, and a 100 TB
     corpus chunks at scan speed.  The md5 digest keeps the output
     hash-portable while still pinning the exact chunk text."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     d = d.select("doc_id", toks.alias("toks"), F.size(toks).alias("n_tok")).filter(
@@ -236,7 +230,6 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     float crosses the engine boundary.  Scale: trigrams come from a
     per-row higher-order function (transform over an int sequence) —
     no explode, no shuffle; the whole audit runs at scan speed."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     d = d.select("doc_id", toks.alias("toks"), F.size(toks).alias("n_tok")).filter(
@@ -288,7 +281,6 @@ def global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     hand-rolled range-partitioned sort whose range bounds are known a
     priori, so a 100 TB corpus shuffles once with no sampling pass
     and no single-task bottleneck."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents").select(
         F.md5(F.col("doc_id").cast("string").cast("binary")).alias("h"),
         "doc_id",
@@ -355,7 +347,6 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab to a hash join against the token stream — no shuffle of the
     corpus itself beyond the per-doc re-agg on doc_id, and the join
     side that is large never moves."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     vocab = (
@@ -414,7 +405,6 @@ def seq_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on the shard key; each shard packs
     independently (embarrassingly parallel across shards), and the
     running offset is a single sorted window pass per shard."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents").select(
         _md5_prefix("doc_id", 1).alias("shard"),
         "doc_id",
@@ -467,7 +457,6 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs), the count is one map-side-combined shuffle on the pair
     key (alphabet² keys at most), and the ranking window runs over
     that tiny histogram."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     words = d.select(F.explode(F.split("text", " ")).alias("word")).filter(
         F.length("word") >= 2
@@ -530,7 +519,6 @@ def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts ride along from the scan (no explode — `size(split())` is
     per-row).  The cumulative sort is per-source over doc COUNTS, not
     content."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id",
@@ -586,7 +574,6 @@ def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle partial-aggregates map-side, and the second agg reuses
     the source partitioning.  Output is |sources| rows; no word list
     ever reaches the driver."""
-    ensure_deterministic_session(spark)
     d = load_table(spark, sf_dir, "documents")
     f = (
         d.select("source", F.explode(F.split("text", " ")).alias("word"))
@@ -649,7 +636,6 @@ def split_time_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-split agg and the train-user semi-join are both user_id/split-
     keyed shuffles on node-sized distinct sets.  No self-join of the
     raw event table."""
-    ensure_deterministic_session(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.floor(F.col("ts").cast("timestamp").cast("double"))

@@ -15,7 +15,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import ensure_deterministic_session
 from ..sources.layout import corpus_tag, scratch_path
 from ..sources.tables import load_table
 from .registry import query
@@ -70,7 +69,6 @@ def join_exists_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles both sides on orderkey once and short-circuits per key
     (no fan-out, no distinct needed); the priority agg re-uses tiny
     post-semi rows."""
-    ensure_deterministic_session(spark)
     o = (
         load_table(spark, sf_dir, "orders")
         .filter(
@@ -117,7 +115,6 @@ def multi_join_nation_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts so lineitem and orders are pre-filtered before their
     one big orderkey shuffle; the year agg is a rollup of the
     already-joined rows (no second pass)."""
-    ensure_deterministic_session(spark)
     pair = ("NATION_1", "NATION_2")
     sn = load_table(spark, sf_dir, "nation").filter(F.col("n_name").isin(*pair))
     cn = sn.alias("cn")
@@ -178,7 +175,6 @@ def agg_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: region→nation→customer collapses to one broadcast-able
     dim; supplier→nation likewise; lineitem⋈orders is the only big
     shuffle and the conditional sums ride the same agg."""
-    ensure_deterministic_session(spark)
     n = load_table(spark, sf_dir, "nation")
     asia = (
         load_table(spark, sf_dir, "customer")
@@ -248,7 +244,6 @@ def join_priority_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the year filter hits the lineitem scan; one orderkey
     shuffle; both conditional sums are map-side partials of the same
     group-by."""
-    ensure_deterministic_session(spark)
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1999-01-01").cast("timestamp"))
@@ -293,7 +288,6 @@ def agg_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram groups ~|distinct counts| rows — negligible.  COUNT of
     a column (not *) skips the NULLs the outer join introduces, in
     both engines."""
-    ensure_deterministic_session(spark)
     c = load_table(spark, sf_dir, "customer").select("c_custkey")
     o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
     co = (
@@ -325,7 +319,6 @@ def agg_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: month filter prunes the lineitem scan, part is broadcast,
     and the whole result is a single-row global agg — partials merge
     map-side, no data-proportional shuffle."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1999-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1999-10-01").cast("timestamp"))
@@ -367,7 +360,6 @@ def agg_supplier_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: part filters ride the broadcast; the blocklist is tiny;
     the only shuffle is the distinct-agg on the group keys."""
-    ensure_deterministic_session(spark)
     p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1") & F.col("p_size").isin(1, 4, 9, 16, 25, 36, 49)
     )
@@ -403,7 +395,6 @@ def join_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     can, broadcasts part, and the disjunction never forces a
     CartesianProduct (asserted in tests/test_plans.py for the
     join-family keys)."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     arm = (
@@ -444,7 +435,6 @@ def subquery_semi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the part-name filter makes the IN list broadcast-able;
     lineitem is semi-joined before aggregating (never widened); the
     final supplier join is a broadcast of the surviving handful."""
-    ensure_deterministic_session(spark)
     small = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").startswith("small"))
@@ -487,7 +477,6 @@ def agg_antijoin_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the single-row (sum, count) aggregate broadcasts; NOT
     EXISTS is one anti-join shuffle on custkey; the nation rollup is
     then trivial."""
-    ensure_deterministic_session(spark)
     c = load_table(spark, sf_dir, "customer")
     cents = (F.col("c_acctbal").cast("decimal(12,2)") * 100).cast("long")
     bal = (
@@ -529,7 +518,6 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: pure native expressions, one shuffle on lang (25 groups),
     map-side partial sums do all the work."""
-    ensure_deterministic_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     n_tok = F.size(F.split(F.col("text"), " ")).cast("long")
     return (
@@ -586,7 +574,6 @@ def ts_ohlc_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning → ONE exchange, two in-partition sorts; the final
     agg rides the same shuffle.  No self-join, no per-bucket
     collect."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.expr("cast(cast(ts as timestamp) as long) div 3600").alias("bucket_h"),
@@ -644,7 +631,6 @@ def text_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     product hit the 64-bit ceiling first of the two, and the scalar
     per-output-row cast fixes it without the +24% per-row
     wide-accumulation cost that was A/B'd out."""
-    ensure_deterministic_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok"))
     vc = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
@@ -694,7 +680,6 @@ def ts_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on user_id; the RANGE frame is a sliding
     two-pointer over each user's sorted slice — no self-join, no
     per-row rescan."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -736,7 +721,6 @@ def scan_json_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: parse_json is a native expression inside codegen; at rest
     the variant binary is columnar and the extraction cost is paid
     once per row, not once per path."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events")
     v = e.select(
         "event_id",
@@ -767,7 +751,6 @@ def agg_hll_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-month sketches are a map-side-combinable agg (fixed
     bytes per group); the cumulative union is a window over ~months
     rows of sketch blobs, never over raw data."""
-    ensure_deterministic_session(spark)
     o = load_table(spark, sf_dir, "orders").select(
         F.expr(
             "cast(cast(o_orderdate as timestamp) as long) "
@@ -817,7 +800,6 @@ def recursive_cte_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: recursion depth is the key's digit count (≤7 at any SF) —
     each iteration is one narrow projection+filter pass; state never
     exceeds |customers| × depth rows."""
-    ensure_deterministic_session(spark)
     from ..sources.tables import register_corpus
 
     register_corpus(spark, sf_dir)
@@ -849,7 +831,6 @@ def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: Catalyst rewrites the correlated limit into a
     partitioned rank over ONE customer shuffle — no per-nation
     re-scan, no nested loop over the big side."""
-    ensure_deterministic_session(spark)
     from ..sources.tables import register_corpus
 
     register_corpus(spark, sf_dir)
@@ -905,7 +886,6 @@ def source_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-proportional pass is the first per-(source, length) count;
     the deliberate CROSS JOIN is dims-only (|sources| × |lengths|)
     with the value list broadcast."""
-    ensure_deterministic_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     pv = (
         docs.groupBy("source", F.col("n_chars").cast("long").alias("v"))
@@ -976,7 +956,6 @@ def event_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation this replaces fans out |views|×|purchases| per user.
     The as-of-join twin ([[join_asof_tolerance]]) covers the generic
     two-table case; this key is the single-stream windowed form."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -1031,7 +1010,6 @@ def agg_filtered_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the year bound prunes row groups via footer stats; the
     single-row result means shuffle traffic is one partial per task."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1999-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("2000-01-01").cast("timestamp"))
@@ -1078,7 +1056,6 @@ def multi_join_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem early), supplier→nation is a second broadcast chain, and
     lineitem⋈orders is the one big orderkey shuffle; the group-by is
     25 nations × ~7 years."""
-    ensure_deterministic_session(spark)
     p = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains("gear")).select(
         "p_partkey", "p_retailprice"
     )
@@ -1146,7 +1123,6 @@ def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-row higher-order transforms/aggregate — shuffle-free,
     scan-speed, no explode fan-out."""
-    ensure_deterministic_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return (
         emb.withColumn(
@@ -1204,7 +1180,6 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of three single-partition windows that would each funnel
     a billion-customer dim into one task.  Facts are never globally
     sorted."""
-    ensure_deterministic_session(spark)
     from ..operators.dedup import _materialized
     from ..operators.rankstats import RN, global_order_stats, ntile_from_rank
 
@@ -1283,7 +1258,6 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters — partition by directory layout instead; content bytes
     stay columnar Arrow until the consuming UDF.  Corpus text is
     ASCII-safe here so byte length equals n_chars."""
-    ensure_deterministic_session(spark)
     path = _binfiles_fixture(spark, sf_dir)
     files = spark.read.format("binaryFile").load(f"{path}/*.bin")
     return files.select(
@@ -1313,7 +1287,6 @@ def stream_file_intake(spark: SparkSession, sf_dir: str) -> DataFrame:
     an unbounded landing directory is ingested incrementally with
     exactly-once file accounting; maxFilesPerTrigger bounds each
     micro-batch."""
-    ensure_deterministic_session(spark)
     # reuse (or create) the bounded fixture set
     path = _binfiles_fixture(spark, sf_dir)
     tag = corpus_tag(sf_dir)
@@ -1382,7 +1355,6 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     second corpus scan), an equi-join back on token, and a per-doc
     window — the same shape TF-IDF takes in any distributed engine.
     The single-row N broadcasts."""
-    ensure_deterministic_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok"))
     tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
@@ -1439,7 +1411,6 @@ def event_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one user_id shuffle for the LEAD pass; the matrix agg and
     its row-normalizing window both run on ≤|types|² rows."""
-    ensure_deterministic_session(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", _epoch_s("ts").alias("ts_s"), "event_id"
     )
@@ -1485,7 +1456,6 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (lang, guess) agg — ≤|langs|² rows — plus a window on
     that tiny matrix; the heuristic itself is expression-only at
     scan speed."""
-    ensure_deterministic_session(spark)
     from ..functions.text import lang_guess
 
     d = load_table(spark, sf_dir, "documents")
@@ -1515,7 +1485,6 @@ def agg_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rank accuracy (~1.7% at default k) vs the exact per-bucket median
     is asserted in tests/test_pipeline.py; estimates are
     engine-specific, so the driver check is rows-only."""
-    ensure_deterministic_session(spark)
     o = load_table(spark, sf_dir, "orders").select(
         F.expr(
             "cast(cast(o_orderdate as timestamp) as long) "
@@ -1555,7 +1524,6 @@ def agg_theta_customer_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Estimate accuracy vs exact distinct intersections is asserted in
     tests/test_pipeline.py; rows-only at the driver gate."""
-    ensure_deterministic_session(spark)
     o = load_table(spark, sf_dir, "orders").select(
         F.expr(
             "cast(cast(o_orderdate as timestamp) as long) "
@@ -1617,7 +1585,6 @@ def orders_fulfillment_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: first-ship is a map-side-combined MIN per orderkey (one
     shuffle on the fact key), then a broadcast-joined rollup into five
     priority rows; day arithmetic is exact integer epoch division."""
-    ensure_deterministic_session(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         F.expr("CAST(FLOOR(cast(cast(l_shipdate as timestamp) as double)) AS BIGINT) DIV 86400").alias(
@@ -1677,7 +1644,6 @@ def agg_decile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator (operators/rankstats.py, round 15 — a parallel ranked
     pass with broadcast offsets, never a single-partition window over
     |customers| rows), then a 10-row rollup + running sum."""
-    ensure_deterministic_session(spark)
     from ..operators.rankstats import global_order_stats, ntile_from_rank
 
     c = (
@@ -1745,7 +1711,6 @@ def join_customer_360(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE joining (shuffle on the fact key once, map-side combined),
     then the joins are dimension-sized and broadcast; the wide row is
     assembled without ever joining raw facts to raw facts."""
-    ensure_deterministic_session(spark)
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
     ords = (
@@ -1806,7 +1771,6 @@ def agg_order_fanout_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate in this repo (bounded fan-out claims, interval-join 2x
     bounds, salting thresholds).  Two map-side-combined aggregations,
     output is a ~7-row histogram at any scale."""
-    ensure_deterministic_session(spark)
     per_order = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
@@ -1862,7 +1826,6 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.1 for headroom the BIGINT freq_sum output contract cannot
     use anyway — both engines fail its cast at ~9.2e18, the
     documented shared ceiling, like [[agg_group]]'s ×10^s note)."""
-    ensure_deterministic_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     bg = F.expr(
         "transform(slice(w, 1, size(w) - 1),"
@@ -1941,7 +1904,6 @@ def text_bigram_lm_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     LM side.  Stopword-pair skew is AQE skew-split territory, the
     [[text_rarity_score]] note; the ×1000 step goes through the same
     per-group decimal(28,0) cast as the batch key."""
-    ensure_deterministic_session(spark)
     from ..sources.layout import scratch_bucketed_table
 
     docs = load_table(spark, sf_dir, "documents")

@@ -75,10 +75,11 @@ def get_spark(
 def ensure_deterministic_session(spark: SparkSession) -> SparkSession:
     """Pin runtime confs that affect query *results* (not just speed).
 
-    Called at the top of every query builder so results are identical
-    whether the session came from :func:`get_spark` or was handed to
-    us by an external driver.  ``spark.sql.session.timeZone`` is a
-    runtime conf, so this is safe on a live session.
+    Applied by ``registry.query`` to every builder, before each build,
+    so results are identical whether the session came from
+    :func:`get_spark` or was handed to us by an external driver.
+    ``spark.sql.session.timeZone`` is a runtime conf, so this is safe
+    on a live session.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # Pin result-affecting dialect confs to the values every local

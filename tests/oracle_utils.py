@@ -19,8 +19,8 @@ from data_engineering_assessment_spark.schemas import CORPUS_TABLES
 
 # Keys whose oracle DELIBERATELY outputs a non-portable DuckDB type.
 # Empty since round 7: probe_hugeint_sum (the round-6 diagnostic
-# control that kept a bare HUGEINT SUM, graded red exactly as
-# predicted in CORRECTNESS_r06.json) was retired by flipping its
+# control that kept a bare HUGEINT SUM, failed the typed-fetch
+# check in round 6 exactly as predicted) was retired by flipping its
 # oracle to the standard CAST(SUM(..) AS BIGINT) idiom.  The set and
 # the lint plumbing stay so any future deliberate control is a
 # one-line opt-in.

@@ -133,9 +133,10 @@ def test_graded_output_types_are_portable(spark, key):
 
 
 # Empty since round 7 (probe_hugeint_sum, the round-6 diagnostic
-# control whose oracle deliberately output a bare HUGEINT SUM, was
-# confirmed red by CORRECTNESS_r06.json and retired to the CAST
-# idiom).  Shared with tools/replay.py via oracle_utils.
+# control whose oracle deliberately output a bare HUGEINT SUM,
+# failed the typed-fetch check in round 6 exactly as predicted and
+# was retired to the CAST idiom).  Shared with tools/replay.py via
+# oracle_utils.
 ORACLE_TYPE_LINT_EXEMPT = NONPORTABLE_ORACLE_KEYS
 
 
@@ -257,8 +258,8 @@ def test_driver_typed_fetch_emulation(duck):
     (Python int either way), which is why four locally-green keys were
     red driver-side in rounds 4-5.  (Uses a literal bare-SUM query:
     the probe_hugeint_sum registry oracle carried it through round 6
-    but was retired to the CAST idiom once CORRECTNESS_r06.json
-    confirmed the prediction.)"""
+    but was retired to the CAST idiom once the round-6 typed-fetch
+    check confirmed the prediction.)"""
     bare = duck.sql(
         "SELECT SUM(CAST(l_quantity AS BIGINT)) AS qty_sum "
         "FROM lineitem WHERE l_orderkey < 30"

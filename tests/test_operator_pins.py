@@ -1,4 +1,4 @@
-"""Focused pins for the round-16 optimization changes.
+"""Focused pins for operator internals (round-16 optimizations).
 
 Each test pins an operator-internal change from optimization round 2:
 

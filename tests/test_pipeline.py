@@ -125,7 +125,7 @@ def test_real_codec_swap_point_with_pil(spark):
     mapInPandas plumbing as the graded fake-codec keys, and the
     decoded (width, height) must match the encoded image.  This gives
     clusters that DO ship PIL the execution coverage this container
-    cannot provide (VERDICT r8 #6)."""
+    cannot provide."""
     Image = pytest.importorskip("PIL.Image")
     import io
 
@@ -1479,8 +1479,8 @@ def test_shortest_cost_k_smj_fallback_equals_broadcast(spark, tmp_path):
     on the layout's exact node count (BF_BROADCAST_MAX_NODES): the
     broadcast-hash probe of the node-sized cost table (graded default
     below the bound) and the un-hinted SMJ against the bucket-sorted
-    edge table past broadcast reach (VERDICT r11 #3 / ADVICE: the
-    fallback must be CODE, not a comment).  Both branches must produce
+    edge table past broadcast reach (the fallback must be CODE, not
+    a comment).  Both branches must produce
     identical costs; the fallback run disables
     autoBroadcastJoinThreshold so AQE cannot sneak a broadcast back in
     and the relax joins genuinely execute the non-broadcast plan."""
@@ -1759,7 +1759,7 @@ def test_bigram_lm_score_planted_counts(spark, tmp_path):
 
 def test_minhash_incremental_planted_and_index_reuse(spark, tmp_path):
     """Planted split corpus pinning the incremental MinHash near-dup
-    semantics (round 13, VERDICT r12 #4) AND the fixed-model index
+    semantics (round 13) AND the fixed-model index
     contract: (a) a near-dup pair CROSSING the base/delta split is
     found via the persisted band index; (b) an exact dup WITHIN the
     delta is found via the delta self-join; (c) no pair is base-only
@@ -2203,7 +2203,7 @@ def test_embed_incremental_probe_rebuilds_from_persisted_side(
 
 
 def test_embed_incremental_summary_contains_pairs(spark):
-    """Round-15 bounded-output mode (VERDICT r14 what's-wrong #2):
+    """Round-15 bounded-output mode:
     dedup_embed_incremental_summary must be EXACTLY the per-delta-doc
     fold of the pair-emitting key — one row per delta doc appearing
     in any pair, n_dups = its pair count, best_match/best_cosine =

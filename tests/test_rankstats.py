@@ -1,5 +1,5 @@
 """operators/rankstats.py — exact global order statistics without a
-single-partition window (round 15, VERDICT r14 #5).
+single-partition window (round 15).
 
 The contract under test: ``global_order_stats`` returns EXACTLY what
 the naive unpartitioned window would (global row numbers, inclusive

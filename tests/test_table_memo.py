@@ -1,4 +1,4 @@
-"""Focused pins for the round-15 optimization changes.
+"""Focused pins for the corpus-table plan memo (round-15 optimizations).
 
 Each test pins an operator-internal change from the optimization
 round: the corpus-table plan memo (sources/tables.py), its staleness

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Generate a 10x-scaled corpus under the scratch root (``.scratch/sf1``) from the
 read-only /root/testdata/sf0.1 fixtures, for the one-notch-up scaling
-audit (VERDICT r8 #7).
+audit.
 
 Scale-up model: ten disjoint key-shifted copies of every FACT table,
 with every PK/FK shifted by the SAME per-entity stride so referential
@@ -15,17 +15,16 @@ TPC-H.  Two perturbations keep similarity workloads honest:
   recomputed.  The round-9 version perturbed only a short prefix,
   which made every document a 10-way NEAR-duplicate — shingle Jaccard
   across copies stayed ≈1, true pair counts grew ~1000x, and the
-  scale audit measured corpus pathology instead of engine scaling
-  (VERDICT r9 #4).  At 1-in-3 a token survives untouched in BOTH of
-  two copies with p = (2/3)^2 ≈ 0.44, a 3-token shingle with ≈ 0.09,
-  so cross-copy Jaccard lands ≈ 0.05 — far below every dedup
-  threshold even for short documents (a 1-in-6 draft still leaked
-  ~7x extra cross-copy pairs through them) — while WITHIN-copy
-  duplicate structure (the original corpus's own planted near-dups)
-  is preserved exactly — the substitution is a
-  pure function of (token, position, copy), so docs that matched
-  inside sf0.1 still match inside each copy, and true pair counts
-  grow ~linearly (~10x);
+  scale audit measured corpus pathology instead of engine scaling.
+  At 1-in-3 a token survives untouched in BOTH of two copies with
+  p = (2/3)^2 ≈ 0.44, a 3-token shingle with ≈ 0.09, so cross-copy
+  Jaccard lands ≈ 0.05 — far below every dedup threshold even for
+  short documents (a 1-in-6 draft still leaked ~7x extra cross-copy
+  pairs through them) — while WITHIN-copy duplicate structure (the
+  original corpus's own planted near-dups) is preserved exactly — the
+  substitution is a pure function of (token, position, copy), so docs
+  that matched inside sf0.1 still match inside each copy, and true
+  pair counts grow ~linearly (~10x);
 - embeddings: copy c circularly rotates the vector by c dimensions —
   norms and within-copy geometry preserved, cross-copy vectors not
   identical.

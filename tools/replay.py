@@ -5,6 +5,9 @@ Runs ``__spark_entry__.entry`` for smoke, then every ``queries()`` key
 against its ``oracle_sql()`` DuckDB oracle at the given sf dir (default
 sf0.01 — the driver's grading scale), comparing with the same
 order-insensitive canonical-value rule as ``tests/oracle_utils.compare``.
+A key without an oracle must return at least one row (``KNOWN_EMPTY``
+excepted).  The session starts with a hostile timezone; the registry
+wrapper pins it before every build.
 
 Usage:
   python tools/replay.py                      # all keys at sf0.01
@@ -20,6 +23,11 @@ import time
 import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# Rows-only keys (no oracle) whose sketch output may legitimately be
+# empty on a small corpus; any other rows-only key that returns 0 rows
+# fails, since an empty result is all a rows-only check can catch.
+KNOWN_EMPTY = {"dedup_minhash", "dedup_simhash", "agg_approx_distinct"}
 
 
 def main() -> int:
@@ -63,7 +71,7 @@ def main() -> int:
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .appName("replay")
-        # hostile timezone on purpose: queries must neutralize it
+        # hostile timezone on purpose: the registry wrapper must neutralize it
         .config("spark.sql.session.timeZone", "America/New_York")
         .config("spark.sql.shuffle.partitions", str(args.parts))
         .config("spark.driver.memory", "8g")
@@ -123,6 +131,8 @@ def main() -> int:
                     status = "pass"
             else:
                 rows = df.collect()
+                if not rows and key not in KNOWN_EMPTY:
+                    raise AssertionError("rows-only key returned 0 rows")
                 status = f"rows-only ({len(rows)} rows)"
         except Exception as exc:  # noqa: BLE001
             status = f"FAIL: {exc}"
