@@ -2080,31 +2080,43 @@ def window_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-located fact-fact join over bucketed tables: both sides are
-    written bucketed (8 buckets) on the join key, so the join plans
-    with ZERO Exchange operators — the shuffle moved to write time,
-    where it amortizes over every later join.
+    built once per corpus and code version, bucketed (8 buckets) on
+    the join key, so the join plans with ZERO Exchange operators — the
+    shuffle moved to build time, where it amortizes over every later
+    join.  The merge hint keeps broadcast from hiding the co-located
+    path at test scale.
 
-    Scale: this is the bucketing contract itself; the write is
+    Scale: this is the bucketing contract itself; the build is
     one-time and the join is a per-bucket merge.  (Exchange-free plan
-    asserted in tests/test_layout.py for this same helper.)"""
-    from ..sources.layout import bucketed_join, write_bucketed
+    asserted in tests/test_layout.py::test_bucketed_join_has_no_exchange.)"""
+    from ..sources.layout import scratch_bucketed_table
 
-    tag = corpus_tag(sf_dir)
-    lt, ot = f"li_b_{tag}", f"or_b_{tag}"
-    write_bucketed(
-        load_table(spark, sf_dir, "lineitem").select(
+    li, _ = scratch_bucketed_table(
+        spark,
+        "join_bucketed_li",
+        sf_dir,
+        lambda: load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_linenumber", "l_quantity"
         ),
-        lt,
-        "l_orderkey",
+        key="l_orderkey",
+        n_buckets=8,
+        schema_sql="l_orderkey BIGINT, l_linenumber INT, l_quantity DOUBLE",
+        fns=(join_bucketed,),
+        track_src=True,
     )
-    write_bucketed(
-        load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey"),
-        ot,
-        "o_orderkey",
+    orders, _ = scratch_bucketed_table(
+        spark,
+        "join_bucketed_or",
+        sf_dir,
+        lambda: load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey"),
+        key="o_orderkey",
+        n_buckets=8,
+        schema_sql="o_orderkey BIGINT, o_custkey BIGINT",
+        fns=(join_bucketed,),
+        track_src=True,
     )
-    j = bucketed_join(
-        spark, ot, lt, on=F.col("o_orderkey") == F.col("l_orderkey")
+    j = orders.hint("merge").join(
+        li.hint("merge"), F.col("o_orderkey") == F.col("l_orderkey")
     )
     return j.select(
         "o_orderkey",
@@ -2124,38 +2136,40 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_bucket_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucket PRUNING on scan — the read-side half of the bucketing
-    contract ([[join_bucketed]] is the join-side half): orders
-    bucketed on o_custkey, then an equality/IN filter on the bucket
-    key scans only the buckets those keys hash to
-    (``SelectedBucketsCount: ≤2 out of 8`` — plan-asserted in
-    tests/test_robust.py).  ``autoBucketedScan`` is disabled around
-    the read because Spark otherwise drops bucketed layout for
-    filter-only scans (it optimizes for split parallelism, which
-    would forfeit the skip).
+    contract ([[join_bucketed]] is the join-side half): orders built
+    once per corpus and code version, bucketed on o_custkey, then an
+    equality/IN filter on the bucket key scans only the buckets those
+    keys hash to (``SelectedBucketsCount: ≤2 out of 8`` — plan-asserted
+    in tests/test_robust.py::test_bucket_prune_selects_subset_of_buckets).
+    ``autoBucketedScan`` is disabled around the read because Spark
+    otherwise drops bucketed layout for filter-only scans (it
+    optimizes for split parallelism, which would forfeit the skip).
 
     Scale: with K buckets, a point/IN lookup on the bucket key reads
     ~|keys|/K of the files before row-group stats even apply — the
     poor man's index for the high-cardinality keys partitioning can't
     hold (a custkey partition layout would be millions of dirs;
     8–1024 buckets is one)."""
-    from ..sources.layout import write_bucketed
+    from ..sources.layout import scratch_bucketed_table
 
-    tag = corpus_tag(sf_dir)
-    table = f"or_bp_{tag}"
-    write_bucketed(
-        load_table(spark, sf_dir, "orders").select(
+    orders, _ = scratch_bucketed_table(
+        spark,
+        "bucket_prune_or",
+        sf_dir,
+        lambda: load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         ),
-        table,
-        "o_custkey",
+        key="o_custkey",
+        n_buckets=8,
+        schema_sql="o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE",
+        fns=(scan_bucket_prune,),
+        track_src=True,
     )
-    key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "false")
+    with scoped_conf(
+        spark, {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"}
+    ):
         out = (
-            spark.table(table)
-            .filter(F.col("o_custkey").isin(7, 42))
+            orders.filter(F.col("o_custkey").isin(7, 42))
             .select(
                 "o_orderkey",
                 "o_custkey",
@@ -2168,8 +2182,6 @@ def scan_bucket_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (and the bucket skip) is decided at execution time, so
         # returning a lazy frame would re-plan after the conf reverts
         return out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set(key, prev)
 
 
 @query(

@@ -19,8 +19,10 @@ The two levers that remove work *before* a query runs:
 - **Bucketing** pre-shuffles a table by a join/agg key at write time.
   Two tables bucketed the same way join with NO exchange on either
   side — at 100 TB that converts the dominant shuffle of every
-  fact-fact join into a free co-located merge.  (Verified
-  shuffle-free in tests/test_layout.py.)
+  fact-fact join into a free co-located merge.  Bucketed layouts are
+  built once per corpus and code version by
+  :func:`scratch_bucketed_table`, the one bucketed-table writer.
+  (Verified shuffle-free in tests/test_layout.py.)
 - **Partitioned layout** (hive-style dirs) + in-file sorting gives
   partition pruning (directories never listed/read) and row-group
   skipping (min/max stats) for the partition/sort keys.
@@ -30,6 +32,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -169,6 +172,10 @@ def clean_superseded(path: str) -> None:
 
 _META = "_scratch_meta.json"
 
+# Guards the session catalog entries of scratch_bucketed_table: Spark
+# checks for an existing table and creates it in two steps.
+_CATALOG_LOCK = threading.Lock()
+
 
 def materialize(path: str, write) -> str:
     """Build the directory ``path`` once; return ``path``.
@@ -302,9 +309,14 @@ def scratch_bucketed_table(
     whose CONTRACT is that later base mutation does NOT rebuild —
     that immutability is pinned by planted pytests.
 
-    Crash/concurrency safety is :func:`materialize`'s: the build
-    lands in a per-call temp sibling, meta last, and is published
-    with one atomic rename."""
+    Crash/concurrency safety of the files is :func:`materialize`'s:
+    the build lands in a per-call temp sibling, meta last, and is
+    published with one atomic rename.  Catalog registration is
+    serialized per process: a call that built (or found no meta)
+    drops the session's entry, which may list a replaced build's
+    files, then creates it if missing and resolves the table before
+    releasing the lock, so concurrent callers neither create one name
+    twice nor drop a name another caller has yet to read."""
     import glob
     import json
 
@@ -331,10 +343,9 @@ def scratch_bucketed_table(
             recorded = None
         if recorded != corpus_fingerprint(sf_dir):
             shutil.rmtree(path, ignore_errors=True)
+    fresh = not os.path.exists(meta_path)
 
     def write(tmp: str) -> dict:
-        # the catalog entry may still point at a superseded build
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
         tmp_name = os.path.basename(tmp).replace(".", "_")
         (
             build()
@@ -356,57 +367,21 @@ def scratch_bucketed_table(
         return meta
 
     materialize(path, write)
-    if not spark.catalog.tableExists(name):
-        spark.sql(
-            f"CREATE TABLE {name} ({schema_sql}) USING parquet "
-            f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n_buckets} BUCKETS "
-            f"LOCATION '{path}'"
-        )
+    with _CATALOG_LOCK:
+        if fresh:
+            # the entry may list a replaced build's files, or point
+            # under another SCRATCH_ROOT
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+        if not spark.catalog.tableExists(name):
+            spark.sql(
+                f"CREATE TABLE {name} ({schema_sql}) USING parquet "
+                f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n_buckets} BUCKETS "
+                f"LOCATION '{path}'"
+            )
+        table = spark.table(name)
     with open(meta_path) as fh:
         meta = json.load(fh)
-    return spark.table(name), meta
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str | list[str],
-    n_buckets: int = 8,
-    sort: bool = True,
-    mode: str = "overwrite",
-) -> None:
-    """Save as a bucketed (and bucket-sorted) managed parquet table.
-
-    ``n_buckets`` should match the downstream join partner and stay
-    stable across writes — bucket count is part of the physical
-    contract, like a schema."""
-    keys = [key] if isinstance(key, str) else key
-    spark = df.sparkSession
-    # idempotent across sessions: a prior session's warehouse dir can
-    # outlive its (session-scoped, in-memory) catalog entry
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse").removeprefix("file:")
-    leftover = os.path.join(wh, table)
-    if os.path.exists(leftover):
-        shutil.rmtree(leftover)
-    w = df.write.mode(mode).format("parquet").bucketBy(n_buckets, *keys)
-    if sort:
-        w = w.sortBy(*keys)
-    w.saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str | list[str], how: str = "inner"
-) -> DataFrame:
-    """Join two identically-bucketed tables.
-
-    With matching bucket specs Spark plans a sort-merge join with
-    zero Exchange operators; the merge hint suppresses broadcast so
-    the co-located path is actually taken (broadcast would hide the
-    benefit at test scale and be impossible at real scale)."""
-    l = spark.table(left_table).hint("merge")
-    r = spark.table(right_table).hint("merge")
-    return l.join(r, on, how)
+    return table, meta
 
 
 def _versions(path: str) -> list[tuple[int, str]]:
@@ -515,7 +490,6 @@ def write_partitioned(
     path: str,
     partition_by: str | list[str],
     sort_within: str | list[str] | None = None,
-    mode: str = "overwrite",
 ) -> str:
     """Hive-style partitioned parquet, optionally sorted within files
     so min/max row-group stats make range predicates skip I/O.
@@ -528,7 +502,7 @@ def write_partitioned(
     if sort_within:
         sorts = [sort_within] if isinstance(sort_within, str) else sort_within
         out = out.sortWithinPartitions(*sorts)
-    out.write.mode(mode).partitionBy(*parts).parquet(path)
+    out.write.mode("overwrite").partitionBy(*parts).parquet(path)
     return path
 
 
@@ -559,7 +533,6 @@ def write_zordered(
     cols: list[str],
     bits: int = 12,
     n_files: int | None = None,
-    mode: str = "overwrite",
 ) -> str:
     """Write parquet clustered on a Z-order curve over ``cols``.
 
@@ -596,7 +569,7 @@ def write_zordered(
         out.repartitionByRange(n_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
     return path

@@ -47,13 +47,7 @@ def _merge_parts(parts: list[str], path: str) -> None:
     os.replace(tmp, path)
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    single_file: bool = False,
-) -> str:
+def write_parquet(df: DataFrame, path: str, *, single_file: bool = False) -> str:
     """Write ``df`` as parquet.
 
     ``single_file=True`` reproduces the reference's sink contract
@@ -70,15 +64,12 @@ def write_parquet(
     """
     if single_file:
         tmp_dir = path + "._job"
-        df.write.parquet(tmp_dir, mode=mode)
+        df.write.parquet(tmp_dir, mode="overwrite")
         parts = sorted(glob.glob(os.path.join(tmp_dir, "part-*.parquet")))
         if not parts:
             raise RuntimeError(f"no part-files produced in {tmp_dir}")
         _merge_parts(parts, path)
         shutil.rmtree(tmp_dir)
         return path
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    df.write.parquet(path, mode="overwrite")
     return path

@@ -10,26 +10,29 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_assessment_spark.sources import layout
-from data_engineering_assessment_spark.sources.layout import (
-    bucketed_join,
-    write_bucketed,
-    write_partitioned,
-)
+from data_engineering_assessment_spark.sources.layout import write_partitioned
 from data_engineering_assessment_spark.sources.tables import load_table
 from tests.conftest import FAILING_COMMITTER, SF_DIR
 
 
-def test_bucketed_join_has_no_exchange(spark):
+def test_bucketed_join_has_no_exchange(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(layout, "SCRATCH_ROOT", str(tmp_path))
     li = load_table(spark, SF_DIR, "lineitem").select(
         "l_orderkey", "l_quantity", "l_extendedprice"
     )
     orders = load_table(spark, SF_DIR, "orders").select(
         "o_orderkey", "o_totalprice"
     ).withColumnRenamed("o_orderkey", "l_orderkey")
-    write_bucketed(li, "t_li_bucketed", "l_orderkey", n_buckets=4)
-    write_bucketed(orders, "t_ord_bucketed", "l_orderkey", n_buckets=4)
+    li_b, _ = layout.scratch_bucketed_table(
+        spark, "t_li_bucketed", SF_DIR, lambda: li, key="l_orderkey", n_buckets=4,
+        schema_sql="l_orderkey BIGINT, l_quantity DOUBLE, l_extendedprice DOUBLE",
+    )
+    ord_b, _ = layout.scratch_bucketed_table(
+        spark, "t_ord_bucketed", SF_DIR, lambda: orders, key="l_orderkey", n_buckets=4,
+        schema_sql="l_orderkey BIGINT, o_totalprice DOUBLE",
+    )
 
-    joined = bucketed_join(spark, "t_li_bucketed", "t_ord_bucketed", "l_orderkey")
+    joined = li_b.hint("merge").join(ord_b.hint("merge"), "l_orderkey")
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan
     assert "Exchange" not in plan, "bucketed join must not shuffle"
@@ -904,4 +907,78 @@ def test_no_checkout_path_literal_in_package():
         for p in pkg.rglob("*")
         if p.is_file() and "__pycache__" not in p.parts and literal in p.read_bytes()
     ]
+    assert not offenders, offenders
+
+
+def test_bucketed_keys_build_concurrently(spark, tmp_path, monkeypatch):
+    """Four threads of one session each build ``join_bucketed`` and
+    ``scan_bucket_prune`` three times from a cold SCRATCH_ROOT: every
+    result matches its oracle, and the session's warehouse directory
+    is left untouched (no plan writes a managed table)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import __spark_entry__ as entry_mod
+    from data_engineering_assessment_spark.session import scoped_conf
+    from tests.oracle_utils import compare, duck_connection
+
+    monkeypatch.setattr(layout, "SCRATCH_ROOT", str(tmp_path))
+    queries, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+
+    def snapshot() -> dict[str, int]:
+        if not os.path.isdir(warehouse):
+            return {}
+        return {e: os.stat(os.path.join(warehouse, e)).st_mtime_ns for e in os.listdir(warehouse)}
+
+    def run(_):
+        con = duck_connection(SF_DIR)
+        errors = []
+        try:
+            for _ in range(3):
+                for key in ("join_bucketed", "scan_bucket_prune"):
+                    try:
+                        compare(queries[key](spark, SF_DIR), con, oracles[key])
+                    except Exception as e:  # noqa: BLE001 - counted below
+                        errors.append(f"{key}: {type(e).__name__}: {str(e)[:200]}")
+        finally:
+            con.close()
+        return errors
+
+    before = snapshot()
+    # scan_bucket_prune scopes a session-wide conf; interleaved scopes
+    # can restore another thread's value, so put the original back
+    auto = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    with scoped_conf(spark, {auto: spark.conf.get(auto)}), ThreadPoolExecutor(4) as pool:
+        errors = [e for errs in pool.map(run, range(4)) for e in errs]
+    assert not errors, f"{len(errors)} of 24 builds failed: {errors[:3]}"
+    assert snapshot() == before
+
+
+def test_no_managed_table_writes_in_package():
+    """``layout.scratch_bucketed_table`` is the one bucketed-table
+    writer: no other package code calls ``saveAsTable``, and none
+    reads ``spark.sql.warehouse.dir``."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(layout.__file__).resolve().parent.parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if path.name == "layout.py" and path.parent.name == "sources":
+            [writer] = [
+                n for n in tree.body
+                if isinstance(n, ast.FunctionDef) and n.name == "scratch_bucketed_table"
+            ]
+            allowed = {id(n) for n in ast.walk(writer)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                hit = getattr(node.func, "attr", None) == "saveAsTable" and id(node) not in allowed
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                hit = "spark.sql.warehouse.dir" in node.value
+            else:
+                continue
+            if hit:
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
     assert not offenders, offenders

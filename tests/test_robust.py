@@ -373,7 +373,7 @@ def test_alternating_cc_random_graphs_property(spark):
     run()
 
 
-def test_bucket_prune_selects_subset_of_buckets(spark):
+def test_bucket_prune_selects_subset_of_buckets(spark, monkeypatch):
     """The bucket-pruned scan's docstring claim, plan-pinned: with
     autoBucketedScan disabled, the IN-filter on the bucket key scans
     <= 2 of the 8 buckets."""
@@ -381,15 +381,24 @@ def test_bucket_prune_selects_subset_of_buckets(spark):
 
     from pyspark.sql import functions as F
 
-    from data_engineering_assessment_spark.sources.layout import corpus_tag
+    from data_engineering_assessment_spark.sources import layout
 
-    QUERIES["scan_bucket_prune"](spark, SF_DIR).collect()  # (re)write table
-    table = f"or_bp_{corpus_tag(SF_DIR)}"
+    built = []
+    real = layout.scratch_bucketed_table
+
+    def capture(*args, **kwargs):
+        out = real(*args, **kwargs)
+        built.append(out[0])
+        return out
+
+    monkeypatch.setattr(layout, "scratch_bucketed_table", capture)
+    QUERIES["scan_bucket_prune"](spark, SF_DIR).collect()  # build the layout
+    [table] = built
     key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     prev = spark.conf.get(key)
     try:
         spark.conf.set(key, "false")
-        d = spark.table(table).filter(F.col("o_custkey").isin(7, 42))
+        d = table.filter(F.col("o_custkey").isin(7, 42))
         plan = d._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set(key, prev)
