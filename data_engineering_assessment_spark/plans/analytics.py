@@ -2133,18 +2133,10 @@ def stream_tablelog_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = materialize(scratch_path("tablelog_src", tag), write)
     register(spark)
 
-    name = f"tls_src_{tag}"
-    q = (
-        spark.readStream.format("tablelog")
-        .load(path)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    from ..streaming.sinks import drain_to_memory
+
+    stream = spark.readStream.format("tablelog").load(path)
+    return drain_to_memory(stream, f"tls_src_{tag}", "append").select(
         "doc_id",
         "lang",
         "n_chars",

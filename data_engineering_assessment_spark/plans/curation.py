@@ -26,7 +26,6 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import scoped_conf
 from ..sources.layout import corpus_tag, events_tag, materialize, scratch_path
 from ..sources.tables import load_table
 from .registry import query
@@ -381,22 +380,9 @@ def stream_late_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = f"stream_late_{corpus_tag(sf_dir)}"
-    # bytes-derived state shards (r15, shared rule): 3 micro-batches ×
-    # 64 shards of state-store commits was pure provisioning overhead
-    from ..streaming.windows import staged_stream_partitions
+    from ..streaming.sinks import drain_to_memory
 
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(in_dir)}
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select("window_start", "event_type", "n")
+    return drain_to_memory(agg, name, "append").select("window_start", "event_type", "n")
 
 
 @query(

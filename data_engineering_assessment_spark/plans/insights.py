@@ -39,7 +39,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import scoped_conf
 from ..sources.layout import events_tag, materialize, scratch_path
 from ..sources.tables import load_table
 from .registry import query
@@ -1221,26 +1220,10 @@ def stream_session_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("nev"),
         )
     )
-    # size the stateful shuffle (= session-window state shards) to the
-    # staged volume (r15: the r14 LOJ bytes-derived rule, shared via
-    # streaming/windows.py — 64 shards on a few-MB replay is pure
-    # state-store provisioning overhead; the rule grows the count
-    # back for real volumes)
-    from ..streaming.windows import staged_stream_partitions
+    from ..streaming.sinks import drain_to_memory
 
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(path)}
-    ):
-        q = (
-            per_session.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
+        drain_to_memory(per_session, name, "complete")
         .groupBy("entry_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_sessions"),

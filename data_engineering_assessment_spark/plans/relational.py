@@ -2998,28 +2998,14 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark bounding state (windows older than the lateness
     allowance are evicted); complete mode here is safe because the
     graded window count is small (~720 x 5 event types)."""
-    from ..streaming.windows import (
-        read_event_stream,
-        staged_stream_partitions,
-        tumbling_counts,
-    )
+    from ..streaming.sinks import drain_to_memory
+    from ..streaming.windows import read_event_stream, tumbling_counts
 
     path = _staged_events_replay(spark, sf_dir, "stream_events")
 
     name = f"stream_tumbling_{corpus_tag(sf_dir)}"
     agg = tumbling_counts(read_event_stream(spark, path))
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(path)}
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    return drain_to_memory(agg, name, "complete").select(
         "window_start",
         "event_type",
         "n",
@@ -3061,28 +3047,14 @@ def stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     lets Spark evict join state older than watermark + range, so
     state is bounded by one hour of clicks per user, not the whole
     stream."""
-    from ..streaming.windows import (
-        purchase_click_join,
-        read_event_stream,
-        staged_stream_partitions,
-    )
+    from ..streaming.sinks import drain_to_memory
+    from ..streaming.windows import purchase_click_join, read_event_stream
 
     path = _staged_events_replay(spark, sf_dir, "stream_ssj")
 
     name = f"stream_ssj_{corpus_tag(sf_dir)}"
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(path)}
-    ):
-        q = (
-            purchase_click_join(read_event_stream(spark, path))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    joined = purchase_click_join(read_event_stream(spark, path))
+    return drain_to_memory(joined, name, "append").select(
         "purchase_id", "user_id", "purchase_ts_s", "click_id", "click_ts_s"
     )
 
@@ -3113,29 +3085,15 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state store holds one (long, long) per user, sharded by
     the shuffle partitioning; the pandas hop is Arrow-batched per
     key group."""
-    from ..streaming.windows import (
-        read_event_stream,
-        running_user_totals,
-        staged_stream_partitions,
-    )
+    from ..streaming.sinks import drain_to_memory
+    from ..streaming.windows import read_event_stream, running_user_totals
 
     path = _staged_events_replay(spark, sf_dir, "stream_events")
 
     name = f"stream_state_{corpus_tag(sf_dir)}"
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(path)}
-    ):
-        q = (
-            running_user_totals(read_event_stream(spark, path))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    totals = running_user_totals(read_event_stream(spark, path))
     return (
-        spark.table(name)
+        drain_to_memory(totals, name, "update")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -3161,24 +3119,14 @@ def stream_dedup_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain dropDuplicates whose state grows forever on an unbounded
     stream; the single-file staging keeps the graded run one
     micro-batch so watermark timing cannot re-admit a duplicate."""
-    from ..streaming.windows import read_event_stream, staged_stream_partitions, stream_dedup
+    from ..streaming.sinks import drain_to_memory
+    from ..streaming.windows import read_event_stream, stream_dedup
 
     path = _staged_events_replay(spark, sf_dir, "stream_dup", doubled=True)
 
     name = f"stream_dedup_{corpus_tag(sf_dir)}"
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(path)}
-    ):
-        q = (
-            stream_dedup(read_event_stream(spark, path))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select("event_id", "user_id", "event_type")
+    deduped = stream_dedup(read_event_stream(spark, path))
+    return drain_to_memory(deduped, name, "append").select("event_id", "user_id", "event_type")
 
 
 @query(
@@ -3221,28 +3169,14 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     here only because the graded run must emit every session; the
     append-mode prefix property is asserted in
     tests/test_streaming.py)."""
-    from ..streaming.windows import (
-        read_event_stream,
-        session_counts,
-        staged_stream_partitions,
-    )
+    from ..streaming.sinks import drain_to_memory
+    from ..streaming.windows import read_event_stream, session_counts
 
     path = _staged_events_replay(spark, sf_dir, "stream_ssj")
 
     name = f"stream_sess_{corpus_tag(sf_dir)}"
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(path)}
-    ):
-        q = (
-            session_counts(read_event_stream(spark, path))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    sessions = session_counts(read_event_stream(spark, path))
+    return drain_to_memory(sessions, name, "complete").select(
         "user_id", "session_start", "session_end", "n_events"
     )
 
@@ -4129,28 +4063,14 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     than the allowance — the 4x state amplification vs tumbling is
     the price of smoother dashboards, visible right in the pane
     arithmetic."""
-    from ..streaming.windows import (
-        read_event_stream,
-        sliding_counts,
-        staged_stream_partitions,
-    )
+    from ..streaming.sinks import drain_to_memory
+    from ..streaming.windows import read_event_stream, sliding_counts
 
     path = _staged_events_replay(spark, sf_dir, "stream_events")
 
     name = f"stream_slide_{corpus_tag(sf_dir)}"
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(path)}
-    ):
-        q = (
-            sliding_counts(read_event_stream(spark, path))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select("window_start", "event_type", "n")
+    panes = sliding_counts(read_event_stream(spark, path))
+    return drain_to_memory(panes, name, "complete").select("window_start", "event_type", "n")
 
 
 @query(

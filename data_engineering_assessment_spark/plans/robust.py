@@ -15,7 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import scoped_conf
 from ..sources.layout import events_tag, scratch_path
 from ..sources.tables import load_table
 from .insights import _cents, _epoch_s
@@ -488,29 +487,13 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = materialize(scratch_path("stream_loj", tag), write)
     name = f"stream_loj_{tag}"
-    # Size the stateful shuffle to the staged volume: a stream-stream
-    # join provisions and commits FOUR state stores per shuffle
-    # partition per micro-batch (two sides × key-with/without-index),
-    # so partition count is state-store fan-out, not just parallelism.
-    # 32 partitions on a few-MB replay is pure provisioning overhead
-    # (measured 5.5 s → 2.2 s at sf0.1 going 32 → 8); the same
-    # bytes-derived rule grows the count back for real volumes — the
-    # streaming twin of the green-taxi maxPartitionBytes scoping.
-    from ..streaming.windows import staged_stream_partitions
+    # a stream-stream join commits FOUR state stores per state shard
+    # per micro-batch (two sides × key-with/without-index), so the
+    # shard rule's count is state-store fan-out, not just parallelism
+    from ..streaming.sinks import drain_to_memory
 
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": staged_stream_partitions(path)}
-    ):
-        q = (
-            view_purchase_left_join(read_event_stream(spark, path))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    joined = view_purchase_left_join(read_event_stream(spark, path))
+    return drain_to_memory(joined, name, "append").select(
         "view_id", "user_id", "view_ts_s", "purchase_id", "purchase_ts_s"
     )
 

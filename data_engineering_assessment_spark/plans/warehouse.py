@@ -1306,16 +1306,9 @@ def stream_file_intake(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5(F.col("content")).alias("content_md5"),
         )
     )
-    name = f"stream_files_{tag}"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    from ..streaming.sinks import drain_to_memory
+
+    return drain_to_memory(stream, f"stream_files_{tag}", "append")
 
 
 @query(

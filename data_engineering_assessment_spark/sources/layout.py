@@ -475,14 +475,22 @@ def compact_parquet(
     rewrite is one read + one narrow coalesce write, published with
     :func:`publish_version` (crash-safe: readers see the old or the
     compacted version)."""
-    import glob as _glob
-
     dataset_path(path)  # repair any previously interrupted swap
-    files = _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, round(total / (target_mb * 1024 * 1024)))
+    n_out = parquet_file_count(path, target_mb)
     publish_version(path, spark.read.parquet(path).coalesce(n_out).write.parquet)
     return n_out
+
+
+def parquet_file_count(path: str, target_mb: int = 128) -> int:
+    """Files for a rewrite of the parquet dataset at ``path``: one per
+    ~``target_mb`` of its current bytes, at least 1 — the one
+    file-count rule of every whole-dataset rewrite (compaction, the
+    unpartitioned upsert)."""
+    import glob as _glob
+
+    files = _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+    total = sum(os.path.getsize(f) for f in files)
+    return max(1, round(total / (target_mb * 1024 * 1024)))
 
 
 def write_partitioned(

@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .layout import dataset_path, publish_version
+from .layout import dataset_path, parquet_file_count, publish_version
 
 
 def upsert_parquet(
@@ -40,7 +40,10 @@ def upsert_parquet(
 
     Without ``partition_by`` the create and every merge go through
     ``publish_version``: ``path`` becomes a symlink to the newest
-    complete version, and a failed write leaves it where it was.
+    complete version, and a failed write leaves it where it was.  A
+    merge writes ``layout.parquet_file_count(path)`` files, so the
+    version a stream of small batches rewrites stays one file instead
+    of one per shuffle partition of the merge.
 
     ``partition_by`` enables the partition-scoped path: only
     partitions present in ``updates`` participate, and dynamic
@@ -49,31 +52,39 @@ def upsert_parquet(
     localCheckpoint-ed before the write because the job both reads
     and overwrites ``path``; materializing first breaks the cycle."""
     keys = [key] if isinstance(key, str) else key
-    if not partition_by:
-        try:
-            dataset_path(path)
-        except FileNotFoundError:
-            publish_version(path, updates.write.parquet)
+    # a merge reads ``updates`` two or three times (key side, union,
+    # partition list): evaluate it once — for a stream batch, that is
+    # one run of the stateful plan and one state-store commit per shard
+    updates = updates.persist()
+    try:
+        if not partition_by:
+            try:
+                dataset_path(path)
+            except FileNotFoundError:
+                publish_version(path, updates.write.parquet)
+                return
+            merged = (
+                spark.read.parquet(path)
+                .join(updates.select(*keys), keys, "left_anti")
+                .unionByName(updates)
+                .coalesce(parquet_file_count(path))
+            )
+            publish_version(path, merged.write.parquet)
             return
+
+        if not os.path.exists(path):
+            updates.write.mode("overwrite").partitionBy(partition_by).parquet(path)
+            return
+        parts = [r[0] for r in updates.select(partition_by).distinct().collect()]
         merged = (
             spark.read.parquet(path)
+            .filter(F.col(partition_by).isin(parts))
             .join(updates.select(*keys), keys, "left_anti")
             .unionByName(updates)
+            .localCheckpoint(eager=True)
         )
-        publish_version(path, merged.write.parquet)
-        return
-
-    if not os.path.exists(path):
-        updates.write.mode("overwrite").partitionBy(partition_by).parquet(path)
-        return
-    parts = [r[0] for r in updates.select(partition_by).distinct().collect()]
-    merged = (
-        spark.read.parquet(path)
-        .filter(F.col(partition_by).isin(parts))
-        .join(updates.select(*keys), keys, "left_anti")
-        .unionByName(updates)
-        .localCheckpoint(eager=True)
-    )
-    merged.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy(partition_by).parquet(path)
+        merged.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(partition_by).parquet(path)
+    finally:
+        updates.unpersist()

@@ -14,6 +14,20 @@ Scale: each micro-batch's merge cost is bounded by the batch size
 plus the touched partitions (partition-scoped rewrite), never the
 whole target.
 
+State shards: a stateful operator keeps one state store per shuffle
+partition and loads and commits every one of them in every
+micro-batch, so each shard is a fixed cost per batch, paid whatever
+the batch holds: a commit creates four files (delta, checksum and
+their ``.crc`` files) through Hadoop's local filesystem, each tens of
+milliseconds where the filesystem forks ``chmod`` per file.  The
+count is fixed when a query first starts (``spark.sql.shuffle.partitions``
+at that moment) and the checkpoint keeps it: a restart restores it
+from the offset log whatever the session says.  Every stream started
+here (both sinks and :func:`drain_to_memory`) is sized by one rule,
+:func:`state_shards` over the bytes its file sources hold at first
+start — one shard per 8 MB, at least 1, at most 200 — and a stream
+with any other source keeps the session default.
+
 No-data micro-batches: after a data batch moves the watermark, Spark
 by default schedules a second micro-batch with no input rows, only
 to apply the new watermark to state.  Both sinks skip it when the
@@ -48,6 +62,10 @@ it is dropped instead of re-emitted, a case
 
 from __future__ import annotations
 
+import glob
+import os
+from urllib.parse import urlparse
+
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
@@ -59,28 +77,91 @@ _EVICT_ONLY_ANY_MODE = frozenset({"Deduplicate", "DeduplicateWithinWatermark"})
 _EVICT_ONLY_UPDATE = frozenset({"Aggregate", "Distinct"})
 # stateful nodes whose no-data batch can emit rows in append mode
 _EMIT_ON_WATERMARK_APPEND = frozenset({"Aggregate", "Distinct", "Join"})
+# names a file source does not read
+_HIDDEN = (".", "_")
 
 
-def _streaming_node_names(stream: DataFrame) -> list[str]:
-    """Node names of the streaming part of ``stream``'s analyzed plan
+def _streaming_nodes(stream: DataFrame) -> list:
+    """JVM nodes of the streaming part of ``stream``'s analyzed plan
     (static subtrees, such as a stream-static join's table side, are
-    skipped: they hold no state)."""
-    names, todo = [], [stream._jdf.queryExecution().analyzed()]
+    skipped: they hold no state and are not stream input)."""
+    nodes, todo = [], [stream._jdf.queryExecution().analyzed()]
     while todo:
         node = todo.pop()
         if not node.isStreaming():
             continue
-        names.append(node.nodeName())
+        nodes.append(node)
         children = node.children()
         todo.extend(children.apply(i) for i in range(children.size()))
-    return names
+    return nodes
+
+
+def state_shards(nbytes: int) -> int:
+    """State shards (``spark.sql.shuffle.partitions``) for a stateful
+    stream over ``nbytes`` of input: one per 8 MB, at least 1, at most
+    200.
+
+    Every stateful operator loads and commits one state store per
+    shard per micro-batch (a stream-stream join: four), whatever the
+    batch holds, so on a small input the shard count is fixed cost,
+    not parallelism.  Measured on 4 vCPU: with 8 shards a 4k-row
+    landed batch ran each state stage as 8 tasks of ~230 ms, ~35 ms of
+    them CPU, and one shard cut the batch's latency by about 40%; on
+    the stream-stream left outer join key at sf0.1, 32 → 8 shards cut
+    its build from 5.5 s to 2.2 s.  The same rule grows the count with
+    the input for real volumes."""
+    return max(1, min(200, -(-nbytes // (8 << 20))))
+
+
+def _local_bytes(path: str) -> int | None:
+    """Bytes of the data files a file source at ``path`` (a file, a
+    directory or a glob) reads; hidden (``.``/``_``) names are
+    skipped, as Spark skips them.  None for a non-local path."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return None
+    total = 0
+    for root in glob.glob(url.path):
+        if os.path.isfile(root):
+            total += os.path.getsize(root)
+        for d, dirs, files in os.walk(root):
+            dirs[:] = [x for x in dirs if not x.startswith(_HIDDEN)]
+            total += sum(
+                os.path.getsize(os.path.join(d, f)) for f in files if not f.startswith(_HIDDEN)
+            )
+    return total
+
+
+def state_shard_conf(stream: DataFrame) -> dict[str, object]:
+    """``{"spark.sql.shuffle.partitions": state_shards(input bytes)}``
+    for a stream whose every source is a local file source, else
+    ``{}`` (the session default stands)."""
+    jvm = stream.sparkSession._jvm
+    file_format = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.execution.datasources.FileFormat"
+    )
+    total = 0
+    for node in _streaming_nodes(stream):
+        if node.children().size():
+            continue
+        if node.nodeName() != "StreamingRelation":
+            return {}
+        source = node.dataSource()
+        path = source.options().get("path")
+        if not (path.isDefined() and file_format.isInstance(source.providingInstance())):
+            return {}
+        nbytes = _local_bytes(path.get())
+        if nbytes is None:
+            return {}
+        total += nbytes
+    return {"spark.sql.shuffle.partitions": state_shards(total)}
 
 
 def _no_data_batch_evicts_only(stream: DataFrame, output_mode: str) -> bool:
     """True when a no-data micro-batch of ``stream`` in ``output_mode``
     could only evict state: exactly one evict-only stateful node and
     none that may emit rows when the watermark moves."""
-    names = _streaming_node_names(stream)
+    names = [node.nodeName() for node in _streaming_nodes(stream)]
     evict_only = _EVICT_ONLY_ANY_MODE | (
         _EVICT_ONLY_UPDATE if output_mode == "update" else frozenset()
     )
@@ -93,11 +174,12 @@ def _no_data_batch_evicts_only(stream: DataFrame, output_mode: str) -> bool:
 def _start(
     stream: DataFrame, batch_fn, checkpoint: str, output_mode: str, available_now: bool
 ) -> StreamingQuery:
-    """Start ``stream`` into foreachBatch ``batch_fn``, with no-data
-    micro-batches disabled for this query when they could only evict
-    state, and late rows filtered by each batch's own watermark (both
-    confs are read once, at start; the session's own values are
-    restored right after)."""
+    """Start ``stream`` into foreachBatch ``batch_fn`` with its state
+    sharded by :func:`state_shard_conf`, with no-data micro-batches
+    disabled for this query when they could only evict state, and late
+    rows filtered by each batch's own watermark (the confs are read
+    once, at start; the session's own values are restored right
+    after)."""
     writer = (
         stream.writeStream.foreachBatch(batch_fn)
         .option("checkpointLocation", checkpoint)
@@ -105,16 +187,29 @@ def _start(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    conf = (
-        {
-            "spark.sql.streaming.noDataMicroBatches.enabled": "false",
-            "spark.sql.streaming.statefulOperator.allowMultiple": "false",
-        }
-        if _no_data_batch_evicts_only(stream, output_mode)
-        else {}
-    )
+    conf = state_shard_conf(stream)
+    if _no_data_batch_evicts_only(stream, output_mode):
+        conf["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+        conf["spark.sql.streaming.statefulOperator.allowMultiple"] = "false"
     with scoped_conf(stream.sparkSession, conf):
         return writer.start()
+
+
+def drain_to_memory(stream: DataFrame, name: str, output_mode: str) -> DataFrame:
+    """Run ``stream`` to completion (``Trigger.AvailableNow``) into the
+    in-memory table ``name``, with its state sharded by
+    :func:`state_shard_conf`; return that table."""
+    spark = stream.sparkSession
+    with scoped_conf(spark, state_shard_conf(stream)):
+        q = (
+            stream.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+    q.awaitTermination()
+    return spark.table(name)
 
 
 def start_upsert_sink(

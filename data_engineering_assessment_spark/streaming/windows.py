@@ -8,9 +8,11 @@ replacement for a dedicated stream engine.
 
 Scale notes: streaming state lives in the state store keyed by
 (window × event_type) or (user × session); watermarks bound state
-size by evicting windows older than the lateness allowance.  At
-100 TB/day the state store backend (RocksDB) and
-``spark.sql.shuffle.partitions`` (= state shards) are the knobs.
+size by evicting windows older than the lateness allowance.  The
+state-shard count (``spark.sql.shuffle.partitions`` when a query first
+starts) is sized to the input by one rule, ``streaming/sinks.py:
+state_shards``, for every stream the engine starts; at 100 TB/day the
+state store backend (RocksDB) is the remaining lever.
 """
 
 from __future__ import annotations
@@ -23,27 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-def staged_stream_partitions(path: str) -> int:
-    """Bytes-derived shuffle-partition (= state-shard) count for a
-    staged replay at ``path`` — the rule stream_left_outer_join
-    introduced in r14, shared by every stateful streaming key (r15):
-    a stateful operator provisions and commits one state store per
-    shuffle partition per micro-batch (a stream-stream join: four),
-    so partition count is state-store fan-out, not just parallelism.
-    32-64 partitions on a few-MB replay is pure provisioning
-    overhead (measured 5.5 s → 2.2 s at sf0.1 going 32 → 8 on the
-    LOJ key); the same rule grows the count back for real volumes —
-    one partition per ~8 MB staged, floor 8, cap 200."""
-    import os
-
-    staged = sum(
-        os.path.getsize(os.path.join(path, f))
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
-    return int(max(8, min(200, staged // (8 << 20) + 8)))
-
 
 EVENT_STREAM_SCHEMA = T.StructType(
     [

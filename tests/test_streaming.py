@@ -607,6 +607,8 @@ def evict_only_runs(spark):
         "upsert": [],
         "dedup": [],
         "conf": [],
+        "ckpt_counts": os.path.join(base, "ckpt_counts"),
+        "ckpt_dedup": os.path.join(base, "ckpt_dedup"),
     }
     prev = []
     for k in range(5):
@@ -622,14 +624,14 @@ def evict_only_runs(spark):
         q = start_upsert_sink(
             tumbling_counts(read_event_stream(spark, land)),
             out["target"], ["window_start", "event_type"],
-            checkpoint=os.path.join(base, "ckpt_counts"),
+            checkpoint=out["ckpt_counts"],
         )
         out["conf"].append((spark.conf.get(_NO_DATA_CONF), spark.conf.get(_MULTI_OP_CONF)))
         q.awaitTermination(120)
         out["upsert"].append(q.recentProgress)
         q = start_tablelog_sink(
             stream_dedup(read_event_stream(spark, land)),
-            out["table"], checkpoint=os.path.join(base, "ckpt_dedup"),
+            out["table"], checkpoint=out["ckpt_dedup"],
         )
         out["conf"].append((spark.conf.get(_NO_DATA_CONF), spark.conf.get(_MULTI_OP_CONF)))
         q.awaitTermination(120)
@@ -686,8 +688,181 @@ def test_skipped_no_data_batch_defers_eviction_by_one_trigger(evict_only_runs):
         keys = {(ts - ts % _HOUR, t) for rows in runs["on_time"][: k + 1] for _, ts, t in rows}
         live = {key for key in keys if key[0] + _HOUR > wm_s}
         so = progress["stateOperators"][0]
-        # the upsert evaluates its batch twice (anti join + union) once
-        # the target exists; the progress sums state metrics over both
-        executions = so["numStateStoreInstances"] // so["numShufflePartitions"]
-        assert so["numRowsTotal"] == executions * len(live), f"batch {k}"
+        # the upsert evaluates its batch once, also when the target
+        # exists (anti-join key side and union read one persisted batch)
+        assert so["numStateStoreInstances"] == so["numShufflePartitions"], f"batch {k}"
+        assert so["numRowsTotal"] == len(live), f"batch {k}"
     assert live < keys  # the last batch did evict closed windows
+
+
+def test_upsert_sink_target_stays_one_file(evict_only_runs):
+    """Each merge rewrites the unpartitioned target into the file count
+    its bytes call for, so after five small sink batches the current
+    version is one file, not one per shuffle partition of the merge."""
+    import glob
+    import os
+
+    current = os.path.realpath(evict_only_runs["target"])
+    assert len(glob.glob(os.path.join(current, "*.parquet"))) == 1
+
+
+def _offset_log_conf(ckpt, batch_id):
+    """The session confs a checkpoint's offset log recorded for
+    ``batch_id`` (line 2 of ``offsets/<batch_id>``)."""
+    import json
+    import os
+
+    with open(os.path.join(ckpt, "offsets", str(batch_id))) as fh:
+        return json.loads(fh.read().splitlines()[1])["conf"]
+
+
+def test_new_sink_checkpoint_sized_by_shard_rule(evict_only_runs):
+    """A sink started on a fresh checkpoint over a landing dir of a few
+    KB runs one state shard per stateful operator, and its offset log
+    records that count, so every later restart keeps it."""
+    runs = evict_only_runs
+    for ckpt in (runs["ckpt_counts"], runs["ckpt_dedup"]):
+        assert _offset_log_conf(ckpt, 0)["spark.sql.shuffle.partitions"] == "1"
+    for progress in runs["upsert"] + runs["dedup"]:
+        for p in progress:
+            assert [so["numShufflePartitions"] for so in p["stateOperators"]] == [1]
+
+
+def test_existing_checkpoint_keeps_its_shard_count(spark, tmp_path, monkeypatch):
+    """The shard rule applies only where a checkpoint starts: a sink
+    checkpoint created at 8 shards keeps 8 when restarted, and the
+    target still equals the batch aggregation over every landed row."""
+    import os
+
+    from data_engineering_assessment_spark.streaming import sinks
+
+    land = tmp_path / "land"
+    land.mkdir()
+    target, ckpt = str(tmp_path / "target"), str(tmp_path / "ckpt")
+
+    def run():
+        stream = tumbling_counts(read_event_stream(spark, str(land)))
+        q = sinks.start_upsert_sink(stream, target, ["window_start", "event_type"], ckpt)
+        q.awaitTermination(120)
+        return q.recentProgress
+
+    landed = []
+    with monkeypatch.context() as m:
+        m.setattr(sinks, "state_shards", lambda nbytes: 8)
+        for k in range(2):
+            _land_events(str(land), k, _hour_of_events(k))
+            landed += _hour_of_events(k)
+            run()
+    for k in range(2, 4):
+        _land_events(str(land), k, _hour_of_events(k))
+        landed += _hour_of_events(k)
+        progress = run()
+        assert [p["stateOperators"][0]["numShufflePartitions"] for p in progress] == [8]
+    last = max(int(f) for f in os.listdir(os.path.join(ckpt, "offsets")) if f.isdigit())
+    assert _offset_log_conf(ckpt, last)["spark.sql.shuffle.partitions"] == "8"
+
+    want = {}
+    for eid, ts, etype in landed:
+        acc = want.setdefault((ts - ts % _HOUR, etype), [0, 0])
+        acc[0] += 1
+        acc[1] += round((float(eid % 5) + 0.25) * 100)
+    got = {
+        (r.window_start, r.event_type): [r.n, int(r.sum_value * 100)]
+        for r in spark.read.parquet(target).collect()
+    }
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "nbytes, shards",
+    [(0, 1), (1, 1), (8 << 20, 1), ((8 << 20) + 1, 2), (80 << 20, 10), (1 << 50, 200)],
+)
+def test_state_shards_rule(nbytes, shards):
+    from data_engineering_assessment_spark.streaming.sinks import state_shards
+
+    assert state_shards(nbytes) == shards
+
+
+def test_state_shard_conf_reads_file_source_bytes(spark, tmp_path):
+    """The rule is fed the bytes of every file source of the stream
+    (directory or glob; hidden names skipped, as the source skips
+    them); a stream with any non-file source gets no conf, so the
+    session default stands."""
+    from data_engineering_assessment_spark.streaming.sinks import state_shard_conf
+
+    def sparse_file(path, nbytes):
+        with open(path, "wb") as fh:
+            fh.truncate(nbytes)
+
+    land = tmp_path / "land"
+    land.mkdir()
+    _land_events(str(land), 0, _hour_of_events(0))
+    sparse_file(land / ".hidden.tmp", (8 << 20) + 1)
+    sparse_file(land / "_SUCCESS", (8 << 20) + 1)
+    one = {"spark.sql.shuffle.partitions": 1}
+    files = read_event_stream(spark, str(land))
+    assert state_shard_conf(files) == one
+    assert state_shard_conf(read_event_stream(spark, str(land / "*.parquet"))) == one
+    assert state_shard_conf(tumbling_counts(files)) == one
+
+    big = tmp_path / "big"
+    big.mkdir()
+    sparse_file(big / "blob.bin", (8 << 20) + 1)
+    blobs = (
+        spark.readStream.format("binaryFile")
+        .schema("path string, modificationTime timestamp, length long, content binary")
+        .load(str(big))
+        .select("length")
+    )
+    assert state_shard_conf(blobs) == {"spark.sql.shuffle.partitions": 2}
+
+    rate = spark.readStream.format("rate").load().select(F.col("value").alias("length"))
+    assert state_shard_conf(rate) == {}
+    assert state_shard_conf(blobs.unionByName(rate)) == {}
+
+
+def test_stream_starts_go_through_the_shard_rule():
+    """Every stream the package starts is started by ``sinks._start``
+    or ``sinks.drain_to_memory``, and ``sinks.state_shard_conf`` is
+    the one place that sets ``spark.sql.shuffle.partitions`` for one;
+    elsewhere the conf is only read, or set as the session default in
+    ``session.get_spark``."""
+    import ast
+    import pathlib
+
+    from data_engineering_assessment_spark import session
+    from data_engineering_assessment_spark.streaming import sinks
+
+    pkg = pathlib.Path(session.__file__).resolve().parent
+    starters = {("streaming/sinks.py", "_start"), ("streaming/sinks.py", "drain_to_memory")}
+    setters = {("streaming/sinks.py", "state_shard_conf"), ("session.py", "get_spark")}
+    assert {f for _, f in starters | setters} <= set(dir(sinks)) | set(dir(session))
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        tree = ast.parse(path.read_text())
+        owner = {}
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for node in ast.walk(fn):
+                    owner.setdefault(id(node), fn.name)  # outermost function
+        reads = {
+            id(node.args[0])
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "get"
+            and node.args
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr == "writeStream":
+                allowed = starters
+            elif (
+                isinstance(node, ast.Constant)
+                and node.value == "spark.sql.shuffle.partitions"
+                and id(node) not in reads
+            ):
+                allowed = setters
+            else:
+                continue
+            if (rel, owner.get(id(node))) not in allowed:
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, offenders
