@@ -10,9 +10,11 @@ paths).
 from __future__ import annotations
 
 import os
+import sys
 from collections.abc import Iterator, Mapping
 from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -32,6 +34,51 @@ _EXCLUDED_OPT_RULES = (
 )
 
 
+_PACKAGE = os.path.dirname(os.path.abspath(__file__))
+_NIO_FS_SOURCE = os.path.join(_PACKAGE, "jvm", "NioLocalFileSystem.java")
+# compiled JVM helpers live in the checkout, next to .scratch
+BUILD_ROOT = os.path.join(os.path.dirname(_PACKAGE), ".build")
+
+
+def _nio_fs_classes() -> str | None:
+    """Class directory of ``jvm/NioLocalFileSystem.java``, compiled
+    once per digest of the source and the Hadoop API jar it compiles
+    against (``layout.materialize``: atomic publish, superseded
+    digests reaped); None, with one line on stderr, where it cannot
+    be built (no ``javac``, a build root it cannot write)."""
+    import glob
+    import hashlib
+    import shutil
+    import subprocess
+
+    from pyspark.find_spark_home import _find_spark_home
+
+    from .sources import layout
+
+    javac = shutil.which("javac")
+    hadoop = sorted(glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar")))
+    why = "no javac" if not javac else "no hadoop-client-api jar" if not hadoop else None
+    if why is None:
+        with open(_NIO_FS_SOURCE, "rb") as fh:
+            digest = hashlib.md5(fh.read() + os.path.basename(hadoop[-1]).encode()).hexdigest()
+
+        def build(tmp: str) -> None:
+            os.makedirs(tmp)
+            subprocess.run(
+                [javac, "--release", "17", "-d", tmp, "-cp", hadoop[-1], _NIO_FS_SOURCE],
+                check=True, capture_output=True, text=True,
+            )
+
+        try:
+            return layout.materialize(os.path.join(BUILD_ROOT, f"niofs_{digest[:8]}"), build)
+        except subprocess.CalledProcessError as e:
+            why = f"javac exited {e.returncode}"
+        except OSError as e:
+            why = str(e)
+    print(f"spark-graft: {why}; local files go through Hadoop's own filesystem", file=sys.stderr)
+    return None
+
+
 def get_spark(
     app_name: str = "dea-spark",
     cpus: int | None = None,
@@ -44,6 +91,14 @@ def get_spark(
     safe at 1000-executor scale: AQE coalesces / skew-splits at
     runtime, so ``shuffle.partitions`` is an upper bound, not a tuning
     knob to get exactly right.
+
+    When this call launches the JVM, Hadoop's local filesystem is
+    swapped for ``jvm/NioLocalFileSystem.java`` (compiled on first use,
+    see :func:`_nio_fs_classes`), which sets permissions and reads
+    links in-process instead of forking ``chmod``/``readlink`` per
+    file.  The swap needs the class on the JVM's classpath, which is
+    fixed at launch, so a session on a JVM that is already running
+    keeps Hadoop's own filesystem.
     """
     cpus = cpus or default_parallelism()
     builder = (
@@ -69,6 +124,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
     )
+    launches_jvm = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+    classes = _nio_fs_classes() if launches_jvm else None
+    if classes:
+        builder = (
+            builder.config("spark.driver.extraClassPath", classes)
+            .config("spark.hadoop.fs.file.impl", "sparkgraft.NioLocalFileSystem")
+            .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "sparkgraft.NioLocalFileSystem$Fs")
+        )
     return builder.getOrCreate()
 
 

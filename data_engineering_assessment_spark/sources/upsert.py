@@ -16,6 +16,13 @@ partitions that actually contain updated keys are read, merged and
 replaced — untouched partition directories are never rewritten
 (asserted via file mtimes in tests/test_layout.py).  A
 date-partitioned upsert rewrites a few directories.
+
+Each unpartitioned version this module publishes has its schema
+recorded, keyed by the version directory's realpath and mtime
+(``publish_version`` writes a version once), so the next merge reads
+it with that schema instead of running a schema-inference job.  A
+version written by anyone else is inferred, so a target with columns
+the updates lack still fails ``unionByName`` instead of losing them.
 """
 
 from __future__ import annotations
@@ -24,8 +31,47 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .layout import dataset_path, parquet_file_count, publish_version
+
+# (realpath, st_mtime_ns) of a version this module published -> the
+# schema a parquet read of it reports
+_SCHEMAS: dict[tuple[str, int], T.StructType] = {}
+
+
+def _version_key(path: str) -> tuple[str, int]:
+    real = os.path.realpath(path)
+    return real, os.stat(real).st_mtime_ns
+
+
+def _as_read(t: T.DataType) -> T.DataType:
+    """``t`` as a parquet read reports it: every field, array element
+    and map value nullable."""
+    if isinstance(t, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_read(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_as_read(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_as_read(t.keyType), _as_read(t.valueType), True)
+    return t
+
+
+def _publish(path: str, df: DataFrame) -> None:
+    """``publish_version`` ``df`` at ``path`` and record its schema."""
+    publish_version(path, df.write.parquet)
+    for key in list(_SCHEMAS):
+        if not os.path.isdir(key[0]):
+            _SCHEMAS.pop(key, None)  # a version publish_version has deleted
+    _SCHEMAS[_version_key(path)] = _as_read(df.schema)
+
+
+def _read_target(spark: SparkSession, path: str) -> DataFrame:
+    schema = _SCHEMAS.get(_version_key(path))
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def upsert_parquet(
@@ -61,15 +107,15 @@ def upsert_parquet(
             try:
                 dataset_path(path)
             except FileNotFoundError:
-                publish_version(path, updates.write.parquet)
+                _publish(path, updates)
                 return
             merged = (
-                spark.read.parquet(path)
+                _read_target(spark, path)
                 .join(updates.select(*keys), keys, "left_anti")
                 .unionByName(updates)
                 .coalesce(parquet_file_count(path))
             )
-            publish_version(path, merged.write.parquet)
+            _publish(path, merged)
             return
 
         if not os.path.exists(path):

@@ -17,10 +17,12 @@ whole target.
 State shards: a stateful operator keeps one state store per shuffle
 partition and loads and commits every one of them in every
 micro-batch, so each shard is a fixed cost per batch, paid whatever
-the batch holds: a commit creates four files (delta, checksum and
-their ``.crc`` files) through Hadoop's local filesystem, each tens of
-milliseconds where the filesystem forks ``chmod`` per file.  The
-count is fixed when a query first starts (``spark.sql.shuffle.partitions``
+the batch holds.  A commit creates four files (delta, checksum and
+their ``.crc`` files) through Hadoop's local filesystem; it takes a
+median 8 ms on 4 vCPU with the in-process filesystem
+``session.get_spark`` binds, 61 ms where Hadoop forks ``chmod`` per
+file and ``readlink`` per rename.  The count
+is fixed when a query first starts (``spark.sql.shuffle.partitions``
 at that moment) and the checkpoint keeps it: a restart restores it
 from the offset log whatever the session says.  Every stream started
 here (both sinks and :func:`drain_to_memory`) is sized by one rule,

@@ -262,6 +262,46 @@ def test_compact_parquet_survives_mid_swap_crash(spark, tmp_path):
     assert spark.read.parquet(path).count() == 5_000
 
 
+def test_upsert_records_the_schema_a_read_infers(spark, tmp_path):
+    """The schema the upsert records for a version it published equals
+    the one Spark infers from that version's files, so reading it with
+    the recorded schema (no inference job) reads the same table."""
+    from data_engineering_assessment_spark.sources import upsert
+
+    path = str(tmp_path / "t")
+    rows = spark.sql(
+        "SELECT id, CAST(id AS DECIMAL(12, 2)) AS amount, 'x' AS s, "
+        "timestamp'2024-03-01 10:00:00' + make_interval(0, 0, 0, 0, 0, id) AS ts, "
+        "timestamp_ntz'2024-03-01 10:00:00' AS ts_ntz, "
+        "array(named_struct('k', id, 'v', 'a')) AS arr, map('k', id) AS m "
+        "FROM range(4)"
+    )
+    assert not rows.schema["id"].nullable  # written non-nullable, read nullable
+    upsert.upsert_parquet(spark, rows.where("id < 3"), path, "id")
+    assert upsert._SCHEMAS[upsert._version_key(path)] == spark.read.parquet(path).schema
+    upsert.upsert_parquet(spark, rows.where("id >= 2"), path, "id")
+    recorded = upsert._SCHEMAS[upsert._version_key(path)]
+    assert recorded == spark.read.parquet(path).schema
+    got = spark.read.schema(recorded).parquet(path)
+    assert sorted(r.id for r in got.collect()) == [0, 1, 2, 3]
+
+
+def test_upsert_infers_a_version_it_did_not_publish(spark, tmp_path):
+    """A target version written by another writer, here with a column
+    the updates lack, is inferred, so the merge fails loudly instead of
+    reading it with the recorded schema and dropping that column."""
+    from pyspark.errors import AnalysisException
+
+    from data_engineering_assessment_spark.sources.upsert import upsert_parquet
+
+    path = str(tmp_path / "t")
+    upsert_parquet(spark, spark.range(3), path, "id")
+    layout.publish_version(path, spark.range(3).withColumn("extra", F.lit(1)).write.parquet)
+    with pytest.raises(AnalysisException):
+        upsert_parquet(spark, spark.range(2, 5), path, "id")
+    assert spark.read.parquet(path).columns == ["id", "extra"]
+
+
 def _failing_upsert(spark, updates, path):
     from data_engineering_assessment_spark.sources.upsert import upsert_parquet
 
