@@ -5,6 +5,14 @@ The reference runs Spark 3.0.0 local mode with default confs
 for determinism (session timezone) and for scale (AQE, shuffle
 partitions sized to the cluster, Arrow transfer for the few pandas
 paths).
+
+The call that launches the driver JVM also fixes what only a launch
+can (:func:`_launch`): the in-process local filesystem
+(``jvm/NioLocalFileSystem.java``, built into a jar) on the classpath,
+and an AppCDS class-data archive of the classes a session loads,
+dumped once per checkout into ``.build/`` from ``jvm/cds_exercise.py``
+and mapped by every later launch, so the JVM starts and warms up in
+about half the time.
 """
 
 from __future__ import annotations
@@ -36,20 +44,28 @@ _EXCLUDED_OPT_RULES = (
 
 _PACKAGE = os.path.dirname(os.path.abspath(__file__))
 _NIO_FS_SOURCE = os.path.join(_PACKAGE, "jvm", "NioLocalFileSystem.java")
+# the fixed workload the driver JVM's class-data archive is dumped from
+_CDS_EXERCISE = os.path.join(_PACKAGE, "jvm", "cds_exercise.py")
+_NIO_FS_JAR = "NioLocalFileSystem.jar"
+_CDS_ARCHIVE = "driver.jsa"
 # compiled JVM helpers live in the checkout, next to .scratch
 BUILD_ROOT = os.path.join(os.path.dirname(_PACKAGE), ".build")
 
 
-def _nio_fs_classes() -> str | None:
-    """Class directory of ``jvm/NioLocalFileSystem.java``, compiled
-    once per digest of the source and the Hadoop API jar it compiles
-    against (``layout.materialize``: atomic publish, superseded
-    digests reaped); None, with one line on stderr, where it cannot
-    be built (no ``javac``, a build root it cannot write)."""
+def _nio_fs_jar() -> str | None:
+    """Jar of ``jvm/NioLocalFileSystem.java``, compiled once per digest
+    of the source and the Hadoop API jar it compiles against
+    (``layout.materialize``: atomic publish, superseded digests
+    reaped) and packed with ``zipfile`` (a jar, not a class directory:
+    the JVM dumps no class-data archive with a non-empty directory on
+    its classpath); None, with one line on stderr, where it cannot be
+    built (no ``javac``, a build root it cannot write)."""
     import glob
     import hashlib
     import shutil
     import subprocess
+    import tempfile
+    import zipfile
 
     from pyspark.find_spark_home import _find_spark_home
 
@@ -60,23 +76,217 @@ def _nio_fs_classes() -> str | None:
     why = "no javac" if not javac else "no hadoop-client-api jar" if not hadoop else None
     if why is None:
         with open(_NIO_FS_SOURCE, "rb") as fh:
-            digest = hashlib.md5(fh.read() + os.path.basename(hadoop[-1]).encode()).hexdigest()
+            # b"jar": a directory published as classes, not as a jar, is superseded
+            digest = hashlib.md5(fh.read() + os.path.basename(hadoop[-1]).encode() + b"jar").hexdigest()
 
         def build(tmp: str) -> None:
             os.makedirs(tmp)
-            subprocess.run(
-                [javac, "--release", "17", "-d", tmp, "-cp", hadoop[-1], _NIO_FS_SOURCE],
-                check=True, capture_output=True, text=True,
-            )
+            with tempfile.TemporaryDirectory(dir=tmp) as classes:
+                subprocess.run(
+                    [javac, "--release", "17", "-d", classes, "-cp", hadoop[-1], _NIO_FS_SOURCE],
+                    check=True, capture_output=True, text=True,
+                )
+                with zipfile.ZipFile(os.path.join(tmp, _NIO_FS_JAR), "w", zipfile.ZIP_DEFLATED) as jar:
+                    for root, _, files in os.walk(classes):
+                        for f in sorted(files):
+                            jar.write(os.path.join(root, f), os.path.relpath(os.path.join(root, f), classes))
 
         try:
-            return layout.materialize(os.path.join(BUILD_ROOT, f"niofs_{digest[:8]}"), build)
+            path = layout.materialize(os.path.join(BUILD_ROOT, f"niofs_{digest[:8]}"), build)
+            return os.path.join(path, _NIO_FS_JAR)
         except subprocess.CalledProcessError as e:
             why = f"javac exited {e.returncode}"
         except OSError as e:
             why = str(e)
     print(f"spark-graft: {why}; local files go through Hadoop's own filesystem", file=sys.stderr)
     return None
+
+
+def _launch_conf_dir() -> str | None:
+    """The ``SPARK_CONF_DIR`` a driver JVM launch uses: an empty
+    directory under ``BUILD_ROOT`` in place of an effective conf dir
+    that is missing or holds only ``*.template`` files (spark-submit
+    and log4j read no template, so the launch is the same; the JVM
+    dumps no class-data archive with a non-empty directory on its
+    classpath, and the conf dir is on it).  None, with one line on
+    stderr, when the conf dir holds a real file: the launch then keeps
+    it, and runs without an archive."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+    real = sorted(f for f in os.listdir(conf) if not f.endswith(".template")) if os.path.isdir(conf) else []
+    why = f"{conf} holds {real[0]}" if real else None
+    if why is None:
+        empty = os.path.join(BUILD_ROOT, "spark-conf")
+        try:
+            os.makedirs(empty, exist_ok=True)
+            return empty
+        except OSError as e:
+            why = str(e)
+    print(f"spark-graft: {why}; the driver JVM starts without a class-data archive", file=sys.stderr)
+    return None
+
+
+def _java_home() -> str:
+    """The java runtime spark-submit launches: ``$JAVA_HOME`` or the
+    ``java`` on ``PATH`` (``bin/spark-class``)."""
+    import shutil
+
+    java = os.path.join(os.environ["JAVA_HOME"], "bin", "java") if os.environ.get("JAVA_HOME") else shutil.which("java")
+    return os.path.dirname(os.path.dirname(os.path.realpath(java or "java")))
+
+
+def _cds_dir(jar: str) -> str:
+    """``BUILD_ROOT/cds_<digest8>``: the archive's directory, keyed by
+    the java runtime, Spark's jars and the shim ``jar`` (path, size,
+    mtime: what the JVM checks the archive against) and the exercise
+    source."""
+    import glob
+    import hashlib
+    import json
+
+    from pyspark.find_spark_home import _find_spark_home
+
+    home = _java_home()
+    key = []
+    for p in [jar, os.path.join(home, "release"), os.path.join(home, "lib", "modules")] + sorted(
+        glob.glob(os.path.join(_find_spark_home(), "jars", "*.jar"))
+    ):
+        st = os.stat(p)
+        key.append([p, st.st_size, st.st_mtime_ns])
+    with open(_CDS_EXERCISE, "rb") as fh:
+        digest = hashlib.md5(json.dumps(key).encode() + fh.read()).hexdigest()
+    return os.path.join(BUILD_ROOT, f"cds_{digest[:8]}")
+
+
+def _cds_archive(jar: str) -> str | None:
+    """The driver JVM's AppCDS archive (``-XX:SharedArchiveFile``),
+    dumped once per :func:`_cds_dir` through ``layout.materialize``.
+
+    The build runs ``jvm/cds_exercise.py`` in one child process
+    (:func:`_dump_archive`) and checks the dump with ``-Xshare:on``
+    before it is published: the JVM does not refuse a truncated
+    archive, it dies of SIGBUS mapping it.  A build that fails
+    publishes its reason instead of an archive, so later launches do
+    not pay for it again (remove the directory to retry).  An archive
+    whose size is not the one recorded at its build is discarded (the
+    next launch rebuilds it), never mapped.  None, with one line on
+    stderr, in every case without a usable archive."""
+    import json
+    import subprocess
+
+    from .sources import layout
+
+    def build(tmp: str) -> dict:
+        os.makedirs(tmp)
+        out = os.path.join(tmp, _CDS_ARCHIVE)
+        try:
+            return {"size": _dump_archive(out)}
+        except (OSError, LookupError, ValueError, RuntimeError, subprocess.SubprocessError) as e:
+            if os.path.exists(out):
+                os.remove(out)
+            return {"error": str(e) or type(e).__name__}
+
+    try:
+        path = layout.materialize(_cds_dir(jar), build)
+        archive = os.path.join(path, _CDS_ARCHIVE)
+        with open(os.path.join(path, layout._META)) as fh:
+            meta = json.load(fh)
+        size = os.path.getsize(archive) if os.path.exists(archive) else None
+    except (OSError, ValueError) as e:
+        why = str(e)
+    else:
+        if "error" in meta:
+            why = f"its build failed ({meta['error']}; remove {path} to retry)"
+        elif size == meta.get("size"):
+            return archive
+        else:
+            layout.discard(path)
+            why = f"{archive} is {size} bytes, not {meta.get('size')}: discarded, the next launch rebuilds it"
+    print(f"spark-graft: class-data archive: {why}; the driver JVM starts without one", file=sys.stderr)
+    return None
+
+
+def _dump_archive(out: str) -> int:
+    """Run the exercise in one child process that dumps the driver
+    JVM's class-data archive to ``out`` and waits for its JVM to exit;
+    check the archive with ``-Xshare:on`` (which fails where
+    ``-Xshare:auto`` would crash or skip it); return its size."""
+    import json
+    import signal
+    import subprocess
+
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [os.path.dirname(_PACKAGE), env.get("PYTHONPATH")]))
+    child = subprocess.Popen(
+        [sys.executable, _CDS_EXERCISE, out], env=env, start_new_session=True,
+        stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+    )
+    try:
+        stdout, stderr = child.communicate(timeout=900)
+    finally:
+        if child.poll() is None:  # timed out: its JVM is in its session too
+            os.killpg(child.pid, signal.SIGKILL)
+            child.wait()
+    if child.returncode:
+        raise RuntimeError(f"the exercise exited {child.returncode}{_last_line(stderr)}")
+    lines = stdout.strip().splitlines()
+    if not lines:
+        raise RuntimeError("the exercise reported no JVM")
+    jvm = json.loads(lines[-1])
+    check = subprocess.run(
+        [os.path.join(jvm["java_home"], "bin", "java"), "-Xshare:on", f"-XX:SharedArchiveFile={out}"]
+        + [a for a in jvm["args"] if not a.startswith("-XX:ArchiveClassesAtExit")]
+        + ["-cp", jvm["class_path"], "-version"],
+        capture_output=True, text=True, timeout=120,
+    )
+    if check.returncode:
+        raise RuntimeError(f"the archive failed its -Xshare:on check{_last_line(check.stdout + check.stderr)}")
+    return os.path.getsize(out)
+
+
+def _last_line(text: str) -> str:
+    lines = text.strip().splitlines()
+    return f": {lines[-1][:300]}" if lines else ""
+
+
+def _archive_option(jar: str) -> str | None:
+    """The JVM option for the class-data archive of a launch with the
+    shim ``jar``, if there is one.  ``jvm/cds_exercise.py`` puts the
+    dump flag in its place, so the dump run launches through
+    :func:`get_spark` itself: its classpath and heap flags are the ones
+    the archive is later mapped with, as the JVM requires."""
+    archive = _cds_archive(jar)
+    return f"-XX:SharedArchiveFile={archive}" if archive else None
+
+
+def _launch(builder: SparkSession.Builder) -> SparkSession:
+    """Launch the driver JVM for ``builder``: the shim jar goes on the
+    classpath and is bound for ``file:``; ``SPARK_CONF_DIR`` is
+    :func:`_launch_conf_dir` for the launch only (the caller's
+    environment is restored); with both, :func:`_archive_option` is
+    the JVM option for the class-data archive."""
+    jar = _nio_fs_jar()
+    conf_dir = _launch_conf_dir() if jar else None
+    option = _archive_option(jar) if conf_dir else None
+    if jar:
+        builder = (
+            builder.config("spark.driver.extraClassPath", jar)
+            .config("spark.hadoop.fs.file.impl", "sparkgraft.NioLocalFileSystem")
+            .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "sparkgraft.NioLocalFileSystem$Fs")
+        )
+    if option:
+        builder = builder.config("spark.driver.extraJavaOptions", option)
+    saved = os.environ.get("SPARK_CONF_DIR")
+    if conf_dir:
+        os.environ["SPARK_CONF_DIR"] = conf_dir
+    try:
+        return builder.getOrCreate()
+    finally:
+        if saved is None:
+            os.environ.pop("SPARK_CONF_DIR", None)
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
 
 
 def get_spark(
@@ -92,13 +302,25 @@ def get_spark(
     runtime, so ``shuffle.partitions`` is an upper bound, not a tuning
     knob to get exactly right.
 
-    When this call launches the JVM, Hadoop's local filesystem is
-    swapped for ``jvm/NioLocalFileSystem.java`` (compiled on first use,
-    see :func:`_nio_fs_classes`), which sets permissions and reads
-    links in-process instead of forking ``chmod``/``readlink`` per
-    file.  The swap needs the class on the JVM's classpath, which is
-    fixed at launch, so a session on a JVM that is already running
-    keeps Hadoop's own filesystem.
+    When this call launches the JVM (:func:`_launch`):
+
+    - Hadoop's local filesystem is swapped for
+      ``jvm/NioLocalFileSystem.java`` (compiled into a jar on first
+      use, see :func:`_nio_fs_jar`), which sets permissions and
+      reads links in-process instead of forking ``chmod``/``readlink``
+      per file.
+    - The JVM maps the class-data archive of :func:`_cds_archive`
+      (``-XX:SharedArchiveFile``; dumped once per checkout, ~1 min on
+      first use), so the classes of Spark and of the engine's common
+      paths load from one mapped file instead of ~290 jars: start-up
+      and the first queries take about half the time.  Without the
+      shim, with a real file in the conf dir or without a usable
+      archive, one stderr line says so and the JVM starts as it would
+      without one; a JVM that finds the archive does not match its
+      classpath warns and runs without it.
+
+    Both need flags fixed at launch, so a session on a JVM that is
+    already running keeps Hadoop's own filesystem and sets neither.
     """
     cpus = cpus or default_parallelism()
     builder = (
@@ -124,15 +346,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
     )
-    launches_jvm = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
-    classes = _nio_fs_classes() if launches_jvm else None
-    if classes:
-        builder = (
-            builder.config("spark.driver.extraClassPath", classes)
-            .config("spark.hadoop.fs.file.impl", "sparkgraft.NioLocalFileSystem")
-            .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "sparkgraft.NioLocalFileSystem$Fs")
-        )
-    return builder.getOrCreate()
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return builder.getOrCreate()
+    return _launch(builder)
 
 
 def ensure_deterministic_session(spark: SparkSession) -> SparkSession:

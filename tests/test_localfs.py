@@ -94,7 +94,9 @@ def test_write_path_spawns_no_process(tmp_path):
 def test_session_without_the_shim_on_its_jvm_keeps_hadoop_fs(tmp_path):
     """A ``get_spark`` on a JVM something else launched leaves the shim
     confs unset (the class is not on that JVM's classpath, and naming
-    it would fail every file operation), and file I/O still works."""
+    it would fail every file operation) and adds no JVM option (the
+    class-data archive applies to a launch only), and file I/O still
+    works."""
     out = _run(
         f"""
         import os, sys
@@ -102,13 +104,18 @@ def test_session_without_the_shim_on_its_jvm_keeps_hadoop_fs(tmp_path):
         from pyspark.sql import SparkSession
         from data_engineering_assessment_spark.session import get_spark
 
-        SparkSession.builder.master("local[1]").getOrCreate().stop()
+        plain = SparkSession.builder.master("local[1]").getOrCreate()
+        # Spark itself sets its module options here; get_spark adds none
+        spark_own = plain.sparkContext.getConf().get("spark.driver.extraJavaOptions")
+        plain.stop()
         spark = get_spark(app_name="no-shim", cpus=1, shuffle_partitions=1)
         conf = spark.sparkContext.getConf()
         for key in ("spark.driver.extraClassPath", "spark.hadoop.fs.file.impl",
                     "spark.hadoop.fs.AbstractFileSystem.file.impl"):
             assert conf.get(key) is None, (key, conf.get(key))
             assert spark.conf.get(key, None) is None, key
+        assert conf.get("spark.driver.extraJavaOptions") == spark_own
+        assert "-XX:SharedArchiveFile" not in (spark_own or "")
         jvm = spark._jvm
         fs = jvm.org.apache.hadoop.fs.FileSystem.get(
             jvm.java.net.URI("file:///"), spark.sparkContext._jsc.hadoopConfiguration())
@@ -131,9 +138,9 @@ def test_shim_build_falls_back_with_one_line(monkeypatch, tmp_path, capsys):
 
     (tmp_path / "file").write_text("")
     monkeypatch.setattr(session, "BUILD_ROOT", str(tmp_path / "file" / "build"))
-    assert session._nio_fs_classes() is None
+    assert session._nio_fs_jar() is None
     monkeypatch.setattr(shutil, "which", lambda name: None)
-    assert session._nio_fs_classes() is None
+    assert session._nio_fs_jar() is None
     lines = capsys.readouterr().err.splitlines()
     assert len(lines) == 2 and "no javac" in lines[1], lines
     assert all(line.endswith("local files go through Hadoop's own filesystem") for line in lines)
