@@ -34,10 +34,9 @@ def _materialized(df: DataFrame) -> DataFrame:
     construction once per join side (measured 2× end-to-end on the
     shingle tier).  Spark's CacheManager keys entries by canonicalized
     plan, so repeated calls over the same input reuse one entry, and
-    MEMORY_AND_DISK spills rather than OOMs at scale.  For one-shot
-    100 TB jobs where the cache write itself is the bottleneck, a
-    saner trade may be recompute — flip ``cache_index=False`` on the
-    operator."""
+    MEMORY_AND_DISK spills rather than OOMs at scale.  Nothing
+    unpersists the entry yet: it stays resident for the life of the
+    session (ROADMAP item 6 gives it an owner)."""
     return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
@@ -71,7 +70,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
-    cache_index: bool = True,
     df_cap: int | None = None,
 ) -> DataFrame:
     """Exact n-gram-Jaccard near-dup pairs via an inverted shingle index.
@@ -110,8 +108,7 @@ def ngram_jaccard_pairs(
     collision changes exact ``inter`` counts.
     """
     sh = _shingled(docs, id_col, text_col, n)
-    if cache_index:
-        sh = _materialized(sh)
+    sh = _materialized(sh)
     ex = sh.select(
         "doc", F.size("shingles").alias("n_sh"), F.explode("shingles").alias("sh")
     )
@@ -196,7 +193,6 @@ def minhash_candidate_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     min_est_jaccard: float = 0.5,
-    cache_index: bool = True,
 ) -> DataFrame:
     """LSH banding: split signatures into ``bands`` rows-per-band
     chunks, bucket-join on (band index, band content), then estimate
@@ -208,8 +204,7 @@ def minhash_candidate_pairs(
     """
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(docs, id_col, text_col, n, num_hashes)
-    if cache_index:
-        sigs = _materialized(sigs)
+    sigs = _materialized(sigs)
     band_structs = F.array(
         *[
             F.struct(
@@ -344,7 +339,6 @@ def simhash_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    cache_index: bool = True,
     bits: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance.
@@ -402,8 +396,7 @@ def simhash_pairs(
         .select("doc", F.transform("ws", lambda w: F.xxhash64(w)).alias("hs"))
         .select("doc", simhash_of(F.col("hs"), bits).alias("sh"))
     )
-    if cache_index:
-        h = _materialized(h)
+    h = _materialized(h)
     chunks = F.array(
         *[
             F.struct(
@@ -441,7 +434,6 @@ def containment_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold_micro: int = 800_000,
-    cache_index: bool = True,
     df_cap: int | None = None,
 ) -> DataFrame:
     """Directed shingle-containment pairs: |A∩B| / |A| ≥ threshold.
@@ -468,8 +460,7 @@ def containment_pairs(
     shingle.  No cross join (asserted in PLANS.md).
     """
     sh = _shingled(docs, id_col, text_col, n)
-    if cache_index:
-        sh = _materialized(sh)
+    sh = _materialized(sh)
     ex = sh.select(
         "doc", F.size("shingles").alias("n_sh"), F.explode("shingles").alias("sh")
     )

@@ -1,87 +1,162 @@
-"""Iterative graph operators: connected components for dedup clustering.
+"""Iterative graph operators and the one loop they all run through.
+
+:func:`fixpoint` is the engine's only iteration mechanism.  Every
+iterative builder — both connected-components forms below, PageRank
+(fixed rounds and converged), k-hop reach, k-round Bellman–Ford and
+k-core peeling — hands it a start state and a ``step``; the operator
+owns what makes a driver-side loop of Spark jobs scale:
+
+- lineage: each state that feeds another round is localCheckpointed,
+  so round k plans one round, never k nested ones (without it the
+  job DAG, and the work re-run per action, grows with every round);
+- actions: at most one scalar action per round, never a collect of
+  data;
+- memory: a round's checkpoint blocks are released once the next
+  round's blocks exist, so the resident state stays one round deep
+  however many rounds run.
+
+One rule picks the checkpoint, and it follows from whether a loop has
+a per-round measure:
+
+- with a ``measure``, the new state is checkpointed LAZILY and the
+  measure (the round's one scalar action) is its first action, so
+  the state's final stage materializes in the job that scans it: one
+  job per round instead of materialize-then-scan.  With AQE on, a
+  lazy localCheckpoint still runs the plan's shuffle stages when the
+  frame is built (AQE materializes exchanges to finalize the plan),
+  so the fold removes the separate job, not the shuffle work;
+- without one, every state that feeds another round is checkpointed
+  EAGERLY (nested lazy rounds would re-run round j once per later
+  round), and the last state is not checkpointed at all: it is
+  consumed once, by the caller's output action.
+
+localCheckpoint blocks are evictable but not recomputable, so each
+step should end in a shuffle (a join, an aggregate, a distinct): an
+un-shuffled narrow union under a checkpoint lost blocks at the sf10
+notch, post-shuffle blocks did not.
 
 Near-dup *pairs* (any dedup tier) become duplicate *clusters* by
 connected components; the canonical document of a cluster is its
-minimum id.  This is the one genuinely iterative algorithm in the
-engine — expressed as a driver-controlled loop of joins + min-aggs
-(label propagation), each iteration a bounded Spark job:
-
-    label(v) ← min(label(v), min over neighbors u of label(u))
-
-converges in O(component diameter) rounds.  Scale properties:
-
-- state per round is one (node, label) table, hash-partitioned on
-  node; each round is join(edges) + groupBy(min) — two shuffles over
-  data proportional to |E| + |V|, never materializing paths;
-- lineage is truncated with localCheckpoint every round, so plans
-  stay O(1) deep regardless of iteration count (without it, round k
-  re-plans k nested joins and the job DAG explodes);
-- convergence check is a count of changed labels (a scalar action per
-  round, not a collect of data).
-
-Near-dup graphs have tiny diameters (duplicate cliques/chains), so
-rounds ≈ 3-5 in practice; `max_iter` bounds the pathological case.
+minimum id.  :func:`connected_components` is min-label propagation,
+O(diameter) rounds; :func:`connected_components_alternating` is
+star contraction, O(log n) rounds.  Both run to their fixpoint:
+labels only decrease, so it always comes.
 """
 
 from __future__ import annotations
 
+import operator
+from collections.abc import Callable
+from typing import Any
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import release_checkpoint
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    rounds: int | None = None,
+    measure: Callable[[DataFrame], Any] | None = None,
+    converged: Callable[[Any, Any], bool] | None = None,
+) -> tuple[DataFrame, int]:
+    """Iterate ``state = step(state, i)`` for rounds ``i = 0, 1, …``;
+    return the final state and the number of rounds built.
+
+    With ``measure``, each new state is lazily checkpointed and
+    ``measure(state)`` is the round's one scalar action; the loop
+    stops after the first round where ``converged(previous, current)``
+    holds (``previous`` is None in round 0) or after ``rounds``
+    rounds, if given.  Without ``converged`` the loop stops once the
+    measure stops changing: the input state is then measured first,
+    as given, like a round 0 that built nothing, so a loop whose first
+    round changes nothing stops there.  The operator does not
+    checkpoint the input; a caller whose input is an expensive plan
+    checkpoints it (lazily, after a shuffle) before the loop, so that
+    measure materializes it.  Without ``measure``, exactly ``rounds``
+    rounds run, each state but the last eagerly checkpointed.
+
+    The operator releases every checkpoint it made once the next
+    round's blocks exist, except the one the returned state reads.
+    It never releases a frame the caller made: ``state`` as passed
+    in, or anything a step reads besides the state (the caller's
+    loop-invariant inputs)."""
+    if measure is None and rounds is None:
+        raise ValueError("fixpoint: a loop without a measure needs a round count")
+    made = None  # the checkpoint ``state`` is, once this operator made one
+    previous = None
+    if measure is not None and converged is None:
+        previous = measure(state)
+        converged = operator.eq
+    i = 0
+    while rounds is None or i < rounds:
+        nxt = step(state, i)
+        i += 1
+        if measure is not None:
+            nxt = nxt.localCheckpoint(eager=False)
+            current = measure(nxt)
+        elif i < rounds:
+            nxt = nxt.localCheckpoint(eager=True)
+        else:
+            return nxt, i  # read once by the caller; it still reads ``made``
+        if made is not None:
+            release_checkpoint(made)
+        state = made = nxt
+        if measure is not None:
+            if converged(previous, current):
+                break
+            previous = current
+    return state, i
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 20,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``;
-    ``component`` is the minimum node id reachable from the node."""
-    # undirected: symmetrize once
+    ``component`` is the minimum node id reachable from the node.
+
+    Min-label propagation: ``label(v) ← min(label(v), min over
+    neighbors u of label(u))`` until a round changes no label, in
+    O(component diameter) rounds.  Each round is one join of the edge
+    frame with the labels plus one node-keyed min-aggregate; the
+    round's measure is the count of changed labels.  The symmetrized
+    edge frame is built once and lazily checkpointed, so round 0's
+    measure materializes it in the job that first scans it.  It is
+    not pre-partitioned on the join key: under AQE a checkpoint keeps
+    no partitioning, so a repartition before it only adds a shuffle.
+    It runs to the fixpoint: labels only decrease, so it always comes."""
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    labels = (
-        e.select(F.col("u").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        # min neighbor label per node, merged with own label
+    nodes = e.select(F.col("v").alias("node")).distinct()
+    start = nodes.select("node", F.col("node").alias("label"), F.col("node").alias("prev"))
+
+    def propagate(s: DataFrame, _: int) -> DataFrame:
+        labels = s.select("node", "label")
         nbr = (
             e.join(labels, e.v == labels.node)
-            .select(F.col("u").alias("node"), "label")
-            .groupBy("node")
+            .groupBy(F.col("u").alias("node"))
             .agg(F.min("label").alias("nbr_label"))
         )
-        # LAZY checkpoint scanned by the changed-count (the
-        # alternating loop's r10 A/B discipline, −34% there; guide
-        # §1.2/§2.4).  Measured nuance (r15): with AQE on, even a
-        # lazy localCheckpoint executes the plan's SHUFFLE stages at
-        # DataFrame-construction time (AQE must materialize exchanges
-        # to finalize the plan), so the fold only moves the FINAL
-        # result stage into the count's job — it removes the separate
-        # materialize-then-scan job, not the shuffle work.  The frame
-        # is post-shuffle (groupBy + join on node), so the blocks are
-        # the reliable kind (ADVICE r10).
-        new_labels = (
-            labels.join(nbr, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nbr_label", F.col("label"))).alias(
-                    "new_label"
-                ),
-                "label",
-            )
-        ).localCheckpoint(eager=False)
-        changed = new_labels.filter(F.col("new_label") < F.col("label")).count()
-        labels = new_labels.select("node", F.col("new_label").alias("label"))
-        if changed == 0:
-            break
+        return labels.join(nbr, "node", "left").select(
+            "node",
+            F.least(F.col("label"), F.coalesce("nbr_label", F.col("label"))).alias("label"),
+            F.col("label").alias("prev"),
+        )
+
+    labels, _ = fixpoint(
+        start,
+        propagate,
+        measure=lambda s: s.filter(F.col("label") < F.col("prev")).count(),
+        converged=lambda _, changed: changed == 0,
+    )
     return labels.select("node", F.col("label").alias("component"))
 
 
@@ -91,7 +166,7 @@ def edge_fingerprint(df: DataFrame) -> tuple:
     action.  The hash term accumulates as exact BIGINT: a double sum
     loses low-order bits once the running total passes 2⁵³ (~4M
     edges of 2³¹-magnitude terms), silently weakening change
-    detection at exactly the target scales (ADVICE r9 fix; pinned by
+    detection at exactly the target scales (pinned by
     tests/test_insights.py::
     test_edge_fingerprint_exact_integer_accumulation)."""
     row = df.agg(
@@ -107,7 +182,6 @@ def connected_components_alternating(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 20,
     edges_distinct: bool = False,
     edges_symmetric: bool = False,
 ) -> tuple[DataFrame, int]:
@@ -122,54 +196,34 @@ def connected_components_alternating(
 
     Per round: large-star (group the symmetrized adjacency by node,
     attach every LARGER neighbor to the neighborhood minimum) then
-    small-star (orient edges high→low, attach node + smaller
-    neighbors to their minimum).  Both are one |E|-sized min-aggregate
-    plus one join — no path materialization.  Convergence is detected
-    with a per-round fingerprint (edge count + endpoint checksums),
-    ONE scalar action per round, and lineage is truncated per round
-    with localCheckpoint, same discipline as the propagation loop.
-    The round checkpoint is LAZY (eager=False), so the round's own
-    fingerprint action folds the FINAL stage's materialization into
-    the job that scans it (r10 A/B: best-of-5 6.07 → 4.02 s at sf0.1,
-    −34%; output identical).  Measured nuance (r15): with AQE on, a
-    lazy localCheckpoint still executes the plan's shuffle stages at
-    DataFrame-construction time, so the fold removes the separate
-    materialize-then-scan job rather than deferring the shuffles.
+    small-star (attach node + smaller neighbors to their minimum).
+    Both are one |E|-sized min-aggregate plus one join — no path
+    materialization.  The round's measure is :func:`edge_fingerprint`
+    (edge count + endpoint checksums) of the edge frame; the loop
+    stops when it stops changing.
 
     Returns (labels, rounds): labels only covers nodes present in
     ``edges`` (join back to the full node frame for isolates, as the
     callers do); ``rounds`` is the number of alternating passes run.
 
     ``edges_distinct=True`` asserts the caller already deduplicated
-    ``edges`` (every in-repo caller passes a post-``distinct()``,
-    checkpointed frame), skipping a redundant |E| shuffle +
-    re-checkpoint here (r15, guide §2.4 — remove the duplicate
-    exchange outright).  ``edges_symmetric=True`` asserts the caller's
-    edge set already contains BOTH orientations of every edge (the
-    per-order pair explode emits ordered pairs both ways), so round
-    1's symmetrizing union would double every directed pair — skipped
-    (r16; later rounds always re-symmetrize because star output is
-    oriented high→low).  Round-15 job-count trims (guide §1.2): the
-    node set is LAZY (it is consumed exactly once, by the final
-    labels join, which folds its computation into the output action
-    instead of a dedicated upfront job), and the pre-loop edge frame
-    is lazily checkpointed — the first fingerprint action
-    materializes it in the same job, the same fold the round loop
-    already used.
+    ``edges``, skipping a redundant |E| shuffle here.
+    ``edges_symmetric=True`` asserts the caller's edge set already
+    contains BOTH orientations of every edge, so round 0's
+    symmetrizing union, which would double every directed pair, is
+    skipped; later rounds always re-symmetrize because star output
+    is oriented high→low.
 
-    Round-16 per-round exchange cuts (guide §2.4),
-    both result-neutral by construction:
+    Two per-round exchanges are avoided by construction, both
+    result-neutral:
 
-    - the old small-star re-orientation (``greatest/least`` +
-      ``distinct``) was an IDENTITY over the large-star output: every
-      large edge is (v, m) with m ≤ u < v (m is a neighborhood min
-      including u, and only neighbors v > u are re-pointed), so the
-      frame is already strictly high→low oriented, and it is already
-      distinct — one |E| exchange + dedup per round, removed;
-    - the small-star explode emitted (u, m) once per EDGE of u before
-      deduplicating; the (u, m) "self" rows are exactly the rows of
+    - the large-star output needs no re-orientation: every large edge
+      is (v, m) with m ≤ u < v (m is a neighborhood min including u,
+      and only neighbors v > u are re-pointed), so the frame is
+      already strictly high→low oriented, and it is already distinct;
+    - the small-star (u, m) "self" rows are exactly the rows of
       ``smins`` (one per node, distinct by construction), so the
-      final distinct now ingests |E| + |V| rows instead of 2·|E|.
+      final distinct ingests |E| + |V| rows instead of 2·|E|.
     """
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # node set BEFORE dropping self-loops: (n, n) still names node n
@@ -180,24 +234,15 @@ def connected_components_alternating(
     )
     e = raw.filter(F.col("u") != F.col("v"))
     if not edges_distinct:
-        # our own distinct: post-shuffle, so checkpoint it (lazily —
-        # the fingerprint action below materializes it in-job)
+        # post-shuffle, so checkpoint it; the first fingerprint
+        # materializes it.  A caller's distinct frame is measured as given.
         e = e.distinct().localCheckpoint(eager=False)
-    # with edges_distinct=True the input is the caller's already-
-    # materialized frame; the narrow self-loop filter is re-read from
-    # its blocks (3 reads: fingerprint + the two union sides of round
-    # 1) — cheaper than writing a second |E| copy of blocks
 
-    prev = edge_fingerprint(e)
-    rounds = 0
-    symmetric = edges_symmetric
-    for _ in range(max_iter):
-        rounds += 1
+    def star(e: DataFrame, i: int) -> DataFrame:
         # large-star: symmetrize, take each node's neighborhood min
         # (incl. self), re-point every strictly-larger neighbor at it
-        if symmetric:
-            bi = e  # caller-guaranteed: both orientations present
-            symmetric = False  # star output below is oriented
+        if i == 0 and edges_symmetric:
+            bi = e
         else:
             bi = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = bi.groupBy("u").agg(F.min("v").alias("mn")).select(
@@ -211,11 +256,9 @@ def connected_components_alternating(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .distinct()
         )
-        # small-star over the (already-oriented, already-distinct)
-        # large output: each node u points at its smaller-neighborhood
+        # small-star: each node u points at its smaller-neighborhood
         # min m, and so do its smaller neighbors v.  The (u, m) rows
-        # ARE smins (distinct per node); only the (v, m) rows need the
-        # edge join.  Content is identical to the old explode form.
+        # ARE smins; only the (v, m) rows need the edge join.
         smins = large.groupBy("u").agg(F.min("v").alias("m"))
         small_self = smins.filter(F.col("u") != F.col("m")).select(
             "u", F.col("m").alias("v")
@@ -225,16 +268,9 @@ def connected_components_alternating(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .filter(F.col("u") != F.col("v"))
         )
-        small = (
-            small_self.union(small_nbrs)
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        cur = edge_fingerprint(small)  # one scalar action per round
-        e = small
-        if cur == prev:
-            break
-        prev = cur
+        return small_self.union(small_nbrs).distinct()
+
+    e, rounds = fixpoint(e, star, measure=edge_fingerprint)
     final = (
         e.groupBy(F.col("u").alias("node"))
         .agg(F.min("v").alias("lbl"))

@@ -962,33 +962,21 @@ def _pagerank_oracle(iters: int) -> str:
 _PAGERANK_ITERS = 6
 
 
-@query("graph_pagerank", oracle=_pagerank_oracle(_PAGERANK_ITERS))
-def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the bipartite customer↔supplier trade graph
-    (distinct (custkey, suppkey) pairs from orders ⋈ lineitem,
-    symmetrized; customers get even node ids, suppliers odd).
+def _pagerank_graph(spark: SparkSession, sf_dir: str):
+    """The trade graph and the one PageRank round shared by
+    [[graph_pagerank]] and [[graph_pagerank_converged]]: returns
+    ``(r0, step)``, the uniform start ranks ``(node, r)`` and the
+    :func:`..operators.graph.fixpoint` step that maps ranks to the
+    next round's ranks.
 
-    Exact integer fixed point: ranks live in 1e-12 mass units, each
-    round is ``tp + ⌊85·Σ⌊r(u)/deg(u)⌋ / 100⌋`` — floor divisions and
-    BIGINT sums are order-independent, so the result is bit-identical
-    under any partitioning and in the (mechanically unrolled) DuckDB
-    oracle, something float PageRank cannot promise.
-
-    Scale: the per-round state is one (node, rank) table hash-
-    partitioned on node; each round costs join(edges)+groupBy — the
-    standard |E|-proportional plan — with localCheckpoint truncating
-    lineage so round k never re-plans rounds 1..k-1.  The only driver
-    scalars are the node count (one bounded action) fed into the two
-    teleport constants.
-
-    Why a FIXED round count, not convergence detection: the oracle is
-    a statically-unrolled CTE chain generated from the same round
-    count, so the iteration count is part of the cross-engine
-    contract — a data-dependent early exit would desync engine and
-    oracle (and add one residual action per round, the only per-round
-    driver traffic this key currently avoids).  A production variant
-    without an exactness oracle would stop on
-    ``max(|r_k - r_{k-1}|) < eps`` computed in the same round's agg."""
+    Nodes are the distinct (custkey, suppkey) pairs from orders ⋈
+    lineitem, symmetrized; customers get even node ids, suppliers
+    odd.  Ranks live in exact 1e-12 mass units and each round is
+    ``tp + ⌊85·Σ⌊r(u)/deg(u)⌋ / 100⌋``: floor divisions and BIGINT
+    sums are order-independent, so ranks are bit-identical under any
+    partitioning and in the unrolled DuckDB oracle.  The only driver
+    scalar is the node count (one bounded action) behind the two
+    teleport constants."""
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     base = (
@@ -1001,137 +989,33 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # base is distinct and parity-oriented (u even, v odd), so the
     # reversed half is disjoint by parity — no second distinct needed.
-    # The union is shuffled (repartition on the loop join key) BEFORE
-    # the checkpoint: localCheckpoint blocks are evictable but NOT
-    # recomputable, and an un-shuffled narrow union under a checkpoint
-    # lost blocks at the sf10 notch ("Block rdd_N does not exist" —
-    # graph_khop_reach's NOTE; ADVICE r10).  The shuffle also leaves e
-    # hash-partitioned on u, which deg's groupBy and e_deg's join
-    # below reuse exchange-free.
-    e = (
-        base.union(base.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition(F.col("u"))
-        .localCheckpoint(eager=True)
-    )
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("c")).localCheckpoint(eager=True)
-    n_nodes = deg.count()  # bounded scalar action: one BIGINT to the driver
-    tp = 15 * 10**12 // (100 * n_nodes)
-    # Degree is loop-invariant: annotate every edge with its source
-    # degree ONCE (one join total instead of one per round), hash-
-    # partitioned on the per-round join key before the checkpoint
-    # (localCheckpoint preserves outputPartitioning, so when the rank
-    # table outgrows broadcast at real scale the |E| side joins with
-    # NO per-round exchange).  At local SF the rank side broadcasts
-    # and the timing is unchanged — the win is the 100-TB plan shape.
-    e_deg = (
-        e.join(deg, "u")
-        .select("u", "v", "c")
-        .repartition(F.col("u"))
-        .localCheckpoint(eager=True)
-    )
-    r = deg.select(F.col("u").alias("node"), F.lit(10**12 // n_nodes).alias("r"))
-    for i in range(_PAGERANK_ITERS):
-        # SHUFFLE_HASH build on the node-sized rank side — skips the
-        # per-round |E| re-sort the default SMJ paid (see the
-        # converged twin's A/B); ranks bit-identical.
-        r = r.hint("shuffle_hash")
-        r = (
-            e_deg.join(r, e_deg.u == r.node)
-            .select(F.col("v"), F.expr("r div c").alias("contrib"))
-            .groupBy("v")
-            .agg(F.sum("contrib").alias("s"))
-            .select(
-                F.col("v").alias("node"),
-                (F.lit(tp) + F.expr("(85 * s) div 100")).cast("long").alias("r"),
-            )
-        )
-        # no per-round action exists (unlike connected components'
-        # convergence count), so lineage-only chaining is free; one
-        # mid-loop checkpoint bounds plan depth for long runs
-        if i == _PAGERANK_ITERS // 2:
-            r = r.localCheckpoint(eager=False)
-    return r.select(
-        "node", (F.col("node") % 2 == 0).alias("is_customer"), F.col("r").alias("rank_e12")
-    )
-
-
-@query("graph_pagerank_converged")
-def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production PageRank: the [[graph_pagerank]] recurrence with the
-    convergence early-exit that key's docstring specifies but cannot
-    itself use (its oracle is a statically-unrolled CTE chain, so a
-    data-dependent round count would desync engine and oracle — this
-    variant is rows-only by design for exactly that reason; its pytest
-    asserts it reproduces the fixed-round key's exact ranks).
-
-    Stopping rule: exact-integer L∞ residual max|r_k − r_{k−1}| ≤ 1%
-    of total rank mass (1e10 of 1e12), cap 20 rounds.  The integer
-    recurrence contracts at exactly the damping factor (measured:
-    residual ratio 0.8494/round on the trade graph), so the rule is
-    equivalent to "iterate until the largest per-node movement is
-    rank-stable at the 1% level" and fires data-dependently (~13
-    rounds here) rather than at the cap.
-
-    The residual is FOLDED into the round-update checkpoint (r10 A/B):
-    the prev-rank join and |new − prev| land in the
-    same materialization as the rank update, so the per-round driver
-    round-trip is a bare max() over already-checkpointed rows instead
-    of a separate join pass — measured best-of-5 4.92 → 4.28 s at
-    sf0.1 (−13%), bit-identical output (the r8/r9 negative-A/B
-    write-ups are the precedent for recording these either way).
-
-    Scale: identical per-round plan to [[graph_pagerank]] (degree
-    annotated once, edges hash-partitioned on the join key and
-    checkpointed, |E|-proportional join+groupBy per round); the
-    residual's full-outer join is on the same node partitioning the
-    round already produces."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    base = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("u"),
-            (F.col("l_suppkey") * 2 + 1).alias("v"),
-        )
-        .distinct()
-    )
-    # base is distinct and parity-oriented (u even, v odd), so the
-    # reversed half is disjoint by parity — no second distinct needed.
-    # Same post-shuffle checkpoint shape as [[graph_pagerank]] (ADVICE
-    # r10): the narrow union is repartitioned on the loop join key
-    # before checkpointing, so its blocks sit under a shuffle boundary
-    # (safe at scale) and deg/e_deg consume the u-partitioning
-    # exchange-free instead of recomputing orders⋈lineitem twice.
-    e = (
-        base.union(base.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition(F.col("u"))
-        .localCheckpoint(eager=True)
+    # Degree is loop-invariant: every edge carries its source degree,
+    # computed once.  The union is hash-partitioned on u, and deg's
+    # groupBy and the degree join reuse that one exchange; the
+    # checkpoint sits on the join's output, so its blocks are the
+    # reliable post-shuffle kind (an un-shuffled narrow union under a
+    # checkpoint lost blocks at the sf10 notch).
+    e = base.union(base.select(F.col("v").alias("u"), F.col("u").alias("v"))).repartition(
+        F.col("u")
     )
     deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("c"))
-    e_deg = (
-        e.join(deg, "u")
-        .select("u", "v", "c")
-        .repartition(F.col("u"))
-        .localCheckpoint(eager=True)
-    )
-    n_nodes = deg.count()  # bounded scalar action: one BIGINT
+    e_deg = e.join(deg, "u").select("u", "v", "c").localCheckpoint(eager=True)
+    nodes = e_deg.select(F.col("u").alias("node")).distinct()
+    n_nodes = nodes.count()  # bounded scalar action: one BIGINT
     tp = 15 * 10**12 // (100 * n_nodes)
-    r = deg.select(
-        F.col("u").alias("node"),
-        F.lit(10**12 // n_nodes).alias("r"),
-        F.lit(0).cast("long").alias("d"),
-    ).localCheckpoint(eager=True)
-    rounds, tol, max_rounds = 0, 10**12 // 100, 20
-    while rounds < max_rounds:
-        # SHUFFLE_HASH build on the node-sized rank side (r16, guide
-        # §3.1): both sides are already hash-partitioned on the join
-        # key (e_deg by checkpoint, r by the previous round's output),
-        # so the default SMJ's only remaining cost was re-SORTING the
-        # |E| edge frame every round; hashing the small side streams
-        # the edges unsorted.  A/B best-of-3 at sf0.1: 3.20 → 2.86 s
-        # (cold session 5.78 → 3.72), identical ranks and round count.
-        rr = r.hint("shuffle_hash")
-        upd = (
+    r0 = nodes.select("node", F.lit(10**12 // n_nodes).alias("r"))
+
+    def step(r: DataFrame, _: int) -> DataFrame:
+        # Broadcast the node-sized rank side up to the Bellman–Ford
+        # relax join's size guard (BF_BROADCAST_MAX_NODES, far past
+        # any graded corpus): the |E| edge side then streams where it
+        # lies every round.  Under AQE a checkpoint keeps no
+        # partitioning, so a shuffled join re-exchanges every edge
+        # each round; past the guard, a SHUFFLE_HASH build on the rank
+        # side at least skips the sort of the |E| side an SMJ pays.
+        rr = r.select("node", "r")
+        rr = F.broadcast(rr) if n_nodes <= BF_BROADCAST_MAX_NODES else rr.hint("shuffle_hash")
+        return (
             e_deg.join(rr, e_deg.u == rr.node)
             .select(F.col("v"), F.expr("r div c").alias("contrib"))
             .groupBy("v")
@@ -1141,11 +1025,70 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.lit(tp) + F.expr("(85 * s) div 100")).cast("long").alias("r"),
             )
         )
-        # fold |new − prev| into the same checkpointed materialization
-        # as the rank update: the residual action below is then a bare
-        # max() over checkpointed rows, not a second join pass
-        nxt = (
-            upd.join(r.select("node", F.col("r").alias("prev")), "node", "full_outer")
+
+    return r0, step
+
+
+@query("graph_pagerank", oracle=_pagerank_oracle(_PAGERANK_ITERS))
+def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PageRank over the bipartite customer↔supplier trade graph
+    (:func:`_pagerank_graph`: exact integer ranks in 1e-12 mass
+    units, bit-identical to the mechanically unrolled DuckDB oracle,
+    something float PageRank cannot promise).
+
+    Scale: the per-round state is one node-sized (node, rank)
+    table; each round costs join(edges)+groupBy — the
+    standard |E|-proportional plan — run through
+    :func:`..operators.graph.fixpoint`, which checkpoints every round
+    but the last, so round k never re-plans rounds 1..k-1.
+
+    Why a FIXED round count, not convergence detection: the oracle is
+    a statically-unrolled CTE chain generated from the same round
+    count, so the iteration count is part of the cross-engine
+    contract — a data-dependent early exit would desync engine and
+    oracle.  [[graph_pagerank_converged]] is the variant that stops
+    on ``max(|r_k - r_{k-1}|)``."""
+    from ..operators.graph import fixpoint
+
+    r0, step = _pagerank_graph(spark, sf_dir)
+    r, _ = fixpoint(r0, step, rounds=_PAGERANK_ITERS)
+    return r.select(
+        "node", (F.col("node") % 2 == 0).alias("is_customer"), F.col("r").alias("rank_e12")
+    )
+
+
+@query("graph_pagerank_converged")
+def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Production PageRank: the [[graph_pagerank]] recurrence with the
+    convergence early-exit that key cannot itself use (its oracle is a
+    statically-unrolled CTE chain, so a data-dependent round count
+    would desync engine and oracle — this variant is rows-only by
+    design for exactly that reason; its pytest asserts it reproduces
+    the fixed-round key's exact ranks).
+
+    Stopping rule: exact-integer L∞ residual max|r_k − r_{k−1}| ≤ 1%
+    of total rank mass (1e10 of 1e12), cap 20 rounds.  The integer
+    recurrence contracts at exactly the damping factor (measured:
+    residual ratio 0.8494/round on the trade graph), so the rule is
+    equivalent to "iterate until the largest per-node movement is
+    rank-stable at the 1% level" and fires data-dependently (~13
+    rounds here) rather than at the cap.
+
+    The residual is folded into the round's state: the prev-rank join
+    and |new − prev| land in the same checkpointed materialization as
+    the rank update, so the round's one scalar action is a bare max()
+    over checkpointed rows instead of a separate join pass.  The
+    residual's full-outer join re-shuffles the previous ranks every
+    round: under AQE a checkpoint keeps no output partitioning, so
+    only the new ranks' side arrives partitioned on node."""
+    from ..operators.graph import fixpoint
+
+    r0, step = _pagerank_graph(spark, sf_dir)
+
+    def step_with_residual(r: DataFrame, i: int) -> DataFrame:
+        return (
+            step(r, i)
+            .join(r.select("node", F.col("r").alias("prev")), "node", "full_outer")
             .select(
                 "node",
                 F.coalesce("r", F.lit(0)).alias("r"),
@@ -1153,14 +1096,16 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.coalesce("r", F.lit(0)) - F.coalesce("prev", F.lit(0))
                 ).alias("d"),
             )
-            .localCheckpoint(eager=False)  # also truncates lineage per round
         )
-        rounds += 1
-        # residual: exact integer, one scalar to the driver per round
-        res = nxt.agg(F.max("d").alias("res")).collect()[0]["res"]
-        r = nxt
-        if res <= tol:
-            break
+
+    tol = 10**12 // 100
+    r, rounds = fixpoint(
+        r0,
+        step_with_residual,
+        rounds=20,
+        measure=lambda r: r.agg(F.max("d").alias("res")).collect()[0]["res"],
+        converged=lambda _, res: res <= tol,
+    )
     return r.select(
         "node",
         (F.col("node") % 2 == 0).alias("is_customer"),
@@ -2659,17 +2604,19 @@ def event_interarrival_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 # an |E| scan) and is part of the layout's physical contract.
 EDGE_BUCKETS = 32
 
-# Broadcast-reach bound for the Bellman–Ford relax join's node-sized
-# cost table (round 12).  The per-round cost
-# frame is two longs per node (~16 B + row overhead), so 100M nodes is
-# ~2–3 GB built — inside Spark's hard broadcast limits (512M rows /
-# 8 GB) with margin for the driver heap, and far past any graded
-# corpus (sf100 holds ~7.6M nodes).  Past this bound the relax join
-# degrades to SMJ against the bucket-sorted edge table, which shuffles
-# only the node-sized side (the edge side is exchange- and sort-free
-# by layout).  ``BF_BROADCAST_COSTS`` overrides the automatic choice
-# for tests/harnesses: True forces the hint, False forces the SMJ
-# path, None (graded default) picks by node count.
+# Broadcast-reach bound for the node-sized side of the per-round
+# joins: the Bellman–Ford relax join's cost table and the PageRank
+# round's rank table.  Either frame is two longs per node (~16 B + row
+# overhead), so 100M nodes is ~2–3 GB built — inside Spark's hard
+# broadcast limits (512M rows / 8 GB) with margin for the driver heap,
+# and far past any graded corpus (sf100 holds ~7.6M nodes).  Past
+# this bound the relax join degrades to SMJ against the bucket-sorted
+# edge table, which shuffles only the node-sized side (the edge side
+# is exchange- and sort-free by layout), and the PageRank round to a
+# shuffled hash join.  ``BF_BROADCAST_COSTS`` overrides the relax
+# join's automatic choice for tests/harnesses: True forces the hint,
+# False forces the SMJ path, None (graded default) picks by node
+# count.
 BF_BROADCAST_MAX_NODES = 100_000_000
 BF_BROADCAST_COSTS: bool | None = None
 
@@ -2686,11 +2633,10 @@ def _trade_edges(spark: SparkSession, sf_dir: str):
     stored in a sidecar meta file; every node appears as ``u`` because
     the frame is symmetrized).
 
-    Why a persisted layout (round 12): both graph
-    loops previously re-derived orders⋈lineitem AND re-shuffled /
-    localCheckpointed the |E| frame on every run — at the sf100 notch
-    that per-run |E| checkpoint was the single-box disk ceiling
-    (SCALING_SF100.md).  Bucketing by ``u`` (Murmur3, the same hash
+    Why a persisted layout: re-deriving orders⋈lineitem and
+    re-shuffling / localCheckpointing the |E| frame on every run made
+    that per-run |E| checkpoint the single-box disk ceiling at the
+    sf100 notch (SCALING_SF100.md).  Bucketing by ``u`` (Murmur3, the same hash
     HashPartitioning uses) moves that shuffle to WRITE time, once per
     corpus+code version: every per-hop/per-round join on ``u`` then
     scans the table exchange-free and sort-free on the |E| side, and
@@ -2734,50 +2680,40 @@ def _trade_edges(spark: SparkSession, sf_dir: str):
         fns=(_trade_edges,),
         stats=lambda t: {"n_nodes": t.select("u").distinct().count()},
         # pure cache of live orders/lineitem derivatives: rebuild if
-        # the corpus files change in place (round-13 ADVICE) — unlike
-        # the fixed-model incremental indexes, which must NOT
+        # the corpus files change in place — unlike the fixed-model
+        # incremental indexes, which must NOT
         track_src=True,
     )
     return e, meta["n_nodes"]
 
 
-def _khop_frontiers(e, seeds, hops: int):
-    """Bounded-frontier BFS loop of [[graph_khop_reach]].
+def _khop_reached(e: DataFrame, seeds: DataFrame, hops: int) -> DataFrame:
+    """Bounded-frontier BFS of [[graph_khop_reach]]: ``(n, hop)``, the
+    hop at which each node within ``hops`` of ``seeds`` is first
+    reached (seeds are hop 0).
 
-    Without checkpointing, frontier k's logical subtree nests every
-    earlier frontier (each hop joins the previous frontier AND
-    anti-joins the visited union), so the single output action
-    re-evaluates hop-j work once per later hop — ~O(hops²) joins vs
-    O(hops) once materialized.  Eager per-hop checkpointing beat the
-    nested lazy lineage at every measured notch with identical
-    outputs (best-of-3, 2026-08-16: sf0.1 4.24→3.75 s, sf1 7.36→7.08 s,
-    sf10 90.7→69.2 s), so each per-hop frontier except the last is
-    eagerly localCheckpointed; the frame is post-shuffle at that point
-    (distinct + left_anti), so the blocks are the reliable
-    32-partition kind (see the NOTE on ``e`` below —
-    un-shuffled narrow checkpoints lose evictable-unrecomputable
-    blocks at the sf10 notch).  ``visited`` stays a plain union of
-    the (now materialized) frontiers, which the next anti-join
-    shuffles anyway."""
-    frontiers = [seeds]
-    visited = seeds
-    for hop in range(hops):
-        nxt = (
-            e.join(frontiers[-1].withColumnRenamed("n", "u"), "u", "semi")
-            .select(F.col("v").alias("n"))
-            .distinct()
-            .join(visited, "n", "left_anti")
+    The state is the reached set itself.  Round i takes its frontier
+    (the nodes first reached at hop i), follows their edges, and keeps
+    each node's minimum hop — one node-keyed min-aggregate, so a node
+    reached before keeps its hop and the state stays node-sized and
+    post-shuffle.  It runs through :func:`..operators.graph.fixpoint`
+    without a measure: without per-round checkpoints round k's plan
+    nests every earlier round, and the single output action would
+    re-evaluate hop-j work once per later hop (eager per-hop
+    checkpointing beat the nested lineage at sf0.1, sf1 and sf10 with
+    identical outputs)."""
+    from ..operators.graph import fixpoint
+
+    def expand(reached: DataFrame, i: int) -> DataFrame:
+        frontier = reached.filter(F.col("hop") == i).select(F.col("n").alias("u"))
+        nxt = e.join(frontier, "u", "semi").select(
+            F.col("v").alias("n"), F.lit(i + 1).cast("long").alias("hop")
         )
-        # the LAST frontier is consumed exactly once (its count in the
-        # output union) and feeds no later hop, so materializing it as
-        # its own job buys nothing — skip the checkpoint there (r15,
-        # guide §1.2: one fewer job per run, identical re-evaluation
-        # count)
-        if hop < hops - 1:
-            nxt = nxt.localCheckpoint(eager=True)
-        frontiers.append(nxt)
-        visited = visited.union(nxt)
-    return frontiers
+        return reached.unionAll(nxt).groupBy("n").agg(F.min("hop").alias("hop"))
+
+    start = seeds.select("n", F.lit(0).cast("long").alias("hop"))
+    reached, _ = fixpoint(start, expand, rounds=hops)
+    return reached
 
 
 @query(
@@ -2823,22 +2759,20 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE chain and engine/oracle can never desync on round count.
 
     Scale: textbook frontier BFS — each hop is one equi-join of the
-    edge table with the current frontier plus an anti-join against
-    the visited set; frontiers and visited sets are node-sized.  The
-    edge set is read from the PERSISTED bucketed-by-u layout
-    (:func:`_trade_edges`, round 12): the weighted table's (u, v)
-    pairs are exactly the distinct symmetrized pairs (its groupBy key
-    set), so khop shares one layout with [[graph_shortest_cost_k]].
-    Each hop's join on u is exchange- and sort-free on the |E| side
-    by bucket spec, and per-run cost drops from an orders⋈lineitem
+    edge table with the current frontier plus one node-keyed
+    min-aggregate over the reached set (:func:`_khop_reached`); the
+    frontier and the reached set are node-sized.  The edge set is
+    read from the PERSISTED bucketed-by-u layout
+    (:func:`_trade_edges`): the weighted table's (u, v) pairs are
+    exactly the distinct symmetrized pairs (its groupBy key set), so
+    khop shares one layout with [[graph_shortest_cost_k]].  Each
+    hop's join on u is exchange- and sort-free on the |E| side by
+    bucket spec, and per-run cost drops from an orders⋈lineitem
     derivation + |E| localCheckpoint (the sf100 single-box disk
     ceiling, SCALING_SF100.md) to a pruned columnar scan per hop.
-    Per-hop frontiers are eagerly checkpointed (round 11): see
-    _khop_frontiers — the nested lazy lineage re-evaluates
-    every earlier hop once per later hop, and materializing each
-    (post-shuffle) frontier won the A/B at all three notches (sf0.1
-    4.24→3.75 s, sf1 7.36→7.08 s, sf10 90.7→69.2 s, identical
-    outputs)."""
+    The per-hop counts come from one conditional aggregate, so a hop
+    that reaches nothing still reports 0."""
+    hops = 3
     e, _ = _trade_edges(spark, sf_dir)
     e = e.select("u", "v")
     seeds = (
@@ -2846,17 +2780,12 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("u").alias("n"))
         .distinct()
     )
-    frontiers = _khop_frontiers(e, seeds, hops=3)
-    counts = [
-        f.agg(F.count(F.lit(1)).cast("long").alias("n_reached")).select(
-            F.lit(i).cast("long").alias("hop"), "n_reached"
-        )
-        for i, f in enumerate(frontiers)
-    ]
-    out = counts[0]
-    for c in counts[1:]:
-        out = out.unionAll(c)
-    return out.orderBy("hop")
+    reached = _khop_reached(e, seeds, hops)
+    counts = reached.agg(
+        *[F.count(F.when(F.col("hop") == h, 1)).alias(f"h{h}") for h in range(hops + 1)]
+    )
+    pairs = ", ".join(f"{h}L, h{h}" for h in range(hops + 1))
+    return counts.selectExpr(f"stack({hops + 1}, {pairs}) AS (hop, n_reached)").orderBy("hop")
 
 
 @query(
@@ -2916,18 +2845,20 @@ def graph_shortest_cost_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per round, one |E|-proportional equi-join (edges ⋈ current
     costs on the source node) + one node-sized groupBy-min — the
     textbook distributed Bellman–Ford relaxation; no driver scalars.
-    Each round's cost frame is eagerly checkpointed (round 11): the
-    nested lazy lineage re-evaluated round j once per later round,
-    and materializing the node-sized post-shuffle frame won the
-    same-session A/B sf1 12.39→8.78 s, sf10 105.6→62.7 s (identical
+    The rounds run through :func:`..operators.graph.fixpoint`
+    without a measure, so every cost frame but the last is eagerly
+    checkpointed: the nested lazy lineage re-evaluated round j once
+    per later round (eager won at sf1 and sf10 with identical
     outputs).  The weighted edge frame is read from the PERSISTED
-    bucketed-by-u layout (:func:`_trade_edges`, round 12 — shared
-    with [[graph_khop_reach]]): the per-run |E| derivation +
+    bucketed-by-u layout (:func:`_trade_edges`, shared with
+    [[graph_khop_reach]]): the per-run |E| derivation +
     localCheckpoint it replaces was the sf100 single-box disk
     ceiling (SCALING_SF100.md), and the bucket spec makes every
     round's join exchange- and sort-free on the |E| side under
     EITHER relax strategy below.  Output is TakeOrderedAndProject
     (top-20), bounded at any corpus size."""
+    from ..operators.graph import fixpoint
+
     e, n_nodes = _trade_edges(spark, sf_dir)
     d = (
         e.filter((F.col("u") % 2 == 0) & (F.col("u") < 10))
@@ -2952,25 +2883,17 @@ def graph_shortest_cost_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         if BF_BROADCAST_COSTS is not None
         else n_nodes <= BF_BROADCAST_MAX_NODES
     )
-    for rnd in range(3):
+
+    def relax(d: DataFrame, _: int) -> DataFrame:
         probe = d.select(F.col("n").alias("u"), F.col("c").alias("cu"))
         if use_bcast:
             probe = F.broadcast(probe)
         relaxed = e.join(probe, "u").select(
             F.col("v").alias("n"), (F.col("cu") + F.col("w")).alias("c")
         )
-        # Eagerly checkpoint each round's cost frame (post-shuffle:
-        # the groupBy exchanges on n, so the blocks are the reliable
-        # kind) — the nested lazy lineage re-evaluates round j once
-        # per later round, the khop frontier lesson (_khop_frontiers;
-        # same-session best-of-2 A/B: sf1 12.39→8.78 s, sf10
-        # 105.6→62.7 s, identical outputs and oracle replay green).
-        # The LAST round's frame is consumed exactly once (the top-20
-        # output action) and feeds no later round, so its checkpoint
-        # job buys nothing — skipped (r15, guide §1.2).
-        d = d.unionAll(relaxed).groupBy("n").agg(F.min("c").alias("c"))
-        if rnd < 2:
-            d = d.localCheckpoint(eager=True)
+        return d.unionAll(relaxed).groupBy("n").agg(F.min("c").alias("c"))
+
+    d, _ = fixpoint(d, relax, rounds=3)
     return (
         d.orderBy("c", "n")
         .limit(20)

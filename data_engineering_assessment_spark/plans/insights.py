@@ -36,6 +36,8 @@ is part of the SURVEY.md §2.4 training-data/ops extension tier.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -788,9 +790,7 @@ def orders_monthly_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "graph_connected_components",
-    oracle="""
+_COSUPPLY_CC_ORACLE = """
     WITH RECURSIVE nodes AS (
       SELECT s_suppkey AS n FROM supplier
     ), su AS (
@@ -815,41 +815,31 @@ def orders_monthly_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(CASE WHEN sz = 1 THEN 1 ELSE 0 END) AS BIGINT)
              AS singleton_components
     FROM sizes
-    """,
-)
-def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components of the supplier co-supply graph (suppliers
-    adjacent when they ship lines of the same order) by distributed
-    min-label propagation — the clustering primitive under entity
-    resolution and [[dedup_clusters]], here summarized as component
-    count / largest size / singleton count.
+    """
 
-    Engine: labels start as the node id; each round every node takes
-    min(own label, neighbors' labels) until a round changes nothing —
-    the textbook hash-join form of label propagation.  Each round is
-    one |E|-proportional equi-join plus a node-keyed min-aggregate,
-    with ``localCheckpoint`` truncating lineage and ONE scalar action
-    (the changed-count) per round, exactly the [[graph_pagerank_converged]]
-    loop discipline.  Round count is the graph diameter, not a guess.
-    The oracle's recursive CTE enumerates decreasing-label paths —
-    fine on the DuckDB side's small frame, never what the engine does.
 
-    Scale: edge building fans out per order (bounded by lines/order,
-    ≤7 here) then dedups — never an all-pairs over suppliers; the
-    label frame is node-sized; the two count scalars join back as
-    broadcast single rows (sanctioned BNLJ)."""
-    # Edge build via per-order supplier sets (r15, guide §2.3/§2.4;
-    # the market_basket explode pattern, A/B'd −25% with identical
-    # output): groupBy(order)+collect_set is ONE map-side-combined
-    # shuffle and the ordered-pair explode is narrow.  Sets stay
-    # bounded by lines-per-order (≤7), so the explode cannot blow up
-    # on a hot order at any scale.  r16 (guide §2.3 — shuffle fewer
-    # bytes): the explode emits each undirected edge ONCE (sorted set
-    # → x < y slice pairs), so the dedup ingests |E| rows instead of
-    # 2|E|, and the symmetric orientation is restored AFTER the
-    # distinct by a narrow union with the swap.  A/B best-of-3 at
-    # sf0.1: 4.23 → 3.39 s (second session 4.77 → 4.08), identical
-    # components.
+def _cosupply_components(
+    spark: SparkSession, sf_dir: str, components: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """Component summary of the supplier co-supply graph (suppliers
+    adjacent when they ship lines of the same order), shared by
+    [[graph_connected_components]] and [[graph_cc_alternating]]:
+    ``components(half)`` labels the nodes of the one-sided edge frame
+    ``half`` (x < y) with ``(node, component)``; suppliers with no
+    edge are added back as their own components, then summarized as
+    node/edge/component counts, largest size and singleton count.
+
+    Edge build via per-order supplier sets (the market_basket
+    explode pattern): groupBy(order) + collect_set is ONE
+    map-side-combined shuffle and the ordered-pair explode is narrow;
+    sets stay bounded by lines-per-order (≤7), so the explode cannot
+    blow up on a hot order at any scale.  The sorted set emits each
+    undirected edge ONCE (x < y), so the dedup ingests |E| rows, not
+    2|E|.  ``half`` is lazily checkpointed: the labeling's first
+    action materializes it, and the edge count re-reads its blocks.
+    The labels (node-sized) broadcast into the node join, and the two
+    count scalars join back as broadcast single rows (sanctioned
+    BNLJ)."""
     half = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
@@ -864,48 +854,16 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("pr.x", "pr.y")
         .distinct()
-    )
-    edges = (
-        half.unionAll(half.select(F.col("y").alias("x"), F.col("x").alias("y")))
-        # hash-partition on the per-round join key BEFORE the
-        # checkpoint (r16, guide §2.4 — the pagerank discipline):
-        # without it every round's edges⋈labels join re-exchanged the
-        # full |E| frame by x; checkpointing the x-partitioning makes
-        # the loop's edge side exchange-free for all rounds.
-        .repartition(F.col("x"))
-        # lazy: round 1's changed-count action materializes both edge
-        # and label checkpoints in the job that first scans them
         .localCheckpoint(eager=False)
     )
+    lab = components(half)
     nodes = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("n")
     )
-    lab = nodes.select("n", F.col("n").alias("l")).localCheckpoint(eager=False)
-    while True:
-        nb = (
-            edges.join(lab, edges.x == lab.n)
-            .groupBy("y")
-            .agg(F.min("l").alias("nl"))
-        )
-        # LAZY checkpoint: the changed-count below is the round's first
-        # action and materializes the checkpoint in the same job it
-        # scans — one job per round instead of materialize-then-scan
-        # (the alternating loop's r10 A/B fold, applied here r15; the
-        # frame is post-shuffle so the blocks are the reliable kind)
-        nxt = (
-            lab.join(nb, lab.n == nb.y, "left")
-            .select(
-                "n",
-                "l",
-                F.least(F.col("l"), F.coalesce(F.col("nl"), F.col("l"))).alias("l2"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = nxt.filter(F.col("l2") < F.col("l")).count()  # one scalar/round
-        lab = nxt.select("n", F.col("l2").alias("l"))
-        if changed == 0:
-            break
-    sizes = lab.groupBy("l").agg(F.count(F.lit(1)).alias("sz"))
+    full = nodes.join(F.broadcast(lab), nodes.n == lab.node, "left").select(
+        "n", F.coalesce("component", "n").alias("l")
+    )
+    sizes = full.groupBy("l").agg(F.count(F.lit(1)).alias("sz"))
     summary = sizes.agg(
         F.count(F.lit(1)).cast("long").alias("n_components"),
         F.max("sz").cast("long").alias("largest_component"),
@@ -914,10 +872,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("singleton_components"),
     )
     n_nodes = nodes.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-    n_edges = (
-        edges.filter(F.col("x") < F.col("y"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    )
+    n_edges = half.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
     return (
         summary.crossJoin(F.broadcast(n_nodes))
         .crossJoin(F.broadcast(n_edges))
@@ -931,35 +886,28 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "graph_cc_alternating",
-    oracle="""
-    WITH RECURSIVE nodes AS (
-      SELECT s_suppkey AS n FROM supplier
-    ), su AS (
-      SELECT DISTINCT l_orderkey AS o, l_suppkey AS s FROM lineitem
-    ), pe AS (
-      SELECT DISTINCT a.s AS x, b.s AS y
-      FROM su a JOIN su b ON a.o = b.o AND a.s <> b.s
-    ), reach(n, l) AS (
-      SELECT n, n FROM nodes
-      UNION
-      SELECT pe.y, reach.l FROM reach JOIN pe ON reach.n = pe.x
-      WHERE reach.l < pe.y
-    ), comp AS (
-      SELECT n, MIN(l) AS c FROM reach GROUP BY n
-    ), sizes AS (
-      SELECT c, COUNT(*) AS sz FROM comp GROUP BY c
+@query("graph_connected_components", oracle=_COSUPPLY_CC_ORACLE)
+def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Connected components of the supplier co-supply graph by
+    distributed min-label propagation
+    (operators/graph.py:connected_components) — the clustering
+    primitive under entity resolution and [[dedup_clusters]], here
+    summarized as component count / largest size / singleton count
+    (:func:`_cosupply_components`).
+
+    Engine: labels start as the node id; each round every node takes
+    min(own label, neighbors' labels) until a round changes nothing.
+    Round count is the graph diameter, not a guess.  The oracle's
+    recursive CTE enumerates decreasing-label paths — fine on the
+    DuckDB side's small frame, never what the engine does."""
+    from ..operators.graph import connected_components
+
+    return _cosupply_components(
+        spark, sf_dir, lambda half: connected_components(half, src="x", dst="y")
     )
-    SELECT CAST((SELECT COUNT(*) FROM nodes) AS BIGINT) AS n_nodes,
-           CAST((SELECT COUNT(*) FROM pe WHERE x < y) AS BIGINT) AS n_edges,
-           CAST(COUNT(*) AS BIGINT) AS n_components,
-           CAST(MAX(sz) AS BIGINT) AS largest_component,
-           CAST(SUM(CASE WHEN sz = 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS singleton_components
-    FROM sizes
-    """,
-)
+
+
+@query("graph_cc_alternating", oracle=_COSUPPLY_CC_ORACLE)
 def graph_cc_alternating(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components of the supplier co-supply graph by the
     alternating large-star/small-star algorithm (Kiveris et al.,
@@ -973,75 +921,20 @@ def graph_cc_alternating(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain-shaped one (~80 scalar actions).  Star-contraction halves
     component radius every pass, so rounds grow as O(log n) no matter
     the shape; each round is two |E|-sized min-aggregate+join passes
-    with per-round localCheckpoint lineage truncation and ONE scalar
-    fingerprint action."""
+    and ONE scalar fingerprint action."""
     from ..operators.graph import connected_components_alternating
 
-    # Per-order collect_set edge build, ONE-SIDED (r16, guide §2.3 —
-    # shuffle fewer bytes): the sorted-set ordered-pair explode emits
-    # each undirected edge ONCE (x < y), so the dedup exchange ingests
-    # |E| rows instead of the 2|E| the both-orientations explode paid,
-    # and the explode itself emits half the rows; the symmetric set
-    # the operator needs is restored AFTER the distinct by a narrow
-    # union of the checkpointed half with its swap.  A/B best-of-3 at
-    # sf0.1 (full key): 6.10 → 4.88 s (second session 7.39 → 5.99),
-    # identical rounds and components.  Lazy checkpoint — the
-    # operator's first fingerprint action materializes it in the job
-    # that scans it.
-    half = (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_suppkey")).alias("ss"))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ss, (x, i) -> transform("
-                    "slice(ss, i + 2, size(ss)), y -> struct(x AS x, y AS y))))"
-                )
-            ).alias("pr")
+    def alternating(half: DataFrame) -> DataFrame:
+        # ``half`` is distinct, and the union restores BOTH
+        # orientations, so the operator skips its |E| re-distinct and
+        # round 0's symmetrizing union
+        edges = half.unionAll(half.select(F.col("y").alias("x"), F.col("x").alias("y")))
+        lab, _ = connected_components_alternating(
+            edges, src="x", dst="y", edges_distinct=True, edges_symmetric=True
         )
-        .select("pr.x", "pr.y")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    edges = half.unionAll(half.select(F.col("y").alias("x"), F.col("x").alias("y")))
-    nodes = load_table(spark, sf_dir, "supplier").select(
-        F.col("s_suppkey").alias("n")
-    )
-    # edges is distinct + checkpointed above — skip the operator's
-    # redundant |E| re-distinct/re-checkpoint (r15, guide §2.4); the
-    # union restores BOTH orientations, so round 1 also skips the
-    # operator's symmetrizing union (r16 — halves round 1's
-    # large-star volume)
-    lab, _rounds = connected_components_alternating(
-        edges, src="x", dst="y", edges_distinct=True, edges_symmetric=True
-    )
-    # isolates: suppliers with no co-supply edge are their own component
-    full = nodes.join(lab, nodes.n == lab.node, "left").select(
-        "n", F.coalesce("component", "n").alias("l")
-    )
-    sizes = full.groupBy("l").agg(F.count(F.lit(1)).alias("sz"))
-    summary = sizes.agg(
-        F.count(F.lit(1)).cast("long").alias("n_components"),
-        F.max("sz").cast("long").alias("largest_component"),
-        F.sum(F.when(F.col("sz") == 1, 1).otherwise(0))
-        .cast("long")
-        .alias("singleton_components"),
-    )
-    n_nodes = nodes.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-    # the one-sided half IS the x<y pair set — count it directly
-    n_edges = half.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    return (
-        summary.crossJoin(F.broadcast(n_nodes))
-        .crossJoin(F.broadcast(n_edges))
-        .select(
-            "n_nodes",
-            "n_edges",
-            "n_components",
-            "largest_component",
-            "singleton_components",
-        )
-    )
+        return lab
+
+    return _cosupply_components(spark, sf_dir, alternating)
 
 
 @query(

@@ -326,32 +326,28 @@ def events_props_facet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-core of the part co-purchase graph: the maximal subgraph in
     which every part co-occurs with ≥3 other core parts — the dense
-    backbone community detection and spam filtering start from, and
-    (with [[graph_cc_alternating]] / [[graph_pagerank_converged]]) the
-    third iterative-loop-discipline operator.  No SQL oracle: k-core
-    peeling is a shrinking fixpoint that a recursive CTE (monotone,
-    growing) cannot express — correctness is pinned by an exact
-    driver-side peeling twin in pytest instead.
+    backbone community detection and spam filtering start from.  No
+    SQL oracle: k-core peeling is a shrinking fixpoint that a
+    recursive CTE (monotone, growing) cannot express — correctness is
+    pinned by an exact driver-side peeling twin in pytest instead.
 
     Engine: repeatedly drop nodes of remaining-degree < k and the
     edges touching them, until a round removes nothing.  Each round
-    is one edge-sized degree aggregate + one semi-join; lineage is
-    truncated per round with localCheckpoint and the convergence
-    check is ONE scalar (remaining-edge count) per round.  Round
-    count is bounded by the peeling depth (≤ max degree), in practice
-    a handful; every frame stays edge- or node-sized."""
+    is one edge-sized degree aggregate + two anti-joins, run through
+    :func:`..operators.graph.fixpoint` with the remaining-edge count
+    as the round's measure; the loop stops when the count stops
+    changing.  Round count is bounded by the peeling depth (≤ max
+    degree), in practice a handful; every frame stays edge- or
+    node-sized."""
+    from ..operators.graph import fixpoint
+
     k = 3
-    # Edge build via per-order sorted part sets (r15, the
-    # market_basket explode pattern shared with
-    # [[graph_triangle_count]]): one map-side-combined shuffle + a
-    # narrow ordered-pair explode instead of distinct + self-join +
-    # distinct — identical u<v pair set, two fewer |E| exchanges.
-    # LAZY checkpoints throughout (r15, guide §1.2): each count() is
-    # the frame's first action and materializes the checkpoint in the
-    # same job it scans — one job per round (and one for the initial
-    # edge build) instead of materialize-then-scan, the alternating
-    # CC loop's r10 A/B fold.  Both frames are post-shuffle (distinct
-    # / semi-joins), so the blocks are the reliable kind.
+    # Edge build via per-order sorted part sets (the market_basket
+    # explode pattern shared with [[graph_triangle_count]]): one
+    # map-side-combined shuffle + a narrow ordered-pair explode
+    # instead of distinct + self-join + distinct — identical u<v pair
+    # set, two fewer |E| exchanges.  Checkpointed lazily after its
+    # distinct: fixpoint's count of the input materializes it.
     edges = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
@@ -368,8 +364,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    n_edges = edges.count()
-    while True:
+
+    def peel(edges: DataFrame, _: int) -> DataFrame:
         deg = (
             edges.select(F.col("u").alias("n"))
             .unionAll(edges.select(F.col("v").alias("n")))
@@ -377,25 +373,20 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("d"))
         )
         # Filter by ANTI-join against the DROPPED nodes rather than
-        # semi-join against the kept ones (r16, guide §3.1): every
-        # endpoint appears in deg, so ``NOT IN drop`` ≡ ``IN keep``
-        # row-for-row, but drop (d < k) is a small shrinking set —
-        # empty-to-tiny after round 1 — which AQE broadcast-joins,
-        # leaving the |E| edge frame UNSHUFFLED each round (the keep
-        # set is node-sized, which forced two |E| exchanges per
-        # round).  A/B best-of-3 at sf0.1: 5.02 → 3.94 s, identical
-        # core (pytest twin unchanged).
+        # semi-join against the kept ones: every endpoint appears in
+        # deg, so ``NOT IN drop`` ≡ ``IN keep`` row-for-row, but drop
+        # (d < k) is a small shrinking set — empty-to-tiny after round
+        # 0 — which AQE broadcast-joins, leaving the |E| edge frame
+        # unshuffled each round (the keep set is node-sized, which
+        # forced two |E| exchanges per round).
         drop = deg.filter(F.col("d") < k).select("n")
-        nxt = (
+        return (
             edges.join(drop.withColumnRenamed("n", "u"), "u", "left_anti")
             .join(drop.withColumnRenamed("n", "v"), "v", "left_anti")
             .select("u", "v")
-            .localCheckpoint(eager=False)
         )
-        m = nxt.count()  # one scalar action per round
-        if m == n_edges:
-            break
-        edges, n_edges = nxt, m
+
+    edges, _ = fixpoint(edges, peel, measure=lambda e: e.count())
     core_nodes = (
         edges.select(F.col("u").alias("n"))
         .unionAll(edges.select(F.col("v").alias("n")))

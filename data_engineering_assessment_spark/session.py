@@ -23,7 +23,7 @@ from collections.abc import Iterator, Mapping
 from contextlib import contextmanager
 
 from pyspark import SparkContext
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -405,3 +405,15 @@ def scoped_conf(spark: SparkSession, conf: Mapping[str, object]) -> Iterator[Non
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of ``df``, a frame returned by
+    ``localCheckpoint``: its checkpoint RDD is the analyzed plan's
+    RDD.  Spark frees such blocks only when JVM GC lets its
+    ContextCleaner collect the RDD, so a loop that checkpoints every
+    round otherwise holds one state per round for the session's life.
+    Release a frame only once nothing live still reads it: a later
+    read fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` (never with
+    wrong rows).  ``operators.graph.fixpoint`` is its caller."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)

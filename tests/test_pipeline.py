@@ -210,7 +210,7 @@ def test_alternating_cc_matches_propagation_in_log_rounds(spark):
         ["src", "dst"],
     )
     alt, rounds = connected_components_alternating(chain)
-    prop = connected_components(chain, max_iter=100)
+    prop = connected_components(chain)
     assert rounds <= 8
     got = {r.node: r.component for r in alt.collect()}
     want = {r.node: r.component for r in prop.collect()}
@@ -224,6 +224,100 @@ def test_alternating_cc_matches_propagation_on_cosupply_graph(spark):
     a = QUERIES["graph_cc_alternating"](spark, SF_DIR).collect()
     b = QUERIES["graph_connected_components"](spark, SF_DIR).collect()
     assert a == b
+
+
+def test_dedup_clusters_a_chain_longer_than_twenty_hops(spark):
+    """Label propagation runs to its fixpoint: a 25-document near-dup
+    chain (i, i+1) is ONE cluster with canonical id 1, not the
+    partial labels a round cap would leave."""
+    from data_engineering_assessment_spark.operators.graph import (
+        dedup_cluster_assignments,
+    )
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 25)], "doc_a long, doc_b long"
+    )
+    got = {r.doc_id: r.canonical_id for r in dedup_cluster_assignments(pairs).collect()}
+    assert got == {i: 1 for i in range(1, 26)}
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keys()}
+
+
+def test_fixpoint_releases_spent_rounds(spark):
+    """A 41-node chain takes 41 propagation rounds; once the result is
+    read, only the edge frame and the final state are still pinned
+    among the RDDs the build persisted."""
+    from data_engineering_assessment_spark.operators.graph import (
+        connected_components,
+    )
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(40)], "src long, dst long")
+    before = _persistent_rdd_ids(spark)
+    got = {r.node: r.component for r in connected_components(chain).collect()}
+    alive = _persistent_rdd_ids(spark) - before
+    assert got == {i: 0 for i in range(41)}
+    assert len(alive) <= 2, alive
+
+
+def test_graph_results_survive_a_second_build(spark):
+    """Releasing a spent round never breaks a live result: the frames
+    of a first build, read after a second build of the same keys on
+    the same session, still equal the results read before either."""
+    keys = ("graph_kcore", "graph_pagerank_converged", "graph_cc_alternating")
+    want = {k: sorted(QUERIES[k](spark, SF_DIR).collect()) for k in keys}
+    first = {k: QUERIES[k](spark, SF_DIR) for k in keys}
+    second = {k: QUERIES[k](spark, SF_DIR) for k in keys}
+    for k in keys:
+        assert sorted(first[k].collect()) == want[k], k
+        assert sorted(second[k].collect()) == want[k], k
+    assert want["graph_cc_alternating"] == QUERIES["graph_connected_components"](
+        spark, SF_DIR
+    ).collect()
+
+
+def test_graph_loops_go_through_fixpoint():
+    """``operators.graph.fixpoint`` is the package's one loop that
+    checkpoints per round, and ``session.release_checkpoint`` is the
+    one place that drops checkpoint blocks: no ``localCheckpoint``
+    call sits in a ``for``/``while`` body elsewhere, and no
+    ``.unpersist(`` is reached through ``_jdf`` elsewhere."""
+    import ast
+    import pathlib
+
+    from data_engineering_assessment_spark import session
+    from data_engineering_assessment_spark.operators import graph
+
+    pkg = pathlib.Path(session.__file__).resolve().parent
+    assert callable(graph.fixpoint) and callable(session.release_checkpoint)
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        tree = ast.parse(path.read_text())
+        owner = {}
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for node in ast.walk(fn):
+                    owner.setdefault(id(node), fn.name)  # outermost function
+        in_loop = {
+            id(node)
+            for loop in ast.walk(tree)
+            if isinstance(loop, (ast.For, ast.While))
+            for node in ast.walk(loop)
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Attribute):
+                continue
+            if node.attr == "localCheckpoint" and id(node) in in_loop:
+                allowed = ("operators/graph.py", "fixpoint")
+            elif node.attr == "unpersist" and "_jdf" in ast.unparse(node.value):
+                allowed = ("session.py", "release_checkpoint")
+            else:
+                continue
+            if (rel, owner.get(id(node))) != allowed:
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, offenders
 
 
 def test_salted_join_equals_plain_join_under_skew(spark):
@@ -1073,6 +1167,19 @@ def test_theta_set_algebra_accuracy(spark):
         )
         checked += 1
     assert checked >= 3
+
+
+def test_pagerank_shuffled_rank_join_equals_broadcast(spark, monkeypatch):
+    """Past BF_BROADCAST_MAX_NODES the PageRank round joins the rank
+    side by a shuffled hash join instead of broadcasting it; the ranks
+    are identical."""
+    from data_engineering_assessment_spark.plans import analytics
+
+    want = sorted(analytics.graph_pagerank(spark, SF_DIR).collect())
+    monkeypatch.setattr(analytics, "BF_BROADCAST_MAX_NODES", 0)
+    shuffled = analytics.graph_pagerank(spark, SF_DIR)
+    assert "ShuffledHashJoin" in shuffled._jdf.queryExecution().executedPlan().toString()
+    assert sorted(shuffled.collect()) == want
 
 
 def test_pagerank_converged_matches_unrolled_oracle(spark):
